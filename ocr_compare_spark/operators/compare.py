@@ -48,11 +48,6 @@ def text_stats(results: DataFrame) -> DataFrame:
     )
 
 
-def _word_set(col: str):
-    # lowercased whitespace token set — ocr_comparison.py:146-147
-    return F.array_distinct(F.split(F.lower(F.col(col)), TOKEN_SPLIT))
-
-
 def _strip_affixes(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Drop the common prefix and suffix — exact (never changes the
     distance) and turns the near-identical case (engines mostly

@@ -250,27 +250,6 @@ def dedup_keep_list(
 # ------------------------------------------------------------ MinHash/LSH
 
 
-def minhash_signature(shingles_col: str, num_hashes: int = 64) -> F.Column:
-    """MinHash signature as array<long> — xxhash64(shingle, seed) per
-    permutation. Catalyst-native, zero Python.
-
-    Implemented as ONE fold over the shingle array maintaining the
-    elementwise min of the num_hashes hash lanes. The naive form —
-    num_hashes separate array_min(transform(shingles, ...)) columns —
-    re-evaluates the (regex-split + distinct) shingle expression once
-    per lane after projection collapse; measured 64 lanes stalled the
-    driver. The fold reads each shingle exactly once."""
-    seeds = F.array(*[F.lit(s) for s in range(num_hashes)])
-    init = F.array_repeat(F.lit(0x7FFFFFFFFFFFFFFF).cast("long"), num_hashes)
-    return F.aggregate(
-        F.col(shingles_col),
-        init,
-        lambda acc, x: F.zip_with(
-            acc, F.transform(seeds, lambda s: F.xxhash64(x, s)), lambda a, b: F.least(a, b)
-        ),
-    )
-
-
 def lsh_candidates(
     df: DataFrame,
     id_col: str,

@@ -2,11 +2,11 @@
 
 This is the Spark lifecycle equivalent of the reference's
 ``execute_ocr`` orchestration (/root/reference/src/ocrtool/
-ocr_impls/ocr_executor.py:122-183): route by payload type (native
-column predicate — the %PDF magic check of page_count.py:6-16), then
-one Arrow-vectorized pandas UDF per engine (the only Python boundary,
-≈ the reference's process/network boundary to tesseract/GDAI), then
-flatten.
+ocr_impls/ocr_executor.py:122-183): one Arrow-vectorized pandas UDF
+(the only Python boundary, ≈ the reference's process/network boundary
+to tesseract/GDAI) sends each payload to its engines by magic bytes
+(the %PDF check of page_count.py:6-16) and quarantines failures as
+error docs — all in ``_parse_payload`` — then flatten.
 
 Text assembly here follows the reference separators EXACTLY
 (ocr_schema.py:85,102,119,147,182,198) and records char offsets per
@@ -17,11 +17,16 @@ document text byte-identically (operators/assemble.py proves it).
 from __future__ import annotations
 
 import json
+import operator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ocr_compare_spark.engines.base import EngineSpec, ParsedDoc, create_engine
+from ocr_compare_spark.engines.base import EngineSpec, ParsedDoc, create_engine, is_pdf_bytes
+from ocr_compare_spark.engines.density import density_from_raws
+from ocr_compare_spark.engines.dom_heuristic import dom_from_raws
+from ocr_compare_spark.engines.html_tree import segment_html
+from ocr_compare_spark.operators.spread import spread_to
 from ocr_compare_spark.schema import (
     EXTRACT_RESULT_TYPE,
     SEP_BLOCK,
@@ -387,159 +392,88 @@ def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) 
     }
 
 
-def make_extract_udf(spec: EngineSpec, with_spans: bool = True):
-    """Scalar pandas UDF: Series[binary html] -> Series[result struct].
-
-    One Arrow batch in, one out — the reference's 1-doc-in/1-tree-out
-    contract (ocr_executor.py:92-120) vectorized over the batch.
-    Exceptions become error rows, never task failures (≈ the
-    reference's error classification, page_limit_handler.py:11-59).
-    """
-    parse = spec.parse
-    conf = spec.confidence
-
-    @F.pandas_udf(EXTRACT_RESULT_TYPE)
-    def extract(html: pd.Series) -> pd.DataFrame:
-        rows = []
-        for data in html:
-            try:
-                if data is None:
-                    parsed = ParsedDoc(error="null_payload")
-                else:
-                    parsed = parse(bytes(data))
-            except Exception as e:  # quarantine, don't kill the task
-                parsed = ParsedDoc(error=f"parse_error:{type(e).__name__}")
-            rows.append(doc_to_result(parsed, conf, with_spans))
-        return pd.DataFrame(rows)
-
-    return extract
+# dom + density build on the same HTML segmentation: with both
+# requested, a doc is segmented once and each engine builds its blocks
+# from the shared raw blocks (2x on the hot path)
+_FROM_RAWS = {"dom": dom_from_raws, "density": density_from_raws}
 
 
-def run_engine(pages: DataFrame, engine_name: str, with_spans: bool = True) -> DataFrame:
-    """Run one engine over the rows it handles (mime-routed natively)."""
-    spec = create_engine(engine_name)
-    if spec.handles == "pdf":
-        routed = pages.filter(F.expr(IS_PDF_EXPR))
-    elif spec.handles == "html":
-        routed = pages.filter(~F.expr(IS_PDF_EXPR))
-    else:
-        routed = pages
-    udf = make_extract_udf(spec, with_spans)
-    return routed.select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.lit(spec.name).alias("engine"),
-        F.lit(spec.version).alias("engine_version"),
-        udf(F.col("html")).alias("r"),
-    ).select("url", "warc_ts", "lang", "engine", "engine_version", "r.*")
+def _shares_segmentation(specs: list[EngineSpec]) -> bool:
+    return {s.name for s in specs if s.handles == "html"} >= _FROM_RAWS.keys()
 
 
-def run_engines(
-    pages: DataFrame,
-    engines: tuple[str, ...] = ("dom", "density", "pdf"),
-    with_spans: bool = True,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """All engines, long format: one row per (url, engine).
-
-    ``num_partitions`` hash-repartitions on url before the UDFs —
-    urls are unique so this spreads work evenly regardless of host
-    skew (north_rule: partitioning handled explicitly). The engine
-    UDFs then run partition-local with no further shuffle.
-    """
-    if num_partitions:
-        pages = pages.repartition(num_partitions, "url")
-    parts = [run_engine(pages, e, with_spans) for e in engines]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+def _parse_payload(
+    specs: list[EngineSpec], data, share_html: bool
+) -> list[tuple[EngineSpec, ParsedDoc]]:
+    """Route one payload to the engines that handle it and parse it
+    with each (≈ the reference's dispatch, ocr.py:35-64 /
+    ocr_executor.py:122-183): PDF magic bytes pick the 'pdf' engines,
+    any other payload (a null one included) the 'html' engines, and
+    'any' engines take every payload. Failures become error docs,
+    never task failures (≈ page_limit_handler.py:11-59): a null
+    payload is ``null_payload``, an engine exception
+    ``parse_error:<Type>``."""
+    if data is not None:
+        data = bytes(data)
+    is_pdf = data is not None and is_pdf_bytes(data)
+    raws = None
+    if share_html and data is not None and not is_pdf:
+        try:
+            raws = segment_html(data)
+        except Exception:
+            raws = None  # fall back to per-engine parse path
+    out = []
+    for spec in specs:
+        if spec.handles != "any" and (spec.handles == "pdf") != is_pdf:
+            continue
+        try:
+            if data is None:
+                parsed = ParsedDoc(error="null_payload")
+            elif raws is not None and spec.name in _FROM_RAWS:
+                parsed = _FROM_RAWS[spec.name](raws)
+            else:
+                parsed = spec.parse(data)
+        except Exception as e:  # quarantine, don't kill the task
+            parsed = ParsedDoc(error=f"parse_error:{type(e).__name__}")
+        out.append((spec, parsed))
     return out
+
+
+_FUSED_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("engine", T.StringType(), False),
+            T.StructField("engine_version", T.StringType(), False),
+            T.StructField("r", EXTRACT_RESULT_TYPE, True),
+        ]
+    )
+)
 
 
 def make_fused_udf(engine_names: tuple[str, ...], with_spans: bool = True):
     """One pandas UDF computing ALL engines for a batch — a single
-    Arrow crossing per row instead of one filtered branch scan per
-    engine (3x fewer source scans + Python round-trips on the hot
-    path). Rows are routed to engines by magic bytes inside the
-    batch, mirroring the reference's dispatch (ocr.py:35-64)."""
+    Arrow crossing per row, one (engine, engine_version, result)
+    entry per engine that handles the row (see _parse_payload)."""
     specs = [create_engine(n) for n in engine_names]
-    # dom + density share the HTML segmentation — parse once per doc
-    # and hand both engines the same raw blocks (2x on the hot path).
-    shared_html = {s.name for s in specs if s.handles == "html"} >= {"dom", "density"}
-    fused_type = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("engine", T.StringType(), False),
-                T.StructField("engine_version", T.StringType(), False),
-                T.StructField("r", EXTRACT_RESULT_TYPE, True),
-            ]
-        )
-    )
+    share_html = _shares_segmentation(specs)
 
-    @F.pandas_udf(fused_type)
+    @F.pandas_udf(_FUSED_TYPE)
     def fused(html: pd.Series) -> pd.Series:
-        from ocr_compare_spark.engines.density import density_from_raws
-        from ocr_compare_spark.engines.dom_heuristic import dom_from_raws
-        from ocr_compare_spark.engines.html_tree import segment_html
-
-        shared_parsers = {"dom": dom_from_raws, "density": density_from_raws}
-
-        out = []
-        for data in html:
-            is_pdf = data is not None and bytes(data)[:4] == b"%PDF"
-            row = []
-            raws = None
-            if shared_html and not is_pdf and data is not None:
-                try:
-                    raws = segment_html(bytes(data))
-                except Exception:
-                    raws = None  # fall back to per-engine parse path
-            for spec in specs:
-                if spec.handles == "pdf" and not is_pdf:
-                    continue
-                if spec.handles == "html" and is_pdf:
-                    continue
-                try:
-                    if data is None:
-                        parsed = ParsedDoc(error="null_payload")
-                    elif raws is not None and spec.name in shared_parsers:
-                        parsed = shared_parsers[spec.name](raws)
-                    else:
-                        parsed = spec.parse(bytes(data))
-                except Exception as e:
-                    parsed = ParsedDoc(error=f"parse_error:{type(e).__name__}")
-                row.append(
+        return pd.Series(
+            [
+                [
                     {
                         "engine": spec.name,
                         "engine_version": spec.version,
                         "r": doc_to_result(parsed, spec.confidence, with_spans),
                     }
-                )
-            out.append(row)
-        return pd.Series(out)
+                    for spec, parsed in _parse_payload(specs, data, share_html)
+                ]
+                for data in html
+            ]
+        )
 
     return fused
-
-
-def _spread_pages(pages: DataFrame, num_partitions: int | None) -> DataFrame:
-    """The extractors' parallelism guard, made shuffle-avoiding (r6):
-    ``num_partitions`` exists to spread a few-split source below the
-    per-row engine work, but when the input ALREADY has that much
-    (balanced) parallelism — pages_from_documents' default input
-    spread — the keyed repartition only re-shuffles the built payload
-    bytes (~hundreds of MB per run at sf1.0) for a per-row operation
-    that is partitioning-indifferent. Skip it when the plan already
-    runs wide enough; extraction output is identical either way."""
-    if not num_partitions:
-        return pages
-    try:
-        n = pages.rdd.getNumPartitions()
-    except Exception:
-        n = 0
-    if n >= num_partitions:
-        return pages
-    return pages.repartition(num_partitions, "url")
 
 
 def run_engines_fused(
@@ -548,9 +482,17 @@ def run_engines_fused(
     with_spans: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Hot-path variant of run_engines: one source scan, one Arrow
-    boundary, engines exploded to long format. Identical output."""
-    pages = _spread_pages(pages, num_partitions)
+    """All engines, long format: one row per (url, engine) — one
+    source scan, one Arrow boundary, engines exploded.
+
+    ``num_partitions`` spreads a few-split source below the per-row
+    engine work, hash-partitioned on url (urls are unique, so the
+    spread is even regardless of host skew). An input that already
+    runs at least that wide is not re-shuffled: the engine work is
+    partitioning-indifferent, so the output is identical either way.
+    """
+    if num_partitions:
+        pages = spread_to(pages, num_partitions, "url")
     fused = make_fused_udf(engines, with_spans)
     return (
         pages.select(
@@ -561,19 +503,28 @@ def run_engines_fused(
     )
 
 
+def run_engine(pages: DataFrame, engine_name: str, with_spans: bool = True) -> DataFrame:
+    """One engine over the rows it handles. The route is a native
+    filter, so off-route payloads never cross the Arrow boundary."""
+    handles = create_engine(engine_name).handles
+    if handles == "pdf":
+        pages = pages.filter(F.expr(IS_PDF_EXPR))
+    elif handles == "html":
+        pages = pages.filter(~F.expr(IS_PDF_EXPR))
+    return run_engines_fused(pages, (engine_name,), with_spans)
+
+
 SPANS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("engine", T.StringType(), False),
         T.StructField("engine_version", T.StringType(), False),
     ]
-    # span fields all NULLABLE here: error docs emit one null-field
-    # row (the posexplode_outer twin of the nested path)
+    # span fields all NULLABLE here: a doc without spans emits one
+    # null-field row (the posexplode_outer twin of the nested path)
     + [T.StructField(f.name, f.dataType, True) for f in SPAN_FIELDS]
 )
 
-
-_NULL_SPAN = {f.name: None for f in SPAN_FIELDS}
 
 # The column subset the assembly cascade consumes — passing this as
 # ``fields`` skips pandas/Arrow conversion of the heavy unused columns
@@ -676,7 +627,9 @@ def extract_spans_stream(
 ) -> DataFrame:
     """Span extraction as a FLAT row stream (mapInPandas): one output
     row per word span, identical values to
-    ``spans_table(run_engines_fused(..., with_spans=True))``.
+    ``spans_table(run_engines_fused(..., with_spans=True))`` — a doc
+    without spans (an error doc or an empty page) gives one all-null
+    span row, as the nested path's posexplode_outer does.
 
     Why it exists: the nested path serializes every span through an
     Arrow array<struct> cell — per-element, per-field object
@@ -693,6 +646,7 @@ def extract_spans_stream(
     columns never cross the Arrow boundary or the shuffle. Values of
     the emitted columns are identical to the full emission."""
     specs = [create_engine(n) for n in engines]
+    share_html = _shares_segmentation(specs)
     if fields is None:
         schema = SPANS_STREAM_SCHEMA
     else:
@@ -702,87 +656,54 @@ def extract_spans_stream(
             + [T.StructField(n, by_name[n].dataType, True) for n in fields]
         )
     span_cols = [f.name for f in schema.fields[3:]]
-    lean = fields is not None and set(fields) <= STRUCTURAL_SPAN_FIELDS
 
-    def gen_lean(batches):
-        # columnar fast path: spans land directly in per-column lists
-        # (no 17-key dict per word, no offset/bbox/confidence math,
-        # no list-of-dicts -> DataFrame transpose) — values identical
-        # to the full emitter's for every structural column
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            out = {c: [] for c in STRUCTURAL_SPAN_FIELDS}
-            urls: list[str] = []
-            engs: list[str] = []
-            vers: list[str] = []
-            for url, data in zip(pdf["url"], pdf["html"]):
-                is_pdf = data is not None and bytes(data)[:4] == b"%PDF"
-                for spec in specs:
-                    if (spec.handles == "pdf") != is_pdf and spec.handles != "any":
-                        continue
-                    try:
-                        parsed = ParsedDoc(error="null_payload") if data is None else spec.parse(bytes(data))
-                    except Exception as e:
-                        parsed = ParsedDoc(error=f"parse_error:{type(e).__name__}")
-                    if parsed.error is not None:
-                        # all-null span row per error doc (see gen())
-                        for c in out:
-                            out[c].append(None)
-                        n = 1
-                    else:
-                        n = _emit_spans_structural(parsed, out)
-                    urls.extend([url] * n)
-                    engs.extend([spec.name] * n)
-                    vers.extend([spec.version] * n)
-            res = pd.DataFrame({c: out[c] for c in span_cols})
-            res.insert(0, "url", urls)
-            res.insert(1, "engine", engs)
-            res.insert(2, "engine_version", vers)
-            yield res[cols]
+    # both emitters append one entry per span to each per-column list
+    # in ``out`` and return the number of spans
+    if fields is not None and set(fields) <= STRUCTURAL_SPAN_FIELDS:
+        out_cols = STRUCTURAL_SPAN_FIELDS
+
+        def emit(spec, parsed, out):
+            return _emit_spans_structural(parsed, out)
+
+    else:
+        out_cols = span_cols
+        # one tuple per span in out_cols order, transposed by zip; the
+        # first column is fetched twice so that a one-column request
+        # still gets tuples (zip stops at the last list in ``out``)
+        row_of = operator.itemgetter(*out_cols, *out_cols[:1])
+
+        def emit(spec, parsed, out):
+            spans = doc_to_result(parsed, spec.confidence)["spans"]
+            for col, vals in zip(out.values(), zip(*map(row_of, spans))):
+                col.extend(vals)
+            return len(spans)
 
     def gen(batches):
-        cols = [f.name for f in schema.fields]
         for pdf in batches:
-            all_spans: list[dict] = []
+            out = {c: [] for c in out_cols}
             urls: list[str] = []
             engs: list[str] = []
             vers: list[str] = []
             for url, data in zip(pdf["url"], pdf["html"]):
-                is_pdf = data is not None and bytes(data)[:4] == b"%PDF"
-                for spec in specs:
-                    if (spec.handles == "pdf") != is_pdf and spec.handles != "any":
-                        continue
-                    try:
-                        parsed = ParsedDoc(error="null_payload") if data is None else spec.parse(bytes(data))
-                    except Exception as e:
-                        parsed = ParsedDoc(error=f"parse_error:{type(e).__name__}")
-                    if parsed.error is not None:
-                        # one all-null span row per error doc — the
-                        # nested path's posexplode_outer over the
-                        # empty `spans` array emits exactly this, so
-                        # downstream assembly sees the same rows on
-                        # either path for corpora containing errors
-                        all_spans.append(_NULL_SPAN)
-                        urls.append(url)
-                        engs.append(spec.name)
-                        vers.append(spec.version)
-                        continue
-                    r = doc_to_result(parsed, spec.confidence, with_spans=True)
-                    n = len(r["spans"])
-                    all_spans.extend(r["spans"])
+                for spec, parsed in _parse_payload(specs, data, share_html):
+                    n = 0 if parsed.error is not None else emit(spec, parsed, out)
+                    if n == 0:
+                        # error or empty doc: the one all-null row the
+                        # nested path's posexplode_outer gives it
+                        for col in out.values():
+                            col.append(None)
+                        n = 1
                     urls.extend([url] * n)
                     engs.extend([spec.name] * n)
                     vers.extend([spec.version] * n)
-            out = pd.DataFrame(all_spans, columns=span_cols)
-            out.insert(0, "url", urls)
-            out.insert(1, "engine", engs)
-            out.insert(2, "engine_version", vers)
-            yield out[cols]
+            cols = {"url": urls, "engine": engs, "engine_version": vers}
+            cols |= {c: out[c] for c in span_cols}
+            # object columns: pandas' dtype inference over the Python
+            # values costs more than the Arrow conversion after it
+            yield pd.DataFrame({c: pd.Series(v, dtype=object) for c, v in cols.items()})
 
-    if lean:
-        gen = gen_lean
-
-    pages = _spread_pages(pages, num_partitions)
+    if num_partitions:
+        pages = spread_to(pages, num_partitions, "url")
     return pages.mapInPandas(gen, schema)
 
 

@@ -77,11 +77,6 @@ def _node_side_hint(size_df: DataFrame, key: str, max_bytes: int):
     return lambda df: df.hint("shuffle_hash")
 
 
-def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
-    """(src, outdeg) — out-EDGE counts (multi-edges count)."""
-    return edges.groupBy(src).agg(F.count("*").alias("outdeg"))
-
-
 def pagerank(
     edges: DataFrame,
     iters: int = 3,

@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ocr_compare_spark.operators.spread import spread_to
+
 RENDER_SCHEMA = (
     "url string, page_no int, width int, height int, image binary, "
     "n_ink_px long, error string"
@@ -113,15 +115,7 @@ def render_pdf_pages(
         src = src.filter(F.expr(f"substring({payload_col}, 1, 4) = X'25504446'"))
     if num_partitions:
         # CPU-bound-per-byte stage: pin width so AQE's size-based
-        # coalescing can't starve it (same rule as run_engines_fused).
-        # r6: skip the payload shuffle when the input already runs at
-        # least that wide (pages_from_documents' default spread keeps
-        # PDFs evenly distributed) — per-row work is partitioning-
-        # indifferent, so output is identical.
-        try:
-            n = src.rdd.getNumPartitions()
-        except Exception:
-            n = 0
-        if n < num_partitions:
-            src = src.repartition(num_partitions)
+        # coalescing can't starve it (same rule as run_engines_fused);
+        # no payload shuffle when the input already runs that wide
+        src = spread_to(src, num_partitions)
     return src.mapInPandas(run, RENDER_SCHEMA)

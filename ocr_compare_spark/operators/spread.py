@@ -8,12 +8,14 @@ has. Operators whose callers pass ``num_partitions`` already handle
 it; operators without the knob (or called without it by generic
 pipelines) inherited the serial stage.
 
-``spread_small_input`` is the shared adaptive default: repartition
-ONLY when the plan would execute on fewer partitions than the
-session's parallelism. On a warehouse-sized input with adequate
-splits it is a no-op — the corpus is never shuffled just to
-tokenize it — so the behavior is scale-adaptive rather than tuned
-to either local mode or the cluster.
+``spread_to`` is the one partition probe: repartition ONLY when the
+plan would execute on fewer partitions than the target width — the
+caller's ``num_partitions`` for the extractors and the renderer, the
+session's parallelism for ``spread_small_input``. On a
+warehouse-sized input with adequate splits it is a no-op — the
+corpus is never shuffled just to tokenize it — so the behavior is
+scale-adaptive rather than tuned to either local mode or the
+cluster.
 """
 
 from __future__ import annotations
@@ -21,15 +23,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_small_input(df: DataFrame) -> DataFrame:
-    """Repartition ``df`` to the session's defaultParallelism iff its
-    physical plan would run on fewer partitions. Values unchanged."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
+def spread_to(df: DataFrame, width: int, key: str | None = None) -> DataFrame:
+    """Repartition ``df`` to ``width`` partitions iff its physical
+    plan would run on fewer — hash-partitioned on ``key`` when given,
+    round-robin otherwise. A plan whose width cannot be read is left
+    as is. Values unchanged."""
     try:
         n = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if 0 < n < par:
-        return df.repartition(par)
+    if 0 < n < width:
+        return df.repartition(width, key) if key else df.repartition(width)
     return df
+
+
+def spread_small_input(df: DataFrame) -> DataFrame:
+    """``spread_to`` the session's defaultParallelism."""
+    return spread_to(df, df.sparkSession.sparkContext.defaultParallelism)

@@ -370,17 +370,6 @@ def scrub_pii(col: str | Column) -> Column:
     return c
 
 
-def langid_features(text_col: str = "text") -> dict[str, Column]:
-    """Language-ID heuristic features: ASCII ratio + marker-token
-    hits for a tiny built-in marker table. Returns feature columns;
-    the label is the argmax (langid_label)."""
-    c = F.col(text_col)
-    ascii_ratio = F.when(
-        F.length(c) > 0, F.length(F.regexp_replace(c, r"[^\x00-\x7F]", "")) / F.length(c)
-    ).otherwise(F.lit(1.0))
-    return {"ascii_ratio": ascii_ratio}
-
-
 _LANG_MARKERS = {
     "en": ("the", "and", "of"),
     "es": ("el", "la", "de"),

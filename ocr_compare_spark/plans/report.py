@@ -1,4 +1,4 @@
-"""Comparison-report JSON sink (reference fixture shape).
+"""Comparison-report JSON rows (reference fixture shape).
 
 Reference: examples/ocr_comparison.py:244-259 writes one JSON report
 per run: ``{comparison: {text_extraction, confidence_scores},
@@ -77,7 +77,3 @@ def report_rows(results: DataFrame, compare: DataFrame) -> DataFrame:
         F.col("text_samples"),
     )
     return joined.select("url", F.to_json(report).alias("report"))
-
-
-def write_report(results: DataFrame, compare: DataFrame, path: str) -> None:
-    report_rows(results, compare).orderBy("url").write.mode("overwrite").json(path)

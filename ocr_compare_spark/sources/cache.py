@@ -176,16 +176,3 @@ def cached_extract(
     # callers can report how much was actually computed (0 on a warm
     # cache, distinct payloads otherwise)
     return (served, fresh) if return_fresh else served
-
-
-def cache_entries(results_with_key: DataFrame) -> DataFrame:
-    """Rows to append to the cache table after computing misses
-    (≈ _cache_result upload, cached_ocr_executor.py:254-270)."""
-    return results_with_key.select(
-        "engine",
-        "content_hash",
-        "kwargs_hash",
-        "native_json",
-        "doc_text",
-        F.current_timestamp().alias("created_ts"),
-    )

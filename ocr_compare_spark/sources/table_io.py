@@ -1,55 +1,15 @@
-"""Thin table-IO seam: parquet now, Iceberg when the runtime jar is
-present (SURVEY.md §7).
+"""Catalog table writes (SURVEY.md §7).
 
-All pipeline code reads/writes through these helpers, so flipping to
-a real lakehouse catalog is a config change, not a refactor:
-
-- sandbox (no iceberg-spark-runtime jar): path-based parquet with
-  Hive-style partition dirs; the checkpoint manifest
-  (sources/checkpoint.py) supplies the atomic-commit/resume story.
-- cluster: set ``spark.sql.catalog.<name>=org.apache.iceberg.spark
-  .SparkCatalog`` and pass ``catalog_table``; the same calls become
-  Iceberg table scans/commits with partition transforms
-  (days(warc_ts), bucket(url)) and snapshot isolation.
+``write_bucketed`` writes a bucketed catalog table so that recurring
+equi joins on the bucket key plan without an exchange. Plain parquet
+reads and writes go straight through ``spark.read`` / ``df.write``;
+resumable runs get their atomic-commit story from the checkpoint
+manifest (sources/checkpoint.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def read_table(spark: SparkSession, location: str) -> DataFrame:
-    """location: a path (parquet) or catalog.db.table (Iceberg)."""
-    if "/" not in location and iceberg_available(spark):
-        return spark.read.table(location)
-    return spark.read.parquet(location)
-
-
-def write_table(
-    df: DataFrame,
-    location: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    if "/" not in location and iceberg_available(df.sparkSession):
-        w = df.writeTo(location)
-        if mode == "overwrite":
-            w.createOrReplace()
-        else:
-            w.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(location)
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(

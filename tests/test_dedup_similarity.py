@@ -284,7 +284,7 @@ def test_embed_near_dups_planted(vectors):
     assert set(pairs) == expect
 
 
-def test_brute_force_topk_df_overload(vectors):
+def test_brute_force_topk_df_overload(vectors, monkeypatch):
     """DataFrame overload matches the list API and guards the
     driver-side collect."""
     df, mat = vectors
@@ -295,13 +295,9 @@ def test_brute_force_topk_df_overload(vectors):
     assert a == b
     import pytest as _pt
 
-    old = similarity.MAX_DRIVER_QUERIES
-    similarity.MAX_DRIVER_QUERIES = 10
-    try:
-        with _pt.raises(ValueError, match="lsh_topk"):
-            similarity.brute_force_topk_df(df, df, k=3)
-    finally:
-        similarity.MAX_DRIVER_QUERIES = old
+    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 10)
+    with _pt.raises(ValueError, match="lsh_topk"):
+        similarity.brute_force_topk_df(df, df, k=3)
 
 
 def test_auto_sign_bits_bounds_block_size(spark):
@@ -1286,7 +1282,7 @@ def test_rbo_matches_mirror_and_edges(spark):
     assert got[1] == (0, 0) and got[3] == (0, 0) and got[4] == (0, 0)
 
 
-def test_lsh_verify_join_paths_identical(spark):
+def test_lsh_verify_join_paths_identical(spark, monkeypatch):
     """r6: the verify join picks broadcast vs sort-merge for the
     shingle-set table from its REAL materialized size (frozen
     checkpoint stats are garbage). Both paths must produce the same
@@ -1303,11 +1299,8 @@ def test_lsh_verify_join_paths_identical(spark):
         )
 
     base = run()
-    orig = dedup.SH_BROADCAST_MAX_BYTES
-    dedup.SH_BROADCAST_MAX_BYTES = 1  # force the sort-merge path
-    try:
-        forced = run()
-    finally:
-        dedup.SH_BROADCAST_MAX_BYTES = orig
+    # force the sort-merge path
+    monkeypatch.setattr(dedup, "SH_BROADCAST_MAX_BYTES", 1)
+    forced = run()
     assert base == forced
     assert base  # non-trivial: the repeated texts must produce pairs

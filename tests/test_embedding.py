@@ -87,7 +87,7 @@ def test_hashed_topk_matches_python_mirror(spark, sf_dir):
     assert got == emb.py_hashed_topk(by_id, q_ids, k=3)
 
 
-def test_hashed_topk_zero_norm_and_guard(spark):
+def test_hashed_topk_zero_norm_and_guard(spark, monkeypatch):
     import pytest
 
     rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, [-1.0, 0.0])]
@@ -98,13 +98,9 @@ def test_hashed_topk_zero_norm_and_guard(spark):
     }
     # sims from q=0: c2 = 1/sqrt(2) ~ .707, c1 = 0.0 (zero norm), c3 = -1
     assert out == {(0, 1): 2, (0, 2): 1, (0, 3): 3}
-    old = emb.MAX_DRIVER_QUERIES
-    emb.MAX_DRIVER_QUERIES = 2
-    try:
-        with pytest.raises(ValueError):
-            emb.hashed_topk(vecs, vecs, k=1)
-    finally:
-        emb.MAX_DRIVER_QUERIES = old
+    monkeypatch.setattr(emb, "MAX_DRIVER_QUERIES", 2)
+    with pytest.raises(ValueError):
+        emb.hashed_topk(vecs, vecs, k=1)
 
 
 def test_hashed_vectors_feed_semdedup_and_near_dups(spark, sf_dir):

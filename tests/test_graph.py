@@ -172,7 +172,7 @@ def test_hits_over_domain_graph_composition(spark):
     assert max(got[f"site{i}.com"][0] for i in range(4)) == 1_000_000
 
 
-def test_node_side_hint_paths_identical(spark):
+def test_node_side_hint_paths_identical(spark, monkeypatch):
     """r6: the iterative round joins decide broadcast vs
     shuffled-hash from the real node-table size (frozen checkpoint
     stats are garbage). Both paths must be bit-identical — integer
@@ -198,11 +198,8 @@ def test_node_side_hint_paths_identical(spark):
         return pr, ht, cc
 
     base = run()
-    orig = graph.NODE_BROADCAST_MAX_BYTES
-    graph.NODE_BROADCAST_MAX_BYTES = 1  # force the shuffled-hash path
-    try:
-        forced = run()
-    finally:
-        graph.NODE_BROADCAST_MAX_BYTES = orig
+    # force the shuffled-hash path
+    monkeypatch.setattr(graph, "NODE_BROADCAST_MAX_BYTES", 1)
+    forced = run()
     assert base == forced
     assert len(base[0]) == 200

@@ -93,16 +93,12 @@ def test_literal_and_data_paths_bit_identical_on_corpus(spark, sf_dir):
     assert any(r["n_oov"] > 0 for r in lit)  # cap at 20 of 31 leaves real OOV
 
 
-def test_literal_path_guard(spark):
+def test_literal_path_guard(spark, monkeypatch):
     d = _mk_docs(spark, TEXTS)
     model = lm.train_unigram_lm(d, "text")
-    old = lm.MAX_VOCAB_COLLECT
-    lm.MAX_VOCAB_COLLECT = 2
-    try:
-        with pytest.raises(ValueError, match="literal LM path"):
-            lm.perplexity_scores(d, model, method="literal")
-    finally:
-        lm.MAX_VOCAB_COLLECT = old
+    monkeypatch.setattr(lm, "MAX_VOCAB_COLLECT", 2)
+    with pytest.raises(ValueError, match="literal LM path"):
+        lm.perplexity_scores(d, model, method="literal")
 
 
 # ---------------------------------------------------------------- webfilter

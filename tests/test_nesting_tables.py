@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from ocr_compare_spark import synth
 from ocr_compare_spark.engines.density import parse_density
 from ocr_compare_spark.engines.dom_heuristic import parse_dom
-from ocr_compare_spark.operators.extract import doc_to_result, run_engines, spans_table
+from ocr_compare_spark.operators.extract import doc_to_result, run_engines_fused, spans_table
 
 NESTED_HTML = b"""<html><body>
 <p>alpha one</p>
@@ -128,7 +128,7 @@ def test_assemble_roundtrip_nested_and_tables(spark, nested_pages):
     docs byte-identically from spans."""
     from ocr_compare_spark.operators.assemble import assemble_doc_text
 
-    res = run_engines(nested_pages, engines=("dom",))
+    res = run_engines_fused(nested_pages, engines=("dom",))
     asm = assemble_doc_text(spans_table(res))
     joined = asm.join(
         res.select("url", "engine", F.col("doc_text").alias("fast")), ["url", "engine"]
@@ -142,7 +142,7 @@ def test_tree_roundtrip_nested_and_tables(spark, nested_pages):
     and report the recursion depth."""
     from ocr_compare_spark.operators.tree import to_tree, tree_stats, tree_to_text
 
-    res = run_engines(nested_pages, engines=("dom",))
+    res = run_engines_fused(nested_pages, engines=("dom",))
     tree = to_tree(spans_table(res))
     rebuilt = tree_to_text(tree)
     joined = rebuilt.join(
@@ -160,7 +160,7 @@ def test_table_tsv_matches_python_renderer(spark, nested_pages):
     from ocr_compare_spark.operators.assemble import assemble_table_tsv
     from ocr_compare_spark.operators.extract import table_raw_text
 
-    res = run_engines(nested_pages, engines=("dom",))
+    res = run_engines_fused(nested_pages, engines=("dom",))
     got = {r.url: r.raw_text for r in assemble_table_tsv(spans_table(res)).collect()}
     assert got[synth.url_of(3)] == table_raw_text(
         [["h one", "h two"], ["first para\nsecond para", "plain"]]
@@ -184,7 +184,7 @@ def test_table_records_as_dataframe_analog(spark, nested_pages):
     header names (or positional c0.. for headerless tables)."""
     from ocr_compare_spark.operators.assemble import table_records
 
-    res = run_engines(nested_pages, engines=("dom",))
+    res = run_engines_fused(nested_pages, engines=("dom",))
     recs = table_records(spans_table(res)).collect()
     by_url = {}
     for r in recs:
@@ -202,7 +202,7 @@ def test_flat_span_stream_equals_nested(spark, nested_pages):
     from ocr_compare_spark.operators.assemble import assemble_doc_text
     from ocr_compare_spark.operators.extract import extract_spans_stream
 
-    res = run_engines(nested_pages, engines=("dom",))
+    res = run_engines_fused(nested_pages, engines=("dom",))
     a = assemble_doc_text(spans_table(res))
     b = assemble_doc_text(extract_spans_stream(nested_pages, engines=("dom",)))
     j = a.join(b.select("url", "engine", F.col("doc_text").alias("b")), ["url", "engine"])
@@ -210,24 +210,66 @@ def test_flat_span_stream_equals_nested(spark, nested_pages):
     assert j.filter(F.col("doc_text") != F.col("b")).count() == 0
 
 
-def test_span_stream_emits_null_row_for_error_docs(spark):
-    """Stream-path parity on error corpora (ADVICE r3): the nested
-    path's posexplode_outer gives one null-field row per error doc;
-    the flat stream must emit the same row, not silently drop it."""
-    from ocr_compare_spark.operators.extract import extract_spans_stream, run_engines_fused
+def _parity_pages(spark):
+    """Error, empty, table, nested and PDF payloads in one frame."""
     from ocr_compare_spark.schema import PAGES_SCHEMA
 
-    rows = [
-        ("u_ok", None, b"<html><body><p>hello world</p></body></html>", "hello world", "en"),
-        ("u_null", None, None, None, "en"),
+    payloads = [
+        ("u_ok", b"<html><body><p>hello world</p></body></html>"),
+        ("u_null", None),
+        ("u_empty", b""),
+        ("u_trunc", b"%PDF truncated"),
+        ("u_unclosed", b"<html><body><p>unclosed <b>tag"),
+        ("u_table", CELL_HTML),
+        ("u_nested", NESTED_HTML),
+        ("u_pdf", synth.build_pdf(7, " ".join(f"w{i}" for i in range(40)))),
     ]
-    pages = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
-    nested = spans_table(run_engines_fused(pages, engines=("dom",)))
-    stream = extract_spans_stream(pages, engines=("dom",))
-    n = sorted((r.url, r.text) for r in nested.select("url", "text").collect())
-    s = sorted((r.url, r.text) for r in stream.select("url", "text").collect())
-    assert n == s
-    assert ("u_null", None) in s
+    rows = [(u, None, h, None, "en") for u, h in payloads]
+    return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
+
+
+def _sorted_rows(df, cols):
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def test_span_stream_emits_null_row_for_error_docs(spark):
+    """Stream-path parity on error corpora (ADVICE r3): the nested
+    path's posexplode_outer gives one null-field row per doc without
+    spans (error or empty); the flat stream must emit the same row,
+    not silently drop it — for every engine, on both the full and the
+    structural emitter (and on a one-column request)."""
+    from ocr_compare_spark.operators.extract import (
+        ASSEMBLY_SPAN_FIELDS,
+        extract_spans_stream,
+    )
+
+    engines = ("dom", "density", "pdf")
+    pages = _parity_pages(spark)
+    nested = spans_table(run_engines_fused(pages, engines=engines)).cache()
+    for fields in (None, ASSEMBLY_SPAN_FIELDS, ("confidence",)):
+        stream = extract_spans_stream(pages, engines=engines, fields=fields)
+        cols = stream.columns
+        assert _sorted_rows(stream, cols) == _sorted_rows(nested, cols)
+    # ... and so holds the null rows the nested path has
+    got = {(r.url, r.engine, r.text) for r in nested.select("url", "engine", "text").collect()}
+    assert ("u_null", "dom", None) in got
+    assert ("u_trunc", "pdf", None) in got
+    assert ("u_empty", "density", None) in got
+    nested.unpersist()
+
+
+def test_run_engine_equals_fused_single_engine(spark):
+    """run_engine's native route filter selects exactly the rows the
+    fused UDF routes to that engine, null payloads included."""
+    from ocr_compare_spark.operators.extract import run_engine
+
+    pages = _parity_pages(spark)
+    for e in ("dom", "density", "pdf"):
+        a = run_engine(pages, e)
+        b = run_engines_fused(pages, (e,))
+        assert _sorted_rows(a, a.columns) == _sorted_rows(b, a.columns)
+    nulls = run_engine(pages, "dom").filter(F.col("url") == "u_null")
+    assert [r.error for r in nulls.collect()] == ["null_payload"]
 
 
 def test_span_stream_field_subset_assembles_identically(spark, nested_pages):
@@ -310,7 +352,7 @@ def test_cell_blocks_synth_bucket_end_to_end(spark):
         [(24, text, "en"), (4, text, "en")], "doc_id long, text string, lang string"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
     pages = synth.pages_from_documents(spark, d)
-    res = run_engines(pages, engines=("dom",))
+    res = run_engines_fused(pages, engines=("dom",))
     got = {r.url: r.doc_text for r in res.collect()}
     assert got[synth.url_of(24)] == synth.expected_dom_text(text, doc_id=24)
     # same tokens -> the nested-cell doc renders the same bytes as
@@ -347,7 +389,7 @@ def test_cell_text_nl_join_multi_run(spark, nested_pages):
     ' '-flattened (ocr_schema.py:215-238)."""
     from ocr_compare_spark.operators.tree import to_tree
 
-    res = run_engines(nested_pages, engines=("dom",))
+    res = run_engines_fused(nested_pages, engines=("dom",))
     tree = to_tree(spans_table(res))
     doc = tree.filter(F.col("url") == synth.url_of(3)).select("document").first()[0]
     cells = {
@@ -380,7 +422,7 @@ def test_tree_structs_carry_confidence_and_bbox(spark):
         "doc_id long, text string, lang string",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
     pages = synth.pages_from_documents(spark, d)
-    res = run_engines(pages).cache()
+    res = run_engines_fused(pages).cache()
     sp = spans_table(res)
     tree = to_tree(sp)
     # doc confidence from the tree == the engines' (bit-exact, all

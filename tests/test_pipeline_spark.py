@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from ocr_compare_spark import synth
 from ocr_compare_spark.operators.assemble import assemble_doc_text
 from ocr_compare_spark.operators.chunking import PAGE_LIMITS, explode_segments, renumber_pages
-from ocr_compare_spark.operators.extract import run_engine, run_engines, spans_table
+from ocr_compare_spark.operators.extract import run_engine, run_engines_fused, spans_table
 from ocr_compare_spark.operators.winner import pick_winner
 from ocr_compare_spark.sources import cache as cache_mod
 
@@ -22,7 +22,7 @@ def pages(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def results(spark, pages):
-    return run_engines(pages).cache()
+    return run_engines_fused(pages).cache()
 
 
 def _golden(sf_dir):
@@ -133,7 +133,7 @@ def test_error_rows_never_dropped(spark):
         [("u1", None), ("u2", b"%PDF-1.4 junk"), ("u3", b"<p>ok fine text</p>")],
         "url string, html binary",
     ).select("url", F.lit(None).cast("timestamp").alias("warc_ts"), "html", F.lit(None).cast("string").alias("text"), F.lit("en").alias("lang"))
-    res = run_engines(df)
+    res = run_engines_fused(df)
     per_url = {r.url for r in res.select("url").distinct().collect()}
     assert per_url == {"u1", "u2", "u3"}
     assert res.filter((F.col("url") == "u2") & F.col("error").isNotNull()).count() == 1
@@ -170,7 +170,7 @@ def test_winner_empty_density_falls_back_to_dom(spark):
     winner_text oracle encodes the same CASE."""
     html = synth.build_html(3, "xx yy")
     pages = _mini_pages(spark, [(synth.url_of(3), html)])
-    res = run_engines(pages, engines=("dom", "density"))
+    res = run_engines_fused(pages, engines=("dom", "density"))
     texts = {r.engine: r.doc_text for r in res.collect()}
     assert texts["density"] == ""
     assert texts["dom"] == synth.PROMO_TEXT + "\n\nxx yy"
@@ -198,7 +198,7 @@ def test_winner_confidence_tiebreak(spark):
     r1 'dead tiebreak' is now live."""
     text = " ".join(f"w{i}" for i in range(40))
     pages = _mini_pages(spark, [(synth.url_of(2), synth.build_html(2, text))])
-    res = run_engines(pages, engines=("dom", "density"))
+    res = run_engines_fused(pages, engines=("dom", "density"))
     confs = {r.engine: r.confidence for r in res.collect()}
     assert confs["density"] != confs["dom"]
     w = pick_winner(res, preference={"dom": 0, "density": 0}).collect()[0]
@@ -503,7 +503,6 @@ def test_curate_gopher_gates(spark, sf_dir):
     a table doc (doc_id%10==4) and the count must match a direct
     gopher_pass evaluation over the same winner texts."""
     from ocr_compare_spark import synth
-    from ocr_compare_spark.operators.extract import run_engines_fused
     from ocr_compare_spark.operators.textstats import gopher_pass
     from ocr_compare_spark.operators.winner import pick_winner
     from ocr_compare_spark.plans.curate import curate
@@ -609,7 +608,6 @@ def test_curate_c4_gates_keep_punctuated(spark, tmp_path, sf_dir):
     # density engine wins (doc_id%10 in {0,5}) its reflow splits the
     # graft mid-sentence, leaving < 3 sentences — correct per-engine
     # behavior, so the expectation is derived, not assumed.
-    from ocr_compare_spark.operators.extract import run_engines_fused
     from ocr_compare_spark.operators.winner import pick_winner
     from ocr_compare_spark import synth
 
@@ -685,7 +683,6 @@ def test_curate_nb_reference_gate(spark, tmp_path, sf_dir):
 
     from ocr_compare_spark import synth
     from ocr_compare_spark.operators.classifier import score_nb, train_nb
-    from ocr_compare_spark.operators.extract import run_engines_fused
     from ocr_compare_spark.operators.winner import pick_winner
     from ocr_compare_spark.plans.curate import curate
 
@@ -754,7 +751,6 @@ def test_curate_paragraph_ppl_gate(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from ocr_compare_spark import synth
-    from ocr_compare_spark.operators.extract import run_engines_fused
     from ocr_compare_spark.operators.lm import perplexity_scores, train_unigram_lm
     from ocr_compare_spark.operators.winner import pick_winner
 
@@ -788,7 +784,6 @@ def test_curate_dedup_lines_stage(spark, sf_dir):
     planted cases."""
     from ocr_compare_spark import synth
     from ocr_compare_spark.operators.dedup import dedup_lines_within_doc
-    from ocr_compare_spark.operators.extract import run_engines_fused
     from ocr_compare_spark.operators.winner import pick_winner
     from ocr_compare_spark.plans.curate import curate
 

@@ -4,13 +4,13 @@ import sys, os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from ocr_compare_spark.session import get_spark
 from ocr_compare_spark import synth
-from ocr_compare_spark.operators.extract import run_engines
+from ocr_compare_spark.operators.extract import run_engines_fused
 from pyspark.sql import functions as F
 
 spark = get_spark(master="local[4]", shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 pages = synth.pages_from_documents(spark, "/root/testdata/sf0.001")
-res = run_engines(pages)
+res = run_engines_fused(pages)
 got = {(r.doc_id, r.engine): r.doc_text for r in
        res.withColumn("doc_id", F.regexp_extract("url", r"(\d+)$", 1).cast("long"))
           .select("doc_id", "engine", "doc_text").collect()}
