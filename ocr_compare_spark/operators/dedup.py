@@ -28,12 +28,14 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 # release_lsh_cache() after materializing their result).
 _LSH_CACHED: list[DataFrame] = []
 
-#: Broadcast cap for the verify join's shingle-set table (see the
-#: r6 comment at the join): below this REAL measured size the
-#: checkpointed sh table is broadcast (the plan Catalyst picked off
-#: frozen stats, and the right one at bench scale — tens of MB);
-#: above it the verify join becomes sort-merge so a corpus-sized
-#: shingle-set table is never collected to the driver.
+#: Broadcast cap for lsh_candidates' verify joins (see the r6 comment
+#: there). The cap covers the SUMMED raw bytes of every broadcast
+#: side: the self join looks the checkpointed sh table up twice, and
+#: each lookup builds its own broadcast relation, so twice the
+#: measured table must fit. Below it both lookups broadcast (the plan
+#: Catalyst picked off frozen stats, and the right one at bench scale
+#: — tens of MB); above it the verify joins become sort-merge so a
+#: corpus-sized shingle-set table is never collected to the driver.
 SH_BROADCAST_MAX_BYTES = 256 << 20
 
 
@@ -277,7 +279,6 @@ def lsh_candidates(
     the expansion explode is the only quadratic step and it is
     spread across tasks by the pair join keys.
     """
-    rows_per_band = num_hashes // bands
     # Exact-duplicate canonicalization BEFORE the heavy path: web
     # corpora are full of byte-identical copies (mirrors, recrawls —
     # locally the bench's replicated corpus is the worst case), and
@@ -308,64 +309,16 @@ def lsh_candidates(
     reps = keyed.groupBy("grp").agg(
         F.min("id").alias("id"), F.any_value("text").alias("text")
     ).select("id", "text")
-    if num_partitions:
-        # the explode multiplies rows ~500x; without enough input
-        # splits (e.g. one small parquet file locally) the signature
-        # stage serializes on the source partitioning — spread reps
-        # by unique id first (at warehouse scale the source table's
-        # splits make this a no-op)
-        reps = reps.repartition(num_partitions, "id")
-    # Explode shingles once, then num_hashes codegen'd min() aggs with
-    # map-side partial aggregation — the whole signature computation
-    # stays inside whole-stage codegen (the lambda-fold variant runs
-    # interpreted and was ~10x slower at 5k docs / 64 lanes).
-    # The shingle STRING is hashed exactly once (h0); the 64 lanes
-    # re-hash the fixed 8-byte long instead of the ~20-byte string —
-    # measured ~2x on the signature stage, and it's the hot cost of
-    # the whole operator at scale.
-    # THREE consumers read this stream (the 64-lane signature agg and
-    # BOTH aliased sides of the verify join's shingle-set lookup —
-    # ReuseExchange never fires across differently-aliased join
-    # sides), so without the checkpoint the regex shingle explode +
-    # xxhash pass ran 3x (r6-measured: 1.35 s/pass warm at sf1.0).
-    # The materialized rows are slim (id, h0) longs.
-    exploded = reps.select(
-        "id",
-        F.explode(word_shingles("text", shingle_n)).alias("shingle"),
-    ).select("id", F.xxhash64("shingle").alias("h0")).localCheckpoint(eager=True)
-    sig_wide = exploded.groupBy("id").agg(
-        *[F.min(F.xxhash64("h0", F.lit(s))).alias(f"h{s}") for s in range(num_hashes)]
-    )
-    # bands: hash each contiguous group of rows_per_band lanes
-    band_cols = []
-    for b in range(bands):
-        lanes = [F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)]
-        band_cols.append(F.xxhash64(*lanes).alias(f"b{b}"))
-    banded = sig_wide.select("id", *band_cols).select(
-        "id",
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(bands)])).alias("band_id", "band_hash"),
-    )
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band_id", "band_hash"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    # Verify on the HASHED shingle sets (array<long>), not the string
-    # arrays: jaccard over distinct 64-bit hashes equals jaccard over
-    # the strings up to a ~n^2/2^64 collision probability (negligible
-    # and deterministic), while the pair join ships 8-byte longs
-    # instead of ~20-byte shingle strings — at 60k docs x 12-way dups
-    # that is the difference between ~3 GB and ~8 GB through the
-    # verify shuffle (measured 1.5x on the whole operator).
-    # the two aliased verify-join sides would otherwise run the
-    # collect_set aggregate (and its upstream) once each
-    sh = exploded.groupBy("id").agg(F.collect_set("h0").alias("sh")).localCheckpoint(
-        eager=True
-    )
+    # Shingle, sign, band and keep the shingle-hash set in one pass.
+    # Four consumers read it (both sides of the band self-join and both
+    # aliased sh lookups of the verify — ReuseExchange never fires
+    # across differently-aliased join sides), so it is materialized
+    # once; the size probe below reads the same checkpoint.
+    sigs = minhash_tables(
+        reps, "id", "text", num_hashes, bands, shingle_n, num_partitions
+    ).localCheckpoint(eager=True)
     # r6: the verify join's build side must be chosen from REAL sizes
-    # — sh is a checkpointed LogicalRDD whose frozen stats descend
+    # — sigs is a checkpointed LogicalRDD whose frozen stats descend
     # from the tiny source estimate (the localCheckpoint STATS trap),
     # so Catalyst elects it for broadcast REGARDLESS of its actual
     # size. At bench scale that is also the right call (tens of MB,
@@ -374,23 +327,21 @@ def lsh_candidates(
     # beyond it the join falls back to sort-merge — never a
     # driver-side collect of a corpus-sized shingle-set table.
     # Measured from the materialized checkpoint: exact array bytes +
-    # per-row overhead, one node-sized job.
-    sh_bytes = sh.agg(
+    # per-row overhead, one node-sized job; both lookups broadcast,
+    # so twice that must fit under the cap.
+    sh_bytes = sigs.agg(
         F.sum(
             F.size("sh") * 8
             + F.octet_length(F.col("id").cast("string"))
             + F.lit(48)
         )
     ).collect()[0][0]
-    if (sh_bytes or 0) <= SH_BROADCAST_MAX_BYTES:
-        _sh_side = F.broadcast
+    if 2 * (sh_bytes or 0) <= SH_BROADCAST_MAX_BYTES:
+        sh_side = F.broadcast
     else:
-        _sh_side = lambda df: df.hint("merge")  # noqa: E731
-    verified = (
-        pairs.join(_sh_side(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))), "id_a")
-        .join(_sh_side(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))), "id_b")
-        .select("id_a", "id_b", F.round(jaccard_arrays(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= verify_threshold)
+        sh_side = lambda t: t.hint("merge")  # noqa: E731
+    verified = _band_join_verify(sigs, sigs, verify_threshold, sh_side).select(
+        F.col("new_id").alias("id_a"), F.col("store_id").alias("id_b"), "jaccard"
     )
 
     # Expand representative pairs back to full-corpus pairs.
@@ -1323,22 +1274,28 @@ def minhash_tables(
     shingle_n: int = 3,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Persistable MinHash record per doc: ``(id, bands array<long>,
-    sh array<long>)`` — the band hashes that generate LSH candidates
-    plus the distinct shingle hashes that verify them. This is the
-    SIGNATURE STORE row for cross-crawl near-dup (Dolma/RedPajama
-    style cross-dump dedup): write it as parquet per curated batch,
-    and each new crawl joins against the accumulated store without
-    ever re-reading prior crawls' TEXT. ~(num_hashes/8 + |shingles|)
-    * 8 bytes per doc vs the full page — the store is orders of
-    magnitude smaller than the corpus it shields.
+    """MinHash record per doc: ``(id, bands array<long>, sh
+    array<long>)`` — the band hashes that generate LSH candidates plus
+    the distinct shingle hashes that verify them. It is the one
+    signature construction: lsh_candidates runs it over its exact-dup
+    representatives, and it is the SIGNATURE STORE row for cross-crawl
+    near-dup (Dolma/RedPajama style cross-dump dedup): write it as
+    parquet per curated batch, and each new crawl joins against the
+    accumulated store without ever re-reading prior crawls' TEXT.
+    ~(num_hashes/8 + |shingles|) * 8 bytes per doc vs the full page —
+    the store is orders of magnitude smaller than the corpus it
+    shields.
 
-    Same construction as lsh_candidates' internal tables (shingle
-    strings hashed exactly once, lanes re-hash the 8-byte long,
-    codegen'd min aggregation) — parity is pytest-pinned so the two
-    cannot drift."""
+    Each shingle string is hashed exactly once (h0); the num_hashes
+    lanes re-hash that 8-byte long instead of the ~20-byte string
+    (measured ~2x on the signature stage), and the lane minima and the
+    shingle-hash set come out of one aggregate. Texts with no shingles
+    (NULL) get no row."""
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     if num_partitions:
+        # the shingle explode multiplies rows ~500x; spread by the
+        # unique id first so the stage does not serialize on a small
+        # source's few input splits
         base = base.repartition(num_partitions, "id")
     exploded = base.select(
         "id", F.explode(word_shingles("text", shingle_n)).alias("shingle")
@@ -1355,27 +1312,33 @@ def minhash_tables(
     return agg.select("id", F.array(*band_cols).alias("bands"), "sh")
 
 
-def cross_batch_near_dups(
+def _band_join_verify(
     new_sigs: DataFrame,
     store_sigs: DataFrame,
-    verify_threshold: float = 0.7,
+    verify_threshold: float,
+    sh_side=None,
 ) -> DataFrame:
-    """Near-dups of the NEW batch against the accumulated signature
-    store (both sides :func:`minhash_tables` rows): ``(new_id,
-    store_id, jaccard)``. Band-bucket equi-join generates candidates
-    (the only shuffle keys are (band_id, band_hash) — identical scale
-    shape to lsh_candidates), exact hashed-shingle Jaccard verifies.
+    """Band-bucket equi-join of two :func:`minhash_tables` tables,
+    verified by exact hashed-shingle Jaccard: ``(new_id, store_id,
+    jaccard)``. The same DataFrame on both sides gives within-table
+    pairs (new_id < store_id dedups the symmetric join). ``sh_side``
+    wraps both shingle-set lookups (e.g. ``F.broadcast``).
 
-    The incremental loop: detect -> drop/cluster the hits -> append
-    the SURVIVORS' signature rows to the store -> next batch. Pass
-    the same batch as both sides for within-batch pairs (new_id <
-    store_id dedups the symmetric join)."""
+    Verifying on the HASHED shingle sets (array<long>) equals Jaccard
+    over the strings up to a ~n^2/2^64 collision probability
+    (negligible and deterministic), while the pair joins ship 8-byte
+    longs instead of ~20-byte shingle strings (measured 1.5x on
+    lsh_candidates at 60k docs x 12-way dups)."""
 
     def _banded(sigs, idn):
         return sigs.select(
             F.col("id").alias(idn),
             F.posexplode("bands").alias("band_id", "band_hash"),
         )
+
+    def _sh(sigs, idn, shn):
+        t = sigs.select(F.col("id").alias(idn), F.col("sh").alias(shn))
+        return sh_side(t) if sh_side else t
 
     same = new_sigs is store_sigs
     pairs = _banded(new_sigs, "new_id").join(
@@ -1388,16 +1351,8 @@ def cross_batch_near_dups(
     # store must therefore never already contain the current batch)
     pairs = pairs.select("new_id", "store_id").distinct()
     return (
-        pairs.join(
-            new_sigs.select(F.col("id").alias("new_id"), F.col("sh").alias("sh_a")),
-            "new_id",
-        )
-        .join(
-            store_sigs.select(
-                F.col("id").alias("store_id"), F.col("sh").alias("sh_b")
-            ),
-            "store_id",
-        )
+        pairs.join(_sh(new_sigs, "new_id", "sh_a"), "new_id")
+        .join(_sh(store_sigs, "store_id", "sh_b"), "store_id")
         .select(
             "new_id",
             "store_id",
@@ -1405,6 +1360,24 @@ def cross_batch_near_dups(
         )
         .filter(F.col("jaccard") >= verify_threshold)
     )
+
+
+def cross_batch_near_dups(
+    new_sigs: DataFrame,
+    store_sigs: DataFrame,
+    verify_threshold: float = 0.7,
+) -> DataFrame:
+    """Near-dups of the NEW batch against the accumulated signature
+    store (both sides :func:`minhash_tables` rows): ``(new_id,
+    store_id, jaccard)``, by the band join + Jaccard verify that
+    lsh_candidates also runs. Catalyst picks the join sides from the
+    inputs' own statistics (lsh_candidates, whose input is a
+    checkpoint with frozen stats, picks them from a measured size).
+
+    The incremental loop: detect -> drop/cluster the hits -> append
+    the SURVIVORS' signature rows to the store -> next batch. Pass
+    the same batch as both sides for within-batch pairs."""
+    return _band_join_verify(new_sigs, store_sigs, verify_threshold)
 
 
 def tune_lsh(

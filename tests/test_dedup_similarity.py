@@ -3,6 +3,9 @@ ANN recall is measured against the exact result."""
 
 from __future__ import annotations
 
+import re
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -43,14 +46,17 @@ def test_minhash_lsh_finds_planted(corpus):
     assert exact.jaccard == 1.0
 
 
+_DUP_BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+_DUP_NEAR = _DUP_BASE.replace("delta", "DELTA")
+# two exact-dup groups (3 copies, 2 copies) one near-dup apart
+EXACT_DUP_ROWS = [(1, _DUP_BASE), (2, _DUP_BASE), (3, _DUP_BASE), (10, _DUP_NEAR), (11, _DUP_NEAR)]
+
+
 def test_minhash_exact_dup_group_expansion(spark):
     """lsh_candidates canonicalizes exact dups before the LSH path;
     the expansion must emit ALL within-group pairs (jaccard 1.0) and
     cross-group pairs carrying the representative jaccard."""
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    near = base.replace("delta", "DELTA")
-    rows = [(1, base), (2, base), (3, base), (10, near), (11, near)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = spark.createDataFrame(EXACT_DUP_ROWS, "doc_id long, text string")
     out = dedup.lsh_candidates(df, "doc_id", "text", verify_threshold=0.3)
     got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
     assert {(1, 2), (1, 3), (2, 3)} <= set(got)
@@ -1286,21 +1292,106 @@ def test_lsh_verify_join_paths_identical(spark, monkeypatch):
     """r6: the verify join picks broadcast vs sort-merge for the
     shingle-set table from its REAL materialized size (frozen
     checkpoint stats are garbage). Both paths must produce the same
-    pair set bit-for-bit."""
-    from ocr_compare_spark.operators import dedup
-
+    pair set bit-for-bit, on repeated texts and on exact-dup groups
+    (whose rep pairs go through the expansion)."""
     rows = [(i, f"w{i % 7} common text body shared tokens run {i % 3} tail") for i in range(60)]
-    df = spark.createDataFrame(rows, ["id", "text"])
+    corpora = [
+        (spark.createDataFrame(rows, ["id", "text"]), 0.7),
+        (spark.createDataFrame(EXACT_DUP_ROWS, ["id", "text"]), 0.3),
+    ]
 
     def run():
-        return sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.lsh_candidates(df, "id", "text").collect()
-        )
+        return [
+            sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in dedup.lsh_candidates(
+                    df, "id", "text", verify_threshold=t
+                ).collect()
+            )
+            for df, t in corpora
+        ]
 
     base = run()
     # force the sort-merge path
     monkeypatch.setattr(dedup, "SH_BROADCAST_MAX_BYTES", 1)
     forced = run()
     assert base == forced
-    assert base  # non-trivial: the repeated texts must produce pairs
+    assert all(base)  # non-trivial: both corpora must produce pairs
+    # the exact-dup corpus emits its cross-group pairs too
+    assert any(j < 1.0 for _, _, j in base[1])
+
+
+def test_lsh_sh_broadcast_cap_counts_both_sides(spark, monkeypatch):
+    """The self verify join looks the sh table up twice and each
+    lookup is its own broadcast relation, so the cap must hold twice
+    the measured table: at a cap of exactly one side's size neither
+    lookup may broadcast; at twice it both do."""
+    rows = [(i, f"w{i % 7} common text body shared tokens run {i % 3} tail {i}") for i in range(60)]
+    df = spark.createDataFrame(rows, ["id", "text"])  # distinct texts: reps == rows
+    one_side = (
+        dedup.minhash_tables(df, "id", "text")
+        .agg(F.sum(F.size("sh") * 8 + F.octet_length(F.col("id").cast("string")) + 48))
+        .first()[0]
+    )
+
+    def sh_broadcasts(cap):
+        """Broadcast exchanges in the formatted plan that carry a
+        verify join's shingle-set column."""
+        monkeypatch.setattr(dedup, "SH_BROADCAST_MAX_BYTES", cap)
+        out = dedup.lsh_candidates(df, "id", "text")
+        plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
+        inputs = re.findall(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+        return sum(1 for cols in inputs if re.search(r"\bsh_[ab]#", cols))
+
+    assert sh_broadcasts(one_side) == 0
+    assert sh_broadcasts(2 * one_side) == 2
+
+
+def _py_shingles(text: str, n: int = 3) -> set[str]:
+    toks = re.split(r"\s+", text)
+    return {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1))}
+
+
+def _round6(x: float) -> float:
+    # Spark's round(): HALF_UP on the double's decimal string
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_lsh_candidates_matches_python_jaccard(spark):
+    """Every emitted pair carries the pure-Python string-shingle
+    Jaccard; every pair with identical shingle sets is emitted, also
+    when the texts differ byte-wise; NULL text is in no pair."""
+    rng = np.random.default_rng(7)
+    base = " ".join(f"v{i}" for i in rng.integers(0, 50, size=14))
+    toks = base.split()
+    near1 = " ".join(toks[:4] + ["EDIT"] + toks[5:])
+    near2 = " ".join(toks[:9] + ["OTHER"] + toks[10:])
+    rows = [
+        (1, base), (2, base), (3, base),  # exact-dup group of 3
+        (4, near1), (5, near2),  # near-dup variants
+        (6, None), (7, ""),
+        (8, "solo pair"), (9, "solo  pair"),  # < shingle_n words
+        (10, "x y z x y z"), (11, "x y z x y z x y z"),  # same shingle set
+    ] + [
+        (20 + i, " ".join(f"v{j}" for j in rng.integers(0, 50, size=12)))
+        for i in range(6)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.lsh_candidates(df, "doc_id", "text", verify_threshold=0.3).collect()
+    }
+    sh = {i: _py_shingles(t) for i, t in rows if t is not None}
+    want = {
+        (a, b): _round6(len(sh[a] & sh[b]) / len(sh[a] | sh[b]))
+        for a in sh
+        for b in sh
+        if a < b
+    }
+    assert not any(6 in p for p in got)
+    assert {p: want[p] for p in got} == got
+    assert min(got.values()) >= 0.3
+    full = {p for p, j in want.items() if j == 1.0}
+    assert full == {(1, 2), (1, 3), (2, 3), (8, 9), (10, 11)}
+    assert full <= set(got)
+    assert {(1, 4), (1, 5)} & set(got)  # non-trivial: a near-dup is found
