@@ -71,7 +71,7 @@ def py_words(text: str) -> list[str]:
 def word_types(df: DataFrame, text_col: str = "text") -> DataFrame:
     """``(word, n)`` frequency table over whitespace words — the ONE
     corpus-sized pass of BPE training (map-side combine)."""
-    from ocr_compare_spark.operators.spread import spread_small_input
+    from ocr_compare_spark.operators.adaptive import spread_small_input
 
     df = spread_small_input(df)  # few-split source -> serial tokenize (r6)
     return (
@@ -250,7 +250,7 @@ def bpe_token_counts(
 ) -> DataFrame:
     """Input plus ``bpe_token_count`` — the real-tokenizer token count
     for budgets/shard packing (vs textstats' whitespace proxy)."""
-    from ocr_compare_spark.operators.spread import spread_small_input
+    from ocr_compare_spark.operators.adaptive import spread_small_input
 
     # the Arrow encode UDF runs on the input's splits — spread a
     # few-split source or it is nearly serial (r6)

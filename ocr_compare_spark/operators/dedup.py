@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ocr_compare_spark.operators.adaptive import build_side
+
 # lsh_candidates persists its (tiny, ids-only) membership aggregate so
 # the expansion joins don't recompute the md5 groupBy. The returned
 # DataFrame is lazy, so the function itself can never know when it is
@@ -28,14 +30,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 # release_lsh_cache() after materializing their result).
 _LSH_CACHED: list[DataFrame] = []
 
-#: Broadcast cap for lsh_candidates' verify joins (see the r6 comment
-#: there). The cap covers the SUMMED raw bytes of every broadcast
-#: side: the self join looks the checkpointed sh table up twice, and
-#: each lookup builds its own broadcast relation, so twice the
-#: measured table must fit. Below it both lookups broadcast (the plan
-#: Catalyst picked off frozen stats, and the right one at bench scale
-#: — tens of MB); above it the verify joins become sort-merge so a
-#: corpus-sized shingle-set table is never collected to the driver.
+#: Broadcast cap for lsh_candidates' band and verify joins (adaptive).
 SH_BROADCAST_MAX_BYTES = 256 << 20
 
 
@@ -196,18 +191,10 @@ def connected_components(
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    # both round-join inputs are checkpointed LogicalRDDs with frozen
-    # stats (the localCheckpoint STATS trap) — Catalyst cannot pick
-    # the build side, and electing the EDGE table would broadcast it
-    # every round (pagerank's plan-verified failure mode). Decide
-    # once from the real materialized label table: broadcast when it
-    # fits, shuffled-hash build on it when it does not.
-    from ocr_compare_spark.operators.graph import (
-        NODE_BROADCAST_MAX_BYTES,
-        _node_side_hint,
-    )
+    # round-join build side decided ONCE from the real label table
+    from ocr_compare_spark.operators.graph import NODE_BROADCAST_MAX_BYTES
 
-    side = _node_side_hint(labels, "id", NODE_BROADCAST_MAX_BYTES)
+    side = build_side(labels, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
     for _ in range(max_iters):
         neighbor_min = (
             edges.join(side(labels), edges.dst == labels.id)
@@ -310,37 +297,15 @@ def lsh_candidates(
         F.min("id").alias("id"), F.any_value("text").alias("text")
     ).select("id", "text")
     # Shingle, sign, band and keep the shingle-hash set in one pass.
-    # Four consumers read it (both sides of the band self-join and both
-    # aliased sh lookups of the verify — ReuseExchange never fires
-    # across differently-aliased join sides), so it is materialized
-    # once; the size probe below reads the same checkpoint.
+    # The band self-join, the sh lookups and both build-side probes
+    # read it, so it is materialized once; the second sh lookup reuses
+    # the first one's broadcast (ReusedExchange).
     sigs = minhash_tables(
         reps, "id", "text", num_hashes, bands, shingle_n, num_partitions
     ).localCheckpoint(eager=True)
-    # r6: the verify join's build side must be chosen from REAL sizes
-    # — sigs is a checkpointed LogicalRDD whose frozen stats descend
-    # from the tiny source estimate (the localCheckpoint STATS trap),
-    # so Catalyst elects it for broadcast REGARDLESS of its actual
-    # size. At bench scale that is also the right call (tens of MB,
-    # local-mode broadcast is a memcpy; plan-verified at sf1.0), so
-    # the cap is set where broadcasting genuinely stops making sense;
-    # beyond it the join falls back to sort-merge — never a
-    # driver-side collect of a corpus-sized shingle-set table.
-    # Measured from the materialized checkpoint: exact array bytes +
-    # per-row overhead, one node-sized job; both lookups broadcast,
-    # so twice that must fit under the cap.
-    sh_bytes = sigs.agg(
-        F.sum(
-            F.size("sh") * 8
-            + F.octet_length(F.col("id").cast("string"))
-            + F.lit(48)
-        )
-    ).collect()[0][0]
-    if 2 * (sh_bytes or 0) <= SH_BROADCAST_MAX_BYTES:
-        sh_side = F.broadcast
-    else:
-        sh_side = lambda t: t.hint("merge")  # noqa: E731
-    verified = _band_join_verify(sigs, sigs, verify_threshold, sh_side).select(
+    sh_side = build_side(sigs.select("id", "sh"), SH_BROADCAST_MAX_BYTES, "merge")
+    band_side = build_side(_band_rows(sigs, "store_id"), SH_BROADCAST_MAX_BYTES, "merge")
+    verified = _band_join_verify(sigs, sigs, verify_threshold, sh_side, band_side).select(
         F.col("new_id").alias("id_a"), F.col("store_id").alias("id_b"), "jaccard"
     )
 
@@ -1312,17 +1277,27 @@ def minhash_tables(
     return agg.select("id", F.array(*band_cols).alias("bands"), "sh")
 
 
+def _band_rows(sigs: DataFrame, idn: str) -> DataFrame:
+    """``(idn, band_id, band_hash)``: one row per band."""
+    return sigs.select(
+        F.col("id").alias(idn),
+        F.posexplode("bands").alias("band_id", "band_hash"),
+    )
+
+
 def _band_join_verify(
     new_sigs: DataFrame,
     store_sigs: DataFrame,
     verify_threshold: float,
-    sh_side=None,
+    sh_side=lambda t: t,
+    band_side=lambda t: t,
 ) -> DataFrame:
     """Band-bucket equi-join of two :func:`minhash_tables` tables,
     verified by exact hashed-shingle Jaccard: ``(new_id, store_id,
     jaccard)``. The same DataFrame on both sides gives within-table
-    pairs (new_id < store_id dedups the symmetric join). ``sh_side``
-    wraps both shingle-set lookups (e.g. ``F.broadcast``).
+    pairs (new_id < store_id dedups the symmetric join). ``band_side``
+    wraps the store side's band rows and ``sh_side`` both shingle-set
+    lookups (e.g. ``F.broadcast``).
 
     Verifying on the HASHED shingle sets (array<long>) equals Jaccard
     over the strings up to a ~n^2/2^64 collision probability
@@ -1330,19 +1305,12 @@ def _band_join_verify(
     longs instead of ~20-byte shingle strings (measured 1.5x on
     lsh_candidates at 60k docs x 12-way dups)."""
 
-    def _banded(sigs, idn):
-        return sigs.select(
-            F.col("id").alias(idn),
-            F.posexplode("bands").alias("band_id", "band_hash"),
-        )
-
     def _sh(sigs, idn, shn):
-        t = sigs.select(F.col("id").alias(idn), F.col("sh").alias(shn))
-        return sh_side(t) if sh_side else t
+        return sh_side(sigs.select(F.col("id").alias(idn), F.col("sh").alias(shn)))
 
     same = new_sigs is store_sigs
-    pairs = _banded(new_sigs, "new_id").join(
-        _banded(store_sigs, "store_id"), ["band_id", "band_hash"]
+    pairs = _band_rows(new_sigs, "new_id").join(
+        band_side(_band_rows(store_sigs, "store_id")), ["band_id", "band_hash"]
     )
     if same:
         pairs = pairs.filter(F.col("new_id") < F.col("store_id"))

@@ -80,7 +80,7 @@ def hashed_tf(
     if num_partitions:
         df = df.repartition(num_partitions)
     else:
-        from ocr_compare_spark.operators.spread import spread_small_input
+        from ocr_compare_spark.operators.adaptive import spread_small_input
 
         df = spread_small_input(df)
     c = F.col(text_col)

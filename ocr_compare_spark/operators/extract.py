@@ -26,7 +26,7 @@ from ocr_compare_spark.engines.base import EngineSpec, ParsedDoc, create_engine,
 from ocr_compare_spark.engines.density import density_from_raws
 from ocr_compare_spark.engines.dom_heuristic import dom_from_raws
 from ocr_compare_spark.engines.html_tree import segment_html
-from ocr_compare_spark.operators.spread import spread_to
+from ocr_compare_spark.operators.adaptive import spread_to
 from ocr_compare_spark.schema import (
     EXTRACT_RESULT_TYPE,
     SEP_BLOCK,

@@ -43,38 +43,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ocr_compare_spark.operators.adaptive import build_side
+
 #: rank 1.0 in microunits — every node's starting mass.
 RANK_ONE6 = 1_000_000
 
-#: Broadcast cap for the node-sized side of the iterative round
-#: joins (pagerank ranks / hits scores / cc labels). Both round-join
-#: inputs are checkpointed LogicalRDDs whose frozen sizeInBytes
-#: descends from a row-multiplying lineage (the localCheckpoint
-#: STATS trap), so Catalyst cannot pick the build side — measured at
-#: 720k edges it broadcast the EDGE table every round. The operators
-#: therefore decide ONCE per call from the REAL materialized node
-#: table: broadcast when the estimate fits this cap, else a
-#: shuffled-hash join building on the node side (never a driver
-#: collect of a web-scale node table). Local default comfortably
-#: covers bench-scale node tables; production callers with
-#: billion-node graphs pass a smaller cap or rely on the
-#: shuffled-hash path kicking in automatically.
+#: Broadcast cap for the node-sized side of the round joins
+#: (pagerank ranks / hits scores / cc labels; see operators.adaptive).
 NODE_BROADCAST_MAX_BYTES = 64 << 20
-
-
-def _node_side_hint(size_df: DataFrame, key: str, max_bytes: int):
-    """Return a join-side wrapper for the node-sized table: broadcast
-    iff the MATERIALIZED size estimate (exact key bytes + fixed
-    per-row overhead, ONE tiny job over the eager checkpoint) fits
-    ``max_bytes``; otherwise a shuffled-hash build on it, so a
-    misestimated plan can never broadcast (or sort) the edge side.
-    The decision is made once per operator call, not per round."""
-    est = size_df.agg(
-        F.sum(F.octet_length(F.col(key).cast("string")) + F.lit(24))
-    ).collect()[0][0]
-    if (est or 0) <= max_bytes:
-        return F.broadcast
-    return lambda df: df.hint("shuffle_hash")
 
 
 def pagerank(
@@ -141,10 +117,8 @@ def pagerank(
     # shuffle per round instead of two, and the union only adds
     # node-sized rows to the edge-sized aggregate
     zero_seed = nodes.select("node", F.lit(0).cast("long").alias("c"))
-    # decide the round-join strategy ONCE from the real node table
-    # (see NODE_BROADCAST_MAX_BYTES: frozen checkpoint stats had
-    # Catalyst broadcasting the EDGE table every round, plan-verified)
-    side = _node_side_hint(nodes, "node", NODE_BROADCAST_MAX_BYTES)
+    # round-join build side decided ONCE from the real rank table
+    side = build_side(ranks, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
     prev_ranks = ranks
     for _ in range(iters):
         contrib = keyed.join(
@@ -247,10 +221,9 @@ def hits(
             ).alias("score6"),
         )
 
-    # node-sized scores are the build side (same frozen-stats trap as
-    # pagerank's round join: the EDGE checkpoint could be elected);
-    # broadcast vs shuffled-hash decided once from the real node table
-    side = _node_side_hint(nodes, "node", NODE_BROADCAST_MAX_BYTES)
+    hubs = nodes.select("node", F.lit(RANK_ONE6).cast("long").alias("score6"))
+    # score-table build side decided ONCE (as pagerank's round join)
+    side = build_side(hubs, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
 
     def _half_round(scores: DataFrame, from_col: str, to_col: str) -> DataFrame:
         contrib = edges.join(
@@ -273,7 +246,6 @@ def hits(
         # joins it can see; a checkpointed scalar-broadcast is fine)
         return _normalize(raw).localCheckpoint(eager=True)
 
-    hubs = nodes.select("node", F.lit(RANK_ONE6).cast("long").alias("score6"))
     auths = None
     for _ in range(iters):
         auths = _half_round(hubs, "_src", "_dst")

@@ -79,7 +79,7 @@ def tfidf_topk(
     """Top-k keywords per document: (id, rank, term, tf, score6)
     with rank 1..k by (score6 desc, term asc). Documents with no
     tokens produce no rows. score6 = tf * idf6 — exact int64."""
-    from ocr_compare_spark.operators.spread import spread_small_input
+    from ocr_compare_spark.operators.adaptive import spread_small_input
 
     if n_docs is None:
         n_docs = df.count()

@@ -86,7 +86,7 @@ def train_unigram_lm(
     attach), and the vocab cap is a distributed top-K ordered by
     (cnt DESC, token ASC) — deterministic under ties.
     """
-    from ocr_compare_spark.operators.spread import spread_small_input
+    from ocr_compare_spark.operators.adaptive import spread_small_input
 
     # byte-light compute-heavy tokenize — spread a few-split source
     # (r6; adaptive no-op on adequately-split inputs). Doc rows move
@@ -132,7 +132,7 @@ def perplexity_scores(
     row, zero shuffle. method="data": broadcast join + one
     map-side-combined groupBy — the 100 TB path.
     """
-    from ocr_compare_spark.operators.spread import spread_small_input
+    from ocr_compare_spark.operators.adaptive import spread_small_input
 
     # spread BEFORE the tokenize/fold (r6): doc rows move whole, so
     # per-doc token order — the round6-before-sum contract's

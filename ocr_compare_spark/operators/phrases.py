@@ -79,7 +79,7 @@ def pmi_phrases(
     (pmi6 desc, w1 asc, w2 asc). Bigrams below ``min_count`` are
     dropped BEFORE the unigram joins. ``pmi6`` is the floor-round6'd
     PMI; exact int64 thereafter."""
-    from ocr_compare_spark.operators.spread import spread_small_input
+    from ocr_compare_spark.operators.adaptive import spread_small_input
 
     # the unigram and bigram tokenize passes are byte-light
     # compute-heavy — spread a few-split source first (r6; adaptive

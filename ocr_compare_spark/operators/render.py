@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ocr_compare_spark.operators.spread import spread_to
+from ocr_compare_spark.operators.adaptive import spread_to
 
 RENDER_SCHEMA = (
     "url string, page_no int, width int, height int, image binary, "

@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_compare_spark.operators import dedup, similarity
+from ocr_compare_spark.operators import adaptive, dedup, similarity
 
 
 @pytest.fixture(scope="module")
@@ -1288,12 +1288,32 @@ def test_rbo_matches_mirror_and_edges(spark):
     assert got[1] == (0, 0) and got[3] == (0, 0) and got[4] == (0, 0)
 
 
+def _plan_nodes(df):
+    """``(operator, columns)`` of each operator in ``df``'s formatted
+    physical plan — the final adaptive plan once ``df`` has run — with
+    the Input (or Output) columns listed in its details."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    ids = set(re.findall(r"\((\d+)\)", plan.split("== Initial Plan ==")[0]))
+    nodes = re.findall(
+        r"^\((\d+)\) (\w+).*\n(?:Input|Output) \[\d+\]: \[([^\]]*)\]", plan, re.M
+    )
+    return [(op, cols) for i, op, cols in nodes if i in ids]
+
+
+def _carrying(nodes, op, col_re):
+    return sum(1 for o, cols in nodes if o == op and re.search(col_re, cols))
+
+
+#: 60 distinct texts, so every row is its own exact-dup representative.
+DISTINCT_ROWS = [(i, f"w{i % 7} common text body shared tokens run {i % 3} tail {i}") for i in range(60)]
+
+
 def test_lsh_verify_join_paths_identical(spark, monkeypatch):
-    """r6: the verify join picks broadcast vs sort-merge for the
-    shingle-set table from its REAL materialized size (frozen
-    checkpoint stats are garbage). Both paths must produce the same
-    pair set bit-for-bit, on repeated texts and on exact-dup groups
-    (whose rep pairs go through the expansion)."""
+    """r6: the band and verify joins pick broadcast vs sort-merge for
+    the band and shingle-set tables from their REAL materialized size
+    (frozen checkpoint stats are garbage). Both paths must produce the
+    same pair set bit-for-bit, on repeated texts and on exact-dup
+    groups (whose rep pairs go through the expansion)."""
     rows = [(i, f"w{i % 7} common text body shared tokens run {i % 3} tail") for i in range(60)]
     corpora = [
         (spark.createDataFrame(rows, ["id", "text"]), 0.7),
@@ -1319,32 +1339,38 @@ def test_lsh_verify_join_paths_identical(spark, monkeypatch):
     assert all(base)  # non-trivial: both corpora must produce pairs
     # the exact-dup corpus emits its cross-group pairs too
     assert any(j < 1.0 for _, _, j in base[1])
+    # the forced run's band self-join is sort-merge too, also after
+    # adaptive re-planning
+    forced_out = dedup.lsh_candidates(corpora[0][0], "id", "text")
+    forced_out.collect()
+    assert _carrying(_plan_nodes(forced_out), "BroadcastExchange", r"\bband_hash#") == 0
 
 
-def test_lsh_sh_broadcast_cap_counts_both_sides(spark, monkeypatch):
-    """The self verify join looks the sh table up twice and each
-    lookup is its own broadcast relation, so the cap must hold twice
-    the measured table: at a cap of exactly one side's size neither
-    lookup may broadcast; at twice it both do."""
-    rows = [(i, f"w{i % 7} common text body shared tokens run {i % 3} tail {i}") for i in range(60)]
-    df = spark.createDataFrame(rows, ["id", "text"])  # distinct texts: reps == rows
-    one_side = (
-        dedup.minhash_tables(df, "id", "text")
-        .agg(F.sum(F.size("sh") * 8 + F.octet_length(F.col("id").cast("string")) + 48))
-        .first()[0]
-    )
+def test_lsh_sh_broadcast_reused_by_second_lookup(spark):
+    """The self verify join looks the sh table up twice; the executed
+    plan broadcasts it once and the other lookup reuses that exchange,
+    which is why the cap counts one hash relation."""
+    out = dedup.lsh_candidates(spark.createDataFrame(DISTINCT_ROWS, ["id", "text"]), "id", "text")
+    out.collect()
+    nodes = _plan_nodes(out)
+    assert _carrying(nodes, "BroadcastExchange", r"\bsh_[ab]#") == 1
+    assert _carrying(nodes, "ReusedExchange", r"\bsh_[ab]#") == 1
+
+
+def test_lsh_sh_broadcast_cap_counts_hash_relation(spark, monkeypatch):
+    """The sh lookups broadcast iff the measured (id, sh) table times
+    the hash-relation overhead fits SH_BROADCAST_MAX_BYTES."""
+    df = spark.createDataFrame(DISTINCT_ROWS, ["id", "text"])  # reps == rows
+    one = adaptive.table_bytes(dedup.minhash_tables(df, "id", "text").select("id", "sh"))
+    k = adaptive.HASH_RELATION_OVERHEAD
 
     def sh_broadcasts(cap):
-        """Broadcast exchanges in the formatted plan that carry a
-        verify join's shingle-set column."""
         monkeypatch.setattr(dedup, "SH_BROADCAST_MAX_BYTES", cap)
-        out = dedup.lsh_candidates(df, "id", "text")
-        plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
-        inputs = re.findall(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-        return sum(1 for cols in inputs if re.search(r"\bsh_[ab]#", cols))
+        nodes = _plan_nodes(dedup.lsh_candidates(df, "id", "text"))
+        return _carrying(nodes, "BroadcastExchange", r"\bsh_[ab]#")
 
-    assert sh_broadcasts(one_side) == 0
-    assert sh_broadcasts(2 * one_side) == 2
+    assert sh_broadcasts(k * one - 1) == 0
+    assert sh_broadcasts(k * one) >= 1
 
 
 def _py_shingles(text: str, n: int = 3) -> set[str]:
