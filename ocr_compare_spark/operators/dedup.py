@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ocr_compare_spark.functions.bind import _bind
 from ocr_compare_spark.operators.adaptive import build_side
 
 # lsh_candidates persists its (tiny, ids-only) membership aggregate so
@@ -57,13 +58,21 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def word_shingles(text_col: str, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles, fully native."""
-    toks = F.split(F.col(text_col), r"\s+")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
+    """Distinct word ``n``-gram shingles, fully native.
+
+    Tokens are Spark's ``\\s+`` split, which keeps an empty first
+    (last) token for leading (trailing) whitespace. Shingle i is
+    tokens i..i+n-1 joined by one space; a text of fewer than ``n``
+    tokens yields its whole token array as one shingle. The split runs
+    once per row and every window slices the bound token array."""
+    return _bind(
+        F.split(F.col(text_col), r"\s+"),
+        lambda toks: F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
+                lambda i: F.array_join(F.slice(toks, i, n), " "),
+            )
+        ),
     )
 
 
@@ -685,18 +694,22 @@ def _word_ngram_hashes(text_col: Column, n: int) -> Column:
     leading/trailing-whitespace splits identically under Spark's
     Java split and DuckDB's string_split_regex), join each n-token
     window with a single space, md5. Documents shorter than ``n``
-    tokens yield an empty array. All native expressions — the gram
-    strings never leave the JVM and only their 32-char hashes are
-    exploded."""
-    toks = F.filter(F.split(F.lower(text_col), r"\s+"), lambda x: x != "")
-    n_grams = F.size(toks) - (n - 1)
-    return F.when(
-        n_grams > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.md5(F.array_join(F.slice(toks, i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    tokens (and NULL text) yield an empty array. All native
+    expressions — the gram strings never leave the JVM and only their
+    32-char hashes are exploded. The split runs once per row; every
+    window slices the bound token array."""
+
+    def grams(toks: Column) -> Column:
+        n_grams = F.size(toks) - (n - 1)
+        return F.when(
+            n_grams > 0,
+            F.transform(
+                F.sequence(F.lit(1), n_grams),
+                lambda i: F.md5(F.array_join(F.slice(toks, i, n), " ")),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return _bind(F.filter(F.split(F.lower(text_col), r"\s+"), lambda x: x != ""), grams)
 
 
 def ngram_decontaminate(
@@ -844,18 +857,21 @@ def substring_dedup(
     """
     if num_partitions:
         docs = docs.repartition(num_partitions, id_col)
-    toks = F.split(F.col(text_col), r"\s+")
-    n_wins = F.size(toks) - (window - 1)
-    wins_arr = F.when(
-        n_wins > 0,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n_wins, F.lit(1))),
-            lambda i: F.struct(
-                i.alias("start"),
-                F.md5(F.array_join(F.slice(toks, i, window), " ")).alias("h"),
+
+    def windows(toks: Column) -> Column:
+        n_wins = F.size(toks) - (window - 1)
+        return F.when(
+            n_wins > 0,
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(n_wins, F.lit(1))),
+                lambda i: F.struct(
+                    i.alias("start"),
+                    F.md5(F.array_join(F.slice(toks, i, window), " ")).alias("h"),
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<struct<start:int,h:string>>"))
+        ).otherwise(F.array().cast("array<struct<start:int,h:string>>"))
+
+    wins_arr = _bind(F.split(F.col(text_col), r"\s+"), windows)
     occ = docs.select(
         F.col(id_col).alias("id"), F.explode(wins_arr).alias("w")
     ).select("id", F.col("w.start").alias("start"), F.col("w.h").alias("h"))
@@ -926,24 +942,33 @@ def dedup_lines_within_doc(text_col: str | Column = "text") -> dict[str, Column]
     cross-document repetition is :func:`paragraph_dedup` /
     :func:`substring_dedup`.
 
-    Pure per-row native expression, zero shuffle: an indexed filter
-    keeps line i iff it is blank or ``array_position`` (first match,
-    1-based) equals i+1. O(lines**2) per row via the position scan —
-    lines-per-page is small and constant, so this stays cheap at any
-    corpus scale.
+    Pure per-row native expression, zero shuffle: the text is split
+    into lines once, then an indexed filter keeps line i iff it is
+    blank or ``array_position`` (first match, 1-based) equals i+1.
+    Cost per row is one split plus O(lines**2) line compares from the
+    position scan (the filter lambda reads the bound line array; a
+    lambda re-splitting the text would cost O(lines * chars)) — lines-per-page is small and constant, so this
+    stays cheap at any corpus scale.
 
     Returns ``{"text": <deduped text>, "n_dup_lines_removed": <count>}``.
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    lines = F.split(c, r"\n")
-    kept = F.filter(
-        lines,
-        lambda x, i: x.rlike(r"^\s*$") | (F.array_position(lines, x) == i + 1),
-    )
-    return {
-        "text": F.array_join(kept, "\n"),
-        "n_dup_lines_removed": F.size(lines) - F.size(kept),
-    }
+
+    def dedup_lines(lines: Column) -> Column:
+        kept = F.filter(
+            lines,
+            lambda x, i: x.rlike(r"^\s*$") | (F.array_position(lines, x) == i + 1),
+        )
+        return _bind(
+            kept,
+            lambda k: F.struct(
+                F.array_join(k, "\n").alias("text"),
+                (F.size(lines) - F.size(k)).alias("n_dup_lines_removed"),
+            ),
+        )
+
+    out = _bind(F.split(c, r"\n"), dedup_lines)
+    return {f: out.getField(f) for f in ("text", "n_dup_lines_removed")}
 
 
 # ------------------------------------------------------ semantic dedup

@@ -46,6 +46,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ocr_compare_spark.functions.bind import _bind
+
 #: ASCII word regex — identical token streams under Java regex and RE2.
 WORD_RE = "[a-z0-9]+"
 
@@ -70,19 +72,24 @@ def _bucket_of(gram: Column, n_buckets: int) -> Column:
 def gram_buckets(text_col: str | Column, n_buckets: int = DEFAULT_BUCKETS) -> Column:
     """array<long> of hashed feature buckets: one per word unigram
     plus one per word bigram ("w1 w2"), in text order. Empty/short
-    texts yield the unigram-only (possibly empty) array."""
-    words = _words(text_col)
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.slice(words, 1, F.size(words) - 1),
-            # slice element i (0-based lambda index) is words[i]; the
-            # partner is words[i+1] — F.get is 0-based and null-safe
-            lambda w, i: F.concat_ws(" ", w, F.get(words, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(words, bigrams)
-    return F.transform(grams, lambda g: _bucket_of(g, n_buckets))
+    texts yield the unigram-only (possibly empty) array. The word
+    regex runs once per row; the bigram lambda reads the bound word
+    array."""
+
+    def buckets(words: Column) -> Column:
+        bigrams = F.when(
+            F.size(words) >= 2,
+            F.transform(
+                F.slice(words, 1, F.size(words) - 1),
+                # slice element i (0-based lambda index) is words[i]; the
+                # partner is words[i+1] — F.get is 0-based and null-safe
+                lambda w, i: F.concat_ws(" ", w, F.get(words, i + 1)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+        grams = F.concat(words, bigrams)
+        return F.transform(grams, lambda g: _bucket_of(g, n_buckets))
+
+    return _bind(_words(text_col), buckets)
 
 
 def _bucket_counts_of(exploded: DataFrame) -> tuple[dict[int, int], int]:

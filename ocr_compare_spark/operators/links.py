@@ -142,6 +142,8 @@ def extract_links(
     #   treatment canonical_url applies (same expressions).
     # Absolute and protocol-relative hrefs still take full
     # canonical_url (arbitrary authority: case, ports, userinfo).
+    # host_of returns '' whenever _scheme is '' — that coupling keeps the
+    # scheme-less passthrough (below) equal to canonical_url's
     clean_host = F.regexp_replace(F.col("_host"), r"^[^/@?#]*@", "")
     origin = F.concat(F.col("_scheme"), F.lit("://"), clean_host)
     # fragment never reaches the server; strip it before classifying

@@ -51,6 +51,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ocr_compare_spark.functions.bind import _bind
+
 #: Driver guard for the literal path: a capped vocab this size is a
 #: few MB of plan literals; anything larger must use method="data".
 MAX_VOCAB_COLLECT = 65536
@@ -155,36 +157,37 @@ def perplexity_scores(
             pairs.append(F.lit(r["token"]))
             pairs.append(F.lit(float(r["logprob"])))
         lm_map = F.create_map(*pairs)
-        toks = _tokens(text_col)
+
         # Single aggregate fold (sum, oov-count) in one pass over the
-        # array — strictly left-to-right summation. One lambda
-        # referencing `toks`, so the split is not inlined N times.
-        folded = F.aggregate(
-            toks,
-            F.struct(
-                F.lit(0.0).alias("s"), F.lit(0).cast("long").alias("oov")
-            ),
-            lambda acc, x: F.struct(
-                (
-                    acc.s
-                    + F.coalesce(
-                        F.element_at(lm_map, x),
-                        _round6(F.log(F.lit(OOV_MASS) / F.lit(float(total)))),
-                    )
-                ).alias("s"),
-                (acc.oov + F.element_at(lm_map, x).isNull().cast("long")).alias(
-                    "oov"
+        # array — strictly left-to-right summation. The split runs
+        # once per row: the count and the fold read the bound tokens.
+        def score(toks: Column) -> Column:
+            folded = F.aggregate(
+                toks,
+                F.struct(
+                    F.lit(0.0).alias("s"), F.lit(0).cast("long").alias("oov")
                 ),
-            ),
-        )
-        n = F.size(toks)
+                lambda acc, x: F.struct(
+                    (
+                        acc.s
+                        + F.coalesce(
+                            F.element_at(lm_map, x),
+                            _round6(F.log(F.lit(OOV_MASS) / F.lit(float(total)))),
+                        )
+                    ).alias("s"),
+                    (acc.oov + F.element_at(lm_map, x).isNull().cast("long")).alias(
+                        "oov"
+                    ),
+                ),
+            )
+            return F.struct(
+                F.size(toks).cast("long").alias("n_tokens"), folded.alias("_f")
+            )
+
         ce = _round6(-F.col("_f").getField("s") / F.col("n_tokens"))
         return (
-            df.select(
-                F.col(id_col),
-                n.cast("long").alias("n_tokens"),
-                folded.alias("_f"),
-            )
+            df.select(F.col(id_col), _bind(_tokens(text_col), score).alias("_b"))
+            .select(id_col, "_b.n_tokens", "_b._f")
             .select(
                 id_col,
                 "n_tokens",
@@ -280,19 +283,27 @@ def bigram_scores(
     ln_alpha = F.floor(
         F.log(F.lit(BACKOFF_ALPHA)) * 1e6 + F.lit(0.5)
     ) / 1e6  # constant-folded
-    toks = _tokens(text_col)
-    n = F.size(toks)
+
     # (prev, tok) rows; the first token gets prev = NULL (never joins
-    # the bigram table, so it scores by its unigram logprob)
-    pairs = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.struct(
-            F.when(i > 1, F.element_at(toks, i - 1)).alias("w1"),
-            F.element_at(toks, i).alias("w2"),
-        ),
-    )
-    ex = df.select(F.col(id_col), n.alias("_n"), F.explode(pairs).alias("p")).select(
-        id_col, "_n", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
+    # the bigram table, so it scores by its unigram logprob). The
+    # split runs once per row; the pair lambda reads the bound tokens.
+    def pairs(toks: Column) -> Column:
+        n = F.size(toks)
+        return F.struct(
+            n.alias("n"),
+            F.transform(
+                F.sequence(F.lit(1), n),
+                lambda i: F.struct(
+                    F.when(i > 1, F.element_at(toks, i - 1)).alias("w1"),
+                    F.element_at(toks, i).alias("w2"),
+                ),
+            ).alias("pairs"),
+        )
+
+    ex = (
+        df.select(F.col(id_col), _bind(_tokens(text_col), pairs).alias("_b"))
+        .select(id_col, F.col("_b.n").alias("_n"), F.explode("_b.pairs").alias("p"))
+        .select(id_col, "_n", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
     bi = bigram.select("w1", "w2", F.col("logprob").alias("_bi_lp"))
     un = unigram.select(

@@ -215,6 +215,72 @@ def test_lsh_topk_recall(vectors):
     assert (0, 50) in a
 
 
+def _word_shingles_mirror(text, n):
+    """Pure-Python word_shingles: Java's ``\\s+`` split keeps empty
+    edge tokens (re.split does too; re.ASCII matches Java's \\s), and
+    array_distinct keeps first occurrences in order."""
+    if text is None:
+        return [None]
+    toks = re.split(r"\s+", text, flags=re.ASCII)
+    grams = [" ".join(toks[i:i + n]) for i in range(max(len(toks) - (n - 1), 1))]
+    return list(dict.fromkeys(grams))
+
+
+def test_word_shingles_matches_mirror(spark):
+    texts = [
+        None,
+        "",
+        "   ",
+        "\t\n ",
+        " lead and trail ",                   # empty first and last token
+        "two words",                          # fewer than n tokens
+        "a b c a b c a b c",                  # repeated n-grams
+        "naïve café 日本語 テキスト über straße",  # multibyte
+        "nbsp\u00a0is not\u2003a separator",  # Java \s is ASCII-only
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    for n in (1, 3):
+        got = {
+            r.id: r.s
+            for r in df.select("id", dedup.word_shingles("text", n).alias("s")).collect()
+        }
+        assert got == {i: _word_shingles_mirror(t, n) for i, t in enumerate(texts)}, n
+
+
+def test_ngram_builders_tokenize_once(spark):
+    # every window lambda reads the bound token array: one split per
+    # row, not one per window position
+    assert str(dedup.word_shingles("text", 3)).count("split(") == 1
+    assert str(dedup._word_ngram_hashes(F.col("text"), 8)).count("split(") == 1
+
+
+def test_plan_audit_flags_lambda_tokenizers(spark):
+    """plan_audit's lambda-tokenizer rule flags the re-splitting
+    shingle form and passes the bound builders."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "plan_audit.py"
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    toks = F.split(F.col("text"), r"\s+")
+    resplit = F.transform(
+        F.sequence(F.lit(1), F.size(toks) - 2),
+        lambda i: F.array_join(F.slice(toks, i, 3), " "),
+    )
+    hits = audit.lambda_tokenizers(audit.optimized_plan_of(df.select(resplit.alias("s"))))
+    assert len(hits) == 1 and hits[0].startswith("split(text#")
+    bound = df.select(
+        dedup.word_shingles("text", 3),
+        dedup._word_ngram_hashes(F.col("text"), 2),
+        F.transform(F.split("text", " "), lambda w: F.split(w, "b")),
+    )
+    assert audit.lambda_tokenizers(audit.optimized_plan_of(bound)) == []
+
+
 def test_adjacent_bucketed_equals_naive(corpus):
     """The sub-bucketed sorted-neighborhood plan must return EXACTLY
     the single-window result (bucket boundaries stitched, id gaps

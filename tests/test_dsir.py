@@ -72,6 +72,12 @@ def test_gram_buckets_edges(spark):
     assert got[3] == []
 
 
+def test_gram_buckets_tokenizes_once(spark):
+    # the bigram lambda reads the bound word array: one regex per row,
+    # not one per word
+    assert str(dsir.gram_buckets("text")).count("regexp_extract_all(") == 1
+
+
 def test_dsir_weights_match_python_mirror(spark, sf_dir):
     d = _corpus(spark, sf_dir)
     target = d.filter(F.col("doc_id") % 25 == 3)

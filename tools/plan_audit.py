@@ -17,6 +17,13 @@ Checks, per headline query:
   repartition; every groupBy key extends its prefix). A regression
   that reintroduces per-level shuffles fails the audit.
 - **Whole-stage codegen present** in every aggregation pipeline.
+- **No tokenizer re-evaluated inside a lambda**: Spark runs a lambda
+  body once per element and shares nothing with the row outside it,
+  so a ``split(text)`` / ``regexp_extract_all(text)`` inside a
+  ``lambdafunction`` re-tokenizes the whole row at every position.
+  Every named plan and registry row's optimized logical plan is
+  scanned; a tokenizer inside a lambda must take a lambda variable as
+  its input. A synthetic re-splitting shingle builder must be flagged.
 
 Usage: python tools/plan_audit.py [sf_dir]   (exit 1 on violation)
 """
@@ -35,6 +42,46 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def optimized_plan_of(df) -> str:
+    qe = df._jdf.queryExecution()  # noqa: SLF001
+    # every field printed: the default maxFields elides wide projections
+    return qe.optimizedPlan().treeString(True, False, 2**31 - 1, False, False)
+
+
+_TOKENIZER = re.compile(r"(?<![\w.])(split|regexp_extract_all)\(")
+
+
+def _group_end(s: str, i: int, at_comma: bool) -> int:
+    """Index of the paren closing the group that starts at ``i`` — or
+    of its first top-level comma when ``at_comma``."""
+    depth = 0
+    for j in range(i, len(s)):
+        if s[j] == "(":
+            depth += 1
+        elif s[j] == ")":
+            if depth == 0:
+                return j
+            depth -= 1
+        elif s[j] == "," and depth == 0 and at_comma:
+            return j
+    return len(s)
+
+
+def lambda_tokenizers(plan: str) -> list[str]:
+    """Tokenizer calls inside a ``lambdafunction`` whose input is not a
+    lambda variable — each one re-tokenizes its row per element."""
+    hits: dict[int, str] = {}
+    for lam in re.finditer(r"lambdafunction\(", plan):
+        body = plan[lam.end():_group_end(plan, lam.end(), False)]
+        for tok in _TOKENIZER.finditer(body):
+            arg = body[tok.end():_group_end(body, tok.end(), True)]
+            # bound variables print as `lambda x_1#7` (expressions) or
+            # `namedlambdavariable()` (auto-generated column names)
+            if not re.search(r"lambda |namedlambdavariable\(", arg):
+                hits[lam.end() + tok.start()] = f"{tok.group(1)}({arg}, ...)"
+    return list(hits.values())
 
 
 def main() -> int:
@@ -61,27 +108,22 @@ def main() -> int:
     li = spark.read.parquet(f"{sf_dir.rstrip('/')}/lineitem.parquet")
 
     results = run_engines_fused(pages, with_spans=False)
-    plans = {
-        "extract_multi_engine": plan_of(results),
-        "compare_align": plan_of(pairwise_compare(results, with_alignment=True)),
-        "winner": plan_of(pick_winner(results)),
-        "spans_assemble": plan_of(
-            assemble_doc_text(
-                extract_spans_stream(pages, engines=("dom",), fields=ASSEMBLY_SPAN_FIELDS)
-            )
+    frames = {
+        "extract_multi_engine": results,
+        "compare_align": pairwise_compare(results, with_alignment=True),
+        "winner": pick_winner(results),
+        "spans_assemble": assemble_doc_text(
+            extract_spans_stream(pages, engines=("dom",), fields=ASSEMBLY_SPAN_FIELDS)
         ),
-        "dedup_minhash": plan_of(
-            dedup.lsh_candidates(docs, "doc_id", "text", verify_threshold=0.5)
+        "dedup_minhash": dedup.lsh_candidates(docs, "doc_id", "text", verify_threshold=0.5),
+        "embed_topk": similarity.brute_force_topk_df(
+            emb, emb.filter(F.col("vec_id") < 8), k=3
         ),
-        "embed_topk": plan_of(
-            similarity.brute_force_topk_df(emb, emb.filter(F.col("vec_id") < 8), k=3)
-        ),
-        "tpch_q1": plan_of(
-            li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum("l_quantity").alias("sum_qty"))
-        ),
+        "tpch_q1": li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(F.sum("l_quantity").alias("sum_qty")),
     }
+    plans = {name: plan_of(df) for name, df in frames.items()}
 
     violations: list[str] = []
 
@@ -89,6 +131,22 @@ def main() -> int:
         if not cond:
             violations.append(f"{name}: {msg}")
 
+    def check_tokenizers(name: str, df) -> None:
+        hits = lambda_tokenizers(optimized_plan_of(df))
+        check(name, not hits, f"tokenizer re-evaluated inside a lambda: {hits[:2]}")
+
+    # the rule must see the trap: the re-splitting shingle form (the
+    # split referenced from the window lambda) has to be flagged
+    toks = F.split(F.col("text"), r"\s+")
+    resplit = docs.select(F.explode(F.array_distinct(F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(toks) - 2, F.lit(1))),
+        lambda i: F.array_join(F.slice(toks, i, 3), " "),
+    ))))
+    check("tokenizer_rule_repro", bool(lambda_tokenizers(optimized_plan_of(resplit))),
+          "lambda-tokenizer rule does not flag the re-splitting shingle form")
+
+    for name, df in frames.items():
+        check_tokenizers(name, df)
     for name, p in plans.items():
         check(name, "BatchEvalPython" not in p, "row-at-a-time Python UDF in plan")
         check(name, "CartesianProduct" not in p, "cartesian product in plan")
@@ -212,11 +270,13 @@ def main() -> int:
     registry_audited = []
     for name, fn in sorted(entry_mod.queries().items()):
         try:
-            p = plan_of(fn(spark, sf_dir))
+            df = fn(spark, sf_dir)
+            p = plan_of(df)
         except Exception as e:  # a query that cannot build is a violation
             violations.append(f"registry:{name}: failed to build plan: {type(e).__name__}: {e}")
             continue
         registry_audited.append(name)
+        check_tokenizers(f"registry:{name}", df)
         check(f"registry:{name}", "BatchEvalPython" not in p,
               "row-at-a-time Python UDF in plan")
         check(f"registry:{name}", "CartesianProduct" not in p,
