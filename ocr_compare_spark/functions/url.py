@@ -10,11 +10,7 @@ shuffle), so it costs nothing at 10^12 rows while shrinking every
 downstream shuffle.
 
 All pure string expressions (regexp_replace / split / array ops) —
-whole-stage codegen, no Python, deterministic. The registered-domain
-helper implements the real PSL algorithm (longest rule, wildcards,
-exceptions, default rule) over an embedded snapshot of
-publicsuffix.org data; the snapshot constants are extendable by
-callers holding a full PSL dump.
+whole-stage codegen, no Python, deterministic.
 """
 
 from __future__ import annotations
@@ -23,57 +19,6 @@ from pyspark.sql import Column, functions as F
 
 # Query parameters that identify the CLICK, not the page.
 TRACKING_PARAM_PATTERN = r"^(utm_[a-z]+|gclid|fbclid|msclkid|mc_eid|ref|ref_src)="
-
-# Public-suffix-list snapshot (publicsuffix.org — public data). This
-# implements the FULL PSL algorithm (longest matching rule wins;
-# wildcard `*.x` rules; `!exception` rules; default rule `*` when
-# nothing matches), over a curated snapshot of the list rather than
-# all ~9k entries: single-label TLDs are covered by the default rule
-# (suffix = last label), so only multi-label rules need listing.
-# Callers with a full PSL dump can extend these constants.
-PSL_EXACT = (
-    # ICANN section: country second-level registrations
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "me.uk", "net.uk", "ltd.uk", "plc.uk", "sch.uk",
-    "com.au", "net.au", "org.au", "edu.au", "gov.au", "id.au", "asn.au",
-    "co.jp", "ne.jp", "or.jp", "ac.jp", "ad.jp", "ed.jp", "go.jp", "gr.jp", "lg.jp",
-    "com.br", "net.br", "org.br", "gov.br", "edu.br",
-    "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn",
-    "com.mx", "org.mx", "net.mx", "gob.mx", "edu.mx",
-    "co.in", "net.in", "org.in", "firm.in", "gen.in", "ind.in", "ac.in", "edu.in",
-    "res.in", "gov.in", "nic.in",
-    "co.kr", "ne.kr", "or.kr", "re.kr", "pe.kr", "go.kr", "ac.kr",
-    "co.za", "org.za", "net.za", "web.za", "gov.za", "ac.za",
-    "com.ar", "net.ar", "org.ar", "gob.ar", "edu.ar",
-    "com.tr", "net.tr", "org.tr", "gov.tr", "edu.tr", "web.tr",
-    "com.tw", "org.tw", "net.tw", "idv.tw", "gov.tw", "edu.tw",
-    "com.hk", "org.hk", "net.hk", "edu.hk", "gov.hk", "idv.hk",
-    "com.sg", "org.sg", "net.sg", "edu.sg", "gov.sg", "per.sg",
-    "co.nz", "net.nz", "org.nz", "govt.nz", "ac.nz", "school.nz", "geek.nz", "gen.nz",
-    "com.my", "net.my", "org.my", "gov.my", "edu.my",
-    "co.id", "or.id", "net.id", "web.id", "ac.id", "sch.id", "go.id", "my.id",
-    "com.ua", "net.ua", "org.ua", "edu.ua", "gov.ua", "in.ua",
-    "com.pl", "net.pl", "org.pl", "edu.pl", "gov.pl", "waw.pl",
-    "co.il", "org.il", "net.il", "ac.il", "gov.il", "muni.il",
-    "com.co", "net.co", "org.co", "edu.co", "gov.co",
-    "co.th", "in.th", "ac.th", "go.th", "or.th", "net.th",
-    "com.vn", "net.vn", "org.vn", "edu.vn", "gov.vn",
-    "com.ph", "net.ph", "org.ph", "edu.ph", "gov.ph",
-    "com.pk", "net.pk", "org.pk", "edu.pk", "gov.pk",
-    "com.eg", "com.sa", "com.ae", "com.qa", "com.kw", "com.jo", "com.lb",
-    "com.ng", "com.gh", "co.ke", "or.ke", "ne.ke", "go.ke", "ac.ke", "sc.ke",
-    "com.ve", "com.pe", "com.ec", "com.uy", "com.py", "com.bo", "com.do", "com.gt",
-    # private section: hosting platforms where each user site is its
-    # own registrable domain
-    "github.io", "gitlab.io", "blogspot.com", "appspot.com", "herokuapp.com",
-    "netlify.app", "vercel.app", "web.app", "firebaseapp.com", "azurewebsites.net",
-    "cloudfront.net", "elasticbeanstalk.com", "pages.dev", "workers.dev", "fly.dev",
-    "onrender.com", "wordpress.com", "s3.amazonaws.com",
-)
-# `*.parent` wildcard rules: ANY single label under the parent is a
-# public suffix (e.g. anything.ck) unless excepted below.
-PSL_WILDCARD = ("ck", "bd", "er", "fk", "kawasaki.jp", "kitakyushu.jp")
-# `!rule` exceptions: these hosts ARE registrable despite a wildcard.
-PSL_EXCEPTIONS = ("www.ck", "city.kawasaki.jp", "city.kitakyushu.jp")
 
 
 def _scheme(url: Column) -> Column:
@@ -190,52 +135,3 @@ def surt_key(url: str | Column) -> Column:
     )
     key = F.concat(rev_host, port_part, F.lit(")"), rest)
     return F.when(c.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*://"), key).otherwise(c)
-
-
-def registered_domain(host: str | Column) -> Column:
-    """eTLD+1 via the PSL algorithm over the embedded snapshot
-    (PSL_EXACT / PSL_WILDCARD / PSL_EXCEPTIONS):
-
-    - exception rules win (``!www.ck`` → suffix is ``ck``, so
-      ``www.ck`` itself is the registered domain);
-    - otherwise the LONGEST matching rule wins, where ``*.parent``
-      wildcard rules match any single label under the parent;
-    - the default rule ``*`` applies when nothing matches (suffix =
-      last label), which also covers every single-label TLD.
-
-    A host that IS a public suffix (e.g. ``co.uk``, ``anything.ck``),
-    a bare host (no dot), an IPv4 literal, or a bracketed IPv6 literal
-    passes through unchanged. Pure Catalyst expressions — the rule
-    sets become literal arrays, plan size O(|snapshot|), zero shuffle."""
-    c = F.col(host) if isinstance(host, str) else host
-    labels = F.split(c, r"\.")
-    n = F.size(labels)
-
-    def last_k(k: int) -> Column:
-        return F.array_join(F.slice(labels, n - (k - 1), k), ".")
-
-    def in_set(col: Column, values: tuple[str, ...], k: int) -> Column:
-        vals = [v for v in values if v.count(".") == k - 1]
-        if not vals:
-            return F.lit(False)
-        return F.array_contains(F.array(*[F.lit(v) for v in vals]), col)
-
-    # suffix_len = number of labels in the winning public suffix
-    suffix_len = (
-        # exceptions first (PSL: exception rules take priority); the
-        # suffix is the rule minus its leftmost label
-        F.when((n >= 3) & in_set(last_k(3), PSL_EXCEPTIONS, 3), F.lit(2))
-        .when((n >= 2) & in_set(last_k(2), PSL_EXCEPTIONS, 2), F.lit(1))
-        # longest rule wins: 3-label (exact or *.2-label-parent) ...
-        .when((n >= 3) & (in_set(last_k(3), PSL_EXACT, 3)
-                          | in_set(last_k(2), PSL_WILDCARD, 2)), F.lit(3))
-        # ... then 2-label (exact or *.tld)
-        .when((n >= 2) & (in_set(last_k(2), PSL_EXACT, 2)
-                          | in_set(last_k(1), PSL_WILDCARD, 1)), F.lit(2))
-        # default rule '*': the last label is the suffix
-        .otherwise(F.lit(1))
-    )
-    is_ipv4 = c.rlike(r"^\d+\.\d+\.\d+\.\d+$")
-    is_ipv6 = c.rlike(r"^\[")  # bracketed literal — dots inside (v4-mapped) are not labels
-    registrable = F.array_join(F.slice(labels, n - suffix_len, suffix_len + 1), ".")
-    return F.when((n <= 1) | is_ipv4 | is_ipv6 | (n <= suffix_len), c).otherwise(registrable)

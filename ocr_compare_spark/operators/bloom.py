@@ -61,16 +61,6 @@ def bloom_positions(
     )
 
 
-def _py_positions(key: str, m_bits: int, k: int) -> list[int]:
-    """Driver/test mirror of bloom_positions (same md5 slices)."""
-    import hashlib
-
-    d = hashlib.md5(str(key).encode()).hexdigest()
-    h1 = int(d[:8], 16)
-    h2 = int(d[8:16], 16) * 2 + 1
-    return [(h1 + i * h2) % m_bits for i in range(k)]
-
-
 def build_bloom(
     df: DataFrame,
     key_col: str,

@@ -258,55 +258,3 @@ def bpe_token_counts(
     enc = bpe_encode_udf(merges)
     return df.withColumn("bpe_token_count", F.size(enc(F.col(text_col))))
 
-
-# ---------------------------------------------------------------------------
-# Pure-Python training mirror (tests pin Spark == mirror)
-
-def train_bpe_py(
-    word_counts: dict[str, int],
-    n_merges: int,
-    min_count: int = 2,
-    merges_per_round: int = 1,
-) -> list[tuple[str, str]]:
-    """Textbook Sennrich learn_bpe over a word-frequency dict, with
-    the same deterministic tie-break (count desc, pair asc) and the
-    same batched disjoint selection as train_bpe."""
-    vocab = {tuple(list(w) + [EOW]): n for w, n in word_counts.items()}
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        k = min(merges_per_round, n_merges - len(merges))
-        stats: dict[tuple[str, str], int] = {}
-        for sym, n in vocab.items():
-            for i in range(len(sym) - 1):
-                stats[(sym[i], sym[i + 1])] = stats.get((sym[i], sym[i + 1]), 0) + n
-        ranked = sorted(
-            (p for p, c in stats.items() if c >= min_count),
-            key=lambda p: (-stats[p], p),
-        )
-        chosen: list[tuple[str, str]] = []
-        used: set[str] = set()
-        for a, b in ranked[: 8 * k]:
-            if a in used or b in used or a + b in used:
-                continue
-            chosen.append((a, b))
-            used.update((a, b, a + b))
-            if len(chosen) == k:
-                break
-        if not chosen:
-            break
-        merges.extend(chosen)
-        for a, b in chosen:
-            new_vocab = {}
-            for sym, n in vocab.items():
-                out: list[str] = []
-                i = 0
-                while i < len(sym):
-                    if i + 1 < len(sym) and sym[i] == a and sym[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(sym[i])
-                        i += 1
-                new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + n
-            vocab = new_vocab
-    return merges

@@ -30,7 +30,6 @@ are exact sums of 6-decimal terms and the pure-Python mirror
 from __future__ import annotations
 
 import math
-import re
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -127,67 +126,6 @@ def score_nb(
         )
         .withColumn("nb_label", F.col("nb_score") > 0)
     )
-
-
-# ---------------------------------------------------------------------------
-# Pure-Python mirror (tests pin Spark == mirror bit-for-bit)
-
-def _py_tokens(text: str) -> list[str]:
-    """Spark ``F.split(_, '\\s+')`` semantics (limit -1): BOTH leading
-    and trailing empty tokens are kept — ``'a b '`` tokenizes to
-    ``['a', 'b', '']`` on both sides (review r5: the mirror previously
-    dropped trailing empties, diverging on trailing whitespace)."""
-    return re.split(r"\s+", text)
-
-
-def _r6(x: float) -> float:
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
-def train_nb_py(
-    pos_texts: list[str],
-    neg_texts: list[str],
-    vocab_size: int | None = None,
-    alpha: float = DEFAULT_ALPHA,
-) -> dict:
-    """Mirror of train_nb: returns {'weights': {token: w}, 'w_oov',
-    'bias'} under the identical smoothing/cap/rounding contract."""
-    cp: dict[str, int] = {}
-    cn: dict[str, int] = {}
-    for t in pos_texts:
-        for w in _py_tokens(t):
-            cp[w] = cp.get(w, 0) + 1
-    for t in neg_texts:
-        for w in _py_tokens(t):
-            cn[w] = cn.get(w, 0) + 1
-    vocab = sorted(set(cp) | set(cn))
-    n_pos, n_neg = sum(cp.values()), sum(cn.values())
-    if vocab_size is not None:
-        vocab = sorted(
-            vocab, key=lambda w: (-(cp.get(w, 0) + cn.get(w, 0)), w)
-        )[:vocab_size]
-    v = len(vocab)
-    dp = n_pos + alpha * (v + 1)
-    dn = n_neg + alpha * (v + 1)
-
-    def lodds(p: int, n: int) -> float:
-        return _r6(math.log((p + alpha) / dp) - math.log((n + alpha) / dn))
-
-    return {
-        "weights": {w: lodds(cp.get(w, 0), cn.get(w, 0)) for w in vocab},
-        "w_oov": lodds(0, 0),
-        "bias": _r6(math.log(len(pos_texts) / len(neg_texts))),
-    }
-
-
-def score_nb_py(text: str, model: dict) -> tuple[int, int, float, bool]:
-    toks = _py_tokens(text)
-    n_oov = sum(1 for w in toks if w not in model["weights"])
-    s = _r6(
-        model["bias"]
-        + sum(model["weights"].get(w, model["w_oov"]) for w in toks)
-    )
-    return len(toks), n_oov, s, s > 0
 
 
 # ---------------------------------------------------------------------------
@@ -439,22 +377,3 @@ def train_logreg_py(
                 sums[slot] += int(math.floor(e * x / n * 1e6 + 0.5))
         wb = _logreg_update(wb, sums, len(docs), lr)
     return {"wb": wb, "dim": dim}
-
-
-def score_logreg_py(text: str, model: dict, threshold: float = 0.5):
-    """Mirror of logreg_scores for one doc (None for blank text)."""
-    from ocr_compare_spark.operators.embedding import py_hashed_tf
-
-    v = py_hashed_tf(text, model["dim"], signed=False)
-    if v is None:
-        return None
-    wb = model["wb"]
-    n = 0.0
-    for x in v:
-        n = n + x
-    dot = 0.0
-    for w, x in zip(wb[1:], v):
-        dot = dot + w * x
-    z = wb[0] + dot / n
-    p = 1.0 / (1.0 + math.exp(-z))
-    return int(math.floor(p * 1e6 + 0.5)), p >= threshold

@@ -66,38 +66,6 @@ def _strip_affixes(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray
     return a, b
 
 
-def levenshtein_np(a: np.ndarray, b: np.ndarray) -> int:
-    """Exact edit distance between two sequences (numpy row DP).
-
-    Common affixes are stripped first (exact); the remaining DP uses
-    the min-accumulate identity for insertions: cur[j] = min over
-    k<=j of (nonins[k] + (j-k)) = accumulate-min(nonins - j) + j.
-    Exact, O(len(a)) numpy passes over the stripped middle.
-
-    Kept as the independent REFERENCE implementation (property tests
-    pin ``levenshtein_fast`` == this == a textbook cell DP); the hot
-    path uses the bit-parallel ``levenshtein_fast`` below.
-    """
-    a, b = _strip_affixes(a, b)
-    m, n = len(a), len(b)
-    if m == 0:
-        return n
-    if n == 0:
-        return m
-    idx = np.arange(1, n + 1, dtype=np.int64)
-    prev = np.arange(n + 1, dtype=np.int64)
-    for i in range(1, m + 1):
-        sub = prev[:-1] + (b != a[i - 1])
-        dele = prev[1:] + 1
-        nonins = np.minimum(sub, dele)
-        first = np.int64(i)  # cur[0]
-        shifted = np.concatenate(([first - 1], nonins - idx))
-        cur_rest = np.minimum.accumulate(shifted)[1:] + idx
-        cur_rest = np.minimum(cur_rest, nonins)
-        prev = np.concatenate(([first], cur_rest))
-    return int(prev[-1])
-
-
 def _myers(a: list, b: list) -> int:
     """Myers/Hyyrö bit-parallel Levenshtein core (Myers 1999, Hyyrö
     2003 "A bit-vector algorithm for computing Levenshtein and Damerau

@@ -1373,46 +1373,6 @@ def cross_batch_near_dups(
     return _band_join_verify(new_sigs, store_sigs, verify_threshold)
 
 
-def tune_lsh(
-    num_hashes: int,
-    threshold: float,
-    max_fp_weight: float = 1.0,
-) -> tuple[int, int]:
-    """Pick the LSH band split ``(bands, rows_per_band)`` for a target
-    Jaccard ``threshold`` — the MMDS S-curve optimization (Leskovec/
-    Rajaraman/Ullman ch. 3.4): a pair with Jaccard s collides with
-    probability p(s) = 1 - (1 - s^r)^b. Among the divisor splits of
-    ``num_hashes`` the best (b, r) minimizes the miss mass above the
-    threshold plus ``max_fp_weight`` times the false-candidate mass
-    below it (both as uniform integrals over s — candidates below
-    the threshold only cost verify compute, misses cost recall,
-    hence the weight knob; at the default both count equally, which
-    lands near the classic (1/b)^(1/r) ~ threshold rule).
-
-    Pure driver-side arithmetic — feed the result to lsh_candidates'
-    ``bands=`` (bands * rows must equal num_hashes, which divisor
-    enumeration guarantees)."""
-    if not (0.0 < threshold < 1.0):
-        raise ValueError("threshold must be in (0, 1)")
-    splits = [
-        (num_hashes // r, r)
-        for r in range(1, num_hashes + 1)
-        if num_hashes % r == 0
-    ]
-    grid = [i / 1000.0 for i in range(1, 1000)]
-
-    def cost(b: int, r: int) -> float:
-        miss = sum(
-            (1.0 - (s**r)) ** b for s in grid if s >= threshold
-        )
-        fp = sum(
-            1.0 - (1.0 - (s**r)) ** b for s in grid if s < threshold
-        )
-        return miss + max_fp_weight * fp
-
-    return min(splits, key=lambda br: cost(*br))
-
-
 def dedup_keep_best(
     df: DataFrame,
     pairs: DataFrame,

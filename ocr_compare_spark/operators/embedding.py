@@ -37,7 +37,6 @@ operators are the consumers.
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
 import numpy as np
@@ -245,22 +244,3 @@ def hashed_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id")
     )
-
-
-def py_hashed_topk(vectors: dict, query_ids, k: int = 3):
-    """Pure-python mirror of hashed_topk (pytest ground truth):
-    vectors = {id: [float]}, returns {(query_id, rank): neighbor_id}."""
-    norms = {i: math.sqrt(sum(x * x for x in v)) for i, v in vectors.items()}
-    out = {}
-    for q in query_ids:
-        sims = []
-        for c, v in vectors.items():
-            if c == q:
-                continue
-            denom = norms[q] * norms[c]
-            dot = sum(a * b for a, b in zip(vectors[q], v))
-            sims.append((-(dot / denom if denom > 0 else 0.0), c))
-        sims.sort()
-        for r, (_, c) in enumerate(sims[:k], start=1):
-            out[(q, r)] = c
-    return out

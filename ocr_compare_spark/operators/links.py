@@ -190,80 +190,3 @@ def extract_links(
     if not with_anchor_text:
         return out.select("src", "dst")
     return out.select("src", "dst", "anchor_text")
-
-
-def inbound_anchors(links: DataFrame, max_texts: int = 100) -> DataFrame:
-    """Anchor-text corpus: per dst url, inbound-edge counts and the
-    distinct anchor texts other pages use for it (capped at
-    ``max_texts`` AFTER sorting, so the kept set is deterministic —
-    a silent arbitrary cap would poison the corpus). One hash
-    aggregation on dst with map-side combine; empty anchor texts
-    count as edges but contribute no text."""
-    texts = F.slice(
-        F.array_sort(
-            F.array_distinct(
-                F.collect_list(F.when(F.col("anchor_text") != "", F.col("anchor_text")))
-            )
-        ),
-        1,
-        max_texts,
-    )
-    return links.groupBy("dst").agg(
-        F.count("*").alias("n_inbound"),
-        F.countDistinct("src").alias("n_src"),
-        texts.alias("anchor_texts"),
-    )
-
-
-def anchor_documents(links: DataFrame, max_texts: int = 100) -> DataFrame:
-    """Anchor-text pseudo-documents: ``(url, n_inbound, anchor_doc)``
-    where anchor_doc is the sorted distinct inbound anchor texts
-    joined with spaces — the classic web-search signal that a page is
-    well described by what OTHER pages call it (Brin & Page 1998
-    §2.2; Craswell et al. 2001 showed anchor-text retrieval beats
-    content retrieval for site finding). The document is a pure
-    function of the inbound edge set (sorted before joining), so
-    retrieval over it is layout-invariant; it feeds
-    operators/index.bm25_topk unchanged — index the crawl by anchor
-    text without touching page bytes."""
-    agg = inbound_anchors(links, max_texts)
-    return agg.select(
-        F.col("dst").alias("url"),
-        "n_inbound",
-        F.array_join("anchor_texts", " ").alias("anchor_doc"),
-    )
-
-
-def domain_graph(
-    links: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Page-level edges collapsed to the REGISTERED-DOMAIN graph —
-    the Common Crawl domain-graph release shape: ``(src_domain,
-    dst_domain, n_links)`` with page-level multiplicity preserved in
-    the count. Intra-domain edges drop (site navigation, not
-    endorsement — the standard host/domain-graph convention), as do
-    edges whose host yields no domain (bare IPs keep the IP literal
-    via registered_domain's passthrough; nulls drop).
-
-    Domain authority = ``graph.pagerank(domain_graph(edges))`` —
-    pagerank's outdeg counts edge ROWS, so feed the collapsed
-    (distinct-pair) rows for the unweighted rank or re-expand by
-    n_links for the link-weighted variant. Scale shape: one map-side-
-    combined groupBy over two row-local native expressions; the
-    domain graph is orders of magnitude smaller than the page graph,
-    so everything downstream (rank rounds, joins back to hosts) runs
-    on the collapsed table."""
-    from ocr_compare_spark.functions.url import host_of, registered_domain
-
-    sd = registered_domain(host_of(F.col(src)))
-    dd = registered_domain(host_of(F.col(dst)))
-    return (
-        links.select(sd.alias("src_domain"), dd.alias("dst_domain"))
-        .filter(
-            F.col("src_domain").isNotNull()
-            & F.col("dst_domain").isNotNull()
-            & (F.col("src_domain") != F.col("dst_domain"))
-        )
-        .groupBy("src_domain", "dst_domain")
-        .agg(F.count("*").alias("n_links"))
-    )

@@ -220,156 +220,7 @@ def perplexity_scores(
     ).withColumn("ppl", _round6(F.exp(F.col("cross_entropy"))))
 
 
-# ------------------------------------------- bigram / stupid backoff
-
-#: Stupid-backoff discount (Brants et al. 2007, "Large Language
-#: Models in Machine Translation" — the web-scale n-gram recipe:
-#: no normalized smoothing, just a fixed multiplicative backoff).
-BACKOFF_ALPHA = 0.4
-
-
-def train_bigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adjacent-pair counts -> ``(w1, w2, cnt, logprob)`` with
-    ``logprob = round6(ln(cnt(w1 w2) / cnt(w1)))`` (the conditional
-    MLE — stupid backoff needs no normalization across the backoff
-    levels). Pairs come from two shifted array slices (zip_with, the
-    repetition_columns shape — no self-join), one groupBy(w1, w2)
-    shuffle with map-side combine, then a broadcast join against the
-    unigram counts for the denominator."""
-    toks = _tokens(text_col)
-    n_pairs = F.greatest(F.size(toks) - 1, F.lit(0))
-    pairs = F.zip_with(
-        F.slice(toks, 1, n_pairs),
-        F.slice(toks, 2, n_pairs),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    counts = (
-        df.select(F.explode(pairs).alias("p"))
-        .select("p.w1", "p.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cnt"))
-    )
-    uni = (
-        df.select(F.explode(toks).alias("w1"))
-        .groupBy("w1")
-        .agg(F.count("*").alias("_c1"))
-    )
-    return counts.join(F.broadcast(uni), "w1").select(
-        "w1", "w2", "cnt", _round6(F.log(F.col("cnt") / F.col("_c1"))).alias("logprob")
-    )
-
-
-def bigram_scores(
-    df: DataFrame,
-    bigram: DataFrame,
-    unigram: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Stupid-backoff bigram cross-entropy per document.
-
-    Per-token score (all components round6'd BEFORE any summation,
-    the lm.py determinism contract):
-    - first token: its unigram logprob (OOV mass for unseen);
-    - seen bigram (w_{i-1}, w_i): the conditional logprob;
-    - unseen bigram: round6(round6(ln(0.4)) + unigram logprob).
-
-    Pure data path (the web-scale shape): pair explode -> broadcast
-    join of the bigram and unigram tables -> one map-side-combined
-    regroup per doc. No driver collect anywhere; plan size O(1) in
-    both vocab sizes. Output: ``(id_col, n_tokens, n_bigram_hits,
-    cross_entropy, ppl)``.
-    """
-    ln_alpha = F.floor(
-        F.log(F.lit(BACKOFF_ALPHA)) * 1e6 + F.lit(0.5)
-    ) / 1e6  # constant-folded
-
-    # (prev, tok) rows; the first token gets prev = NULL (never joins
-    # the bigram table, so it scores by its unigram logprob). The
-    # split runs once per row; the pair lambda reads the bound tokens.
-    def pairs(toks: Column) -> Column:
-        n = F.size(toks)
-        return F.struct(
-            n.alias("n"),
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.struct(
-                    F.when(i > 1, F.element_at(toks, i - 1)).alias("w1"),
-                    F.element_at(toks, i).alias("w2"),
-                ),
-            ).alias("pairs"),
-        )
-
-    ex = (
-        df.select(F.col(id_col), _bind(_tokens(text_col), pairs).alias("_b"))
-        .select(id_col, F.col("_b.n").alias("_n"), F.explode("_b.pairs").alias("p"))
-        .select(id_col, "_n", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    bi = bigram.select("w1", "w2", F.col("logprob").alias("_bi_lp"))
-    un = unigram.select(
-        F.col("token").alias("w2"), F.col("logprob").alias("_uni_lp")
-    )
-    tot = unigram.select(F.first("total").alias("total")).limit(1)
-    scored = (
-        ex.join(F.broadcast(bi), ["w1", "w2"], "left")
-        .join(F.broadcast(un), "w2", "left")
-        .crossJoin(F.broadcast(tot))
-    )
-    uni_or_oov = F.coalesce(F.col("_uni_lp"), _oov_logprob_col())
-    per_tok = F.when(F.col("_bi_lp").isNotNull(), F.col("_bi_lp")).otherwise(
-        F.when(F.col("w1").isNull(), uni_or_oov).otherwise(
-            _round6(ln_alpha + uni_or_oov)
-        )
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.first("_n").alias("n_tokens"),
-        F.sum(F.col("_bi_lp").isNotNull().cast("long")).alias("n_bigram_hits"),
-        F.sum(per_tok).alias("_s"),
-    )
-    return agg.select(
-        id_col,
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "n_bigram_hits",
-        _round6(-F.col("_s") / F.col("n_tokens")).alias("cross_entropy"),
-    ).withColumn("ppl", _round6(F.exp(F.col("cross_entropy"))))
-
-
-# ------------------------------------------- CCNet corpus bucketing
-
-def ce_buckets(
-    scores: DataFrame,
-    strata_col: str = "lang",
-    ce_col: str = "cross_entropy",
-    bucket_col: str = "ce_bucket",
-) -> DataFrame:
-    """CCNet's head/middle/tail split: per stratum (language), bucket
-    documents by cross-entropy TERCILES — ``head`` = the most
-    reference-like third, the slice CCNet ships as its highest
-    quality tier.
-
-    One tiny aggregate (exact interpolated ``percentile`` per
-    stratum — #strata rows) broadcast back onto the scores; the
-    cutoffs are round6-ed so the comparison happens on the same
-    6-decimal grid as the scores themselves (lm.py's cross-engine
-    rounding contract). Fully lazy, zero extra shuffles on the
-    score stream."""
-    cuts = scores.groupBy(strata_col).agg(
-        _round6(F.expr(f"percentile({ce_col}, 1.0D/3.0D)")).alias("_t1"),
-        _round6(F.expr(f"percentile({ce_col}, 2.0D/3.0D)")).alias("_t2"),
-    ).withColumnRenamed(strata_col, "_s")
-    bucket = (
-        F.when(F.col(ce_col) <= F.col("_t1"), F.lit("head"))
-        .when(F.col(ce_col) <= F.col("_t2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-    )
-    # null-safe stratum match: a NULL stratum is a legal groupBy group
-    # (same rule as token_budget_sample_bucketed — a plain join key
-    # would silently drop those docs unlabeled)
-    return (
-        scores.join(F.broadcast(cuts), F.col(strata_col).eqNullSafe(F.col("_s")))
-        .withColumn(bucket_col, bucket)
-        .drop("_s", "_t1", "_t2")
-    )
+# ------------------------------------------- CCNet paragraph filter
 
 
 def paragraph_ppl_filter(

@@ -27,10 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-MEDIA_META_SCHEMA = (
-    "url string, mime string, n_bytes long, magic_ok boolean"
-)
-
 FEATURE_DIM = 16
 
 # feature is array<double>: feature[0] is an exact closed-form md5
@@ -38,25 +34,6 @@ FEATURE_DIM = 16
 FEATURES_SCHEMA = (
     f"url string, mime string, n_bytes long, feature array<double>, decode_error string"
 )
-
-
-def media_metadata(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Typed metadata via native expressions only (S4 mime sniff as
-    column exprs; no Python)."""
-    p = F.col(payload_col)
-    mime = (
-        F.when(F.expr(f"substring({payload_col}, 1, 4) = X'25504446'"), "application/pdf")
-        .when(F.expr(f"substring({payload_col}, 1, 3) = X'FFD8FF'"), "image/jpeg")
-        .when(F.expr(f"substring({payload_col}, 1, 8) = X'89504E470D0A1A0A'"), "image/png")
-        .when(F.expr(f"substring({payload_col}, 1, 4) = X'52494646'"), "audio/wav-or-webp")
-        .otherwise("text/html")
-    )
-    return df.select(
-        "url",
-        mime.alias("mime"),
-        F.octet_length(p).cast("long").alias("n_bytes"),
-        (F.octet_length(p) > 8).alias("magic_ok"),
-    )
 
 
 def _decode_bmp(data: bytes) -> np.ndarray:

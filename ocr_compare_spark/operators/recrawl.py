@@ -1,17 +1,16 @@
 """Recrawl scheduling: per-url change-rate estimation from crawl
-snapshot history -> refetch probability -> a politeness-capped
-refetch batch. (Cho & Garcia-Molina, "Estimating Frequency of
-Change", ACM TOIT 3(3), 2003 — public literature; the scheduling
-seam the reference's cached executor implies but never builds:
-cached_ocr_executor.py:83-86 answers "is this payload new?", this
-operator answers "which urls are WORTH refetching?".)
+snapshot history -> refetch probability. (Cho & Garcia-Molina,
+"Estimating Frequency of Change", ACM TOIT 3(3), 2003 — public
+literature; the scheduling seam the reference's cached executor
+implies but never builds: cached_ocr_executor.py:83-86 answers "is
+this payload new?", this operator answers "which urls are WORTH
+refetching?".)
 
 Why a crawler wants this: refetching everything every cycle spends
 the fetch budget on static pages. The index tier already carries
 change observations for free — sources/cdx.py digests per (urlkey,
 ts) across stacked crawls — so change frequency is estimable without
-touching a single WARC byte, and the refetch batch composes with the
-same politeness caps as the discovery frontier (plans/frontier.py).
+touching a single WARC byte.
 
 Estimator (the paper's bias-corrected ratio estimator): over
 ``n_int = n_fetches - 1`` equal-ish fetch intervals with ``X``
@@ -39,8 +38,7 @@ Scale shape: ONE groupBy(url) whose payload is the slim (ts, digest)
 struct — never the page bytes; snapshot counts per url are small
 (one per crawl), so the collected history array is bounded by the
 crawl count. Everything after the aggregate is per-row native
-expression; the batch capper reuses the distributed prefix-sum
-(sampling.cap_per_key), so no full sort and no driver collect.
+expression, so no full sort and no driver collect.
 """
 
 from __future__ import annotations
@@ -147,80 +145,3 @@ def recrawl_priority(
             ),
         )
     )
-
-
-def recrawl_batch(
-    snaps: DataFrame,
-    now,
-    max_urls: int | None = None,
-    per_host_cap: int | None = None,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    digest_col: str = "digest",
-    default_p6: float = 0.5,
-) -> tuple[DataFrame, dict]:
-    """The scheduling output: urls ordered by refetch worth with the
-    frontier's politeness semantics — at most ``per_host_cap`` per
-    host (highest-p first, deterministic prefix) and ``max_urls``
-    overall. Returns ``(batch, metrics)``; batch columns are
-    (url, host, p_changed6, lam_day6, age_days). Feed the batch to
-    plans/incremental.crawl_delta after fetching: unchanged payloads
-    (the 1-p cases) still cost zero engine work there."""
-    from ocr_compare_spark.functions.url import host_of
-    from ocr_compare_spark.operators import sampling
-
-    pr = recrawl_priority(
-        snaps, now, url_col, ts_col, digest_col, default_p6
-    ).select(
-        "url", "p_changed6", "lam_day6", "age_days"
-    ).withColumn("host", host_of(F.col("url")))
-    pr = pr.localCheckpoint(eager=True)
-    metrics = {"n_candidates": pr.count()}
-
-    # cap_per_key keeps LOWEST priority first -> invert p into [0,1)
-    ordered = pr.withColumn("_prio", F.lit(1.0) - F.col("p_changed6") / 2.0)
-    n_after_host = metrics["n_candidates"]
-    if per_host_cap is not None:
-        ordered = sampling.cap_per_key(
-            ordered, "host", per_host_cap, "url", priority_col="_prio",
-            checkpoint=False,
-        )
-        if max_urls is not None:
-            ordered = ordered.localCheckpoint(eager=True)
-            n_after_host = ordered.count()
-    if max_urls is not None:
-        ordered = sampling.cap_per_key(
-            ordered.withColumn("_all", F.lit(1)), "_all", max_urls, "url",
-            priority_col="_prio", checkpoint=False,
-        ).drop("_all")
-    batch = ordered.drop("_prio").localCheckpoint(eager=True)
-    metrics["n_batch"] = batch.count()
-    if per_host_cap is not None and max_urls is None:
-        n_after_host = metrics["n_batch"]
-    metrics["n_dropped_politeness"] = metrics["n_candidates"] - n_after_host
-    metrics["n_dropped_batch_cap"] = n_after_host - metrics["n_batch"]
-    return batch, metrics
-
-
-def py_change_rate(history, now_secs: float | None = None):
-    """Pure-python mirror of change_rate/recrawl_priority for ONE
-    url's [(ts_secs, digest), ...] history — the pytest pin. Returns
-    (n_fetches, n_changes, lam_day6, p_changed6|None)."""
-    import math
-
-    h = sorted(history)
-    n = len(h)
-    x = sum(1 for a, b in zip(h, h[1:]) if a[1] != b[1])
-    span = h[-1][0] - h[0][0] if n > 1 else 0.0
-    if n <= 1 or span <= 0:
-        return n, x, None, None
-    n_int = float(n - 1)
-    ratio = (n_int - x + 0.5) / (n_int + 0.5)
-    lam = -math.log(ratio) / (span / n_int / 86400.0)
-    lam6 = math.floor(lam * 1e6 + 0.5) / 1e6
-    if now_secs is None:
-        return n, x, lam6, None
-    age_days = (now_secs - h[-1][0]) / 86400.0
-    p = 1.0 - math.exp(-lam6 * age_days)
-    p6 = math.floor(p * 1e6 + 0.5) / 1e6
-    return n, x, lam6, p6

@@ -117,18 +117,6 @@ def py_agent_rules(body: str, agent: str):
     return rules, delay, sitemaps
 
 
-def py_allowed(path: str, rules) -> bool:
-    """Longest-match decision (pattern length, allow wins ties);
-    default allow."""
-    best = None
-    for allow, pattern in rules:
-        if re.match(pattern_to_regex(pattern), path):
-            key = (len(pattern), allow)
-            if best is None or key > best:
-                best = key
-    return True if best is None else best[1]
-
-
 AGENT_RULES_SCHEMA = (
     "host string, allows array<boolean>, plens array<int>, "
     "regexes array<string>, crawl_delay double, n_sitemaps int"

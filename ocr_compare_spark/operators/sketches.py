@@ -42,14 +42,10 @@ and Cormode/Muthukrishnan 2005 (Count-Min).
 
 from __future__ import annotations
 
-import hashlib
 import math
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 # ------------------------------------------------------------- HLL
 
@@ -85,15 +81,6 @@ def hll_register_cols(key: str | Column, p: int) -> tuple[Column, Column]:
     idx = _h32(c, 0) % (1 << p)
     w = _h32(c, 8)
     rho = F.when(w == 0, F.lit(33)).otherwise(F.lit(33) - F.length(F.bin(w)))
-    return idx, rho
-
-
-def _py_idx_rho(key: str, p: int) -> tuple[int, int]:
-    """Driver/test mirror of hll_register_cols."""
-    d = hashlib.md5(str(key).encode()).hexdigest()
-    idx = int(d[:8], 16) % (1 << p)
-    w = int(d[8:16], 16)
-    rho = 33 if w == 0 else 33 - w.bit_length()
     return idx, rho
 
 
@@ -275,25 +262,6 @@ def hll_overlap(
     )
 
 
-def py_hll_estimate(keys, p: int) -> float:
-    """Pure-python mirror of the full estimator (pytest ground truth
-    for the Spark and SQL twins — same fold order, same constants)."""
-    m = 1 << p
-    regs: dict[int, int] = {}
-    for k in keys:
-        idx, rho = _py_idx_rho(k, p)
-        regs[idx] = max(regs.get(idx, 0), rho)
-    s = 0.0
-    for idx in sorted(regs):
-        s += 1.0 / (1 << regs[idx])
-    v = m - len(regs)
-    s += float(v)
-    raw = hll_alpha_m2(p) / s
-    if raw <= 2.5 * m and v > 0:
-        return float(m) * math.log(float(m) / v)
-    return raw
-
-
 # ------------------------------------------------------- Count-Min
 
 
@@ -310,13 +278,6 @@ def cms_position_cols(key: str | Column, depth: int, width: int) -> Column:
         F.sequence(F.lit(0), F.lit(depth - 1)),
         lambda i: F.struct(i.alias("row"), ((h1 + i * h2) % width).alias("pos")),
     )
-
-
-def _py_cms_positions(key: str, depth: int, width: int) -> list[int]:
-    d = hashlib.md5(str(key).encode()).hexdigest()
-    h1 = int(d[:8], 16)
-    h2 = int(d[8:16], 16) * 2 + 1
-    return [(h1 + i * h2) % width for i in range(depth)]
 
 
 def cms_build(
@@ -366,7 +327,7 @@ def cms_estimate(
     width: int = 2048,
     out_col: str = "est_cnt",
 ) -> DataFrame:
-    """Relational path (and the oracle formulation): explode each
+    """Per-key estimates (the oracle formulation): explode each
     key's depth positions, broadcast-join the (tiny, bounded)
     counter table, min over rows. Never-hit positions count as 0.
     Estimates are >= the true count (CM's one-sided error); pure
@@ -380,50 +341,6 @@ def cms_estimate(
         key_col, F.coalesce(F.col("cnt"), F.lit(0)).alias("_c")
     )
     return joined.groupBy(key_col).agg(F.min("_c").alias(out_col))
-
-
-def cms_counters_to_numpy(counters: DataFrame, depth: int, width: int) -> np.ndarray:
-    """Collect the (bounded) counter table into a (depth, width)
-    int64 matrix — the broadcast artifact for the data path. Driver
-    traffic is depth*width rows by construction."""
-    mat = np.zeros((depth, width), dtype=np.int64)
-    for r in counters.collect():
-        mat[r["row"], r["pos"]] = r["cnt"]
-    return mat
-
-
-def cms_estimate_broadcast(
-    keys: DataFrame,
-    matrix: np.ndarray,
-    key_col: str,
-    out_col: str = "est_cnt",
-) -> DataFrame:
-    """Data path: the counter matrix rides a broadcast; membership is
-    one vectorized gather per Arrow batch (plan O(1) in depth*width —
-    the bloom.py might_contain shape). Pytest pins it equal to
-    cms_estimate on non-null keys; NULL keys estimate NULL here and
-    are omitted by the relational path (both 'ignored', differently
-    shaped — withColumn cannot drop rows)."""
-    spark = keys.sparkSession
-    depth, width = matrix.shape
-    bc = spark.sparkContext.broadcast(np.ascontiguousarray(matrix))
-
-    @pandas_udf("long")
-    def _est(col: pd.Series) -> pd.Series:
-        mat = bc.value
-        out = []
-        for k in col:
-            # NULL key -> NULL estimate (the relational path omits the
-            # row entirely; hashing str(None) would conflate NULL with
-            # a literal 'None' token)
-            if k is None:
-                out.append(None)
-                continue
-            pos = _py_cms_positions(k, depth, width)
-            out.append(int(min(mat[i, pos[i]] for i in range(depth))))
-        return pd.Series(out, dtype="object")
-
-    return keys.withColumn(out_col, _est(F.col(key_col).cast("string")))
 
 
 def cms_heavy_hitters(
@@ -631,33 +548,6 @@ def dd_quantiles(
         "n_buckets",
         F.floor(est * 1e6 + F.lit(0.5)).cast("long").alias("est6"),
     )
-
-
-def py_dd_quantile(values, q: float, alpha: float = 0.01) -> float:
-    """Pure-python mirror of dd_build + dd_quantiles for one group
-    (pytest ground truth — same ln/exp, same fold order, same rank
-    rule; returns the unrounded estimate)."""
-    lng = dd_ln_gamma(alpha)
-    gp1 = dd_gamma(alpha) + 1.0
-    buckets: dict[int, int] = {}
-    n = 0
-    for v in values:
-        if v is None:
-            continue
-        if v <= 0:
-            b = DD_ZERO_BKT
-        else:
-            # round6-before-ceil, exactly like dd_bucket_col
-            b = math.ceil(math.floor((math.log(float(v)) / lng) * 1e6 + 0.5) / 1e6)
-        buckets[b] = buckets.get(b, 0) + 1
-        n += 1
-    rank = max(math.ceil(q * float(n)), 1)
-    cum = 0
-    for b in sorted(buckets):
-        cum += buckets[b]
-        if cum >= rank:
-            return 0.0 if b == DD_ZERO_BKT else 2.0 * math.exp(b * lng) / gp1
-    raise ValueError("empty sketch")
 
 
 # ---------------------------------------------------- persistence

@@ -341,66 +341,6 @@ def rollup_timeseries(
     )
 
 
-def rollup_distinct(
-    df: DataFrame,
-    ts_col: str,
-    dims: list[str],
-    key_col: str,
-    resolutions: tuple[int, ...] = (300, 3600, 86400),
-    p: int = 12,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Multi-resolution DISTINCT-count rollup ("distinct users per
-    5m/1h/1d" — the crawl-dashboard question exact counts cannot
-    answer at 100 TB because distinct does not compose across
-    buckets).  HLL registers DO compose: register max over finer
-    buckets IS the sketch of the coarser bucket, so one register
-    build at the finest resolution serves every level — the sketch
-    analog of the continuous aggregate, and the coarsening is EXACT
-    (merge == build-on-union is the pinned HLL invariant, so every
-    level equals a direct register build at that resolution).
-
-    Output: ``(res_s, bucket_start, *dims, n_present, v_zero, est6)``
-    per bucket.  Each register level is localCheckpoint'd (output
-    estimate + next level)."""
-    from ocr_compare_spark.operators import sketches
-
-    res = _check_resolutions(resolutions)
-    group0 = ["bucket_start", *dims]
-    finest = sketches.hll_registers(
-        df.withColumn(
-            "bucket_start",
-            (F.floor(_micros(ts_col) / (res[0] * 1_000_000)) * res[0]).cast("long"),
-        ),
-        key_col,
-        group0,
-        p,
-        num_partitions,
-    )
-    # same non-final-levels-only checkpoint rule as rollup_from_finest
-    levels = [finest]
-    for r in res[1:]:
-        levels[-1] = levels[-1].localCheckpoint(eager=False)
-        nxt = (
-            levels[-1]
-            .groupBy(
-                (F.floor(F.col("bucket_start") / r) * r).cast("long").alias("bucket_start"),
-                *[F.col(d) for d in dims],
-                "idx",
-            )
-            .agg(F.max("m_j").alias("m_j"))
-        )
-        levels.append(nxt)
-
-    out = None
-    for r, lv in zip(res, levels):
-        part = sketches.hll_estimate(lv, group0, p).select(
-            F.lit(r).cast("long").alias("res_s"), *group0, "n_present", "v_zero", "est6"
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
@@ -470,62 +410,6 @@ def interval_overlap_join(
         .drop(r["_bucket"])
     )
     return pairs
-
-
-def rollup_quantiles(
-    df: DataFrame,
-    ts_col: str,
-    dims: list[str],
-    value_col: str,
-    qs=(0.5, 0.95, 0.99),
-    resolutions: tuple[int, ...] = (300, 3600, 86400),
-    alpha: float = 0.01,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Multi-resolution QUANTILE rollup ("p99 latency per 5m/1h/1d")
-    — exact percentiles do not compose across buckets, DDSketch
-    bucket counters DO (merge is a SUM), so one dd_build at the
-    finest resolution serves every level and each coarsening is EXACT
-    (merge == build-on-union is the pinned DD invariant).  The third
-    member of the continuous-aggregate family: counts/sums
-    (rollup_timeseries), distincts (rollup_distinct), quantiles
-    (this).  Output: ``(res_s, bucket_start, *dims, q, n, n_buckets,
-    est6)``."""
-    from ocr_compare_spark.operators import sketches
-
-    res = _check_resolutions(resolutions)
-    group0 = ["bucket_start", *dims]
-    finest = sketches.dd_build(
-        df.withColumn(
-            "bucket_start",
-            (F.floor(_micros(ts_col) / (res[0] * 1_000_000)) * res[0]).cast("long"),
-        ),
-        value_col,
-        group0,
-        alpha,
-        num_partitions,
-    )
-    levels = [finest]
-    for r in res[1:]:
-        levels[-1] = levels[-1].localCheckpoint(eager=False)
-        nxt = (
-            levels[-1]
-            .groupBy(
-                (F.floor(F.col("bucket_start") / r) * r).cast("long").alias("bucket_start"),
-                *[F.col(d) for d in dims],
-                "bkt",
-            )
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        levels.append(nxt)
-
-    out = None
-    for r, lv in zip(res, levels):
-        part = sketches.dd_quantiles(lv, qs, group0, alpha).select(
-            F.lit(r).cast("long").alias("res_s"), *group0, "q", "n", "n_buckets", "est6"
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def funnel(
@@ -727,46 +611,4 @@ def transitions(
     )
     return pairs.groupBy("from_step", "to_step").agg(
         F.count("*").alias("n"), F.sum("_gap").alias("sum_gap_us")
-    )
-
-
-def funnel_counts(funnel_df: DataFrame) -> DataFrame:
-    """The step-level funnel summary derived from ``funnel``'s per-key
-    table: for each step, how many keys reached it, plus conversion
-    ratios (from the previous step and from funnel entry),
-    floor-round6'd to the repo's cross-engine contract.  ONE tiny
-    aggregate over the per-key frame (count per step_reached, then a
-    driver-free running sum via a bounded window over K rows —
-    K = funnel depth, never data-sized).
-
-    Output: ``(step, n_keys, conv_from_prev6, conv_from_first6)``
-    where ``n_keys`` counts keys whose ``step_reached >= step``.
-    """
-    k_steps = sum(1 for c in funnel_df.columns if c.startswith("ts_"))
-    per_depth = funnel_df.groupBy("step_reached").agg(F.count("*").alias("_n"))
-    steps = funnel_df.sparkSession.range(1, k_steps + 1).select(
-        F.col("id").cast("int").alias("step")
-    )
-    # keys at step s = keys with step_reached >= s: suffix-sum the
-    # depth histogram over the K-row frame (bounded window, not a
-    # data-sized shuffle)
-    joined = steps.join(
-        per_depth, steps["step"] <= per_depth["step_reached"], "left"
-    ).groupBy("step").agg(F.coalesce(F.sum("_n"), F.lit(0)).alias("n_keys"))
-    prev = F.last("n_keys").over(
-        Window.orderBy("step").rowsBetween(-1, -1)
-    )
-    first = F.first("n_keys").over(
-        Window.orderBy("step").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    r6 = lambda c: (F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000)  # noqa: E731
-    return joined.select(
-        "step",
-        "n_keys",
-        F.when(
-            prev > 0, r6(F.col("n_keys") / prev)
-        ).alias("conv_from_prev6"),
-        F.when(
-            first > 0, r6(F.col("n_keys") / first)
-        ).alias("conv_from_first6"),
     )

@@ -394,42 +394,3 @@ def langid_label(text_col: str = "text") -> Column:
         )
     best = F.array_max(F.array(*scores))
     return F.when(best.score > 0, best.lang).otherwise(F.lit("und"))
-
-
-def compression_ratio(col: str | Column, level: int = 6) -> Column:
-    """Deflate compression ratio of the UTF-8 text, in integer
-    microunits: with b = text.encode('utf-8'),
-    ratio6 = floor(1e6 * len(zlib.compress(b)) / len(b) + 0.5) —
-    BYTE lengths on both sides (for multibyte scripts the divisor is
-    the encoded size, not the character count); NULL for empty/NULL
-    text. The RedPajama-v2 / Dolma
-    "ccnet_compression_ratio"-family quality signal: highly
-    repetitive or templated pages compress far below prose (~0.3-0.5
-    for natural text; <0.2 flags boilerplate/spam, ~1.0 flags
-    already-compressed or random bytes). Complements the exact
-    repetition_columns counters with a single smooth signal that
-    catches long-range repetition the 2-gram/line counters miss.
-
-    Arrow-batched pandas UDF (zlib is stdlib C — the batch loop is
-    one C call per doc, no Python hot path per byte). Deterministic:
-    zlib's output bytes are fully determined by (input, level,
-    default strategy/wbits) for a given zlib build, and the RATIO is
-    stable across zlib versions in practice; the pytest mirror pins
-    Spark == direct python zlib on the same interpreter. NOT
-    SQL-expressible (no deflate in ANSI/DuckDB) — pytest-gated, the
-    COVERAGE.md non-SQL list documents it."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    @F.pandas_udf("long")
-    def ratio6(s: pd.Series) -> pd.Series:
-        import zlib
-
-        def one(t):
-            if t is None or len(t) == 0:
-                return None
-            b = t.encode("utf-8")
-            return int(len(zlib.compress(b, level)) * 1e6 / len(b) + 0.5)
-
-        return s.map(one).astype("Int64")
-
-    return ratio6(c)

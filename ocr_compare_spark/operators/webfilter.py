@@ -19,18 +19,17 @@ per-row string work, zero shuffle, zero Python:
 order (domains before patterns), NULL for clean URLs — the audit
 column a curation run logs per dropped document.
 
-At 100 TB the blocklist itself is large (millions of domains): the
-literal `when`-chain here is the small-config path; for a real
-blocklist, broadcast-join the rule table on ``registered_domain``
-(functions/url.py PSL) exactly like `decontam`'s broadcast probe.
-That shape is `blocklist_join`.
+The literal `when`-chain is sized for config-sized rule lists; a
+millions-of-domains blocklist would instead broadcast-join a rule
+table on the host's registered domain, the shape of `decontam`'s
+broadcast probe.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from ocr_compare_spark.functions.url import host_of, registered_domain
+from ocr_compare_spark.functions.url import host_of
 
 
 def url_filter_columns(
@@ -44,7 +43,7 @@ def url_filter_columns(
     first matching rule, NULL otherwise; ``blocked`` is 0/1 (long —
     hash-stable in the driver's value compare). Pure native
     expressions; the when-chain is O(#rules) plan nodes, fine for
-    config-sized rule lists (see blocklist_join for the data path).
+    config-sized rule lists.
     """
     c = F.col(url_col) if isinstance(url_col, str) else url_col
     host = host_of(c)
@@ -63,44 +62,3 @@ def url_filter_columns(
         "block_reason": block_reason,
         "blocked": block_reason.isNotNull().cast("long"),
     }
-
-
-def with_url_filter(
-    df: DataFrame,
-    url_col: str = "url",
-    blocked_domains: tuple[str, ...] = (),
-    blocked_patterns: tuple[str, ...] = (),
-) -> DataFrame:
-    out = df
-    for name, col in url_filter_columns(
-        url_col, blocked_domains, blocked_patterns
-    ).items():
-        out = out.withColumn(name, col)
-    return out
-
-
-def apply_blocklist(
-    df: DataFrame, rules: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Scale path for a rule table too large to inline: broadcast
-    equi-join on the PSL registered domain.
-
-    ``rules`` has one column ``domain`` (registered domains). Every
-    URL contributes exactly one join key —
-    ``registered_domain(host)`` — so a million-domain blocklist is a
-    broadcast hash join probe per row, no shuffle of ``df``. Adds
-    ``blocked`` (0/1 long) and ``block_reason`` ('domain:<d>'/NULL).
-    """
-    keyed = df.withColumn("_rd", registered_domain(host_of(url_col)))
-    marker = rules.select(
-        F.lower("domain").alias("_rd"), F.lit(1).alias("_hit")
-    ).distinct()
-    out = keyed.join(F.broadcast(marker), "_rd", "left")
-    return (
-        out.withColumn(
-            "block_reason",
-            F.when(F.col("_hit").isNotNull(), F.concat(F.lit("domain:"), F.col("_rd"))),
-        )
-        .withColumn("blocked", F.col("block_reason").isNotNull().cast("long"))
-        .drop("_rd", "_hit")
-    )

@@ -189,40 +189,3 @@ def crawl_frontier(
     metrics["n_dropped_politeness"] = n_allowed - n_after_host
     metrics["n_dropped_batch_cap"] = n_after_host - metrics["n_frontier"]
     return frontier, metrics
-
-
-def schedule_fetches(
-    frontier: DataFrame,
-    now,
-    default_delay: float = 1.0,
-    url_col: str = "url",
-    host_col: str = "host",
-    rank_col: str = "rank6",
-) -> DataFrame:
-    """Turn a frontier batch into a per-host FETCH SCHEDULE honoring
-    crawl_delay: a host's urls fetch rank-first at ``now + slot *
-    delay`` (slot = 0, 1, ... within the host; delay = the robots
-    Crawl-delay riding on the frontier row, else ``default_delay``
-    seconds). Adds ``slot`` and ``fetch_at``.
-
-    This is the one deliberate full-row window in the crawl stack
-    (row_number per host needs a per-host sequence) — acceptable
-    because the input is the ALREADY-CAPPED batch (per_host_cap ×
-    max_urls bound it), not the open frontier; the shuffle moves one
-    batch, not the crawl. ``now`` follows the recrawl contract: pass
-    a value (epoch seconds or timestamp), never a wall clock —
-    reruns must emit the same schedule."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(host_col).orderBy(F.desc(rank_col), url_col)
-    slot = F.row_number().over(w) - 1
-    delay = (
-        F.coalesce(F.col("crawl_delay"), F.lit(float(default_delay)))
-        if "crawl_delay" in frontier.columns
-        else F.lit(float(default_delay))
-    )
-    now_secs = F.unix_timestamp(F.lit(now).cast("timestamp")).cast("double")
-    out = frontier.withColumn("slot", slot)
-    return out.withColumn(
-        "fetch_at", F.timestamp_seconds(now_secs + F.col("slot") * delay)
-    )

@@ -22,14 +22,11 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # Per-level separators (must match reference ocr_schema.py exactly).
-SEP_WORD = ""
 SEP_LINE = " "
 SEP_PARAGRAPH = " "
 SEP_BLOCK = "\n"
 SEP_PAGE = "\n\n"
 SEP_DOCUMENT = "\n=====\n"
-SEP_ROW = "\t"
-
 # Input corpus table (BASELINE.json input_hint).
 PAGES_SCHEMA = T.StructType(
     [
@@ -175,37 +172,3 @@ ALIGN_RESULT_TYPE = T.StructType(
 )
 
 # Operational tables (FIXTURES.md section 7).
-CACHE_SCHEMA = T.StructType(
-    [
-        T.StructField("engine", T.StringType(), False),
-        T.StructField("content_hash", T.StringType(), False),
-        T.StructField("kwargs_hash", T.StringType(), False),
-        T.StructField("native_json", T.StringType(), True),
-        T.StructField("doc_text", T.StringType(), True),
-        T.StructField("created_ts", T.TimestampType(), True),
-    ]
-)
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("rows_processed", T.LongType(), True),
-        T.StructField("completed_ts", T.TimestampType(), True),
-    ]
-)
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("engine", T.StringType(), False),
-        T.StructField("docs_in", T.LongType(), True),
-        T.StructField("docs_ok", T.LongType(), True),
-        T.StructField("docs_error", T.LongType(), True),
-        T.StructField("error_kind_counts", T.MapType(T.StringType(), T.LongType()), True),
-        T.StructField("bytes_in", T.LongType(), True),
-        T.StructField("elapsed_ms", T.LongType(), True),
-    ]
-)

@@ -24,7 +24,7 @@ Why a pipeline wants the index BEFORE touching any WARC byte:
   to e.g. ``status=200 AND mime='text/html'``.
 
 Spark-first: the tier is LINE-ORIENTED text, so — unlike the
-WARC/WAT/WET readers, which need a Python framing pass — this one is
+WARC reader, which needs a Python framing pass — this one is
 100% JVM-side: ``spark.read.text`` (splittable for plain shards,
 per-file for ``.gz``) + one regexp split + ``from_json`` with a
 partial schema. Zero Python anywhere; malformed lines are dropped
@@ -94,13 +94,6 @@ def cdx_entries(spark: SparkSession, path: str) -> DataFrame:
     ``(urlkey, ts, url, mime, status, digest, length, offset,
     filename, languages)``."""
     return _parse_lines(spark.read.text(path))
-
-
-def cdx_entries_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming twin (file-source exactly-once, one shard per
-    micro-batch) — e.g. feed ``latest_snapshot``-style upserts as new
-    crawl indexes land."""
-    return _parse_lines(spark.readStream.text(path))
 
 
 # ---------------------------------------------------------------------------
@@ -443,17 +436,6 @@ def write_cdx_index(
     return idx
 
 
-def read_cluster_idx(out_dir: str) -> list[tuple[str, str, str]]:
-    """Load ``cluster.idx`` back as (first_urlkey, first_ts14, shard)."""
-    out = []
-    with open(os.path.join(out_dir, "cluster.idx"), encoding="utf-8") as f:
-        for line in f:
-            head, _, name = line.rstrip("\n").partition("\t")
-            key, _, ts14 = head.partition(" ")
-            out.append((key, ts14, name))
-    return out
-
-
 def route_cdx_key(idx: list[tuple[str, str, str]], urlkey: str) -> str | None:
     """Binary-search the cluster.idx triples for the shard whose range
     holds ``urlkey`` — the last shard whose first key is <= urlkey
@@ -467,86 +449,3 @@ def route_cdx_key(idx: list[tuple[str, str, str]], urlkey: str) -> str | None:
     keys = [k for k, _, _ in idx]
     i = bisect.bisect_right(keys, urlkey) - 1
     return idx[max(i, 0)][2]
-
-
-
-def route_cdx_range(
-    idx: list[tuple[str, str, str]], lo: str, hi: str
-) -> list[str]:
-    """Shard files whose key range can intersect ``[lo, hi]`` — the
-    multi-shard generalization of :func:`route_cdx_key`. Shard *i*
-    holds keys in ``[first_i, first_{i+1})`` (shard 0 additionally
-    holds anything below its first key — routing sends under-min keys
-    there), but a heavy KEY RUN can straddle the boundary: the range
-    partitioner splits on (urlkey, ts) while cluster.idx records only
-    the urlkey, so when ``first_{i+1} == lo`` shard *i*'s tail may
-    still carry ``lo`` captures — hence the inclusive ``>= lo`` test
-    (at worst one extra shard opens)."""
-    out = []
-    for i, (first, _ts, name) in enumerate(idx):
-        nxt = idx[i + 1][0] if i + 1 < len(idx) else None
-        lo_i = "" if i == 0 else first
-        if lo_i <= hi and (nxt is None or nxt >= lo):
-            out.append(name)
-    return out
-
-
-def cdx_lookup(
-    spark: SparkSession,
-    index_dir: str,
-    urls: list[str],
-    prefix: bool = False,
-    keys_are_urlkeys: bool = False,
-    max_literal_keys: int = 256,
-) -> DataFrame:
-    """Index lookup that reads ONLY the routed shards — the ZipNum
-    binary-search (reference access pattern of the real CDX API)
-    re-expressed as driver routing over ``cluster.idx`` + a pruned
-    file-list read + a native key filter.
-
-    - ``urls``: bounded query batch (a fetch planner's unit of work);
-      canonicalized to SURT urlkeys unless ``keys_are_urlkeys``.
-    - ``prefix=True``: urlkey *prefix* match (e.g. a whole host:
-      ``com,example)/``) — matches may span shard boundaries; routing
-      covers ``[k, k + U+FFFF]`` per prefix.
-    - Small query sets (≤ ``max_literal_keys``) filter with native
-      ``isin``/``startswith`` chains (pushable predicates — no join at
-      all); larger exact batches fall back to a broadcast semi-join.
-      Prefix batches beyond the literal cap raise: an unbounded
-      prefix fan-out is a scan, not a lookup — use
-      :func:`cdx_entries` + a join for that shape.
-
-    At 100-TB index scale the win is the file-list pruning: a lookup
-    of B keys opens O(B) shards out of thousands, never the whole
-    index; everything after the read is one partial-schema JSON parse
-    over just those shards.
-    """
-    idx = read_cluster_idx(index_dir)
-    keys = sorted(
-        {u if keys_are_urlkeys else surt_key_py(u) for u in urls}
-    )
-    shards: set[str] = set()
-    for k in keys:
-        hi = k + "￿" if prefix else k
-        shards.update(route_cdx_range(idx, k, hi))
-    if not keys or not shards:
-        return spark.createDataFrame([], ENTRIES_SCHEMA)
-    paths = [os.path.join(index_dir, s) for s in sorted(shards)]
-    entries = _parse_lines(spark.read.text(paths))
-    if prefix:
-        if len(keys) > max_literal_keys:
-            raise ValueError(
-                f"{len(keys)} prefix keys > max_literal_keys="
-                f"{max_literal_keys}: unbounded prefix fan-out is a "
-                "scan, not a lookup"
-            )
-        cond = F.col("urlkey").startswith(keys[0])
-        for k in keys[1:]:
-            cond = cond | F.col("urlkey").startswith(k)
-        return entries.filter(cond)
-    if len(keys) <= max_literal_keys:
-        return entries.filter(F.col("urlkey").isin(keys))
-    qdf = spark.createDataFrame([(k,) for k in keys], "qkey string")
-    return entries.join(
-        F.broadcast(qdf), entries["urlkey"] == qdf["qkey"], "left_semi"
-    )

@@ -13,8 +13,7 @@ manifest schema stay identical.
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -23,9 +22,14 @@ def with_bucket(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, manifest_path: str, job_id: str) -> DataFrame:
-    if not os.path.exists(manifest_path):
+    # read through Spark so file:/hdfs:/s3a: URIs resolve; only a
+    # missing manifest means "nothing done" — any other error raises
+    try:
+        m = spark.read.parquet(manifest_path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], "bucket int")
-    m = spark.read.parquet(manifest_path)
     return m.filter((F.col("job_id") == job_id) & (F.col("status") == "done")).select("bucket")
 
 

@@ -30,8 +30,6 @@ path (inference over 100 TB is a full extra scan).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 #: Dolma document record schema (metadata stays a json STRING on the
@@ -143,10 +141,3 @@ def metadata_field(df: DataFrame, field: str, dtype: str = "string") -> DataFram
     return df.withColumn(
         field, F.get_json_object("metadata", f"$.{field}").cast(dtype)
     )
-
-
-def py_document_record(id: str, text: str, source=None, metadata=None) -> str:
-    """Reference single-record serializer (pytest mirror)."""
-    rec = {"id": id, "text": text, "source": source,
-           "metadata": metadata if metadata is not None else None}
-    return json.dumps({k: v for k, v in rec.items() if v is not None})

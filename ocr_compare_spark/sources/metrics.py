@@ -62,13 +62,3 @@ def partition_metrics(results: DataFrame, job_id: str) -> DataFrame:
         yield pd.DataFrame(rows, columns=["job_id", "partition_id", "engine", "docs_in", "docs_ok", "docs_error", "bytes_in", "elapsed_ms"])
 
     return results.select("engine", "error", "doc_text").mapInPandas(per_partition, schema)
-
-
-def error_kind_counts(results: DataFrame) -> DataFrame:
-    """≈ the reference's error-string classification rolled up
-    (page_limit_handler.py:24-35) — quarantine table summary."""
-    return (
-        results.filter(F.col("error").isNotNull())
-        .groupBy("engine", "error")
-        .agg(F.count("*").alias("n"))
-    )

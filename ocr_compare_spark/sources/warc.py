@@ -126,23 +126,8 @@ def warc_pages(spark: SparkSession, path: str) -> DataFrame:
     return frame_warc_files(spark.read.format("binaryFile").load(path))
 
 
-def warc_pages_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming twin: crawl archives landing in a directory become
-    an incremental pages stream (file-source exactly-once semantics —
-    each WARC file is processed in exactly one micro-batch). Compose
-    with run_engines_fused + writeStream exactly like
-    streaming/jobs.extraction_stream."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .load(path)
-    )
-    return frame_warc_files(files)
-
-
 def frame_warc_files(files: DataFrame) -> DataFrame:
-    """(content binary) file rows -> framed response records. Works
-    on batch and streaming DataFrames (same mapInPandas plan)."""
+    """(content binary) file rows -> framed response records."""
     files = files.select("content")
 
     def gen(batches):

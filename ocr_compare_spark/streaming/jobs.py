@@ -289,69 +289,6 @@ def cms_stream(
     )
 
 
-def asof_enrich_stream(
-    spark: SparkSession,
-    input_path: str,
-    dim: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    schema: str,
-    on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    payload: list[str] | None = None,
-    direction: str = "backward",
-    tolerance_us: int | None = None,
-    tiebreak: str | None = None,
-):
-    """Stream-static as-of enrichment: every micro-batch of the event
-    stream is as-of-joined (operators/temporal.asof_join) against a
-    STATIC dimension table — the standard "attach the latest config /
-    price / model version at event time" shape. The carry-forward
-    window cannot run on an unbounded stream (it needs the full key
-    history ordered), but per micro-batch it is plain batch — and
-    because the dimension is static, batching does not change the
-    match: each left row's answer depends only on itself and ``dim``.
-
-    Exactly-once: each batch writes to its OWN subdirectory
-    (``batch=<id>``) with mode=overwrite, so a replayed micro-batch
-    (driver restart between write and checkpoint commit) overwrites
-    its previous partial output instead of appending duplicates —
-    the foreachBatch idempotency convention (hll_stream's cousin for
-    row outputs). Read the result with ``spark.read.parquet(
-    f"{output_path}/batch=*")``.
-
-    The dimension is localCheckpoint'd once up front — it is consumed
-    by EVERY micro-batch, and re-running its lineage per trigger is
-    the repeated-consumer trap (CLAUDE.md).
-    """
-    from ocr_compare_spark.operators.temporal import asof_join
-
-    dim_pinned = dim.localCheckpoint(eager=True)
-    stream = spark.readStream.schema(schema).parquet(input_path)
-
-    def fold(batch_df, batch_id):
-        out = asof_join(
-            batch_df,
-            dim_pinned,
-            on=on,
-            left_ts=left_ts,
-            right_ts=right_ts,
-            payload=payload,
-            direction=direction,
-            tolerance_us=tolerance_us,
-            tiebreak=tiebreak,
-        )
-        out.write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def rollup_stream(
     spark: SparkSession,
     input_path: str,

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators import bloom
+from tests.mirrors import _py_positions
 
 M, K = 1 << 14, 4
 
@@ -24,7 +25,7 @@ def test_positions_match_python_mirror(spark):
         for r in df.select("key", bloom.bloom_positions("key", M, K).alias("p")).collect()
     }
     for key, p in got.items():
-        assert p == bloom._py_positions(key, M, K)
+        assert p == _py_positions(key, M, K)
         assert all(0 <= x < M for x in p) and len(p) == K
 
 
@@ -68,11 +69,11 @@ def test_filter_new_composition(spark):
     # python mirror of the whole filter
     bits = set()
     for i in range(200):
-        bits.update(bloom._py_positions(f"seen{i}", M, K))
+        bits.update(_py_positions(f"seen{i}", M, K))
     want = {
         f"new{i}"
         for i in range(200)
-        if not all(p in bits for p in bloom._py_positions(f"new{i}", M, K))
+        if not all(p in bits for p in _py_positions(f"new{i}", M, K))
     }
     assert kept == want
     assert len(kept) >= 190  # fp rate at this sizing is ~<1%

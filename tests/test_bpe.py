@@ -12,9 +12,9 @@ from ocr_compare_spark.operators.bpe import (
     bpe_token_counts,
     py_words,
     train_bpe,
-    train_bpe_py,
     _encode_word,
 )
+from tests.mirrors import train_bpe_py
 
 # frequencies engineered so merge order is unambiguous for the first
 # few merges and tie-breaks are exercised later; includes repeated

@@ -16,7 +16,6 @@ from ocr_compare_spark.sources.cdx import (
     cdx_lines,
     index_warc,
     iter_warc_spans,
-    read_cluster_idx,
     route_cdx_key,
     write_cdx_index,
 )
@@ -83,7 +82,14 @@ def test_write_cdx_index_globally_sorted_and_routable(spark, tmp_path):
     out = str(tmp_path / "idx")
     entries = _corpus_entries(spark)
     idx = write_cdx_index(entries, out, num_shards=4)
-    assert idx == read_cluster_idx(out)
+    # cluster.idx lines: "<first-urlkey> <first-ts14>\t<shard-file>"
+    on_disk = []
+    with open(os.path.join(out, "cluster.idx"), encoding="utf-8") as f:
+        for line in f:
+            head, _, name = line.rstrip("\n").partition("\t")
+            key, _, ts14 = head.partition(" ")
+            on_disk.append((key, ts14, name))
+    assert idx == on_disk
     assert 1 < len(idx) <= 4  # non-degenerate sharding
 
     # concatenating shards in cluster.idx order IS the sorted index
@@ -185,69 +191,3 @@ def test_index_warc_entries_and_roundtrip(spark, tmp_path):
     # and the routing file finds a real page's shard
     key = a[0][0]
     assert route_cdx_key(idx, key) is not None
-
-
-def test_route_cdx_range_covers_boundary_runs():
-    from ocr_compare_spark.sources.cdx import route_cdx_range
-
-    idx = [("com,a)/", "20250101000000", "s0"),
-           ("com,m)/", "20250101000000", "s1"),
-           ("com,m)/", "20250201000000", "s2"),  # key run straddles s1/s2
-           ("org,z)/", "20250101000000", "s3")]
-    # exact key inside one shard's range
-    assert route_cdx_range(idx, "com,b)/", "com,b)/") == ["s0"]
-    # a key equal to a shard's first key may also sit in the PREVIOUS
-    # shard's tail (the (urlkey, ts) split) -> both candidates open
-    assert route_cdx_range(idx, "com,m)/", "com,m)/") == ["s0", "s1", "s2"]
-    # under-min key routes to shard 0 only
-    assert route_cdx_range(idx, "com,0)/", "com,0)/") == ["s0"]
-    # range spanning several shards (s3 starts above hi -> excluded)
-    assert route_cdx_range(idx, "com,b)/", "org,a)/") == ["s0", "s1", "s2"]
-    assert route_cdx_range(idx, "com,b)/", "org,z)/") == ["s0", "s1", "s2", "s3"]
-    # beyond-max key routes to the last shard only
-    assert route_cdx_range(idx, "zz)/", "zz)/") == ["s3"]
-
-
-def test_cdx_lookup_pruned_read_exact_and_prefix(spark, tmp_path):
-    """cdx_lookup == full-scan filter, while routing opens a strict
-    subset of the shards; prefix lookups cross shard boundaries."""
-    import pytest
-    from ocr_compare_spark.sources.cdx import cdx_lookup, route_cdx_range, surt_key_py
-
-    out = str(tmp_path / "idx")
-    entries = _corpus_entries(spark)
-    idx = write_cdx_index(entries, out, num_shards=4)
-    full = {tuple(r) for r in cdx_entries(spark, os.path.join(out, "part-*")).collect()}
-
-    # exact lookup: two urls (the dup-urlkey one returns BOTH captures)
-    q = ["https://h0.example0.com/p/0", "https://h3.example1.com/p/31"]
-    got = {tuple(r) for r in cdx_lookup(spark, out, q).collect()}
-    keys = {surt_key_py(u) for u in q}
-    assert got == {r for r in full if r[0] in keys}
-    assert len([r for r in got if r[0] == surt_key_py(q[0])]) >= 2  # dup ts run
-    # the route is a pruned file list, not the whole index
-    for u in q:
-        k = surt_key_py(u)
-        assert len(route_cdx_range(idx, k, k)) < len(idx)
-
-    # prefix lookup: a whole host (keys may span shards)
-    pfx = surt_key_py("https://h1.example1.com/")
-    got_p = {tuple(r) for r in cdx_lookup(spark, out, [pfx], prefix=True,
-                                          keys_are_urlkeys=True).collect()}
-    assert got_p == {r for r in full if r[0].startswith(pfx)}
-    assert got_p  # non-empty probe
-
-    # miss returns empty (but routes without error)
-    assert cdx_lookup(spark, out, ["https://nope.invalid/x"]).count() == 0
-
-    # >cap exact batch falls back to the broadcast join path
-    many = [f"https://h{i % 7}.example{i % 3}.com/p/{i}" for i in range(12)]
-    got_j = {tuple(r) for r in
-             cdx_lookup(spark, out, many, max_literal_keys=4).collect()}
-    mkeys = {surt_key_py(u) for u in many}
-    assert got_j == {r for r in full if r[0] in mkeys}
-
-    # unbounded prefix fan-out is refused
-    with pytest.raises(ValueError):
-        cdx_lookup(spark, out, [f"k{i}" for i in range(5)], prefix=True,
-                   keys_are_urlkeys=True, max_literal_keys=4)

@@ -16,9 +16,12 @@ def pages(spark, sf_dir):
     return synth.pages_from_documents(spark, sf_dir).limit(80)
 
 
-def test_crash_resume_no_recompute(spark, pages, tmp_path):
-    out = str(tmp_path / "out")
-    manifest = str(tmp_path / "manifest")
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_crash_resume_no_recompute(spark, pages, tmp_path, as_uri):
+    # a cluster passes file:/hdfs:/s3a: URIs, which os.path cannot see
+    base = tmp_path.as_uri() if as_uri else str(tmp_path)
+    out = f"{base}/out"
+    manifest = f"{base}/manifest"
     calls = {"n": 0}
 
     def crashing(part):

@@ -4,12 +4,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from ocr_compare_spark.operators.classifier import (
-    score_nb,
-    score_nb_py,
-    train_nb,
-    train_nb_py,
-)
+from ocr_compare_spark.operators.classifier import score_nb, train_nb
+from tests.mirrors import score_nb_py, train_nb_py
 
 POS = [
     "the quick brown fox jumps over the lazy dog today.",
@@ -109,10 +105,10 @@ def test_logreg_training_equals_mirror_bitwise(spark):
     order; _logreg_update is literally the same function)."""
     from ocr_compare_spark.operators.classifier import (
         logreg_scores,
-        score_logreg_py,
         train_logreg,
         train_logreg_py,
     )
+    from tests.mirrors import score_logreg_py
 
     dim, iters = 32, 12
     m = train_logreg(_df(spark, POS), _df(spark, NEG, 100), dim=dim, iters=iters)

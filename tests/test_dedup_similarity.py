@@ -1275,40 +1275,6 @@ def test_mine_hard_negatives_excludes_positives_exactly(spark):
     assert all(1 <= r.neighbor_id <= 5 for r in base)
 
 
-def test_tune_lsh_properties_and_composition(spark):
-    from ocr_compare_spark.operators.dedup import lsh_candidates, tune_lsh
-
-    import pytest
-
-    # divisor splits, S-curve location tracks the threshold
-    prev_r = 0
-    for t in (0.3, 0.5, 0.7, 0.9):
-        b, r = tune_lsh(64, t)
-        assert b * r == 64
-        assert r >= prev_r  # higher threshold -> longer bands
-        prev_r = r
-        p = lambda s: 1.0 - (1.0 - s**r) ** b
-        assert p(min(t + 0.25, 0.99)) > 0.5  # catches well above t
-        assert p(max(t - 0.25, 0.01)) < 0.5  # rejects well below t
-    # recall-leaning weight never shortens the catch region
-    b_eq, r_eq = tune_lsh(64, 0.8, max_fp_weight=1.0)
-    b_rc, r_rc = tune_lsh(64, 0.8, max_fp_weight=0.05)
-    p_eq = 1.0 - (1.0 - 0.85**r_eq) ** b_eq
-    p_rc = 1.0 - (1.0 - 0.85**r_rc) ** b_rc
-    assert p_rc >= p_eq
-    with pytest.raises(ValueError):
-        tune_lsh(64, 1.5)
-    # tuned bands feed lsh_candidates unchanged
-    df = spark.createDataFrame(
-        [(0, "a b c d e f g h"), (1, "a b c d e f g x"), (2, "q r s t u v w y")],
-        "doc_id long, text string",
-    )
-    b, r = tune_lsh(64, 0.5, max_fp_weight=0.05)
-    pairs = lsh_candidates(df, "doc_id", "text", bands=b, verify_threshold=0.5)
-    got = {(p.id_a, p.id_b) for p in pairs.collect()}
-    assert got == {(0, 1)}
-
-
 def test_rbo_matches_mirror_and_edges(spark):
     """RBO vs the textbook prefix-overlap mirror, bit-for-bit incl.
     the round6-before-sum terms; identical/disjoint edges."""

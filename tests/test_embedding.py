@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators import embedding as emb
+from tests.mirrors import py_hashed_topk
 
 DIM = 16
 
@@ -84,7 +85,7 @@ def test_hashed_topk_matches_python_mirror(spark, sf_dir):
         (r.query_id, r.rank): r.neighbor_id
         for r in emb.hashed_topk(vecs, queries, k=3).collect()
     }
-    assert got == emb.py_hashed_topk(by_id, q_ids, k=3)
+    assert got == py_hashed_topk(by_id, q_ids, k=3)
 
 
 def test_hashed_topk_zero_norm_and_guard(spark, monkeypatch):

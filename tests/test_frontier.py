@@ -182,39 +182,3 @@ def test_frontier_seen_bloom_scale_path(spark):
     assert m["n_dropped_seen_bloom"] == 2    # popular + y
     assert m["n_blocked_robots"] == 1        # /blocked/page
     assert m["n_frontier"] == 1
-
-
-def test_schedule_fetches_politeness_spacing(spark):
-    """Per-host fetch schedule: rank-first slots, crawl_delay spacing,
-    default delay when the host published none, rerun-deterministic."""
-    from datetime import datetime
-
-    from ocr_compare_spark.plans.frontier import schedule_fetches
-
-    robots = spark.createDataFrame(ROBOTS, ["host", "robots_txt"])
-    fr, _ = crawl_frontier(_pages(spark), robots=robots)
-    now = datetime(2025, 6, 1, 12, 0, 0)
-    sched = schedule_fetches(fr, now, default_delay=3.0)
-    rows = {r.url: r for r in sched.collect()}
-
-    # a.com published Crawl-delay: 2 -> consecutive slots 2s apart,
-    # rank-first (popular is slot 0)
-    a_rows = sorted(
-        (r for r in rows.values() if r.host == "a.com"), key=lambda r: r.slot
-    )
-    assert a_rows[0].url == "http://a.com/popular" and a_rows[0].slot == 0
-    assert [r.slot for r in a_rows] == list(range(len(a_rows)))
-    for r in a_rows:
-        assert (r.fetch_at - now).total_seconds() == r.slot * 2.0
-
-    # b.com published no delay -> default 3s spacing
-    b_rows = sorted(
-        (r for r in rows.values() if r.host == "b.com"), key=lambda r: r.slot
-    )
-    for r in b_rows:
-        assert (r.fetch_at - now).total_seconds() == r.slot * 3.0
-
-    # deterministic rerun
-    again = {r.url: (r.slot, r.fetch_at) for r in
-             schedule_fetches(fr, now, default_delay=3.0).collect()}
-    assert again == {u: (r.slot, r.fetch_at) for u, r in rows.items()}

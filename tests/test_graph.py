@@ -151,17 +151,13 @@ def test_hits_layout_invariant(spark):
 
 
 def test_hits_over_domain_graph_composition(spark):
-    # links -> registered-domain collapse -> HITS: directory-style
-    # domains (many out-links) surface as hubs, linked-to content
-    # domains as authorities
-    from ocr_compare_spark.operators import links
-
-    rows = [
-        (f"https://dir.example/p{i}", f"https://site{i}.com/x", "t")
-        for i in range(4)
-    ] + [("https://site0.com/a", "https://site1.com/b", "t")]
-    ldf = spark.createDataFrame(rows, ["src", "dst", "anchor_text"])
-    dg = links.domain_graph(ldf)
+    # HITS over a domain-level edge table with its own column names:
+    # directory-style domains (many out-links) surface as hubs,
+    # linked-to content domains as authorities
+    rows = [("dir.example", f"site{i}.com") for i in range(4)] + [
+        ("site0.com", "site1.com")
+    ]
+    dg = spark.createDataFrame(rows, ["src_domain", "dst_domain"])
     got = {
         r["node"]: (r["auth6"], r["hub6"])
         for r in graph.hits(dg.select("src_domain", "dst_domain"),

@@ -10,6 +10,7 @@ import json
 from pyspark.sql import functions as F, types as T
 
 from ocr_compare_spark.sources import jsonl
+from tests.mirrors import py_document_record
 
 
 def _docs(spark, sf_dir):
@@ -88,7 +89,7 @@ def test_attributes_roundtrip_and_join(spark, sf_dir, tmp_path):
 
 
 def test_py_record_mirror():
-    rec = json.loads(jsonl.py_document_record("7", "hello", source="s", metadata={"a": 1}))
+    rec = json.loads(py_document_record("7", "hello", source="s", metadata={"a": 1}))
     assert rec == {"id": "7", "text": "hello", "source": "s", "metadata": {"a": 1}}
 
 

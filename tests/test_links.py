@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ocr_compare_spark.operators.links import extract_links, inbound_anchors
+from ocr_compare_spark.operators.links import extract_links
 
 
 PAGES = [
@@ -50,19 +50,6 @@ def test_extract_links_resolution_and_canonicalization(spark):
     assert ("https://b.example.com/p2", "http://other.com/target?a=1&b=2", "spanning lines") in got
     # page without anchors contributes nothing
     assert all(s != "http://c.example.com/empty" for s, _, _ in got)
-
-
-def test_inbound_anchor_corpus(spark):
-    agg = {r.dst: r for r in inbound_anchors(_links(spark)).collect()}
-    tgt = agg["http://other.com/target?a=1&b=2"]
-    # three edges: two from page1 (':80' variant canonicalizes to the
-    # same dst; 'first  link' normalizes to the same text), one from p2
-    assert tgt.n_inbound == 3
-    assert tgt.n_src == 2
-    assert tgt.anchor_texts == ["first link", "spanning lines"]
-    # empty anchor text counts as an edge, contributes no text
-    only = agg["http://third.com/only"]
-    assert only.n_inbound == 1 and only.anchor_texts == []
 
 
 def test_extract_links_rfc3986_resolution_matrix(spark):
@@ -112,76 +99,6 @@ def test_extract_links_graph_only_fast_path(spark):
     full_rows = sorted((r.src, r.dst) for r in extract_links(df).collect())
     fast_rows = sorted((r.src, r.dst) for r in fast.collect())
     assert fast_rows == full_rows and set(fast_rows) == full
-
-
-def test_domain_graph_collapse(spark):
-    from ocr_compare_spark.operators.links import domain_graph
-    from ocr_compare_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [
-            # subdomains collapse to the registered domain
-            ("https://blog.alpha.com/a", "https://www.beta.org/x"),
-            ("https://shop.alpha.com/b", "https://beta.org/y"),
-            ("https://alpha.com/c", "https://beta.org/y"),
-            # intra-domain (navigation) drops, even across subdomains
-            ("https://alpha.com/c", "https://docs.alpha.com/d"),
-            # PSL multi-label suffix: user.github.io IS the domain
-            ("https://user.github.io/p", "https://alpha.com/c"),
-            ("https://sub.user.github.io/q", "https://sub.user.github.io/r"),
-        ],
-        ["src", "dst"],
-    )
-    got = {
-        (r.src_domain, r.dst_domain): r.n_links
-        for r in domain_graph(edges).collect()
-    }
-    assert got == {
-        ("alpha.com", "beta.org"): 3,
-        ("user.github.io", "alpha.com"): 1,
-    }
-    # composes with pagerank on the collapsed rows
-    ranks = {
-        r.node: r.rank6
-        for r in pagerank(
-            domain_graph(edges).select(
-                F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst")
-            )
-        ).collect()
-    }
-    assert set(ranks) == {"alpha.com", "beta.org", "user.github.io"}
-    assert ranks["beta.org"] > ranks["alpha.com"] > ranks["user.github.io"]
-
-
-def test_anchor_documents_bm25_site_finding(spark):
-    # the Craswell/Brin-Page composition: index pages by what OTHERS
-    # call them. Content never enters the index; the query matches a
-    # page purely through its inbound anchor texts, and the document
-    # is layout-invariant (sorted distinct texts).
-    from ocr_compare_spark.operators import index, links
-
-    rows = [
-        ("https://a.com/1", "https://shop.com/w", "blue widgets"),
-        ("https://a.com/2", "https://shop.com/w", "cheap blue widgets"),
-        ("https://a.com/3", "https://shop.com/w", "widgets"),
-        ("https://b.com/1", "https://news.com/x", "daily news"),
-        ("https://b.com/2", "https://news.com/x", "breaking story"),
-    ]
-    ldf = spark.createDataFrame(rows, ["src", "dst", "anchor_text"])
-    docs = links.anchor_documents(ldf)
-    got = {r.url: (r.n_inbound, r.anchor_doc) for r in docs.collect()}
-    assert got["https://shop.com/w"] == (3, "blue widgets cheap blue widgets widgets")
-    q = spark.createDataFrame([(1, "blue widgets")], ["query_id", "query_text"])
-    top = index.bm25_topk(
-        docs, q, id_col="url", text_col="anchor_doc", k=2
-    ).collect()
-    assert top[0].id == "https://shop.com/w" and top[0].rank == 1
-    # layout invariance: shuffled edge order yields the same documents
-    got2 = {
-        r.url: r.anchor_doc
-        for r in links.anchor_documents(ldf.repartition(7)).collect()
-    }
-    assert got2 == {u: d for u, (_, d) in got.items()}
 
 
 def test_extract_links_fastpath_equals_full_canonicalization(spark):

@@ -1,58 +1,3 @@
-
-
-def test_ce_buckets_head_middle_tail(spark, sf_dir):
-    """CCNet bucketing: per-lang terciles == a numpy mirror (linear
-    interpolation on the same round6 scores), every doc labeled, the
-    head really is the lowest-CE third."""
-    import math
-
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from ocr_compare_spark.operators.lm import (
-        ce_buckets,
-        perplexity_scores,
-        train_unigram_lm,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_unigram_lm(docs, "text")
-    # plant a NULL stratum: those docs must still come back labeled
-    # (eqNullSafe join — a plain key would silently drop them)
-    langs = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 50 == 0, F.lit(None)).otherwise(
-            F.col("lang")
-        ).alias("lang"),
-    )
-    scores = perplexity_scores(docs, model, method="data").join(langs, "doc_id")
-    got = {
-        r["doc_id"]: (r["lang"], r["cross_entropy"], r["ce_bucket"])
-        for r in ce_buckets(scores).collect()
-    }
-    assert len(got) == docs.count()  # every doc labeled exactly once
-    assert any(lang is None for lang, _, _ in got.values())
-
-    by_lang: dict[str, list[float]] = {}
-    for _, (lang, ce, _b) in got.items():
-        by_lang.setdefault(lang, []).append(ce)
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6
-    cuts = {
-        lang: (r6(float(np.percentile(v, 100 / 3))),
-               r6(float(np.percentile(v, 200 / 3))))
-        for lang, v in by_lang.items()
-    }
-    for doc_id, (lang, ce, b) in got.items():
-        t1, t2 = cuts[lang]
-        want = "head" if ce <= t1 else ("middle" if ce <= t2 else "tail")
-        assert b == want, (doc_id, lang, ce, cuts[lang])
-    # per-lang thirds: bucket sizes differ by at most the ties
-    for lang, v in by_lang.items():
-        n = len(v)
-        heads = sum(1 for d, (l, c, b) in got.items() if l == lang and b == "head")
-        assert n // 4 <= heads <= 3 * n // 4, lang
-
-
 def test_paragraph_ppl_filter_matches_standalone_scores(spark, sf_dir):
     """A paragraph must score EXACTLY as it would as a standalone doc
     (same round6 contract), the reassembly must preserve order and

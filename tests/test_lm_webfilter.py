@@ -121,12 +121,12 @@ URL_CASES = [
 
 def test_url_filter_matrix(spark):
     df = spark.createDataFrame([(u,) for u, _ in URL_CASES], "url string")
-    out = webfilter.with_url_filter(
-        df,
+    cols = webfilter.url_filter_columns(
         "url",
         blocked_domains=("warm.example.com", "example.net"),
         blocked_patterns=(r"/doc/\d*0$",),
     )
+    out = df.select("url", *[c.alias(name) for name, c in cols.items()])
     got = {r["url"]: (r["block_reason"], r["blocked"]) for r in out.collect()}
     for url, want in URL_CASES:
         assert got[url] == (want, 1 if want else 0), url
@@ -134,96 +134,7 @@ def test_url_filter_matrix(spark):
 
 def test_url_filter_no_rules_is_all_clean(spark):
     df = spark.createDataFrame([("https://a.example.com/x",)], "url string")
-    out = webfilter.with_url_filter(df, "url")
+    cols = webfilter.url_filter_columns("url")
+    out = df.select(*[c.alias(name) for name, c in cols.items()])
     r = out.collect()[0]
     assert r["block_reason"] is None and r["blocked"] == 0
-
-
-def test_apply_blocklist_broadcast_join(spark):
-    urls = [
-        "https://warm.example.com/doc/1",   # rd example.com
-        "https://x.github.io/page",          # PSL: rd = x.github.io
-        "https://spam.bad.org/z",            # rd bad.org -> blocked
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    rules = spark.createDataFrame([("bad.org",), ("example.com",)], "domain string")
-    out = {r["url"]: r["blocked"] for r in webfilter.apply_blocklist(df, rules).collect()}
-    assert out["https://spam.bad.org/z"] == 1
-    assert out["https://warm.example.com/doc/1"] == 1  # eTLD+1 match
-    assert out["https://x.github.io/page"] == 0  # github.io is a PSL suffix
-    plan = webfilter.apply_blocklist(df, rules)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-
-
-# ------------------------------------------- bigram / stupid backoff
-
-
-def _bigram_mirror(texts):
-    """Pure-Python mirror of train_bigram_lm + bigram_scores."""
-    uni, bi, total = {}, {}, 0
-    for t in texts:
-        ws = t.split()
-        total += len(ws)
-        for w in ws:
-            uni[w] = uni.get(w, 0) + 1
-        for a, b in zip(ws, ws[1:]):
-            bi[(a, b)] = bi.get((a, b), 0) + 1
-    uni_lp = {w: _round6(math.log(c / total)) for w, c in uni.items()}
-    bi_lp = {k: _round6(math.log(c / uni[k[0]])) for k, c in bi.items()}
-    oov = _round6(math.log(0.5 / total))
-    ln_a = _round6(math.log(0.4))
-    rows = []
-    for i, t in enumerate(texts):
-        ws = t.split()
-        s, hits = 0.0, 0
-        for j, w in enumerate(ws):
-            u = uni_lp.get(w, oov)
-            if j == 0:
-                s += u
-            elif (ws[j - 1], w) in bi_lp:
-                s += bi_lp[(ws[j - 1], w)]
-                hits += 1
-            else:
-                s += _round6(ln_a + u)
-        ce = _round6(-s / len(ws))
-        rows.append((i, len(ws), hits, ce, _round6(math.exp(ce))))
-    return rows
-
-
-def test_bigram_scores_match_mirror(spark):
-    texts = [
-        "a b c a b",          # repeated bigram (a b)
-        "a b x y",            # x y unseen elsewhere -> still a bigram hit (count 1)
-        "c c c",
-        "z",                  # single token: unigram-scored only
-    ]
-    d = _mk_docs(spark, texts)
-    bi = lm.train_bigram_lm(d, "text")
-    un = lm.train_unigram_lm(d, "text")
-    got = [
-        (r["doc_id"], r["n_tokens"], r["n_bigram_hits"],
-         r["cross_entropy"], r["ppl"])
-        for r in lm.bigram_scores(d, bi, un).orderBy("doc_id").collect()
-    ]
-    assert got == _bigram_mirror(texts)
-    # every adjacent pair in the corpus IS in the corpus-trained model,
-    # so all non-first tokens are bigram hits
-    assert [g[2] for g in got] == [4, 3, 2, 0]
-
-
-def test_bigram_scores_on_corpus(spark, sf_dir):
-    """Corpus-scale run: the CORPUS-AGGREGATE (token-weighted) cross-
-    entropy of the in-domain MLE bigram model must be <= the unigram
-    model's (Gibbs' inequality guarantees it in aggregate; per-doc it
-    need not hold on a pseudorandom-vocabulary corpus), and every
-    non-first token is a bigram hit (the model was trained on these
-    exact pairs)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bi = lm.train_bigram_lm(d, "text")
-    un = lm.train_unigram_lm(d, "text")
-    b = {r["doc_id"]: r for r in lm.bigram_scores(d, bi, un).collect()}
-    u = {r["doc_id"]: r for r in lm.perplexity_scores(d, un, method="data").collect()}
-    assert len(b) == len(u) == 500
-    tot = lambda rows: sum(r["cross_entropy"] * r["n_tokens"] for r in rows.values())
-    assert tot(b) < tot(u)
-    assert all(r["n_bigram_hits"] == r["n_tokens"] - 1 for r in b.values())

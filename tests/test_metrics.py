@@ -8,7 +8,8 @@ import random
 
 import numpy as np
 
-from ocr_compare_spark.operators.compare import _codes, align_metrics, levenshtein_np
+from ocr_compare_spark.operators.compare import _codes, align_metrics
+from tests.mirrors import levenshtein_np
 
 
 def lev_ref(a: str, b: str) -> int:

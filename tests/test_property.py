@@ -14,11 +14,11 @@ from ocr_compare_spark.engines.pdf_stream import parse_pdf
 from ocr_compare_spark.operators.compare import (
     _codes,
     levenshtein_fast,
-    levenshtein_np,
     levenshtein_tokens,
 )
 from ocr_compare_spark.operators.extract import doc_to_result
 
+from tests.mirrors import levenshtein_np
 from tests.test_metrics import lev_ref
 
 TOKEN = st.text(alphabet="abcdefghij0123456789", min_size=1, max_size=8)

@@ -1,6 +1,6 @@
 """Recrawl scheduling (operators/recrawl.py): Cho & Garcia-Molina
-change-rate estimation pinned against the pure-python mirror, edge
-cases, and the politeness-capped batch."""
+change-rate estimation pinned against the pure-python mirror and
+edge cases."""
 
 from __future__ import annotations
 
@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 from ocr_compare_spark.operators.recrawl import (
     change_rate,
     change_stats,
-    py_change_rate,
-    recrawl_batch,
     recrawl_priority,
 )
+from tests.mirrors import py_change_rate
 
 T0 = datetime(2025, 1, 1, 0, 0, 0)
 NOW = datetime(2025, 1, 20, 0, 0, 0)
@@ -82,25 +81,3 @@ def test_change_stats_layout_invariant(spark):
     assert a == b
     c = sorted(map(tuple, change_rate(df.repartition(3)).collect()))
     assert c == sorted(map(tuple, change_rate(df).collect()))
-
-
-def test_recrawl_batch_caps_and_order(spark):
-    df, _ = _stack(spark)
-    batch, m = recrawl_batch(df, NOW, per_host_cap=2, max_urls=3)
-    rows = batch.collect()
-    assert m["n_candidates"] == 6 and m["n_batch"] == 3
-    assert m["n_dropped_politeness"] + m["n_dropped_batch_cap"] == 3
-    # politeness: at most 2 per host
-    hosts = [r.host for r in rows]
-    assert all(hosts.count(h) <= 2 for h in set(hosts))
-    # the hottest page always makes the batch
-    assert "http://a.com/news" in {r.url for r in rows}
-    # kept set is the highest-p prefix per host (deterministic)
-    full = {r.url: r.p_changed6 for r in recrawl_priority(df, NOW).collect()}
-    for h in set(hosts):
-        kept = {r.url for r in rows if r.host == h}
-        host_all = sorted(
-            (u for u in full if u.startswith(f"http://{h}/")),
-            key=lambda u: (-full[u], u),
-        )
-        assert kept <= set(host_all[: max(len(kept), 2)])

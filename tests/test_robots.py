@@ -9,6 +9,7 @@ import re
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators import robots
+from tests.mirrors import py_allowed
 
 
 def test_pattern_to_regex():
@@ -67,11 +68,11 @@ def test_parser_groups_and_merge():
 
 def test_longest_match_allow_ties():
     rules = [(False, "/p"), (True, "/p")]  # equal length: allow wins
-    assert robots.py_allowed("/page", rules)
+    assert py_allowed("/page", rules)
     rules = [(True, "/p"), (False, "/page")]  # longer disallow wins
-    assert not robots.py_allowed("/page", rules)
-    assert robots.py_allowed("/other", rules)  # no match -> allow
-    assert robots.py_allowed("/anything", [])  # no rules -> allow
+    assert not py_allowed("/page", rules)
+    assert py_allowed("/other", rules)  # no match -> allow
+    assert py_allowed("/anything", [])  # no rules -> allow
 
 
 HOSTS = [
@@ -100,7 +101,7 @@ def test_gate_matches_python_mirror(spark):
             host = re.match(r"https://([^/]+)", url).group(1)
             path = url[len("https://" + host):]
             rules, delay, _ = robots.py_agent_rules(body[host] or "", agent)
-            assert got[doc_id][0] == robots.py_allowed(path, rules), (agent, url)
+            assert got[doc_id][0] == py_allowed(path, rules), (agent, url)
             assert got[doc_id][1] == delay, (agent, url)
     # spot-pin the interesting decisions for agent 'bot' on h2
     got = {

@@ -1,17 +1,15 @@
 """Session-10 additions: reciprocal-rank fusion (index.rrf_fuse),
-exact-size bottom-k sampling (sampling.bottomk_sample), the deflate
-compression-ratio quality signal (textstats.compression_ratio) and
-the quality-aware dup-cluster representative (dedup.dedup_keep_best).
+exact-size bottom-k sampling (sampling.bottomk_sample) and the
+quality-aware dup-cluster representative (dedup.dedup_keep_best).
 """
 
 from __future__ import annotations
 
 import hashlib
-import zlib
 
 from pyspark.sql import functions as F
 
-from ocr_compare_spark.operators import dedup, index as index_ops, sampling, textstats
+from ocr_compare_spark.operators import dedup, index as index_ops, sampling
 from ocr_compare_spark.operators import embedding as emb_ops
 
 
@@ -227,33 +225,6 @@ def test_bottomk_rejects_nonpositive_k(spark):
 
 
 # ------------------------------------------------------------ compression ratio
-
-
-def test_compression_ratio_mirror_and_ordering(spark):
-    texts = [
-        (0, "word " * 400),  # degenerate repetition -> tiny ratio
-        (1, "The quick brown fox jumps over the lazy dog. " * 3),
-        (2, "kf8Zq2Lw9xPb3Vn7Rt1Yc5Jm0Hd6Gs4"),  # high-entropy short
-        (3, ""),
-        (4, None),
-    ]
-    df = spark.createDataFrame(texts, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["ratio6"]
-        for r in df.select(
-            "doc_id", textstats.compression_ratio("text").alias("ratio6")
-        ).collect()
-    }
-
-    def mirror(t):
-        b = t.encode("utf-8")
-        return int(len(zlib.compress(b, 6)) * 1e6 / len(b) + 0.5)
-
-    for i, t in texts[:3]:
-        assert got[i] == mirror(t)
-    assert got[3] is None and got[4] is None
-    # the signal orders as the quality literature expects
-    assert got[0] < got[1] < got[2]
 
 
 # ------------------------------------------------------------ keep-best

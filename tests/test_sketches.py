@@ -15,6 +15,7 @@ import math
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators import sketches as sk
+from tests.mirrors import _py_cms_positions, _py_idx_rho, py_dd_quantile, py_hll_estimate
 
 P = 8  # m = 256 registers
 D, W = 4, 512
@@ -37,7 +38,7 @@ def test_hll_register_cols_match_python_mirror(spark):
         for r in df.select("key", idx.alias("idx"), rho.alias("rho")).collect()
     }
     for key, pair in got.items():
-        assert pair == sk._py_idx_rho(key, P)
+        assert pair == _py_idx_rho(key, P)
         assert 0 <= pair[0] < (1 << P) and 1 <= pair[1] <= 33
 
 
@@ -50,7 +51,7 @@ def test_cms_positions_match_python_mirror(spark):
         ).collect()
     }
     for key, rp in got.items():
-        assert [p for _, p in rp] == sk._py_cms_positions(key, D, W)
+        assert [p for _, p in rp] == _py_cms_positions(key, D, W)
         assert [i for i, _ in rp] == list(range(D))
 
 
@@ -64,7 +65,7 @@ def test_hll_estimate_equals_python_mirror_bitwise(spark):
         keys = [f"u{n}_{i}" for i in range(n)]
         df = spark.createDataFrame([(k,) for k in keys], "key string").repartition(5)
         row = sk.hll_count_distinct(df, "key", (), P).first()
-        expect = sk.py_hll_estimate(keys, P)
+        expect = py_hll_estimate(keys, P)
         assert row.est6 == math.floor(expect * 1e6 + 0.5)
         assert row.n_present + row.v_zero == (1 << P)
 
@@ -112,7 +113,7 @@ def test_hll_overlap_matches_python_mirror_bitwise(spark):
 
     keys_a = [f"ov{i}" for i in range(na)]
     keys_b = [f"ov{i}" for i in range(na - shared, na - shared + nb)]
-    e = lambda ks: int(sk.py_hll_estimate(ks, P) * 1e6 + 0.5)
+    e = lambda ks: int(py_hll_estimate(ks, P) * 1e6 + 0.5)
     a6, b6 = e(keys_a), e(keys_b)
     u6 = e(sorted(set(keys_a) | set(keys_b)))
     inter6 = max(a6 + b6 - u6, 0)
@@ -220,14 +221,12 @@ def test_cms_merge_equals_union_build(spark):
 
 
 def test_cms_broadcast_path_equals_relational(spark):
+    # every key lands once in each of the D rows: the counter mass is
+    # D x the row count, all inside the (D, W) grid
     df = _freq_df(spark)
-    counters = sk.cms_build(df, "key", D, W)
-    mat = sk.cms_counters_to_numpy(counters, D, W)
-    assert mat.shape == (D, W) and mat.sum() == D * sum(n * n for n in range(1, 21))
-    cand = df.select("key").distinct()
-    rel = {r.key: r.est_cnt for r in sk.cms_estimate(cand, counters, "key", D, W).collect()}
-    dat = {r.key: r.est_cnt for r in sk.cms_estimate_broadcast(cand, mat, "key").collect()}
-    assert rel == dat
+    counters = sk.cms_build(df, "key", D, W).collect()
+    assert all(0 <= r.row < D and 0 <= r.pos < W for r in counters)
+    assert sum(r.cnt for r in counters) == D * sum(n * n for n in range(1, 21))
 
 
 def test_cms_heavy_hitters(spark):
@@ -320,15 +319,12 @@ def test_hll_null_keys_ignored(spark):
 
 
 def test_cms_null_keys_contract(spark):
-    # build ignores NULLs; relational estimate omits the row;
-    # broadcast estimate returns NULL (never the str(None) hash)
+    # build ignores NULLs; the estimate omits the NULL row (never the
+    # str(None) hash)
     df = spark.createDataFrame([("a",), ("a",), (None,), ("None",)], "key string")
     counters = sk.cms_build(df, "key", D, W)
     rel = {r.key: r.est_cnt for r in sk.cms_estimate(df.distinct(), counters, "key", D, W).collect()}
     assert rel == {"a": 2, "None": 1}  # NULL row absent; literal 'None' distinct from it
-    mat = sk.cms_counters_to_numpy(counters, D, W)
-    dat = {r.key: r.est_cnt for r in sk.cms_estimate_broadcast(df.distinct(), mat, "key").collect()}
-    assert dat == {"a": 2, "None": 1, None: None}
 
 
 def test_save_sketch_fold_back_to_same_path(spark, tmp_path):
@@ -413,7 +409,7 @@ def test_dd_quantiles_equal_python_mirror_bitwise(spark):
     assert len(got) == 2 * len(QS)
     for (grp, q), (n, est6) in got.items():
         assert n == len(by_grp[grp])
-        expect = math.floor(sk.py_dd_quantile(by_grp[grp], q, 0.01) * 1e6 + 0.5)
+        expect = math.floor(py_dd_quantile(by_grp[grp], q, 0.01) * 1e6 + 0.5)
         assert est6 == expect, (grp, q)
 
 

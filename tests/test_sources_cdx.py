@@ -10,7 +10,6 @@ from ocr_compare_spark.functions.url import surt_key
 from ocr_compare_spark.sources.cdx import (
     build_cdxj,
     cdx_entries,
-    cdx_entries_stream,
     surt_key_py,
 )
 
@@ -129,21 +128,3 @@ def test_cdx_snapshot_and_digest_composition(spark, tmp_path):
     cached = spark.createDataFrame([("AAAA1111",)], "digest string")
     to_fetch = latest.join(F.broadcast(cached), "digest", "left_anti")
     assert {r["digest"] for r in to_fetch.collect()} == {"DDDD4444", "CCCC3333"}
-
-
-def test_cdx_stream_equals_batch(spark, tmp_path):
-    (tmp_path / "cdx-00000.gz").write_bytes(build_cdxj(RECORDS, gzip_file=True))
-    batch = {(r["urlkey"], r["digest"]) for r in cdx_entries(spark, str(tmp_path)).collect()}
-    q = (
-        cdx_entries_stream(spark, str(tmp_path))
-        .writeStream.format("memory")
-        .queryName("cdx_stream_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {
-        (r["urlkey"], r["digest"])
-        for r in spark.sql("SELECT * FROM cdx_stream_test").collect()
-    }
-    assert stream == batch and len(batch) == 3

@@ -123,33 +123,6 @@ def test_warc_pages_matches_synth_pages(spark, sf_dir, tmp_path):
     assert checked
 
 
-def test_warc_pages_stream_matches_batch(spark, tmp_path):
-    """Streaming WARC ingest (AvailableNow) produces exactly the
-    batch read's rows."""
-    recs = _recs(6)
-    (tmp_path / "in").mkdir()
-    (tmp_path / "in" / "a.warc").write_bytes(build_warc(recs[:3]))
-    (tmp_path / "in" / "b.warc.gz").write_bytes(build_warc(recs[3:], gzip_members=True))
-    from ocr_compare_spark.sources.warc import warc_pages_stream
-
-    q = (
-        warc_pages_stream(spark, str(tmp_path / "in"))
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["url"]: r for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    batch = {r["url"]: r for r in warc_pages(spark, str(tmp_path / "in")).collect()}
-    assert set(got) == set(batch) == {r[0] for r in recs}
-    for url in got:
-        assert bytes(got[url]["html"]) == bytes(batch[url]["html"])
-        assert got[url]["warc_ts"] == batch[url]["warc_ts"]
-
-
 def test_write_warc_roundtrip_and_determinism(spark, sf_dir, tmp_path):
     """Distributed WARC sink: synth pages -> archives -> warc_pages
     reads back the identical (url, ts, html) set; reruns produce

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_compare_spark import synth
-from ocr_compare_spark.operators.multimodal import extract_media_features, media_metadata
+from ocr_compare_spark.operators.multimodal import extract_media_features
 from ocr_compare_spark.streaming.jobs import (
     extraction_stream,
     sessionize_stream,
@@ -58,15 +58,6 @@ def test_sessionize_stream_shape(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     out = sessionize_stream(events).collect()
     assert out and all(r.n_events > 0 for r in out)
-
-
-def test_media_metadata_native(spark, pages_path):
-    pages = spark.read.parquet(pages_path)
-    meta = media_metadata(pages)
-    rows = meta.collect()
-    mimes = {r.mime for r in rows}
-    assert "text/html" in mimes and "application/pdf" in mimes
-    assert all(r.n_bytes > 0 for r in rows)
 
 
 def test_media_features_deterministic(spark, pages_path):

@@ -174,78 +174,6 @@ def test_rollup_validates_resolutions(spark):
         rollup_timeseries(df, "ts", [], ["val"], resolutions=(60, 90))
 
 
-def test_asof_enrich_stream_equals_batch(spark, tmp_path):
-    """streaming==batch: the union of per-micro-batch as-of outputs
-    equals one batch asof_join over the full stream (the dimension is
-    static, so batching cannot change any match)."""
-    from ocr_compare_spark.streaming.jobs import asof_enrich_stream
-
-    left, right = _fixture()
-    l = _mk_events(spark, left)
-    r = _mk_events(spark, right, cols=("key", "ts", "reid", "rval"))
-    inp = str(tmp_path / "in")
-    # several files so AvailableNow + maxFilesPerTrigger-free run still
-    # sees a real multi-file source
-    for i in range(3):
-        _mk_events(spark, left[i::3]).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(inp)
-    q = asof_enrich_stream(
-        spark, inp, r, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        "key string, ts timestamp, eid long, val double",
-        on="key", payload=["reid", "rval"], tolerance_us=40_000_000,
-        tiebreak="reid",
-    )
-    q.awaitTermination()
-    got = {
-        (row.eid, row.reid, row.rval)
-        for row in spark.read.parquet(str(tmp_path / "out") + "/batch=*").collect()
-    }
-    batch = {
-        (row.eid, row.reid, row.rval)
-        for row in asof_join(
-            l, r, on="key", payload=["reid", "rval"],
-            tolerance_us=40_000_000, tiebreak="reid",
-        ).collect()
-    }
-    assert got == batch and len(got) == len(left)
-
-
-def test_rollup_distinct_merge_equals_direct(spark):
-    """The register coarsening invariant: every rolled-up level's
-    ESTIMATE rows equal a direct hll build at that resolution (merge
-    == build-on-union, per bucket)."""
-    from ocr_compare_spark.operators import sketches
-    from ocr_compare_spark.operators.temporal import rollup_distinct
-
-    left, _ = _fixture()
-    df = _mk_events(spark, left)  # key col doubles as the distinct key
-    P = 6
-    out = rollup_distinct(df, "ts", [], "key", resolutions=(60, 300), p=P)
-    rows = {(r.res_s, r.bucket_start): (r.n_present, r.v_zero, r.est6) for r in out.collect()}
-    for res in (60, 300):
-        direct = sketches.hll_estimate(
-            sketches.hll_registers(
-                df.withColumn(
-                    "bucket_start",
-                    (F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / (res * 1_000_000)) * res).cast("long"),
-                ),
-                "key",
-                ["bucket_start"],
-                P,
-            ),
-            ["bucket_start"],
-            P,
-        ).collect()
-        dd = {(res, r.bucket_start): (r.n_present, r.v_zero, r.est6) for r in direct}
-        assert {k: v for k, v in rows.items() if k[0] == res} == dd
-    # at tiny cardinalities the small-range estimate is near-exact:
-    # sanity that the 300s level sees >= the 60s level's max distinct
-    assert max(v[2] for k, v in rows.items() if k[0] == 300) >= max(
-        v[2] for k, v in rows.items() if k[0] == 60
-    )
-
-
 def test_rollup_stream_equals_batch(spark, tmp_path):
     """Streaming continuous aggregate == batch rollup over the same
     events; a second NEW-files-only run folds increments correctly."""
@@ -330,39 +258,6 @@ def test_interval_overlap_matches_naive(spark):
                     (min(le, re_) - max(ls, rs)).total_seconds() * 1e6
                 )
     assert got == want and want  # non-trivial
-
-
-def test_rollup_quantiles_equals_direct(spark):
-    """DD bucket coarsening invariant: every rolled-up level's
-    quantile rows equal a direct dd_build at that resolution."""
-    from ocr_compare_spark.operators import sketches
-    from ocr_compare_spark.operators.temporal import rollup_quantiles
-
-    left, _ = _fixture()
-    df = _mk_events(spark, left).withColumn("v", F.col("val") + 1.0)
-    QS, A = (0.5, 0.99), 0.02
-    out = rollup_quantiles(df, "ts", ["key"], "v", qs=QS, resolutions=(60, 300), alpha=A)
-    rows = {
-        (r.res_s, r.bucket_start, r.key, r.q): (r.n, r.n_buckets, r.est6)
-        for r in out.collect()
-    }
-    for res in (60, 300):
-        direct = sketches.dd_quantiles(
-            sketches.dd_build(
-                df.withColumn(
-                    "bucket_start",
-                    (F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / (res * 1_000_000)) * res).cast("long"),
-                ),
-                "v",
-                ["bucket_start", "key"],
-                A,
-            ),
-            QS,
-            ["bucket_start", "key"],
-            A,
-        ).collect()
-        dd = {(res, r.bucket_start, r.key, r.q): (r.n, r.n_buckets, r.est6) for r in direct}
-        assert {k: v for k, v in rows.items() if k[0] == res} == dd
 
 
 def test_asof_log_enrich_stream_equals_batch(spark, tmp_path):
@@ -1013,22 +908,3 @@ def test_retention_stream_equals_batch(spark, tmp_path):
     # triangle sanity: u1 has offsets 1 and 3, u2 offsets 0 and 2
     offs = {(u, o) for u, _, o in got}
     assert offs == {("u1", 1), ("u1", 3), ("u2", 0), ("u2", 2)}
-
-
-def test_funnel_counts(spark):
-    from ocr_compare_spark.operators.temporal import funnel, funnel_counts
-
-    rows = _funnel_fixture()
-    df = _mk_events(spark, rows, cols=("user_id", "ts", "event_type", "eid"))
-    fu = funnel(df, ["A", "B", "C"], window_us=100 * 1_000_000)
-    got = {r.step: r for r in funnel_counts(fu).collect()}
-    # mirror from the per-user depths
-    exp = _py_funnel(rows, ["A", "B", "C"], 100)
-    depth_of = {u: d for u, (d, _) in exp.items()}
-    n = [sum(1 for d in depth_of.values() if d >= s) for s in (1, 2, 3)]
-    assert [got[s].n_keys for s in (1, 2, 3)] == n
-    assert got[1].conv_from_prev6 is None and got[1].conv_from_first6 == 1.0
-    import math
-    for s in (2, 3):
-        assert got[s].conv_from_prev6 == math.floor(n[s-1] / n[s-2] * 1e6 + 0.5) / 1e6
-        assert got[s].conv_from_first6 == math.floor(n[s-1] / n[0] * 1e6 + 0.5) / 1e6

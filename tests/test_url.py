@@ -1,12 +1,12 @@
 """URL canonicalization (functions/url.py): table-driven forms,
-idempotency over the synth pages table, and the eTLD+1 heuristic."""
+idempotency over the synth pages table, and host extraction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ocr_compare_spark import synth
-from ocr_compare_spark.functions.url import canonical_url, host_of, registered_domain
+from ocr_compare_spark.functions.url import canonical_url, host_of
 
 
 CASES = [
@@ -122,60 +122,19 @@ def test_canonical_url_fuzz_idempotent(spark):
         assert r.c1 == r.c2, f"not idempotent: {r.u!r} -> {r.c1!r} -> {r.c2!r}"
 
 
-def test_host_and_registered_domain(spark):
+def test_host_of_forms(spark):
     rows = [
-        ("https://News.BBC.co.uk:443/x", "news.bbc.co.uk", "bbc.co.uk"),
-        ("http://a.b.example.com/", "a.b.example.com", "example.com"),
-        ("http://example.com/", "example.com", "example.com"),
-        ("http://localhost/", "localhost", "localhost"),
-        ("http://10.0.0.1:8080/x", "10.0.0.1", "10.0.0.1"),
-        ("http://shop.example.com.au/", "shop.example.com.au", "example.com.au"),
-        ("https://[2001:DB8::1]:8443/x", "[2001:db8::1]", "[2001:db8::1]"),
-        ("http://[::ffff:192.0.2.1]/", "[::ffff:192.0.2.1]", "[::ffff:192.0.2.1]"),
+        ("https://News.BBC.co.uk:443/x", "news.bbc.co.uk"),
+        ("http://a.b.example.com/", "a.b.example.com"),
+        ("http://example.com/", "example.com"),
+        ("http://localhost/", "localhost"),
+        ("http://10.0.0.1:8080/x", "10.0.0.1"),
+        ("http://shop.example.com.au/", "shop.example.com.au"),
+        ("https://[2001:DB8::1]:8443/x", "[2001:db8::1]"),
+        ("http://[::ffff:192.0.2.1]/", "[::ffff:192.0.2.1]"),
     ]
-    df = spark.createDataFrame([(u,) for u, _, _ in rows], ["url"])
-    got = df.select(
-        "url",
-        host_of("url").alias("h"),
-        registered_domain(host_of("url")).alias("d"),
-    ).collect()
-    want = {u: (h, d) for u, h, d in rows}
+    df = spark.createDataFrame([(u,) for u, _ in rows], ["url"])
+    got = df.select("url", host_of("url").alias("h")).collect()
+    want = dict(rows)
     for r in got:
-        assert (r.h, r.d) == want[r.url], r.url
-
-
-def test_registered_domain_psl_rules(spark):
-    """PSL algorithm over the embedded snapshot: wildcard rules
-    (*.ck), exception rules (!www.ck, !city.kawasaki.jp), private
-    hosting suffixes (github.io, s3.amazonaws.com), longest-match
-    precedence, and the default rule for unlisted TLDs."""
-    rows = [
-        # wildcard *.ck: any label under ck is a public suffix
-        ("foo.ck", "foo.ck"),                    # IS a suffix -> passthrough
-        ("bar.foo.ck", "bar.foo.ck"),
-        ("x.bar.foo.ck", "bar.foo.ck"),
-        # exception !www.ck: www.ck is registrable
-        ("www.ck", "www.ck"),
-        ("sub.www.ck", "www.ck"),
-        # exception !city.kawasaki.jp under *.kawasaki.jp
-        ("city.kawasaki.jp", "city.kawasaki.jp"),
-        ("sub.city.kawasaki.jp", "city.kawasaki.jp"),
-        ("foo.kawasaki.jp", "foo.kawasaki.jp"),  # wildcard suffix -> passthrough
-        ("bar.foo.kawasaki.jp", "bar.foo.kawasaki.jp"),
-        # private hosting suffixes: each user site is registrable
-        ("user.github.io", "user.github.io"),
-        ("a.user.github.io", "user.github.io"),
-        ("github.io", "github.io"),              # the suffix itself
-        ("myblog.blogspot.com", "myblog.blogspot.com"),
-        # 3-label rule beats the default 2-label split
-        ("bucket.s3.amazonaws.com", "bucket.s3.amazonaws.com"),
-        ("x.bucket.s3.amazonaws.com", "bucket.s3.amazonaws.com"),
-        # unlisted TLD -> default rule (last two labels)
-        ("a.b.example.zz", "example.zz"),
-        ("news.bbc.co.uk", "bbc.co.uk"),
-        ("deep.news.bbc.co.uk", "bbc.co.uk"),
-    ]
-    df = spark.createDataFrame([(h,) for h, _ in rows], ["h"])
-    got = {r.h: r.d for r in df.select("h", registered_domain("h").alias("d")).collect()}
-    for h, want in rows:
-        assert got[h] == want, f"{h}: got {got[h]!r}, want {want!r}"
+        assert r.h == want[r.url], r.url
