@@ -14,7 +14,6 @@ from ocr_compare_spark.engines.base import (  # noqa: F401
     EngineSpec,
     ParsedDoc,
     create_engine,
-    list_available_engines,
     register_engine,
 )
 from ocr_compare_spark.engines import dom_heuristic, density, pdf_stream  # noqa: F401,E402

@@ -93,14 +93,6 @@ def create_engine(name: str) -> EngineSpec:
     return _REGISTRY[name]
 
 
-def list_available_engines() -> dict[str, dict[str, str]]:
-    # ≈ list_available_engines, ocr.py:8-15 / ocr_factory.py:49-74
-    return {
-        n: {"name": s.name, "version": s.version, "handles": s.handles}
-        for n, s in sorted(_REGISTRY.items())
-    }
-
-
 def is_pdf_bytes(data: bytes) -> bool:
     # ≈ is_pdf, page_limit/page_count.py:6-16
     return data[:4] == b"%PDF"

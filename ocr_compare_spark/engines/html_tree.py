@@ -351,10 +351,10 @@ def segment_html(data: bytes) -> list[RawBlock]:
 
     Event delivery goes through engines/html_scan.py — a fast scanner
     producing the same event stream as stdlib html.parser (~2x less
-    parse CPU; see its docstring). segment_html_stdlib keeps the
-    stdlib-driven path as the executable reference; equivalence over
-    the synth corpus + junk-markup fuzz is pinned in
-    tests/test_engines.py."""
+    parse CPU; see its docstring). tests/mirrors.py keeps the
+    stdlib-driven path (segment_html_stdlib) as the executable
+    reference; equivalence over the synth corpus + junk-markup fuzz is
+    pinned in tests/test_engines.py."""
     text = data.decode("utf-8", errors="replace")
     p = _BlockParser()
     try:
@@ -362,18 +362,6 @@ def segment_html(data: bytes) -> list[RawBlock]:
         p._flush()
     except Exception:
         # malformed beyond the scanner's tolerance: keep what we have
-        p._flush()
-    return p.blocks
-
-
-def segment_html_stdlib(data: bytes) -> list[RawBlock]:
-    """Reference implementation on stdlib html.parser.feed()."""
-    text = data.decode("utf-8", errors="replace")
-    p = _BlockParser()
-    try:
-        p.feed(text)
-        p.close()
-    except Exception:
         p._flush()
     return p.blocks
 

@@ -22,13 +22,8 @@ Determinism contract (everything reproducible in ANSI SQL):
   safe direction for dedup (you can lose a little new data, you
   never keep a duplicate).
 
-Two query paths, pinned equal in pytest:
-
-- ``might_contain`` (data path): the bitmap broadcast as one numpy
-  array, membership tested per Arrow batch — plan O(1) in m.
-- ``might_contain_join`` (relational path): explode the k positions
-  and count matches against the distinct set-bit TABLE — no Python,
-  no bitmap; this is also the DuckDB-oracle formulation.
+Membership (``might_contain``): the bitmap broadcast as one numpy
+array, tested per Arrow batch — plan O(1) in m.
 """
 
 from __future__ import annotations
@@ -118,74 +113,6 @@ def might_contain(
         return pd.Series(out)
 
     return df.withColumn(out_col, _test(bloom_positions(key_col, m_bits, k)))
-
-
-def might_contain_join(
-    df: DataFrame,
-    key_col: str,
-    seen: DataFrame,
-    seen_key_col: str | None = None,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    out_col: str = "might_contain",
-    id_col: str | None = None,
-) -> DataFrame:
-    """Relational path (and the oracle formulation): the set-bit
-    TABLE is the distinct positions of ``seen``'s keys; a row "might
-    contain" iff all of its DISTINCT positions appear there. No
-    Python anywhere; the position table is a slim broadcastable
-    aggregate when the seen set is bounded. ``id_col`` defaults to
-    ``key_col`` (keys must then be unique per row)."""
-    if seen_key_col is None:
-        seen_key_col = key_col
-    if id_col is None:
-        id_col = key_col
-    bits = seen.select(
-        F.explode(bloom_positions(seen_key_col, m_bits, k)).alias("_p")
-    ).distinct()
-    staged = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(bloom_positions(key_col, m_bits, k)).alias("_ps"),
-    )
-    probes = staged.select(
-        "_id", F.explode("_ps").alias("_p"), F.size("_ps").alias("_np")
-    )
-    hits = (
-        probes.join(bits, "_p")
-        .groupBy("_id", "_np")
-        .agg(F.count("*").alias("_nhit"))
-        .filter(F.col("_nhit") == F.col("_np"))
-        .select(F.col("_id"), F.lit(True).alias(out_col))
-    )
-    return df.join(
-        hits.withColumnRenamed("_id", id_col), id_col, "left"
-    ).withColumn(out_col, F.coalesce(F.col(out_col), F.lit(False)))
-
-
-def save_bloom(spark, bloom: np.ndarray, path: str) -> None:
-    """Persist the bitmap as a one-row binary parquet (with m/k-free
-    sizing implicit in its length) — the artifact a recurring crawl
-    job reloads before each batch."""
-    spark.createDataFrame([(bloom.tobytes(),)], "bmp binary").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def load_bloom(spark, path: str) -> np.ndarray:
-    bmp = spark.read.parquet(path).first()["bmp"]
-    return np.frombuffer(bmp, dtype=np.uint8).copy()
-
-
-def union_bloom(*blooms: np.ndarray) -> np.ndarray:
-    """OR together filters built with the SAME m_bits/k — the
-    cross-crawl fold: filter(crawl N) = filter(crawl N-1) | build
-    (new keys of crawl N). Sizes must match."""
-    out = blooms[0].copy()
-    for b in blooms[1:]:
-        if b.shape != out.shape:
-            raise ValueError("bloom_union: mismatched filter sizes")
-        out |= b
-    return out
 
 
 def bloom_filter_new(

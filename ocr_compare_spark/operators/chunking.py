@@ -11,8 +11,6 @@ units that parallelize instead of the reference's sequential loop —
 this is the morally-flatMap of SURVEY §2.8 C3), the renumber is a
 cumulative window (A10), and the combine is the standard span-table
 reassembly keyed by (url, renumbered page_no) (A11).
-
-PAGE_LIMITS ≈ reference page_limit/limits.py:4-34.
 """
 
 from __future__ import annotations
@@ -22,9 +20,6 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ocr_compare_spark.engines.pdf_stream import _STREAM_RE, count_pdf_pages
 
-# ≈ limits.py: engine type -> max pages per call. Our pdf engine gets
-# a small default so the synthetic corpus actually exercises the path.
-PAGE_LIMITS: dict[str, int | None] = {"pdf": 2, "dom": None, "density": None}
 
 _SEGMENT_TYPE = T.ArrayType(
     T.StructType(
@@ -212,70 +207,6 @@ def with_span_last(spans: DataFrame) -> DataFrame:
         "page_span_last",
         F.element_at(F.col("extra"), F.lit("page_span_last")).cast("int"),
     )
-
-
-def combine_pages_spanned(spans: DataFrame) -> DataFrame:
-    """Reference ``_renumber_and_repath_pages`` twin over the span
-    table (ocr_executor.py:201-240): number pages CONTINUOUSLY while
-    CONSUMING multi-page blocks — a page whose blocks span through
-    page ``p + k`` takes ``k + 1`` page numbers, so the next physical
-    page lands after the spanned range, exactly the reference's
-    ``current_page_number = max_end_page + 1`` walk. Output: spans
-    with rewritten ``page_no`` and a remapped ``page_span_last``
-    column (old end pages translated through the page-number map,
-    defaulting to the block's own new page when the end page has no
-    physical page — the reference's ``page_number_map.get(old,
-    new_page_no)``).
-
-    Scale shape: the walk is a per-(url, engine) running sum over
-    PAGE-level rows (thousands of times smaller than the span
-    table), joined back on the page key — no per-span window.
-    """
-    s = with_span_last(spans)
-    per_page = (
-        s.groupBy("url", "engine", "page_no")
-        .agg(F.max("page_span_last").alias("max_last"))
-        .withColumn(
-            "consumed",
-            F.greatest(F.lit(1), F.col("max_last") - F.col("page_no") + 1),
-        )
-    )
-    w = (
-        Window.partitionBy("url", "engine")
-        .orderBy("page_no")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    mapping = per_page.withColumn(
-        "new_page_no", (F.coalesce(F.sum("consumed").over(w), F.lit(0)) + 1).cast("int")
-    ).select("url", "engine", "page_no", "new_page_no")
-    out = (
-        s.join(mapping, ["url", "engine", "page_no"])
-        # remap the end page through the map; an end page without a
-        # physical page keeps the reference default (the block's own
-        # new page + its span width)
-        .join(
-            mapping.select(
-                "url", "engine",
-                F.col("page_no").alias("page_span_last"),
-                F.col("new_page_no").alias("new_last"),
-            ),
-            ["url", "engine", "page_span_last"],
-            "left",
-        )
-        .withColumn(
-            "page_span_last",
-            F.when(
-                F.col("page_span_last").isNotNull(),
-                F.coalesce(
-                    F.col("new_last"),
-                    F.col("new_page_no") + (F.col("page_span_last") - F.col("page_no")),
-                ),
-            ).cast("int"),
-        )
-        .withColumn("page_no", F.col("new_page_no"))
-        .drop("new_page_no", "new_last")
-    )
-    return out
 
 
 def chunk_token_windows(

@@ -472,13 +472,12 @@ def simhash_near_dups(
 
 def fingerprint_near_dups(fp: DataFrame, max_distance: int = 3) -> DataFrame:
     """The MJS pigeonhole block join over ANY 64-bit fingerprint
-    table ``(id, sim_hi, sim_lo)`` — shared by text SimHash
-    (simhash_near_dups) and image dHash (multimodal.dhash_images):
-    the candidate-generation guarantee depends only on the 64-bit
-    Hamming geometry, not on where the bits came from. Input is
-    localCheckpoint'd here (the self-join's differently-aliased
-    sides defeat ReuseExchange — the fingerprint stage would run
-    twice). Output: (id_a, id_b, hamming) with id_a < id_b, exact
+    table ``(id, sim_hi, sim_lo)`` (text SimHash runs it via
+    simhash_near_dups): the candidate-generation guarantee depends
+    only on the 64-bit Hamming geometry, not on where the bits came
+    from. Input is localCheckpoint'd here (the self-join's
+    differently-aliased sides defeat ReuseExchange — the fingerprint
+    stage would run twice). Output: (id_a, id_b, hamming) with id_a < id_b, exact
     within the Hamming ball."""
     nb = max_distance + 1
     assert nb <= 64, "max_distance must be < 64"

@@ -136,7 +136,7 @@ def pagerank(
         )
         # cut lineage per round — persist is NOT enough (plan-string
         # doubling; see connected_components). The LAST round stays
-        # checkpointed too: callers (frontier.py) consume the result
+        # checkpointed too: callers consume the result
         # more than once and rely on it being materialized.
         new_ranks = ranks.localCheckpoint(eager=True)
         if tol6 is not None:

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 # the ONE tokenizer this module shares with keywords.py (BM25 scores
 # must see the same token stream TF-IDF does)
-from ocr_compare_spark.operators.keywords import WORD_RE, _words
+from ocr_compare_spark.operators.keywords import _words
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
@@ -118,12 +118,10 @@ def bm25_topk(
     # tf/df for a term only ever read that term's postings, so the
     # broadcast semi-join cuts the shuffle from |corpus tokens| to
     # |matching tokens| and the full-vocabulary df aggregate away
-    # entirely. (Building a STANDING index for many query batches is
-    # what postings()/bm25_topk_indexed are exported for.) The
-    # filtered postings are localCheckpoint'ed — df and the score
-    # join both read them, and a plain reuse would re-run the corpus
-    # explode once per branch (the two-branches-off-one-exchange
-    # trap).
+    # entirely. The filtered postings are localCheckpoint'ed — df and
+    # the score join both read them, and a plain reuse would re-run
+    # the corpus explode once per branch (the
+    # two-branches-off-one-exchange trap).
     #
     # r6: dl RIDES the token stream — the Generate consumes one
     # materialized word array, so size(_w) costs nothing extra and
@@ -146,9 +144,7 @@ def bm25_topk(
         .agg(F.count("*").alias("tf"), F.min("dl").alias("dl"))
         .localCheckpoint(eager=True)
     )
-    return _topk_from_filtered(
-        post, None, qt, n_docs, avgdl, k, k1, b, num_partitions=num_partitions
-    )
+    return _topk_from_filtered(post, qt, n_docs, avgdl, k, k1, b, num_partitions=num_partitions)
 
 
 #: GEMM scoring-path guards: the query matrix ships (n_queries x
@@ -272,15 +268,9 @@ def _partial_topk_cut(k: int):
     return cut
 
 
-def _topk_from_filtered(
-    post, dl, qt, n_docs, avgdl, k, k1, b, num_partitions=None
-) -> DataFrame:
+def _topk_from_filtered(post, qt, n_docs, avgdl, k, k1, b, num_partitions=None) -> DataFrame:
     """Score + rank from ALREADY query-term-filtered (and
-    checkpointed) postings — the core both the tokenize-on-the-fly
-    and the standing-index entry points share. ``dl`` is None when
-    ``post`` already carries a dl column (the bm25_topk fast path);
-    otherwise it is joined on id per (term, id) row BEFORE the query
-    fan-out."""
+    checkpointed) postings ``(term, id, tf, dl)``."""
     dfreq = post.groupBy("term").agg(F.count("*").alias("df"))
 
     idf = F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)))
@@ -298,7 +288,7 @@ def _topk_from_filtered(
     # (both are query-set-sized); without the hints Catalyst
     # estimates them from the corpus-sized parents and picks
     # sort-merge joins that shuffle the fan-out stream.
-    base = post if dl is None else post.join(dl, "id")
+    base = post
     if num_partitions:
         # a localCheckpoint'd LogicalRDD reports UnknownPartitioning,
         # so without this the (query_id, id) aggregate would shuffle
@@ -359,104 +349,6 @@ def _topk_from_filtered(
         F.col("_hit.id").alias("id"),
         F.col("_hit.score6").alias("score6"),
     )
-
-
-def bm25_topk_indexed(
-    post: DataFrame,
-    dl: DataFrame,
-    queries: DataFrame,
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
-    exclude_ids: DataFrame | None = None,
-    k: int = 10,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
-    n_docs: int | None = None,
-    sum_dl: int | None = None,
-) -> DataFrame:
-    """BM25 top-k against a STANDING index — the (postings,
-    doc_lengths) tables a recurring-crawl pipeline persists once and
-    queries many times (what postings()/doc_lengths() build). Same
-    output contract and bit-exact same scores as bm25_topk over the
-    equivalent corpus (pytest-pinned).
-
-    ``exclude_ids`` is the incremental-maintenance tombstone set (one
-    ``id`` column): ids whose index rows are stale — re-crawled docs
-    whose fresh segment is unioned in by the caller, or deletions —
-    are dropped AFTER the broadcast query-term filter, so a query
-    pays |matching postings|, never |index|, for staleness. (The
-    periodic compaction that rewrites the index is merge_index.)
-
-    ``n_docs``/``sum_dl`` hints skip the corpus-stats job; when
-    absent they are computed from ``dl`` after tombstone exclusion —
-    BM25's idf and length prior must describe the LIVE corpus."""
-    qt = query_terms(queries, query_id_col, query_text_col)
-    qterms = qt.select("term").distinct()
-    filtered = post.select("term", "id", "tf").join(F.broadcast(qterms), "term")
-    live_dl = dl.select("id", "dl")
-    if exclude_ids is not None:
-        dead = exclude_ids.select("id")
-        filtered = filtered.join(dead, "id", "left_anti")
-        live_dl = live_dl.join(dead, "id", "left_anti")
-    if n_docs is None or sum_dl is None:
-        live_dl = live_dl.localCheckpoint()  # stats + score join both read it
-        stats = live_dl.agg(
-            F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-        ).collect()[0]
-        n_docs, sum_dl = int(stats["n"]), int(stats["s"])
-    if n_docs == 0:
-        raise ValueError("bm25_topk_indexed: empty corpus")
-    avgdl = sum_dl / n_docs
-    filtered = filtered.localCheckpoint(eager=True)  # df + score join consumers
-    return _topk_from_filtered(filtered, live_dl, qt, n_docs, avgdl, k, k1, b)
-
-
-def merge_index(
-    post: DataFrame,
-    dl: DataFrame,
-    delta_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    deleted_ids: DataFrame | None = None,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Upsert a crawl delta into a standing index — the periodic
-    COMPACTION of incremental index maintenance. Returns the new
-    (postings, doc_lengths): every id present in ``delta_docs``
-    (re-extracted pages) or ``deleted_ids`` has its old rows
-    anti-joined away; the delta's fresh postings/lengths are unioned
-    in. The result is row-identical to indexing the post-crawl corpus
-    from scratch (pytest-pinned) — but only tokenizes the DELTA.
-
-    Between compactions, skip this entirely: keep serving the old
-    index, union the delta's postings()/doc_lengths() segments onto
-    it, and hand the replaced ids to bm25_topk_indexed(exclude_ids=)
-    — the tombstones are applied after the query-term filter, so
-    staleness costs per-query work, not an index rewrite. Compact
-    when the tombstone set's broadcast or the segment count gets
-    uncomfortable — exactly the LSM cadence real search engines run.
-
-    Scale shape: the anti-joins shuffle on ``id`` (postings arrive
-    keyed by (term, id) — a re-key is unavoidable when evicting by
-    doc), the delta tokenizes once, and nothing ever touches the
-    surviving rows' text."""
-    if num_partitions:
-        delta_docs = delta_docs.repartition(num_partitions)
-    replaced = delta_docs.select(F.col(id_col).alias("id"))
-    if deleted_ids is not None:
-        replaced = replaced.unionByName(deleted_ids.select("id"))
-    replaced = replaced.distinct()
-    new_post = postings(delta_docs, id_col, text_col)
-    new_dl = doc_lengths(delta_docs, id_col, text_col)
-    merged_post = (
-        post.select("term", "id", "tf")
-        .join(replaced, "id", "left_anti")
-        .unionByName(new_post)
-    )
-    merged_dl = (
-        dl.select("id", "dl").join(replaced, "id", "left_anti").unionByName(new_dl)
-    )
-    return merged_post, merged_dl
 
 
 def rrf_fuse(

@@ -1,23 +1,15 @@
-"""Link-graph and anchor-text extraction over crawl pages.
+"""Link-graph extraction over crawl pages.
 
-Two datasets every web-scale pipeline derives besides the text
-corpus:
-
-- the **link graph** (src url -> dst url edges) driving crawl
-  frontier ranking, host-level quality priors and dedup hints;
-- the **anchor-text corpus** (what OTHER pages call a url), a
-  standard retrieval/pretraining signal.
-
-Both come out of the SAME per-row projection here — native
-regexp_extract_all over the html bytes, zero Python, zero shuffle
-until the caller aggregates. The href and the anchor text are pulled
-with the same overall pattern (different capture groups), so the two
-arrays are index-aligned by construction and arrays_zip pairs them
-without a join.
+The **link graph** (src url -> dst url edges) is the dataset every
+web-scale pipeline derives besides the text corpus: it drives crawl
+frontier ranking, host-level quality priors and dedup hints. It comes
+out of one per-row projection here — native regexp_extract_all over
+the html bytes, zero Python, zero shuffle until the caller
+aggregates.
 
 Scope (documented, deliberate): this is a regex scanner for the
 common `<a ... href="...">text</a>` shape — single-level anchors,
-double-quoted hrefs, tag-stripped inner text. It is a DATASET
+double-quoted hrefs. It is a DATASET
 extractor, not a DOM parser; the engines' html_scan remains the
 fidelity path for text. Relative hrefs resolve per RFC 3986 §5.2:
 protocol-relative (`//h/p`), root-relative (`/p`), bare-relative
@@ -40,18 +32,8 @@ from ocr_compare_spark.functions.url import (
     host_of,
 )
 
-# One pattern, two groups: group 1 = href value, group 2 = inner
-# text. Extracting both groups from the SAME pattern keeps the two
-# arrays index-aligned (same matches in the same order).
-ANCHOR_PATTERN = r'(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>'
-
-# Tags inside the anchor body (e.g. <b>, <span>) are stripped; the
-# remaining entity-free text is whitespace-normalized.
-_TAG = r"<[^>]*>"
-
-
-def _norm_text(c: Column) -> Column:
-    return F.trim(F.regexp_replace(F.regexp_replace(c, _TAG, " "), r"\s+", " "))
+# group 1 = href value; an anchor counts only with its closing </a>
+ANCHOR_PATTERN = r'(?is)<a\s[^>]*href="([^"]*)"[^>]*>.*?</a>'
 
 
 def remove_dot_segments(path: Column) -> Column:
@@ -82,9 +64,9 @@ def extract_links(
     pages: DataFrame,
     url_col: str = "url",
     html_col: str = "html",
-    with_anchor_text: bool = True,
+    with_anchor_text: bool = False,
 ) -> DataFrame:
-    """One row per resolvable anchor: ``(src, dst, anchor_text)``.
+    """One row per resolvable anchor: ``(src, dst)``.
 
     dst is canonical (functions/url.canonical_url). Resolution per
     RFC 3986 §5.2: absolute http(s) hrefs pass through; ``//h/p``
@@ -94,19 +76,13 @@ def extract_links(
     Dropped (by contract): other-scheme hrefs (mailto:, javascript:,
     ftp:, ...), fragment-only, and empty hrefs.
 
-    ``with_anchor_text=False`` returns ``(src, dst)`` only and runs
-    the anchor regex ONCE instead of once per capture group — the
-    fast path for graph-only callers (PageRank, frontier ranking),
-    where the second full-document scan is pure waste.
+    Anchor text is not extracted: ``with_anchor_text=True`` raises
+    ValueError.
     """
-    src = F.col(url_col)
-    html_str = F.col(html_col).cast("string")
-    hrefs = F.regexp_extract_all(html_str, F.lit(ANCHOR_PATTERN), 1)
     if with_anchor_text:
-        texts = F.regexp_extract_all(html_str, F.lit(ANCHOR_PATTERN), 2)
-        pairs = F.arrays_zip(hrefs.alias("href"), texts.alias("txt"))
-    else:
-        pairs = F.transform(hrefs, lambda h: F.struct(h.alias("href"), F.lit("").alias("txt")))
+        raise ValueError("extract_links: anchor text is not extracted")
+    src = F.col(url_col)
+    hrefs = F.regexp_extract_all(F.col(html_col).cast("string"), F.lit(ANCHOR_PATTERN), 1)
 
     src_path_raw = F.regexp_extract(src, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
     src_path = F.when(src_path_raw == "", F.lit("/")).otherwise(src_path_raw)
@@ -115,14 +91,7 @@ def extract_links(
         F.lower(F.regexp_extract(src, r"^([A-Za-z][A-Za-z0-9+.-]*):", 1)).alias("_scheme"),
         host_of(src).alias("_host"),
         src_path.alias("_path"),
-        F.explode(pairs).alias("a"),
-    ).select(
-        "src",
-        "_scheme",
-        "_host",
-        "_path",
-        F.col("a.href").alias("href"),
-        _norm_text(F.col("a.txt")).alias("anchor_text"),
+        F.explode(hrefs).alias("href"),
     )
 
     # r6 perf: the constructed-dst branches below are CANONICAL BY
@@ -186,7 +155,4 @@ def extract_links(
         # bare-relative: merge with the base directory
         .otherwise(F.concat(origin, merged, query_part))
     )
-    out = exploded.withColumn("dst", dst).filter(F.col("dst").isNotNull())
-    if not with_anchor_text:
-        return out.select("src", "dst")
-    return out.select("src", "dst", "anchor_text")
+    return exploded.withColumn("dst", dst).filter(F.col("dst").isNotNull()).select("src", "dst")

@@ -25,7 +25,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 FEATURE_DIM = 16
 
@@ -337,75 +337,3 @@ def sample_frames(
 
     return df.select("url", payload_col).mapInPandas(run, FRAMES_SCHEMA)
 
-
-# --------------------------------------------------- perceptual hash
-
-
-def py_dhash(arr: np.ndarray) -> tuple[int, int]:
-    """64-bit difference hash (dHash — the classic perceptual image
-    fingerprint: Krawetz, "Kind of Like That", 2013): integer-mean
-    grayscale -> nearest-resize to 9x8 -> bit k = (r*8+c) set iff
-    pixel[r][c] > pixel[r][c+1]. Robust to rescaling/re-encoding
-    (the near-dup transforms a crawl actually sees), all-integer so
-    it is deterministic everywhere. Returned as the simhash split-
-    half form (hi = bits 32-63, lo = bits 0-31, both non-negative
-    int64) so dedup.fingerprint_near_dups / hamming64 consume it
-    unchanged."""
-    a = np.asarray(arr)
-    if a.ndim == 3:
-        g = a.astype(np.int64).sum(axis=2) // a.shape[2]
-    else:
-        g = a.astype(np.int64)
-    small = nearest_resize(g, 9, 8)
-    bits = small[:, :8] > small[:, 1:]
-    packed = 0
-    for k, b in enumerate(bits.ravel()):
-        if b:
-            packed |= 1 << k
-    return packed >> 32, packed & 0xFFFFFFFF
-
-
-def dhash_images(
-    df: DataFrame,
-    id_col: str = "url",
-    payload_col: str = "html",
-    batch_rows: int = 256,
-) -> DataFrame:
-    """(id, sim_hi, sim_lo, error) — perceptual fingerprints over the
-    REAL decoders (BMP 24-bit / PNM P5/P6); compressed codecs and
-    junk bytes become error ROWS with NULL hashes (the engine error
-    contract, never a task kill). Compose with
-    dedup.fingerprint_near_dups for exact Hamming-ball near-dup
-    pairs — image dedup at crawl scale without an embedding model:
-
-        fp = dhash_images(media).filter("error IS NULL")
-        pairs = fingerprint_near_dups(
-            fp.selectExpr("id", "sim_hi", "sim_lo"), max_distance=3)
-    """
-    out_schema = "id string, sim_hi long, sim_lo long, error string"
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, his, los, errs = [], [], [], []
-            for i, data in zip(pdf["_id"], pdf["_payload"]):
-                ids.append(str(i))
-                try:
-                    arr = decode_image(bytes(data) if data is not None else b"")
-                    hi, lo = py_dhash(arr)
-                    his.append(hi)
-                    los.append(lo)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — error rows by contract
-                    his.append(None)
-                    los.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {"id": ids, "sim_hi": his, "sim_lo": los, "error": errs}
-            )
-
-    slim = df.select(
-        F.col(id_col).cast("string").alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return slim.mapInPandas(gen, out_schema)

@@ -8,9 +8,9 @@ refetching?".)
 
 Why a crawler wants this: refetching everything every cycle spends
 the fetch budget on static pages. The index tier already carries
-change observations for free — sources/cdx.py digests per (urlkey,
-ts) across stacked crawls — so change frequency is estimable without
-touching a single WARC byte.
+change observations for free — CDX digests per (urlkey, ts) across
+stacked crawls — so change frequency is estimable without touching a
+single WARC byte.
 
 Estimator (the paper's bias-corrected ratio estimator): over
 ``n_int = n_fetches - 1`` equal-ish fetch intervals with ``X``

@@ -9,9 +9,10 @@ no stubs:
 - detect_edges == reference :69-84 (GaussianBlur(5x5) + Canny(75,200)):
   separable Gaussian, Sobel gradients, 4-direction non-max
   suppression, double threshold, hysteresis by bounded strong-into-
-  weak dilation.
-- align_document == reference :86-116 with ONE documented
-  substitution: the findContours + approxPolyDP quad search
+  weak dilation. scan_documents does not run it: the quad fit below
+  needs no edge map.
+- find_document_quad + four_point_transform == reference :86-116 with
+  ONE documented substitution: the findContours + approxPolyDP quad search
   (:103-111) is replaced by a threshold-mask extreme-point quad fit.
   For a filled convex document on a darker background the four
   contour corners ARE the bright pixels extremizing (x+y) and (y-x)
@@ -324,17 +325,6 @@ def four_point_transform(img: np.ndarray, pts: np.ndarray) -> np.ndarray:
     return warp_perspective(img, _homography(dst, rect), max_w, max_h)
 
 
-def align_document(img: np.ndarray) -> Optional[np.ndarray]:
-    """Detect the document quad and warp it upright; None when no
-    quad is found (reference :86-116 returns None the same way)."""
-    if img is None:
-        raise ValueError("Input image is None.")
-    pts = find_document_quad(to_gray(img))
-    if pts is None:
-        return None
-    return four_point_transform(img, pts)
-
-
 def enhance(
     img: np.ndarray,
     upscale_factor: float = 2.0,
@@ -354,14 +344,6 @@ def enhance(
     th = adaptive_threshold_gaussian(blurred, block_size, threshold_C)
     closed = morph_close(th, close_kernel)
     return median_blur(closed, median_ksize)
-
-
-def scan_document(img: np.ndarray, **enhance_kwargs) -> Optional[np.ndarray]:
-    """Full align + enhance pipeline; reference :155-188."""
-    aligned = align_document(img)
-    if aligned is None:
-        return None
-    return enhance(aligned, **enhance_kwargs)
 
 
 # ------------------------------------------------------- Spark seam

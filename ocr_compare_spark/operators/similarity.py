@@ -450,7 +450,7 @@ def seeded_pq_codebooks(
     sit at the scale of unit-norm embedding components — the
     data-independent variant, chosen as the DEFAULT so the DuckDB
     oracle can embed the codebooks as literals (the seeded_centroids
-    trick). For real recall train with train_pq_codebooks."""
+    trick). For real recall train them with train_ivfpq."""
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_sub, n_codes, sub_dim)) / np.sqrt(n_sub * sub_dim)
 
@@ -459,7 +459,7 @@ def _lloyd_kmeans_l2(mat: np.ndarray, n_codes: int, iters: int = 5) -> np.ndarra
     """Euclidean Lloyd loop for PQ sub-quantizers (init = first
     n_codes rows, argmin-L2 assignment, plain mean update — NO
     renormalization, codes live in the data space). Deterministic,
-    shared by train_pq_codebooks and any oracle generator."""
+    shared by train_ivfpq and any oracle generator."""
     mat = np.asarray(mat, dtype=np.float64)
     if len(mat) < n_codes:
         raise ValueError(
@@ -474,31 +474,6 @@ def _lloyd_kmeans_l2(mat: np.ndarray, n_codes: int, iters: int = 5) -> np.ndarra
             if len(sel):
                 cents[c] = sel.mean(axis=0)
     return cents
-
-
-def train_pq_codebooks(
-    df: DataFrame,
-    n_sub: int = 4,
-    n_codes: int = 16,
-    iters: int = 5,
-    sample: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> np.ndarray:
-    """Train PQ codebooks: per-subspace Euclidean k-means on a
-    bounded, id-ordered sample (the train_centroids shape — a
-    driver-side numpy fit on <= ``sample`` vectors; encode and scan
-    stay fully distributed)."""
-    rows = df.orderBy(id_col).limit(sample).select(vec_col).collect()
-    mat = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    if dim is None:
-        dim = mat.shape[1]
-    assert dim % n_sub == 0, f"dim {dim} not divisible by n_sub {n_sub}"
-    sd = dim // n_sub
-    return np.stack(
-        [_lloyd_kmeans_l2(mat[:, j * sd : (j + 1) * sd], n_codes, iters) for j in range(n_sub)]
-    )
 
 
 def _pq_sub_dist(vec_col: str, j: int, sub_dim: int, code: np.ndarray) -> F.Column:

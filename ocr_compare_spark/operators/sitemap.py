@@ -1,7 +1,6 @@
 """Sitemap XML (sitemaps.org protocol) — generation and parsing,
 the discovery-side companion to the robots.txt gate (robots.txt
-surfaces `Sitemap:` urls; the crawl frontier parses them into the
-url seed list).
+surfaces `Sitemap:` urls whose entries seed a crawl).
 
 All JVM-native: entry framing and field extraction are RE2-safe
 regexes ((?s) non-greedy blocks — no lookaround, so the DuckDB twin
@@ -87,70 +86,6 @@ def sitemap_xml(urls: Column, lastmods: Column | None = None) -> Column:
         F.array_join(entries, ""),
         F.lit("</urlset>"),
     )
-
-
-def sitemaps_from_robots(
-    robots: DataFrame, host_col: str = "host", txt_col: str = "robots_txt"
-) -> DataFrame:
-    """(host, sitemap_url) — the discovery seam between the robots
-    tier and sitemap fetch: ``Sitemap:`` lines are host-wide
-    directives (RFC 9309 §2.3 other-records; sitemaps.org protocol),
-    independent of any user-agent group.
-
-    JVM-native line regexp (no lookaround — RE2 == Java), mirroring
-    py_parse_robots' line semantics exactly (pytest-pinned): comments
-    stripped at ``#``, key case-insensitive with surrounding
-    whitespace, whole-key match (``x-sitemap:`` is not a sitemap
-    line), empty values dropped."""
-    c = F.col(txt_col)
-    urls = F.regexp_extract_all(
-        c, F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*([^#\r\n]*?)[ \t]*(?:#|$)"), 1
-    )
-    return (
-        robots.select(
-            F.col(host_col).alias("host"), F.explode(urls).alias("sitemap_url")
-        )
-        .filter(F.col("sitemap_url") != "")
-    )
-
-
-def sitemap_seeds(
-    robots: DataFrame,
-    sitemap_bodies: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-    url_col: str = "url",
-    xml_col: str = "body",
-    index_hops: int = 1,
-) -> DataFrame:
-    """Resolve the robots→sitemap discovery chain into seed urls:
-    robots ``Sitemap:`` lines name documents in ``sitemap_bodies``
-    (a (url, body) table of fetched XML — the fetch itself is the
-    crawler's job, this is a pure plan over what landed); urlset
-    entries become seeds, sitemapindex entries indirect ONE more
-    fetch-join per ``index_hops`` (the protocol allows index-of-index
-    nesting; each hop is one equi-join + regexp parse, so the plan
-    stays linear in hops — real indexes are depth 1).
-
-    Returns a one-column (``loc``) DataFrame of distinct seed urls —
-    feed it to ``plans.frontier.crawl_frontier(extra_seeds=...)``."""
-    wanted = (
-        sitemaps_from_robots(robots, host_col, txt_col)
-        .select(F.col("sitemap_url").alias(url_col))
-        .distinct()
-    )
-    seeds: DataFrame | None = None
-    for _ in range(index_hops + 1):
-        fetched = wanted.join(sitemap_bodies, url_col)
-        entries = parse_sitemap(fetched, xml_col=xml_col)
-        urls = entries.filter(F.col("kind") == "urlset").select("loc")
-        seeds = urls if seeds is None else seeds.unionByName(urls)
-        wanted = (
-            entries.filter(F.col("kind") == "index")
-            .select(F.col("loc").alias(url_col))
-            .distinct()
-        )
-    return seeds.distinct()
 
 
 def parse_sitemap(

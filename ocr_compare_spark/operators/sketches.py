@@ -209,8 +209,7 @@ def hll_overlap(
     decontaminate/cross-batch joins instead).
 
     Scale: three bounded estimates + one join keyed by group — no
-    key stream is ever touched; sketches can come from load_sketch
-    over different crawls' persisted registers."""
+    key stream is ever touched."""
     gc = list(group_cols)
     # each register table feeds TWO consumers (its own estimate and
     # the merge) — cut the lineage so the upstream register build
@@ -553,41 +552,29 @@ def dd_quantiles(
 # ---------------------------------------------------- persistence
 
 
-def save_sketch(df: DataFrame, path: str, epoch: int | None = None) -> None:
-    """Persist a register table (HLL) or counter table (CMS) as
-    parquet — the artifact a recurring crawl job reloads before each
-    batch (the save_bloom pattern): load prior sketch, build this
-    batch's, hll_merge / cms_merge, save back. Both tables are
+def save_sketch(df: DataFrame, path: str) -> None:
+    """Persist a register table (HLL), counter table (CMS) or bucket
+    table (DD) as parquet — the artifact a recurring crawl job reloads
+    before each batch: load prior sketch, build this batch's,
+    hll_merge / cms_merge / dd_merge, save back. The tables are
     bounded (<= m rows per group / <= d*w rows) so the write is
     trivially small.
 
     The fold saves back TO THE PATH IT LOADED FROM, so the plan is
     cut with localCheckpoint first — overwrite-writing a lazy plan
     that still reads the target path throws Spark's 'Cannot
-    overwrite a path that is also being read from' (the cache.py
-    self-append trap, write-side flavor). The write itself goes to a
-    temp sibling then renames into place (the write_warc pattern):
-    mode('overwrite') deletes the target BEFORE the job commits, so
-    a mid-save crash would otherwise lose the accumulated sketch —
-    with the rename, a crash leaves either the old sketch intact or
-    the new one complete. (Local-FS rename; on an object store use
-    the committer instead.)
-
-    ``epoch`` (optional) rides the same atomic rename as an _epoch
-    marker file — the last-folded micro-batch id for ADDITIVE sketch
-    streams (see streaming.jobs.additive_sketch_stream: counter adds
-    are not replay-idempotent the way HLL's register max is, so the
-    fold must know which batch the on-disk sketch already includes;
-    committing the epoch atomically WITH the sketch is what makes
-    the skip-if-seen guard crash-safe)."""
+    overwrite a path that is also being read from'. The write itself
+    goes to a temp sibling then renames into place: mode('overwrite')
+    deletes the target BEFORE the job commits, so a mid-save crash
+    would otherwise lose the accumulated sketch — with the rename, a
+    crash leaves either the old sketch intact or the new one
+    complete. (Local-FS rename; on an object store use the committer
+    instead.)"""
     import os
     import shutil
 
     tmp = path.rstrip("/") + "._tmp"
     df.localCheckpoint(eager=True).write.mode("overwrite").parquet(tmp)
-    if epoch is not None:
-        with open(os.path.join(tmp, "_epoch"), "w") as f:
-            f.write(str(int(epoch)))
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(tmp, path)
@@ -595,15 +582,3 @@ def save_sketch(df: DataFrame, path: str, epoch: int | None = None) -> None:
 
 def load_sketch(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def load_sketch_epoch(path: str) -> int | None:
-    """The _epoch marker save_sketch committed with the sketch, or
-    None when the sketch predates epochs / never carried one."""
-    import os
-
-    f = os.path.join(path, "_epoch")
-    if not os.path.exists(f):
-        return None
-    with open(f) as fh:
-        return int(fh.read().strip())

@@ -252,9 +252,8 @@ def finest_buckets(
     finest_s: int,
 ) -> DataFrame:
     """The finest-resolution partial-aggregate table
-    ``(bucket_start, *dims, n, sum_<c>...)`` — the materialization a
-    streaming continuous aggregate maintains (see
-    streaming/jobs.rollup_stream) and rollup_from_finest reads."""
+    ``(bucket_start, *dims, n, sum_<c>...)`` — the materialization
+    rollup_from_finest reads."""
     sums = [F.sum(c).alias(f"sum_{c}") for c in value_cols]
     return df.groupBy(
         (F.floor(_micros(ts_col) / (int(finest_s) * 1_000_000)) * int(finest_s))
@@ -262,18 +261,6 @@ def finest_buckets(
         .alias("bucket_start"),
         *[F.col(d) for d in dims],
     ).agg(F.count("*").alias("n"), *sums)
-
-
-def merge_finest_buckets(prior: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold two finest-bucket tables: counts and sums ADD (the
-    additive-sketch merge shape — streaming folds are epoch-guarded
-    for exactly this reason)."""
-    u = prior.unionByName(delta)
-    keys = [c for c in u.columns if c != "n" and not c.startswith("sum_")]
-    aggs = [F.sum("n").alias("n")] + [
-        F.sum(c).alias(c) for c in u.columns if c.startswith("sum_")
-    ]
-    return u.groupBy(*keys).agg(*aggs)
 
 
 def rollup_from_finest(

@@ -121,9 +121,7 @@ def to_tree(spans: DataFrame, pages_meta: DataFrame | None = None) -> DataFrame:
     page): blocks that CONTINUE onto later pages (engine-declared,
     e.g. a table running across pages — the 'page_span_last' marker,
     see Block.page_span in engines/base.py) carry last > first;
-    everything else is (page, page). Segment recombination renumbers
-    pages consuming these spans (chunking.combine_pages_spanned)
-    before the tree is built.
+    everything else is (page, page).
 
     ONE linear cascade — no TEXT/TABLE branch over the span scan
     (two filtered branches get divergent column pruning below the
@@ -547,96 +545,3 @@ def tree_stats(tree: DataFrame) -> DataFrame:
         max_cell_depth.cast("long").alias("max_cell_depth"),
         doc_confidence.alias("doc_confidence"),
     )
-
-
-def tree_to_text(tree: DataFrame) -> DataFrame:
-    """Rebuild doc_text from the NESTED struct with the reference
-    separators (ocr_schema.py:85-198) — the byte-identical proof that
-    the tree is a faithful representation, TABLE blocks included
-    (markdown from the tree's rows/cells with the Optional-header
-    rule).
-
-    Nested blocks: consecutive block entries sharing a top-level
-    ordinal join with the block separator '\\n' (the recursive
-    '\\n'-join collapses — every adjacent leaf pair within one top
-    block is separated by exactly one '\\n'); entries from different
-    top blocks join with the page separator '\\n\\n'."""
-    para_text = lambda q: F.array_join(  # noqa: E731
-        F.transform(
-            q.lines,
-            lambda l: F.array_join(F.transform(l.words, lambda w: w.text), " "),
-        ),
-        " ",
-    )
-
-    def table_text(b: Column) -> Column:
-        row_md = lambda r: F.concat(  # noqa: E731
-            F.lit("| "),
-            F.array_join(F.transform(r.cells, lambda c: c.text), " | "),
-            F.lit(" |"),
-        )
-        sep_row = F.concat(
-            F.lit("| "),
-            F.array_join(
-                F.transform(F.element_at(b.rows, 1).cells, lambda _: F.lit("---")), " | "
-            ),
-            F.lit(" |"),
-        )
-        all_rows = F.transform(b.rows, row_md)
-        return F.when(
-            F.element_at(b.rows, 1).row_type == "HEADER",
-            F.array_join(
-                F.concat(
-                    F.array(F.element_at(all_rows, 1), sep_row),
-                    F.slice(all_rows, 2, F.greatest(F.size(all_rows) - 1, F.lit(0))),
-                ),
-                "\n",
-            ),
-        ).otherwise(F.array_join(all_rows, "\n"))
-
-    def page_text(p: Column) -> Column:
-        # A block's own paragraphs INTERLEAVE with its child blocks
-        # (Block.elements is one ordered list), so adjacency entries
-        # are not contiguous DFS segments. Flatten to leaf units
-        # keyed by their FULL element path (block_path ++ [para_no];
-        # a table renders as one unit at its block_path), sort
-        # lexicographically (= DFS order), then join.
-        units = F.flatten(
-            F.transform(
-                p.blocks,
-                lambda b: F.when(
-                    F.size(b.rows) > 0,
-                    F.array(F.struct(b.block_path.alias("path"), table_text(b).alias("text"))),
-                ).otherwise(
-                    F.transform(
-                        b.paragraphs,
-                        lambda q: F.struct(
-                            F.concat(b.block_path, F.array(q.para_no)).alias("path"),
-                            para_text(q).alias("text"),
-                        ),
-                    )
-                ),
-            )
-        )
-        folded = F.aggregate(
-            F.array_sort(units),
-            F.struct(F.lit("").alias("txt"), F.lit(-1).alias("top"), F.lit(True).alias("first")),
-            lambda acc, u: F.struct(
-                F.concat(
-                    acc.txt,
-                    F.when(acc.first, F.lit(""))
-                    .when(F.element_at(u.path, 1) == acc.top, F.lit("\n"))
-                    .otherwise(F.lit("\n\n")),
-                    u.text,
-                ).alias("txt"),
-                F.element_at(u.path, 1).alias("top"),
-                F.lit(False).alias("first"),
-            ),
-        )
-        return folded.txt
-
-    doc = F.array_join(
-        F.transform(F.col("document.pages"), page_text),
-        "\n=====\n",
-    )
-    return tree.select("url", "engine", doc.alias("doc_text"))

@@ -407,26 +407,25 @@ def curate(
         # is never re-read, the store ships band hashes + shingle
         # hashes only. Hits drop here; this batch's FINAL kept docs
         # append their rows after the output is settled (so sampled-
-        # out docs don't shield future crawls).
-        import os as _os
-
+        # out docs don't shield future crawls). The store's part files
+        # are pinned at run start, so the append below cannot move the
+        # snapshot the hits were computed against.
         from ocr_compare_spark.operators.dedup import (
             cross_batch_near_dups,
             minhash_tables,
         )
+        from ocr_compare_spark.sources.cache import _parquet_files
 
         skeyed = curated.withColumn("doc_key", F.xxhash64("url"))
         sig_rows = minhash_tables(
             skeyed, "doc_key", "doc_text", num_partitions=num_partitions
         ).persist()
         helper_persists.append(sig_rows)
-        has_store = _os.path.isdir(sig_store) and any(
-            e.name != "_SUCCESS" for e in _os.scandir(sig_store)
-        )
+        store_files = _parquet_files(spark, sig_store)
         n_cross_crawl = 0
-        if has_store:
+        if store_files:
             hits = cross_batch_near_dups(
-                sig_rows, spark.read.parquet(sig_store),
+                sig_rows, spark.read.parquet(*store_files),
                 verify_threshold=jaccard_threshold,
             )
             dup_keys = hits.select(F.col("new_id").alias("doc_key")).distinct()

@@ -58,17 +58,23 @@ RESULT_COLS = [
 ]
 
 
+def _parquet_files(spark, table_dir: str) -> list[str]:
+    """Sorted part files of a parquet directory, listed driver-side
+    (no Spark job) through the Hadoop FileSystem of the path, so plain
+    paths and file:/hdfs:/s3a: URIs resolve alike; [] when the
+    directory is absent or holds no parquet."""
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(table_dir.rstrip("/") + "/*.parquet")
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return sorted(s.getPath().toString() for s in fs.globStatus(pattern) or [])
+
+
 def read_result_cache(spark, cache_dir: str) -> DataFrame | None:
     """Cache table snapshot with last-write-wins per key: a
     force_cache_refresh run APPENDS recomputed rows (object-store
     overwrite semantics re-expressed for an append-only table), so
     reads pick the newest row per (engine, content_hash,
     kwargs_hash). Returns None when the cache is empty/absent."""
-    import glob
-    import os
-
-    if not os.path.exists(cache_dir):
-        return None
     # Pin the EXACT part-file list instead of reading the directory:
     # cached_extract later APPENDS new entries to this same path, and
     # Spark's insert command refreshes the path's file index — a
@@ -76,7 +82,7 @@ def read_result_cache(spark, cache_dir: str) -> DataFrame | None:
     # current run just wrote (hits and misses computed against a
     # moving snapshot). With the list pinned, every join in the run
     # sees the cache as of run start.
-    files = sorted(glob.glob(os.path.join(cache_dir, "*.parquet")))
+    files = _parquet_files(spark, cache_dir)
     if not files:
         return None
     tbl = spark.read.parquet(*files)

@@ -33,10 +33,6 @@ def completed_buckets(spark: SparkSession, manifest_path: str, job_id: str) -> D
     return m.filter((F.col("job_id") == job_id) & (F.col("status") == "done")).select("bucket")
 
 
-def pending(df_bucketed: DataFrame, done: DataFrame) -> DataFrame:
-    return df_bucketed.join(done, "bucket", "left_anti")
-
-
 def run_with_checkpoints(
     pages: DataFrame,
     process,  # DataFrame -> DataFrame (per-bucket transformation)

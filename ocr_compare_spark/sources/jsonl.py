@@ -2,22 +2,12 @@
 
 The open-data LLM pipelines (Dolma, RedPajama, FineWeb releases)
 exchange corpora as gzipped JSONL: a ``documents/`` tree of
-``{"id", "text", "source", "metadata": {...}}`` records, plus
-parallel ``attributes/<attr_set>/`` trees carrying per-document
-annotation records ``{"id", "attributes": {...}}`` that later stages
-join back by id WITHOUT rewriting the (huge) text files. This module
-is that interchange on Spark:
-
-- :func:`write_documents` / :func:`read_documents` — the documents
-  tree, one directory per partition value (Hive-style ``lang=xx``),
-  gzip-compressed JSON lines via Spark's native json writer (JVM-side
-  serialization; no Python in the row path).
-- :func:`write_attributes` / :func:`read_attributes` — an attribute
-  set (e.g. quality scores, dedup flags) keyed by id; reading returns
-  the flat columns again.
-- :func:`join_attributes` — the Dolma consumption pattern: documents
-  joined to one-or-more attribute sets by id (equi joins on the id
-  hash — scale-safe; attribute records are slim).
+``{"id", "text", "source", "metadata": {...}}`` records. This module
+is that interchange on Spark: :func:`write_documents` /
+:func:`read_documents` — the documents tree, one directory per
+partition value (Hive-style ``lang=xx``), gzip-compressed JSON lines
+via Spark's native json writer (JVM-side serialization; no Python in
+the row path).
 
 Scale notes: JSONL-gz is a LINE format — splittable only at file
 granularity (gzip), so shard counts = write parallelism decides read
@@ -91,49 +81,6 @@ def read_documents(
     if partition_by:
         schema = schema.add(T.StructField(partition_by, T.StringType(), True))
     return spark.read.schema(schema).json(path)
-
-
-def write_attributes(
-    df: DataFrame,
-    path: str,
-    attr_cols: list[str],
-    id_col: str = "id",
-) -> None:
-    """Write one attribute set: slim ``{"id", "attributes": {...}}``
-    records (the Dolma annotate-without-rewriting-text contract)."""
-    df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.to_json(F.struct(*[F.col(c) for c in attr_cols])).alias("attributes"),
-    ).write.mode("overwrite").option("compression", "gzip").json(path)
-
-
-def read_attributes(
-    spark: SparkSession, path: str, attr_schema: T.StructType
-) -> DataFrame:
-    """Read an attribute set back to flat columns (id + one column
-    per attribute). ``attr_schema`` types the attributes object —
-    explicit, like read_documents."""
-    schema = T.StructType(
-        [
-            T.StructField("id", T.StringType(), False),
-            T.StructField("attributes", T.StringType(), True),
-        ]
-    )
-    raw = spark.read.schema(schema).json(path)
-    parsed = raw.select(
-        "id", F.from_json("attributes", attr_schema).alias("_a")
-    )
-    return parsed.select("id", *[F.col(f"_a.{f.name}").alias(f.name) for f in attr_schema.fields])
-
-
-def join_attributes(docs: DataFrame, *attrs: DataFrame) -> DataFrame:
-    """Documents + N attribute sets by id (left joins: a doc missing
-    from an attribute set keeps nulls — annotation sets are allowed
-    to be partial in Dolma)."""
-    out = docs
-    for a in attrs:
-        out = out.join(a, "id", "left")
-    return out
 
 
 def metadata_field(df: DataFrame, field: str, dtype: str = "string") -> DataFrame:

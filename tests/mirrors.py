@@ -1,8 +1,8 @@
 """Pure-Python reference mirrors of live library operators.
 
 Each function here recomputes one Spark operator's result in plain
-Python (same hashing, rounding and fold order), and the tests pin the
-operator equal to its mirror. The mirrors are test ground truth only;
+Python (same hashing, rounding and fold order) or by a second, independent
+route, and the tests pin the operator equal to its mirror. The mirrors are test ground truth only;
 the library never calls them.
 """
 
@@ -14,7 +14,10 @@ import math
 import re
 
 import numpy as np
+from pyspark.sql import Column, DataFrame, functions as F
 
+from ocr_compare_spark.engines.html_tree import RawBlock, _BlockParser
+from ocr_compare_spark.functions.url import TRACKING_PARAM_PATTERN
 from ocr_compare_spark.operators.bpe import EOW
 from ocr_compare_spark.operators.classifier import DEFAULT_ALPHA
 from ocr_compare_spark.operators.compare import _strip_affixes
@@ -354,3 +357,165 @@ def py_document_record(id: str, text: str, source=None, metadata=None) -> str:
     rec = {"id": id, "text": text, "source": source,
            "metadata": metadata if metadata is not None else None}
     return json.dumps({k: v for k, v in rec.items() if v is not None})
+
+
+# ---------------------------------------------------------------------
+# engines/html_tree.py
+
+
+def segment_html_stdlib(data: bytes) -> list[RawBlock]:
+    """Reference implementation on stdlib html.parser.feed()."""
+    text = data.decode("utf-8", errors="replace")
+    p = _BlockParser()
+    try:
+        p.feed(text)
+        p.close()
+    except Exception:
+        p._flush()
+    return p.blocks
+
+
+# ---------------------------------------------------------------------
+# functions/url.py
+
+# compiled from the canonical list so the mirror cannot drift from
+# the Spark expression (functions/url.py owns the pattern)
+_TRACKING_RE = re.compile(TRACKING_PARAM_PATTERN)
+
+
+def surt_key_py(url: str) -> str:
+    """Pure-Python mirror of functions/url.surt_key (same contract,
+    documented there) — pinned equal to the Spark expression in
+    tests/test_url.py."""
+    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://(.*)$", url, re.S)
+    if not m:
+        return url
+    scheme = m.group(1).lower()
+    rest = m.group(2)
+    am = re.match(r"^([^/?#]*)(.*)$", rest, re.S)
+    authority, tail = am.group(1), am.group(2)
+    tail = tail.split("#", 1)[0]
+    host = authority.split("@", 1)[1] if "@" in authority else authority
+    port = ""
+    if host.startswith("["):
+        hm = re.match(r"^(\[[^\]]*\])(?::(\d+))?$", host)
+        if hm:
+            host, port = hm.group(1), hm.group(2) or ""
+    elif ":" in host:
+        h, p = host.rsplit(":", 1)
+        if p.isdigit():
+            host, port = h, p
+    host = host.lower()
+    if (scheme, port) in (("http", "80"), ("https", "443")):
+        port = ""
+    path, _, query = tail.partition("?")
+    if path == "":
+        path = "/"
+    query_part = ""
+    if query:
+        kept = sorted(p for p in query.split("&") if p and not _TRACKING_RE.match(p))
+        if kept:
+            query_part = "?" + "&".join(kept)
+    h2 = re.sub(r"^www\d*\.(?=[^.]+\.)", "", host)
+    if re.match(r"^\d+\.\d+\.\d+\.\d+$", h2) or h2.startswith("["):
+        rev = h2
+    else:
+        rev = ",".join(reversed(h2.split(".")))
+    return rev + (":" + port if port else "") + ")" + (path + query_part).lower()
+
+
+# ---------------------------------------------------------------------
+# operators/tree.py
+
+
+def tree_to_text(tree: DataFrame) -> DataFrame:
+    """Rebuild doc_text from the NESTED struct with the reference
+    separators (ocr_schema.py:85-198) — the byte-identical proof that
+    the tree is a faithful representation, TABLE blocks included
+    (markdown from the tree's rows/cells with the Optional-header
+    rule).
+
+    Nested blocks: consecutive block entries sharing a top-level
+    ordinal join with the block separator '\\n' (the recursive
+    '\\n'-join collapses — every adjacent leaf pair within one top
+    block is separated by exactly one '\\n'); entries from different
+    top blocks join with the page separator '\\n\\n'."""
+    para_text = lambda q: F.array_join(  # noqa: E731
+        F.transform(
+            q.lines,
+            lambda l: F.array_join(F.transform(l.words, lambda w: w.text), " "),
+        ),
+        " ",
+    )
+
+    def table_text(b: Column) -> Column:
+        row_md = lambda r: F.concat(  # noqa: E731
+            F.lit("| "),
+            F.array_join(F.transform(r.cells, lambda c: c.text), " | "),
+            F.lit(" |"),
+        )
+        sep_row = F.concat(
+            F.lit("| "),
+            F.array_join(
+                F.transform(F.element_at(b.rows, 1).cells, lambda _: F.lit("---")), " | "
+            ),
+            F.lit(" |"),
+        )
+        all_rows = F.transform(b.rows, row_md)
+        return F.when(
+            F.element_at(b.rows, 1).row_type == "HEADER",
+            F.array_join(
+                F.concat(
+                    F.array(F.element_at(all_rows, 1), sep_row),
+                    F.slice(all_rows, 2, F.greatest(F.size(all_rows) - 1, F.lit(0))),
+                ),
+                "\n",
+            ),
+        ).otherwise(F.array_join(all_rows, "\n"))
+
+    def page_text(p: Column) -> Column:
+        # A block's own paragraphs INTERLEAVE with its child blocks
+        # (Block.elements is one ordered list), so adjacency entries
+        # are not contiguous DFS segments. Flatten to leaf units
+        # keyed by their FULL element path (block_path ++ [para_no];
+        # a table renders as one unit at its block_path), sort
+        # lexicographically (= DFS order), then join.
+        units = F.flatten(
+            F.transform(
+                p.blocks,
+                lambda b: F.when(
+                    F.size(b.rows) > 0,
+                    F.array(F.struct(b.block_path.alias("path"), table_text(b).alias("text"))),
+                ).otherwise(
+                    F.transform(
+                        b.paragraphs,
+                        lambda q: F.struct(
+                            F.concat(b.block_path, F.array(q.para_no)).alias("path"),
+                            para_text(q).alias("text"),
+                        ),
+                    )
+                ),
+            )
+        )
+        folded = F.aggregate(
+            F.array_sort(units),
+            F.struct(F.lit("").alias("txt"), F.lit(-1).alias("top"), F.lit(True).alias("first")),
+            lambda acc, u: F.struct(
+                F.concat(
+                    acc.txt,
+                    F.when(acc.first, F.lit(""))
+                    .when(F.element_at(u.path, 1) == acc.top, F.lit("\n"))
+                    .otherwise(F.lit("\n\n")),
+                    u.text,
+                ).alias("txt"),
+                F.element_at(u.path, 1).alias("top"),
+                F.lit(False).alias("first"),
+            ),
+        )
+        return folded.txt
+
+    doc = F.array_join(
+        F.transform(F.col("document.pages"), page_text),
+        "\n=====\n",
+    )
+    return tree.select("url", "engine", doc.alias("doc_text"))

@@ -1069,6 +1069,16 @@ def test_cross_batch_near_dups_store_loop(spark, corpus, tmp_path):
 # ------------------------------------------------ product quantization
 
 
+def _lloyd_codebooks(mat, n_sub, n_codes):
+    """Per-subspace Euclidean Lloyd codebooks over the id-ordered
+    vectors (the sub-quantizer fit train_ivfpq runs on residuals)."""
+    m = np.asarray(mat, dtype=np.float64)
+    sd = m.shape[1] // n_sub
+    return np.stack(
+        [similarity._lloyd_kmeans_l2(m[:, j * sd : (j + 1) * sd], n_codes) for j in range(n_sub)]
+    )
+
+
 def _pq_numpy_reference(mat, q_ids, cb, k=3):
     """Plain-numpy mirror of pq_topk semantics: encode = per-subspace
     argmin squared-L2 (ties lowest code), ADC = dot(q_sub, code),
@@ -1099,7 +1109,7 @@ def _pq_numpy_reference(mat, q_ids, cb, k=3):
 def test_pq_topk_matches_numpy_reference(vectors):
     df, mat = vectors
     q = df.filter(F.col("vec_id") < 6)
-    cb = similarity.train_pq_codebooks(df, n_sub=4, n_codes=8, id_col="vec_id")
+    cb = _lloyd_codebooks(mat, n_sub=4, n_codes=8)
     got = similarity.pq_topk(df, q, k=3, n_sub=4, n_codes=8, codebooks=cb, dim=16)
     rows = {}
     for r in got.collect():
@@ -1134,7 +1144,7 @@ def test_pq_topk_data_path_256_codes(vectors768):
     run it and agree with the numpy mirror exactly."""
     df, mat = vectors768
     q = df.filter(F.col("vec_id") < 3)
-    cb = similarity.train_pq_codebooks(df, n_sub=8, n_codes=32, id_col="vec_id")
+    cb = _lloyd_codebooks(mat, n_sub=8, n_codes=32)
     out = similarity.pq_topk(
         df, q, k=3, n_sub=8, n_codes=32, codebooks=cb, dim=768, method="data"
     ).collect()
@@ -1146,14 +1156,6 @@ def test_pq_topk_data_path_256_codes(vectors768):
         assert [n for _, n in sorted(rows[qid])] == want[qid]
     # planted neighbor (2, 30): identical codes -> max-score reconstruction
     assert rows[2][0][1] == 30 or 30 in [n for _, n in rows[2]]
-
-
-def test_train_pq_codebooks_deterministic(vectors):
-    df, _ = vectors
-    c1 = similarity.train_pq_codebooks(df, n_sub=4, n_codes=8, id_col="vec_id")
-    c2 = similarity.train_pq_codebooks(df.repartition(7), n_sub=4, n_codes=8, id_col="vec_id")
-    assert np.array_equal(c1, c2)
-    assert c1.shape == (4, 8, 4)
 
 
 def test_pq_query_guard_raises(vectors, monkeypatch):

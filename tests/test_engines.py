@@ -4,7 +4,9 @@ no SparkSession needed (fast gate)."""
 from __future__ import annotations
 
 from ocr_compare_spark import synth
-from ocr_compare_spark.engines.base import is_pdf_bytes, list_available_engines, sniff_mime
+import pytest
+
+from ocr_compare_spark.engines.base import create_engine, is_pdf_bytes, sniff_mime
 from ocr_compare_spark.engines.density import parse_density
 from ocr_compare_spark.engines.dom_heuristic import parse_dom
 from ocr_compare_spark.engines.pdf_stream import count_pdf_pages, parse_pdf
@@ -14,9 +16,11 @@ TEXT_120 = " ".join(f"w{i}" for i in range(120))
 
 
 def test_registry():
-    eng = list_available_engines()
-    assert set(eng) == {"dom", "density", "pdf"}
-    assert eng["dom"]["version"]
+    for name in ("dom", "density", "pdf"):
+        spec = create_engine(name)
+        assert spec.name == name and spec.version
+    with pytest.raises(KeyError):
+        create_engine("tesseract")
 
 
 def test_trivial_html():
@@ -246,7 +250,8 @@ JUNK_CASES = [
 def test_fast_scanner_matches_stdlib_junk():
     """Tolerance equivalence on malformed/adversarial markup: the
     scanner's RawBlocks equal html.parser's on every junk case."""
-    from ocr_compare_spark.engines.html_tree import segment_html, segment_html_stdlib
+    from ocr_compare_spark.engines.html_tree import segment_html
+    from tests.mirrors import segment_html_stdlib
 
     for s in JUNK_CASES:
         b = s.encode()
@@ -259,7 +264,8 @@ def test_fast_scanner_matches_stdlib_corpus():
     extraction output cannot shift."""
     import duckdb
 
-    from ocr_compare_spark.engines.html_tree import segment_html, segment_html_stdlib
+    from ocr_compare_spark.engines.html_tree import segment_html
+    from tests.mirrors import segment_html_stdlib
 
     rows = duckdb.sql(
         "select doc_id, text from '/root/testdata/sf0.001/documents.parquet'"

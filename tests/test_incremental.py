@@ -114,17 +114,12 @@ def test_crawl_delta_within_batch_duplicate_payloads_extract_once(spark, tmp_pat
 
 
 def test_revisit_archive_feeds_cache_with_zero_engine_work(spark, tmp_path):
-    """The claimed WARC-revisit composition: crawl 2's archive (written
-    with dedup=True against crawl 1's payloads via known digests at
-    the write seam — here the payloads are literally identical) is
-    read back, revisits rehydrated, and crawl_delta does ZERO engine
-    work because every payload is already cached."""
-    from datetime import datetime, timedelta
+    """A recrawl whose every capture is a revisit (payload identical
+    to crawl 1's) does ZERO engine work: every payload is already
+    cached."""
+    from datetime import datetime
 
     from ocr_compare_spark.plans.incremental import crawl_delta
-    from ocr_compare_spark.sources.warc import (
-        resolve_revisits, warc_pages, warc_revisits, write_warc,
-    )
 
     t0 = datetime(2025, 1, 1)
     body = b"<html><body><p>stable page body</p></body></html>"
@@ -136,31 +131,19 @@ def test_revisit_archive_feeds_cache_with_zero_engine_work(spark, tmp_path):
     _, m1 = crawl_delta(spark, crawl1, cache)
     assert m1["fresh_docs"] == 1  # six urls, ONE distinct payload
 
-    # crawl 2: same pages re-crawled a day later -> dedup'd archive
-    crawl2 = crawl1.select(
-        "url", (F.col("warc_ts") + F.expr("INTERVAL 1 DAY")).alias("warc_ts"), "html"
-    )  # WARC carries no lang column — reattach after rehydration
-    arch = str(tmp_path / "warcs")
-    write_warc(crawl2, arch, num_files=2, dedup=True)
-    pages = warc_pages(spark, f"{arch}/part-*")
-    revs = warc_revisits(spark, f"{arch}/part-*")
-    assert pages.count() == 1 and revs.count() == 5  # storage dedup held
-    full = resolve_revisits(pages, revs).withColumn("lang", F.lit("en"))
-    assert full.count() == 6
-
-    # the rehydrated crawl is a full cache hit: zero engine work
-    _, m2 = crawl_delta(spark, full, cache)
+    # crawl 2: same pages re-crawled a day later, bytes unchanged
+    crawl2 = crawl1.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+    _, m2 = crawl_delta(spark, crawl2, cache)
     assert m2["fresh_docs"] == 0 and m2["urls"] == 6
 
 
-def test_cdx_digests_feed_recrawl_scheduler(spark, tmp_path):
+def test_cdx_digests_feed_recrawl_scheduler(spark):
     """CDX tier -> recrawl composition: stacked crawl indexes carry
     (urlkey, ts, digest) for free; change_rate estimates straight off
     them with no WARC byte touched."""
     from datetime import datetime, timedelta
 
     from ocr_compare_spark.operators.recrawl import recrawl_priority
-    from ocr_compare_spark.sources.cdx import ENTRIES_SCHEMA, cdx_entries, write_cdx_index
 
     t0 = datetime(2025, 1, 1)
     rows = []
@@ -168,15 +151,8 @@ def test_cdx_digests_feed_recrawl_scheduler(spark, tmp_path):
         for i in range(4):
             # url i changes on crawl c iff i > c
             v = min(c, i)
-            rows.append((
-                f"com,h{i})/p", t0 + timedelta(days=c),
-                f"https://h{i}.com/p", "text/html", 200,
-                f"d{i}-{v}", 100, 0, f"crawl{c}.warc.gz", None,
-            ))
-    idx_dir = str(tmp_path / "cdx")
-    write_cdx_index(spark.createDataFrame(rows, ENTRIES_SCHEMA), idx_dir, num_shards=2)
-
-    ent = cdx_entries(spark, f"{idx_dir}/part-*")
+            rows.append((f"com,h{i})/p", t0 + timedelta(days=c), f"https://h{i}.com/p", f"d{i}-{v}"))
+    ent = spark.createDataFrame(rows, "urlkey string, ts timestamp, url string, digest string")
     pr = recrawl_priority(
         ent, t0 + timedelta(days=10), url_col="url", ts_col="ts", digest_col="digest"
     )
@@ -194,22 +170,13 @@ def test_cdx_digests_feed_recrawl_scheduler(spark, tmp_path):
 
 
 def test_crawl_delta_feeds_incremental_index(spark, sf_dir, tmp_path):
-    """Composition proof (the index leg of the incremental story):
-    recrawl batch -> crawl_delta (content-hash cached extraction;
-    unchanged payloads never re-run the engines) -> merge_index
-    (compaction upsert; only the batch re-tokenizes) == an index
-    built from scratch on the post-crawl corpus, row for row, and
-    BM25 over the merged index == BM25 over that corpus."""
-    from ocr_compare_spark.operators import index as index_ops
-
+    """Recrawl batch -> crawl_delta (content-hash cached extraction):
+    unchanged payloads never re-run the engines, and exactly the
+    changed pages serve the new text an index rebuild would read."""
     cache_dir = str(tmp_path / "cache")
     pages = synth.pages_from_documents(spark, sf_dir)
     r1, _ = crawl_delta(spark, pages, cache_dir)
-    dom1 = r1.filter(F.col("engine") == "dom").select(
-        F.col("url").alias("doc_id"), F.col("doc_text").alias("text")
-    ).localCheckpoint()
-    post1 = index_ops.postings(dom1, "doc_id", "text")
-    dl1 = index_ops.doc_lengths(dom1, "doc_id", "text")
+    assert r1.count() > 0
 
     # crawl 2 refetches the doc_id%7==3 subset; within it, %14==3
     # pages changed bytes, the rest are byte-identical (cache hits)
@@ -233,32 +200,13 @@ def test_crawl_delta_feeds_incremental_index(spark, sf_dir, tmp_path):
     assert n_changed > 0
     r2, m2 = crawl_delta(spark, crawl2, cache_dir)
     assert m2["fresh_docs"] == n_changed  # unchanged refetches: no engine work
-    dom2 = r2.filter(F.col("engine") == "dom").select(
-        F.col("url").alias("doc_id"), F.col("doc_text").alias("text")
-    ).localCheckpoint()
-
-    mpost, mdl = index_ops.merge_index(post1, dl1, dom2)
-
-    # from-scratch reference: batch urls serve crawl-2 text, the rest
-    # keep crawl-1 text
-    final = dom1.join(dom2.select("doc_id"), "doc_id", "left_anti").unionByName(dom2)
-    spost = index_ops.postings(final, "doc_id", "text")
-    sdl = index_ops.doc_lengths(final, "doc_id", "text")
-    key_p = lambda r: (r["term"], r["id"], r["tf"])
-    assert sorted(map(key_p, mpost.collect())) == sorted(map(key_p, spost.collect()))
-    key_d = lambda r: (r["id"], r["dl"])
-    assert sorted(map(key_d, mdl.collect())) == sorted(map(key_d, sdl.collect()))
-
-    queries = spark.createDataFrame(
-        [(0, "fresh scoop paragraph"), (1, "the first page")],
-        ["query_id", "query_text"],
-    )
-    got = index_ops.bm25_topk_indexed(mpost, mdl, queries, k=5)
-    want = index_ops.bm25_topk(final, queries, id_col="doc_id", text_col="text", k=5)
-    key_r = lambda r: (r["query_id"], r["rank"], r["id"], r["score6"])
-    got_rows = sorted(map(key_r, got.collect()))
-    assert got_rows == sorted(map(key_r, want.collect()))
-    # the planted paragraph is findable and only in changed docs
-    hits = {r[2] for r in got_rows if r[0] == 0 and r[3] > 0}
+    # batch urls serve crawl-2 text: the planted paragraph shows up
+    # in exactly the changed pages
+    scoop = {
+        r.url
+        for r in r2.filter(
+            (F.col("engine") == "dom") & F.col("doc_text").contains("fresh scoop paragraph")
+        ).collect()
+    }
     changed_urls = {r.url for r in crawl2.filter(changed).select("url").collect()}
-    assert hits and hits <= changed_urls
+    assert scoop == changed_urls

@@ -100,90 +100,6 @@ def test_postings_and_doc_lengths(spark):
     assert dl[4] == 0 and dl[0] == 8
 
 
-def _index(spark, docs):
-    d = spark.createDataFrame(docs, ["doc_id", "text"])
-    return (
-        index_ops.postings(d, "doc_id", "text"),
-        index_ops.doc_lengths(d, "doc_id", "text"),
-    )
-
-
-def _run_indexed(spark, post, dl, queries, k, **kw):
-    q = spark.createDataFrame(queries, ["query_id", "query_text"])
-    got = index_ops.bm25_topk_indexed(post, dl, q, k=k, **kw)
-    return sorted((r["query_id"], r["rank"], r["id"], r["score6"]) for r in got.collect())
-
-
-def test_bm25_indexed_equals_tokenized(spark):
-    """Scoring a STANDING index == tokenize-on-the-fly, bit-for-bit
-    (score6 and ranks), with and without the stats hints."""
-    post, dl = _index(spark, DOCS)
-    want = _mirror(DOCS, QUERIES, 3)
-    assert _run_indexed(spark, post, dl, QUERIES, 3) == want
-    n = len(DOCS)
-    sum_dl = sum(len(re.findall("[a-z0-9]+", t.lower())) for _, t in DOCS)
-    assert _run_indexed(spark, post, dl, QUERIES, 3, n_docs=n, sum_dl=sum_dl) == want
-
-
-def test_merge_index_equals_rebuild_and_tombstone_path(spark):
-    """Incremental index maintenance closes the crawl loop's last
-    leg: crawl 2 re-extracts doc 0 (content changed), adds doc 6,
-    deletes doc 5. merge_index (the compaction) must equal an index
-    built from scratch on the post-crawl corpus, row for row; the
-    between-compactions path (old index ∪ delta segment +
-    exclude_ids tombstones) must produce identical BM25 results."""
-    crawl2_delta = [(0, "the mat is gone now"), (6, "brand new dog document")]
-    deleted = [5]
-    final_corpus = [
-        (i, t) for i, t in DOCS if i not in deleted and i != 0
-    ] + crawl2_delta
-
-    post1, dl1 = _index(spark, DOCS)
-    delta_df = spark.createDataFrame(crawl2_delta, ["doc_id", "text"])
-    dead_df = spark.createDataFrame([(i,) for i in deleted], ["id"])
-
-    mpost, mdl = index_ops.merge_index(
-        post1, dl1, delta_df, deleted_ids=dead_df
-    )
-    spost, sdl = _index(spark, final_corpus)
-    key_p = lambda r: (r["term"], r["id"], r["tf"])
-    assert sorted(map(key_p, mpost.collect())) == sorted(map(key_p, spost.collect()))
-    key_d = lambda r: (r["id"], r["dl"])
-    assert sorted(map(key_d, mdl.collect())) == sorted(map(key_d, sdl.collect()))
-
-    queries = [(10, "cat dog"), (12, "flux"), (20, "brand mat")]
-    want = _mirror(final_corpus, queries, 4)
-    assert _run_indexed(spark, mpost, mdl, queries, 4) == want
-
-    # Lazy (between-compactions) path: tombstones exclude EVERY row
-    # of an id, old or fresh, so a replaced doc cannot ride the lazy
-    # union — the supported pattern is: union only NEW ids' segments,
-    # tombstone deletions + replacements, serve replaced docs stale
-    # until the next compaction (LSM tombstones without generation
-    # markers behave exactly like this).
-    new_only = [(6, "brand new dog document")]
-    npost, ndl = _index(spark, new_only)
-    lazy_post = post1.unionByName(npost)
-    lazy_dl = dl1.unionByName(ndl)
-    stale_corpus = [(i, t) for i, t in DOCS if i not in (0, 5)] + new_only
-    tomb = spark.createDataFrame([(0,), (5,)], ["id"])
-    want_stale = _mirror(stale_corpus, queries, 4)
-    assert _run_indexed(spark, lazy_post, lazy_dl, queries, 4, exclude_ids=tomb) == want_stale
-
-
-def test_bm25_indexed_stats_follow_tombstones(spark):
-    """idf/avgdl must describe the LIVE corpus: excluding ids changes
-    n_docs/avgdl, so scores equal a from-scratch index on the
-    surviving docs."""
-    post, dl = _index(spark, DOCS)
-    tomb = spark.createDataFrame([(3,), (4,)], ["id"])
-    survivors = [(i, t) for i, t in DOCS if i not in (3, 4)]
-    queries = [(10, "cat dog the")]
-    assert _run_indexed(spark, post, dl, queries, 5, exclude_ids=tomb) == _mirror(
-        survivors, queries, 5
-    )
-
-
 def test_bm25_gemm_path_matches_mirror(spark):
     """r6: num_partitions routes scoring through the broadcast-GEMM
     block path (_gemm_scored_topk) — same rows as the mirror and the

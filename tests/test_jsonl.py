@@ -1,5 +1,5 @@
 """Dolma JSONL interchange (sources/jsonl.py): round-trips, gzip
-shard layout, attribute joins, metadata extraction."""
+shard layout, metadata extraction."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import glob
 import gzip
 import json
 
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 from ocr_compare_spark.sources import jsonl
 from tests.mirrors import py_document_record
@@ -57,35 +57,6 @@ def test_shard_layout_and_gzip_lines(spark, sf_dir, tmp_path):
             rec = json.loads(line)
             assert set(rec) <= {"id", "text", "source", "metadata"}
             assert "id" in rec
-
-
-def test_attributes_roundtrip_and_join(spark, sf_dir, tmp_path):
-    d = _docs(spark, sf_dir)
-    quality = d.select(
-        F.col("doc_id").cast("string").alias("id"),
-        (F.length("text") % 7).cast("long").alias("q"),
-        (F.col("doc_id") % 2 == 0).alias("dup"),
-    )
-    apath = str(tmp_path / "attrs")
-    jsonl.write_attributes(quality, apath, ["q", "dup"])
-    schema = T.StructType(
-        [T.StructField("q", T.LongType()), T.StructField("dup", T.BooleanType())]
-    )
-    back = jsonl.read_attributes(spark, apath, schema)
-    want = {r.id: (r.q, r.dup) for r in quality.collect()}
-    got = {r.id: (r.q, r.dup) for r in back.collect()}
-    assert got == want
-
-    dpath = str(tmp_path / "docs")
-    jsonl.write_documents(d, dpath, id_col="doc_id")
-    docs = jsonl.read_documents(spark, dpath)
-    joined = jsonl.join_attributes(docs, back)
-    assert joined.count() == d.count()
-    assert joined.filter(F.col("q").isNull()).count() == 0
-    # partial attribute sets keep nulls (left join contract)
-    partial = back.filter(F.col("dup"))
-    j2 = jsonl.join_attributes(docs, partial.select("id", F.col("q").alias("q2")))
-    assert j2.filter(F.col("q2").isNull()).count() == docs.count() - partial.count()
 
 
 def test_py_record_mirror():

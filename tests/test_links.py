@@ -1,7 +1,8 @@
-"""Link-graph / anchor-text extraction (operators/links.py)."""
+"""Link-graph extraction (operators/links.py)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators.links import extract_links
@@ -36,20 +37,20 @@ def _links(spark):
 
 def test_extract_links_resolution_and_canonicalization(spark):
     rows = _links(spark).collect()
-    got = {(r.src, r.dst, r.anchor_text) for r in rows}
+    got = {(r.src, r.dst) for r in rows}
     src1 = "http://a.example.com/page1"  # canonicalized, tracking param gone
-    assert (src1, "http://other.com/target?a=1&b=2", "first link") in got
-    assert (src1, "http://a.example.com/local/path", "Local") in got
-    assert (src1, "http://cdn.example.org/x", "proto-relative") in got
+    assert (src1, "http://other.com/target?a=1&b=2") in got
+    assert (src1, "http://a.example.com/local/path") in got
+    assert (src1, "http://cdn.example.org/x") in got
     # mailto / fragment-only edges dropped
-    assert all("mailto" not in d for _, d, _ in got)
-    assert all(not d.endswith("#top") for _, d, _ in got)
+    assert all("mailto" not in d for _, d in got)
+    assert all(not d.endswith("#top") for _, d in got)
     # bare-relative hrefs now resolve against the base path (RFC 3986)
-    assert (src1, "http://a.example.com/relative/path", "rel") in got
-    # multi-line anchor + tag-stripped, whitespace-normalized text
-    assert ("https://b.example.com/p2", "http://other.com/target?a=1&b=2", "spanning lines") in got
+    assert (src1, "http://a.example.com/relative/path") in got
+    # multi-line anchor
+    assert ("https://b.example.com/p2", "http://other.com/target?a=1&b=2") in got
     # page without anchors contributes nothing
-    assert all(s != "http://c.example.com/empty" for s, _, _ in got)
+    assert all(s != "http://c.example.com/empty" for s, _ in got)
 
 
 def test_extract_links_rfc3986_resolution_matrix(spark):
@@ -79,11 +80,16 @@ def test_extract_links_rfc3986_resolution_matrix(spark):
         ".": "http://h.example.com/b/c/",
         "./": "http://h.example.com/b/c/",
     }
-    html = "".join(f'<a href="{h}">t{i}</a>' for i, (h, _) in enumerate(cases.items()))
-    df = spark.createDataFrame([(base, html.encode())], ["url", "html"])
-    got = {r.anchor_text: r.dst for r in extract_links(df).collect()}
-    for i, (href, want) in enumerate(cases.items()):
-        assert got[f"t{i}"] == want, f"{href!r}: got {got.get(f't{i}')!r}, want {want!r}"
+    # one source page per case, told apart by a query parameter the
+    # resolution never reads (a reference replaces the base query);
+    # the urls are already canonical, so src comes back unchanged
+    srcs = [f"http://h.example.com/b/c/d;p?n={i}&q=1" for i in range(len(cases))]
+    df = spark.createDataFrame(
+        [(s, f'<a href="{h}">t</a>'.encode()) for s, h in zip(srcs, cases)], ["url", "html"]
+    )
+    got = {r.src: r.dst for r in extract_links(df).collect()}
+    for s, (href, want) in zip(srcs, cases.items()):
+        assert got.get(s) == want, f"{href!r}: got {got.get(s)!r}, want {want!r}"
     # dropped forms: other scheme, fragment-only, empty
     drop_html = b'<a href="mailto:a@b.c">m</a><a href="#x">f</a><a href="">e</a>'
     df2 = spark.createDataFrame([(base, drop_html)], ["url", "html"])
@@ -92,13 +98,15 @@ def test_extract_links_rfc3986_resolution_matrix(spark):
 
 def test_extract_links_graph_only_fast_path(spark):
     df = spark.createDataFrame(PAGES, ["url", "html"])
-    full = {(r.src, r.dst) for r in extract_links(df).collect()}
-    fast = extract_links(df, with_anchor_text=False)
-    assert fast.columns == ["src", "dst"]
-    # same EDGE MULTISET as the text-carrying path (multi-edges kept)
-    full_rows = sorted((r.src, r.dst) for r in extract_links(df).collect())
-    fast_rows = sorted((r.src, r.dst) for r in fast.collect())
-    assert fast_rows == full_rows and set(fast_rows) == full
+    edges = extract_links(df)
+    assert edges.columns == ["src", "dst"]
+    rows = sorted((r.src, r.dst) for r in edges.collect())
+    # the explicit graph-only flag callers pass is the default
+    assert sorted((r.src, r.dst) for r in extract_links(df, with_anchor_text=False).collect()) == rows
+    # multi-edges kept: page 1 links other.com/target twice
+    assert rows.count(("http://a.example.com/page1", "http://other.com/target?a=1&b=2")) == 2
+    with pytest.raises(ValueError):
+        extract_links(df, with_anchor_text=True)
 
 
 def test_extract_links_fastpath_equals_full_canonicalization(spark):

@@ -140,7 +140,8 @@ def test_assemble_roundtrip_nested_and_tables(spark, nested_pages):
 def test_tree_roundtrip_nested_and_tables(spark, nested_pages):
     """The path-indexed adjacency tree must rebuild the same bytes
     and report the recursion depth."""
-    from ocr_compare_spark.operators.tree import to_tree, tree_stats, tree_to_text
+    from ocr_compare_spark.operators.tree import to_tree, tree_stats
+    from tests.mirrors import tree_to_text
 
     res = run_engines_fused(nested_pages, engines=("dom",))
     tree = to_tree(spans_table(res))
@@ -344,7 +345,8 @@ def test_cell_blocks_synth_bucket_end_to_end(spark):
     import tempfile
 
     from ocr_compare_spark.operators.assemble import assemble_doc_text
-    from ocr_compare_spark.operators.tree import to_tree, tree_stats, tree_to_text
+    from ocr_compare_spark.operators.tree import to_tree, tree_stats
+    from tests.mirrors import tree_to_text
 
     text = " ".join(f"w{i}" for i in range(40))
     d = tempfile.mkdtemp(prefix="cellnest_docs_")
@@ -459,14 +461,9 @@ def test_tree_structs_carry_confidence_and_bbox(spark):
 
 
 def test_multi_page_span_blocks_representable(spark):
-    """Reference Block.page_span (ocr_schema.py:136, consumed by the
-    combine renumbering at ocr_executor.py:201-240): a block declared
-    to span pages carries page_span=(first, last) in the tree, and
-    combine_pages_spanned numbers pages CONTINUOUSLY while consuming
-    the span — a page whose block runs through page p+1 takes two
-    numbers, so the next physical page lands at p+2."""
+    """Reference Block.page_span (ocr_schema.py:136): a block declared
+    to span pages carries page_span=(first, last) in the tree."""
     from ocr_compare_spark.engines.base import Block, ParsedDoc
-    from ocr_compare_spark.operators.chunking import combine_pages_spanned
     from ocr_compare_spark.operators.extract import doc_to_result
     from ocr_compare_spark.operators.tree import to_tree
 
@@ -499,23 +496,6 @@ def test_multi_page_span_blocks_representable(spark):
         for p in doc["pages"]
     }
     assert spans_by_page == {1: [(1, 2)], 2: [(2, 2)]}
-    # combine: page 1 consumes two numbers -> physical page 2 becomes 3
-    combined = combine_pages_spanned(spans)
-    pages = {
-        r2.text: (r2.page_no, r2.page_span_last)
-        for r2 in combined.select("text", "page_no", "page_span_last").collect()
-    }
-    # the old end page (2) IS a physical page, so it remaps through
-    # the page map to its new number 3 — the reference's
-    # page_number_map.get(old_end, ...) behavior
-    assert pages["alpha"] == (1, 3)
-    assert pages["gamma"][0] == 3
-    # tree over the combined spans keeps the span
-    # combined spans carry the explicit page_span_last column; the
-    # idempotent with_span_last inside to_tree keeps it as-is
-    doc2 = to_tree(combined).select("document").first()[0]
-    got = {p["page_no"]: [(b["page_span"]["first"], b["page_span"]["last"]) for b in p["blocks"]] for p in doc2["pages"]}
-    assert got == {1: [(1, 3)], 3: [(3, 3)]}
 
 
 def test_block_type_from_minimal_depth_element(spark):

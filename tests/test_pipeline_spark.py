@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ocr_compare_spark import synth
 from ocr_compare_spark.operators.assemble import assemble_doc_text
-from ocr_compare_spark.operators.chunking import PAGE_LIMITS, explode_segments, renumber_pages
+from ocr_compare_spark.operators.chunking import explode_segments, renumber_pages
 from ocr_compare_spark.operators.extract import run_engine, run_engines_fused, spans_table
 from ocr_compare_spark.operators.winner import pick_winner
 from ocr_compare_spark.sources import cache as cache_mod
@@ -91,7 +91,7 @@ def test_chunking_renumber_roundtrip(spark, pages, sf_dir):
     (reference combine+renumber, ocr_executor.py:185-339)."""
     # sf0.001 texts are short (1-page PDFs) — synthesize long docs so
     # the limit actually bites. doc_id % 10 == PDF_MOD -> PDF payload.
-    limit = PAGE_LIMITS["pdf"]
+    limit = 2  # pdf pages per engine call, small so the split bites
     long_docs = spark.createDataFrame(
         [(i * 10 + synth.PDF_MOD, " ".join(f"w{i}_{j}" for j in range(32 * 3 * 5)), "en") for i in range(4)],
         "doc_id long, text string, lang string",
@@ -234,7 +234,8 @@ def test_layout_chunks_heading_prefix(spark):
 def test_tree_roundtrip_byte_identical(results):
     """The nested document struct must rebuild doc_text byte-exactly
     (tree fidelity, SURVEY §1.3(a))."""
-    from ocr_compare_spark.operators.tree import to_tree, tree_to_text
+    from ocr_compare_spark.operators.tree import to_tree
+    from tests.mirrors import tree_to_text
 
     r = results.filter(F.col("error").isNull())
     rebuilt = tree_to_text(to_tree(spans_table(r)))
@@ -245,21 +246,18 @@ def test_tree_roundtrip_byte_identical(results):
     assert joined.filter(F.col("doc_text") != F.col("fast")).count() == 0
 
 
-def test_cached_extract_flow(spark, pages, tmp_path):
+def _cached_extract_flow(spark, pages, local, cache_dir):
     """CachedOcrExecutor parity (reference cached_ocr_executor.py:
     58-112): run 2 computes nothing fresh (cache row count is
     unchanged), serves identical results; force_refresh recomputes
     despite hits (rows appended) and last-write-wins serving still
-    returns identical results."""
-    import glob as _glob
-
+    returns identical results. ``cache_dir`` names the local
+    directory ``local``, as a plain path or as a URI."""
     import duckdb as _dd
-
-    cache_dir = str(tmp_path / "result_cache")
 
     def cache_rows():
         return _dd.sql(
-            f"SELECT count(*) FROM read_parquet('{cache_dir}/*.parquet')"
+            f"SELECT count(*) FROM read_parquet('{local}/*.parquet')"
         ).fetchone()[0]
 
     def snap(df):
@@ -280,6 +278,18 @@ def test_cached_extract_flow(spark, pages, tmp_path):
     assert cache_rows() == 2 * n1
 
 
+def test_cached_extract_flow(spark, pages, tmp_path):
+    local = tmp_path / "result_cache"
+    _cached_extract_flow(spark, pages, local, str(local))
+
+
+def test_cached_extract_flow_on_uri(spark, pages, tmp_path):
+    """The same flow with the cache dir given as a file: URI (the form
+    cluster paths take): run 2 must hit the cache, not recompute."""
+    local = tmp_path / "result_cache"
+    _cached_extract_flow(spark, pages, local, local.as_uri())
+
+
 def test_table_tsv_raw_text(spark):
     """The TSV raw_text fallback (reference ocr_schema.py:324-334)
     matches the pure-Python rendering, including empty cells."""
@@ -293,51 +303,6 @@ def test_table_tsv_raw_text(spark):
     res = run_engine(_mini_pages(spark, [("t2", html)]), "dom")
     got = assemble_table_tsv(spans_table(res)).collect()[0].raw_text
     assert got == table_raw_text([["h1", "h2"], ["a b", ""]]) == "h1\th2\na b\t"
-
-
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """north_rule bucketing: two tables bucketed on the join key must
-    join WITHOUT a shuffle — the plan carries no Exchange under the
-    SortMergeJoin, while the same join on plain parquet exchanges
-    both sides. At 10^12 docs the missing Exchange IS the win: the
-    recurring url-keyed join (results x winners, cache lookups)
-    reads co-located buckets instead of reshuffling the corpus."""
-    from pyspark.sql import functions as F
-
-    from ocr_compare_spark.sources.table_io import write_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS buckdemo LOCATION '{tmp_path}/wh'")
-    try:
-        left = spark.range(0, 2000).select(
-            F.concat(F.lit("u"), F.col("id")).alias("url"), F.col("id").alias("a")
-        )
-        right = spark.range(0, 2000).select(
-            F.concat(F.lit("u"), F.col("id")).alias("url"), (F.col("id") * 2).alias("b")
-        )
-        write_bucketed(left, "buckdemo.left_t", ["url"], num_buckets=8, sort_cols=["url"])
-        write_bucketed(right, "buckdemo.right_t", ["url"], num_buckets=8, sort_cols=["url"])
-        lt, rt = spark.table("buckdemo.left_t"), spark.table("buckdemo.right_t")
-        # AQE keeps plans adaptive; disable broadcast so the join is
-        # a genuine SortMergeJoin and the bucket co-location shows
-        with_conf = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
-        old = {k: spark.conf.get(k) for k in with_conf}
-        for k, v in with_conf.items():
-            spark.conf.set(k, v)
-        try:
-            bucketed_plan = lt.join(rt, "url")._jdf.queryExecution().executedPlan().toString()
-            plain_plan = left.join(right, "url")._jdf.queryExecution().executedPlan().toString()
-        finally:
-            for k, v in old.items():
-                spark.conf.set(k, v)
-        assert "SortMergeJoin" in bucketed_plan
-        assert "Exchange" not in bucketed_plan  # co-located: no shuffle
-        assert "Exchange" in plain_plan  # the unbucketed twin shuffles
-        # and the join is still correct
-        assert lt.join(rt, "url").count() == 2000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS buckdemo.left_t")
-        spark.sql("DROP TABLE IF EXISTS buckdemo.right_t")
-        spark.sql("DROP DATABASE IF EXISTS buckdemo")
 
 
 def test_curate_pipeline_end_to_end(spark, sf_dir, tmp_path):
@@ -869,13 +834,12 @@ def test_curate_robots_stage(spark, sf_dir, tmp_path):
     assert m["docs_after_quality"] + m["dropped_quality"] == 500 - 175
 
 
-def test_curate_sig_store_cross_crawl(spark, sf_dir, tmp_path):
+def _curate_sig_store_cross_crawl(spark, sf_dir, store):
     """--sig-store: run 1 seeds the signature store from its kept
     docs; run 2 over the SAME corpus finds every doc already in the
     store and drops them all; the store accumulates only kept docs."""
     from ocr_compare_spark.plans.curate import curate
 
-    store = str(tmp_path / "sigstore")
     m1 = curate(spark, sf_dir, None, min_quality=0.0, min_tokens=1,
                 jaccard_threshold=0.8, sig_store=store)
     assert m1["dropped_cross_crawl"] == 0 and m1["docs_out"] > 0
@@ -891,6 +855,15 @@ def test_curate_sig_store_cross_crawl(spark, sf_dir, tmp_path):
     assert m2["dropped_cross_crawl"] == m1["docs_out"]
     # nothing kept -> nothing appended
     assert spark.read.parquet(store).count() == m1["docs_out"]
+
+
+def test_curate_sig_store_cross_crawl(spark, sf_dir, tmp_path):
+    _curate_sig_store_cross_crawl(spark, sf_dir, str(tmp_path / "sigstore"))
+
+
+def test_curate_sig_store_cross_crawl_on_uri(spark, sf_dir, tmp_path):
+    """The same cross-crawl drop with the store given as a file: URI."""
+    _curate_sig_store_cross_crawl(spark, sf_dir, (tmp_path / "sigstore").as_uri())
 
 
 # ------------------------------------------------- token windows

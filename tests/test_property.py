@@ -204,7 +204,7 @@ _MARKUP_FRAG = st.sampled_from([
 def test_fast_scanner_matches_stdlib_fuzz(frags):
     """Composed markup fragments (valid + junk): the fast scanner's
     blocks equal the stdlib html.parser reference path's."""
-    from ocr_compare_spark.engines.html_tree import segment_html_stdlib
+    from tests.mirrors import segment_html_stdlib
 
     data = "".join(frags).encode()
     assert segment_html(data) == segment_html_stdlib(data)

@@ -110,8 +110,9 @@ def test_enhance_binarizes_text_stripes():
     image whose ink fraction sits near the planted stripe duty cycle
     (2 rows of every 8 inside the inner polygon)."""
     img = decode_image(synth.scan_payload_bytes(7))
-    aligned = scanner.align_document(img)
-    assert aligned is not None
+    pts = scanner.find_document_quad(scanner.to_gray(img))
+    assert pts is not None
+    aligned = scanner.four_point_transform(img, pts)
     enh = scanner.enhance(aligned, upscale_factor=1.0)
     assert set(np.unique(enh)) <= {0, 255}
     ink = (enh == 0).mean()
@@ -120,17 +121,22 @@ def test_enhance_binarizes_text_stripes():
 
 def test_enhance_upscale_doubles_dims():
     img = decode_image(synth.scan_payload_bytes(2))
-    aligned = scanner.align_document(img)
+    aligned = scanner.four_point_transform(img, scanner.find_document_quad(scanner.to_gray(img)))
     e1 = scanner.enhance(aligned, upscale_factor=1.0)
     e2 = scanner.enhance(aligned, upscale_factor=2.0)
     assert e2.shape == (e1.shape[0] * 2, e1.shape[1] * 2)
 
 
 def test_scan_document_full_pipeline_and_none_path():
+    """quad -> warp -> enhance, the per-asset pipeline scan_documents
+    runs; a flat image has no quad, so the pipeline stops there."""
     img = decode_image(synth.scan_payload_bytes(5))
-    out = scanner.scan_document(img)
-    assert out is not None and set(np.unique(out)) <= {0, 255}
-    assert scanner.scan_document(np.full((30, 30, 3), 90, dtype=np.uint8)) is None
+    pts = scanner.find_document_quad(scanner.to_gray(img))
+    assert pts is not None
+    out = scanner.enhance(scanner.four_point_transform(img, pts))
+    assert set(np.unique(out)) <= {0, 255}
+    flat = np.full((30, 30, 3), 90, dtype=np.uint8)
+    assert scanner.find_document_quad(scanner.to_gray(flat)) is None
 
 
 def test_color_bmp_scan_matches_gray_geometry():

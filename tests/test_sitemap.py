@@ -68,71 +68,3 @@ def test_roundtrip_fuzz(spark, urls):
     )
     got = {(r.i, r.loc) for r in sitemap.parse_sitemap(df, keep_cols=("i",)).collect()}
     assert got == {(i, u) for i, u in enumerate(urls)}
-
-
-ROBOTS_FIXTURES = [
-    # comments, casing, surrounding whitespace, CRLF, x- prefix,
-    # empty value, value-with-trailing-comment
-    "User-agent: *\nSitemap: http://a.com/s1.xml\nDisallow: /x\n",
-    "  SITEMAP :  http://a.com/s2.xml  # primary\r\nx-sitemap: http://a.com/no.xml\r\n",
-    "sitemap:\nsitemap: http://a.com/s3.xml\n# sitemap: http://a.com/commented.xml\n",
-    "User-agent: bot\nAllow: /\n",
-    "",
-]
-
-
-def test_sitemaps_from_robots_pins_python_parser(spark):
-    """The JVM line regexp == py_parse_robots' sitemaps list on every
-    fixture (comment strip, key casing/whitespace, whole-key match,
-    empty values dropped)."""
-    from ocr_compare_spark.operators.robots import py_parse_robots
-    from ocr_compare_spark.operators.sitemap import sitemaps_from_robots
-
-    rows = [(f"h{i}.com", txt) for i, txt in enumerate(ROBOTS_FIXTURES)]
-    df = spark.createDataFrame(rows, ["host", "robots_txt"])
-    got = sorted(
-        (r["host"], r["sitemap_url"])
-        for r in sitemaps_from_robots(df).collect()
-    )
-    exp = sorted(
-        (h, sm) for h, txt in rows for sm in py_parse_robots(txt)[1]
-    )
-    assert got == exp
-    assert len(exp) == 3  # s1, s2, s3 — and nothing else
-
-
-def test_sitemap_seeds_resolves_index_hop(spark):
-    """robots -> sitemap fetch-join -> urlset seeds, with one
-    sitemapindex indirection resolved by the hop join."""
-    from ocr_compare_spark.operators.sitemap import sitemap_seeds
-
-    robots = spark.createDataFrame(
-        [("a.com", "Sitemap: http://a.com/index.xml\n"),
-         ("b.com", "Sitemap: http://b.com/urls.xml\n")],
-        ["host", "robots_txt"],
-    )
-    index_xml = (
-        "<sitemapindex>"
-        "<sitemap><loc>http://a.com/part1.xml</loc></sitemap>"
-        "<sitemap><loc>http://a.com/part2.xml</loc></sitemap>"
-        "</sitemapindex>"
-    )
-    def urlset(*urls):
-        return "<urlset>" + "".join(
-            f"<url><loc>{u}</loc></url>" for u in urls
-        ) + "</urlset>"
-
-    bodies = spark.createDataFrame(
-        [("http://a.com/index.xml", index_xml),
-         ("http://a.com/part1.xml", urlset("http://a.com/1", "http://a.com/2")),
-         ("http://a.com/part2.xml", urlset("http://a.com/3")),
-         ("http://b.com/urls.xml", urlset("http://b.com/1", "http://a.com/1"))],
-        ["url", "body"],
-    )
-    got = {r["loc"] for r in sitemap_seeds(robots, bodies).collect()}
-    assert got == {
-        "http://a.com/1", "http://a.com/2", "http://a.com/3", "http://b.com/1",
-    }
-    # with index_hops=0 the indirection is NOT followed
-    got0 = {r["loc"] for r in sitemap_seeds(robots, bodies, index_hops=0).collect()}
-    assert got0 == {"http://b.com/1", "http://a.com/1"}

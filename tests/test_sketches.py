@@ -2,11 +2,10 @@
 and Count-Min frequency estimation.
 
 Pins: hash/register mirrors (Spark == python), estimator == the
-pure-python mirror bit-for-bit (shared fold order), merge ==
-build-on-union EXACTLY (registers max / counters add), accuracy
-within the published error bounds on a planted corpus, CMS one-sided
-error, data-path == relational-path parity, and partition invariance
-(a sketch must not depend on layout)."""
+pure-python mirror bit-for-bit (shared fold order), HLL merge ==
+build-on-union EXACTLY (registers max), accuracy within the published
+error bounds on a planted corpus, CMS one-sided error, and partition
+invariance (a sketch must not depend on layout)."""
 
 from __future__ import annotations
 
@@ -343,33 +342,6 @@ def test_save_sketch_fold_back_to_same_path(spark, tmp_path):
     assert got == want
 
 
-def test_hll_stream_equals_batch_build(spark, tmp_path):
-    # streaming maintenance: registers folded per micro-batch via
-    # foreachBatch == one batch build over everything that streamed
-    # through; a second run with NEW files folds incrementally
-    from ocr_compare_spark.streaming.jobs import hll_stream
-
-    inp = str(tmp_path / "keys")
-    sketch = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    c1 = _keys(spark, 300, "s").select("id", "key")
-    c1.write.mode("append").parquet(inp)
-    q = hll_stream(spark, inp, sketch, ckpt, "key", "id long, key string", p=P)
-    assert q.awaitTermination(120), "stream did not finish in time"
-    est1 = sk.hll_estimate(sk.load_sketch(spark, sketch), (), P).first().est6
-    want1 = sk.hll_count_distinct(c1, "key", (), P).first().est6
-    assert est1 == want1
-    # new files arrive: only they are processed; the fold still
-    # converges to the batch build over the union
-    c2 = _keys(spark, 120, "t").select("id", "key")
-    c2.write.mode("append").parquet(inp)
-    q = hll_stream(spark, inp, sketch, ckpt, "key", "id long, key string", p=P)
-    assert q.awaitTermination(120), "stream did not finish in time"
-    est2 = sk.hll_estimate(sk.load_sketch(spark, sketch), (), P).first().est6
-    want2 = sk.hll_count_distinct(c1.unionByName(c2), "key", (), P).first().est6
-    assert est2 == want2
-
-
 def test_cms_heavy_hitters_confirmed_exact(spark):
     # two-pass shape: undersized sketch (4x16 over 20 keys forces
     # collision overestimates) -> candidates -> exact confirm pass
@@ -474,54 +446,3 @@ def test_dd_persistence_fold(spark, tmp_path):
     assert sorted(map(tuple, sk.load_sketch(spark, path).collect())) == sorted(
         map(tuple, expect.collect())
     )
-
-
-def test_additive_fold_replay_guard(spark, tmp_path):
-    # counter adds are NOT replay-idempotent — the epoch guard must
-    # make them so: refolding the same batch id is a no-op, the next
-    # id folds, and the epoch commits atomically with the sketch
-    from ocr_compare_spark.streaming.jobs import make_additive_sketch_fold
-
-    p = str(tmp_path / "cms_sketch")
-    fold = make_additive_sketch_fold(
-        p, lambda df: sk.cms_build(df, "key", D, 64), sk.cms_merge
-    )
-    batch = _keys(spark, 50, "r")
-    fold(batch, 0)
-    once = sorted(map(tuple, sk.load_sketch(spark, p).collect()))
-    assert sk.load_sketch_epoch(p) == 0
-    fold(batch, 0)  # replay: must not inflate
-    assert sorted(map(tuple, sk.load_sketch(spark, p).collect())) == once
-    fold(batch, 1)  # genuinely new batch: folds
-    twice = {(r.row, r.pos): r.cnt for r in sk.load_sketch(spark, p).collect()}
-    assert twice == {(row, pos): 2 * cnt for row, pos, cnt in once}
-    assert sk.load_sketch_epoch(p) == 1
-    # pre-epoch sketches read back as None (legacy compatibility)
-    legacy = str(tmp_path / "legacy")
-    sk.save_sketch(sk.cms_build(batch, "key", D, 64), legacy)
-    assert sk.load_sketch_epoch(legacy) is None
-
-
-def test_cms_stream_equals_batch_build(spark, tmp_path):
-    from ocr_compare_spark.streaming.jobs import cms_stream
-
-    inp = str(tmp_path / "toks")
-    sketch = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    c1 = _keys(spark, 200, "u").select("id", "key")
-    c1.write.mode("append").parquet(inp)
-    q = cms_stream(spark, inp, sketch, ckpt, "key", "id long, key string",
-                   depth=D, width=64)
-    assert q.awaitTermination(120), "stream did not finish in time"
-    want1 = sorted(map(tuple, sk.cms_build(c1, "key", D, 64).collect()))
-    assert sorted(map(tuple, sk.load_sketch(spark, sketch)
-                      .select("row", "pos", "cnt").collect())) == want1
-    # incremental second run over NEW files only
-    c2 = _keys(spark, 80, "v").select("id", "key")
-    c2.write.mode("append").parquet(inp)
-    q = cms_stream(spark, inp, sketch, ckpt, "key", "id long, key string",
-                   depth=D, width=64)
-    assert q.awaitTermination(120), "stream did not finish in time"
-    want2 = sorted(map(tuple, sk.cms_build(c1.unionByName(c2), "key", D, 64).collect()))
-    assert sorted(map(tuple, sk.load_sketch(spark, sketch)
-                      .select("row", "pos", "cnt").collect())) == want2

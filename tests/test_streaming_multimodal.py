@@ -301,42 +301,3 @@ def test_text_magic_collision_guard():
     assert not is_image_magic(b"P5x is a token")
     assert sniff_mime(b"BMW is a carmaker") == "text/html"
     assert sniff_mime(b"P5x y z") == "text/html"
-
-
-def test_dhash_perceptual_near_dups(spark):
-    """dHash over the real BMP/PNM decoders: a lightly-perturbed copy
-    of a gradient image lands within the Hamming ball while an
-    unrelated pattern stays out; fingerprint_near_dups (the shared
-    MJS block join) finds exactly the planted pair; compressed
-    codecs become error rows."""
-    import numpy as np
-
-    from ocr_compare_spark.operators import multimodal as mm
-    from ocr_compare_spark.operators.dedup import fingerprint_near_dups
-
-    rng_rows = np.arange(64, dtype=np.uint8)
-    base = np.stack([np.tile(rng_rows * 4, (48, 1))] * 3, axis=2)  # h48 w64 gradient
-    near = base.copy()
-    near[10:13, 20:23, :] = 255  # small blemish
-    far = base[:, ::-1, :].copy()  # mirrored gradient: different diffs
-    rows = [
-        ("img:base", bytearray(mm.encode_bmp(base))),
-        ("img:near", bytearray(mm.encode_pnm(near))),  # other FORMAT, same content
-        ("img:far", bytearray(mm.encode_bmp(far))),
-        ("img:jpeg", bytearray(b"\xff\xd8\xff\xe0 junk")),
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    fp = mm.dhash_images(df)
-    got = {r.id: (r.sim_hi, r.sim_lo, r.error) for r in fp.collect()}
-    assert got["img:jpeg"][2] is not None and got["img:jpeg"][0] is None
-    # python-mirror parity on the decodable rows
-    for key, arr in (("img:base", base), ("img:near", near), ("img:far", far)):
-        assert got[key][:2] == mm.py_dhash(arr), key
-    # planted geometry: near within distance 3, far beyond it
-    ok = fp.filter(F.col("error").isNull()).select("id", "sim_hi", "sim_lo")
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in fingerprint_near_dups(ok, max_distance=3).collect()
-    }
-    assert set(pairs) == {("img:base", "img:near")}
-    assert pairs[("img:base", "img:near")] <= 3

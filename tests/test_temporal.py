@@ -174,38 +174,6 @@ def test_rollup_validates_resolutions(spark):
         rollup_timeseries(df, "ts", [], ["val"], resolutions=(60, 90))
 
 
-def test_rollup_stream_equals_batch(spark, tmp_path):
-    """Streaming continuous aggregate == batch rollup over the same
-    events; a second NEW-files-only run folds increments correctly."""
-    from ocr_compare_spark.operators import sketches
-    from ocr_compare_spark.operators.temporal import rollup_from_finest, rollup_timeseries
-    from ocr_compare_spark.streaming.jobs import rollup_stream
-
-    left, _ = _fixture()
-    df = _mk_events(spark, left).withColumn(
-        "cents", F.floor(F.col("val") * 100 + 0.5).cast("long")
-    )
-    inp, tbl, ckpt = str(tmp_path / "in"), str(tmp_path / "tbl"), str(tmp_path / "ck")
-    schema = "key string, ts timestamp, eid long, val double, cents long"
-    half1 = df.filter(F.col("eid") % 2 == 0)
-    half2 = df.filter(F.col("eid") % 2 == 1)
-    half1.write.mode("overwrite").parquet(inp)
-    rollup_stream(spark, inp, tbl, ckpt, schema, "ts", ["key"], ["cents"], 60).awaitTermination()
-    half2.write.mode("append").parquet(inp)
-    rollup_stream(spark, inp, tbl, ckpt, schema, "ts", ["key"], ["cents"], 60).awaitTermination()
-
-    finest = sketches.load_sketch(spark, tbl)
-    got = {
-        (r.res_s, r.bucket_start, r.key): (r.n, r.sum_cents)
-        for r in rollup_from_finest(finest, ["key"], ["cents"], (60, 300, 900)).collect()
-    }
-    want = {
-        (r.res_s, r.bucket_start, r.key): (r.n, r.sum_cents)
-        for r in rollup_timeseries(df, "ts", ["key"], ["cents"], (60, 300, 900)).collect()
-    }
-    assert got == want
-
-
 def test_asof_null_right_ts_never_matches(spark):
     """Regression (review finding): a NULL-ts right row sorts FIRST
     ascending and would carry-forward into every left row with no
@@ -258,67 +226,6 @@ def test_interval_overlap_matches_naive(spark):
                     (min(le, re_) - max(ls, rs)).total_seconds() * 1e6
                 )
     assert got == want and want  # non-trivial
-
-
-def test_asof_log_enrich_stream_equals_batch(spark, tmp_path):
-    """Stateful stream-stream as-of over an ordered log == batch
-    asof_join, across THREE micro-batches with state carried between
-    them (an R in batch 1 must enrich an L in batch 3)."""
-    from ocr_compare_spark.streaming.jobs import asof_log_enrich_stream
-
-    rows = []  # one tagged log, per-key event-time ordered
-    for i in range(90):
-        k = f"k{i % 3}"
-        t = i * 10.0
-        if i % 4 == 0:
-            rows.append((k, _ts(t), "R", None, f"rid{i}", f"v{i}"))
-        else:
-            rows.append((k, _ts(t), "L", f"e{i}", None, None))
-    cols = ["key", "ts", "side", "event_id", "r_id", "r_value"]
-    inp = str(tmp_path / "in")
-    # three time-ordered files -> three micro-batches
-    for j, chunk in enumerate((rows[:30], rows[30:60], rows[60:])):
-        spark.createDataFrame(chunk, cols).coalesce(1).write.mode(
-            "append" if j else "overwrite"
-        ).parquet(inp)
-    stream = (
-        spark.readStream.schema(
-            "key string, ts timestamp, side string, event_id string, "
-            "r_id string, r_value string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
-    )
-    out_path, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (
-        asof_log_enrich_stream(stream, on="key")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.event_id: (r.r_id, r.r_value)
-        for r in spark.read.parquet(out_path).collect()
-    }
-
-    df = spark.createDataFrame(rows, cols)
-    L = df.filter(F.col("side") == "L").select("key", "ts", "event_id")
-    R = df.filter(F.col("side") == "R").select("key", "ts", "r_id", "r_value")
-    batch = {
-        r.event_id: (r.r_id, r.r_value)
-        for r in asof_join(L, R, on="key", payload=["r_id", "r_value"]).collect()
-    }
-    assert got == batch and len(got) == 67
-    # the first L rows on each key precede any R on some keys? if not,
-    # at least assert some null and some non-null matches exist
-    assert any(v[0] is None for v in got.values()) or all(
-        v[0] is not None for v in got.values()
-    )
-    assert sum(v[0] is not None for v in got.values()) > 50
 
 
 # ---------------------------------------------------------------- funnel
@@ -516,84 +423,6 @@ def test_transitions_matches_mirror(spark):
     assert got2 == exp
 
 
-def test_funnel_stream_equals_batch(spark, tmp_path):
-    """Streaming funnel over an ordered log == batch funnel, across
-    THREE micro-batches with the chain carried between them (a user
-    entering in batch 1 completes in batch 3); the latest upsert row
-    per key equals the batch row."""
-    from ocr_compare_spark.operators.temporal import funnel
-    from ocr_compare_spark.streaming.jobs import funnel_stream
-
-    rows = []
-
-    def ev(u, s, typ, eid):
-        rows.append((u, _ts(s), typ, eid))
-
-    # u1 completes across batches: A in b1, B in b2, C in b3
-    ev("u1", 10, "A", 1)
-    # u2 stalls at depth 1 (B arrives outside the 100s window in b3)
-    ev("u2", 20, "A", 2)
-    # u3 never enters (no A) — must emit nothing
-    ev("u3", 30, "B", 3)
-    b1 = rows[:]
-    rows = []
-    ev("u1", 60, "B", 4)
-    ev("u2", 115, "C", 5)  # wrong step for depth 1 — ignored
-    b2 = rows[:]
-    rows = []
-    ev("u1", 105, "C", 6)  # 95s after the anchor: inside the window
-    ev("u2", 200, "B", 7)  # 180s after anchor: outside window
-    b3 = rows[:]
-
-    cols = ["user_id", "ts", "event_type", "eid"]
-    inp = str(tmp_path / "in")
-    for j, chunk in enumerate((b1, b2, b3)):
-        spark.createDataFrame(chunk, cols).coalesce(1).write.mode(
-            "append" if j else "overwrite"
-        ).parquet(inp)
-    stream = (
-        spark.readStream.schema(
-            "user_id string, ts timestamp, event_type string, eid long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
-    )
-    out_path, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (
-        funnel_stream(stream, ["A", "B", "C"], window_us=100 * 1_000_000)
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.read.parquet(out_path).collect()
-    # upserts are monotone in depth: latest == max step_reached
-    latest = {}
-    for r in emitted:
-        if r.user_id not in latest or r.step_reached > latest[r.user_id].step_reached:
-            latest[r.user_id] = r
-
-    all_rows = spark.createDataFrame(b1 + b2 + b3, cols)
-    batch = {
-        r.user_id: r
-        for r in funnel(
-            all_rows, ["A", "B", "C"], window_us=100 * 1_000_000
-        ).collect()
-    }
-    assert set(latest) == set(batch) == {"u1", "u2"}
-    for u, b in batch.items():
-        s = latest[u]
-        assert (s.step_reached, s.ts_1, s.ts_2, s.ts_3) == (
-            b.step_reached, b.ts_1, b.ts_2, b.ts_3
-        ), u
-    assert batch["u1"].step_reached == 3 and batch["u2"].step_reached == 1
-    # u1 advanced in every batch -> three upsert rows
-    assert sum(1 for r in emitted if r.user_id == "u1") == 3
-
-
 def test_transitions_null_ts_dropped(spark):
     from ocr_compare_spark.operators.temporal import transitions
 
@@ -632,279 +461,3 @@ def test_retention_mixed_grids_and_null_ts(spark):
     epoch_s = int(EPOCH.replace(tzinfo=dt.timezone.utc).timestamp())
     co = epoch_s + 5 * 3600
     assert got == {(co, 0): 1, (co, 1): 1}
-
-
-def test_funnel_stream_chunked_group_and_null_ts(spark, tmp_path):
-    """A key's micro-batch rows split across SEVERAL Arrow record
-    batches must be sorted as ONE group (sorting chunks independently
-    loses an early anchor that arrives in a later chunk); NULL-ts
-    rows are skipped like batch funnel."""
-    from ocr_compare_spark.operators.temporal import funnel
-    from ocr_compare_spark.streaming.jobs import funnel_stream
-
-    # in-batch DISORDER: B and C precede A in arrival order, so with
-    # 2-row Arrow chunks the A anchor sits in a later chunk
-    rows = [
-        ("u1", _ts(60), "B", 1),
-        ("u1", _ts(70), "C", 2),
-        ("u1", None, "A", 3),  # NULL ts — must not anchor
-        ("u1", _ts(10), "A", 4),
-        ("u1", _ts(80), "B", 5),
-    ]
-    cols = ["user_id", "ts", "event_type", "eid"]
-    inp = str(tmp_path / "in")
-    spark.createDataFrame(rows, cols).coalesce(1).write.parquet(inp)
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        stream = (
-            spark.readStream.schema(
-                "user_id string, ts timestamp, event_type string, eid long"
-            ).parquet(inp)
-        )
-        out_path, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-        q = (
-            funnel_stream(stream, ["A", "B", "C"])
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    emitted = spark.read.parquet(out_path).collect()
-    latest = max(emitted, key=lambda r: r.step_reached)
-    b = funnel(
-        spark.createDataFrame(rows, cols), ["A", "B", "C"]
-    ).collect()[0]
-    assert b.step_reached == 3  # A@10 -> B@60 -> C@70
-    assert (latest.step_reached, latest.ts_1, latest.ts_2, latest.ts_3) == (
-        b.step_reached, b.ts_1, b.ts_2, b.ts_3
-    )
-
-
-def test_funnel_stream_long_key_schema(spark, tmp_path):
-    """key_field derives from the input schema — a bigint user_id
-    must work without an explicit override."""
-    from ocr_compare_spark.streaming.jobs import funnel_stream
-
-    rows = [(7, _ts(10), "A", 1), (7, _ts(20), "B", 2)]
-    cols = ["user_id", "ts", "event_type", "eid"]
-    inp = str(tmp_path / "in")
-    spark.createDataFrame(rows, cols).coalesce(1).write.parquet(inp)
-    stream = spark.readStream.schema(
-        "user_id bigint, ts timestamp, event_type string, eid long"
-    ).parquet(inp)
-    out_path, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (
-        funnel_stream(stream, ["A", "B"])
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out_path).collect()
-    assert max(r.step_reached for r in got) == 2
-    assert all(isinstance(r.user_id, int) for r in got)
-
-
-def test_asof_log_stream_chunked_group(spark, tmp_path):
-    """Same chunk-straddle class as funnel_stream: a micro-batch group
-    split across 2-row Arrow chunks with in-batch disorder must sort
-    as ONE group — an R that arrives in a later chunk but carries an
-    earlier ts must still enrich the later-ts L rows correctly."""
-    from ocr_compare_spark.streaming.jobs import asof_log_enrich_stream
-
-    # arrival order: L@30, L@40 first, then R@10 — chunk-local sorting
-    # would enrich neither L (R lands in chunk 2, walked after both)
-    rows = [
-        ("k1", _ts(30), "L", "e1", None, None),
-        ("k1", _ts(40), "L", "e2", None, None),
-        ("k1", _ts(10), "R", None, "r1", "v1"),
-        ("k1", _ts(50), "L", "e3", None, None),
-        ("k1", None, "R", None, "rbad", "vbad"),  # NULL-ts R — dropped
-        ("k1", None, "L", "e4", None, None),  # NULL-ts L — NULL payload
-    ]
-    cols = ["key", "ts", "side", "event_id", "r_id", "r_value"]
-    inp = str(tmp_path / "in")
-    spark.createDataFrame(rows, cols).coalesce(1).write.parquet(inp)
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        stream = (
-            spark.readStream.schema(
-                "key string, ts timestamp, side string, event_id string, "
-                "r_id string, r_value string"
-            ).parquet(inp)
-        )
-        out_path, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-        q = (
-            asof_log_enrich_stream(stream, on="key")
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    got = {
-        r.event_id: (r.r_id, r.r_value)
-        for r in spark.read.parquet(out_path).collect()
-    }
-    assert got == {
-        "e1": ("r1", "v1"),
-        "e2": ("r1", "v1"),
-        "e3": ("r1", "v1"),
-        "e4": (None, None),  # batch left-outer contract: kept, unmatched
-    }
-
-
-def test_funnel_stream_state_ttl(spark, tmp_path):
-    """state_ttl_ms bounds standing state under a processing-time
-    trigger: a key idle past the TTL is dropped, so its later events
-    cannot advance the chain; the NoTimeout control completes.
-    (availableNow cannot drive timers — documented caveat — so this
-    test runs real processing-time triggers.)"""
-    import time as _time
-
-    from ocr_compare_spark.streaming.jobs import funnel_stream
-
-    cols = ["user_id", "ts", "event_type", "eid"]
-
-    def read_depths(name):
-        try:
-            return [
-                r.step_reached
-                for r in spark.read.parquet(str(tmp_path / f"out_{name}")).collect()
-            ]
-        except Exception:  # sink dir not created yet
-            return []
-
-    def wait_for(pred, deadline_s=120):
-        # barrier instead of bare sleeps: this host stalls 10-70s,
-        # so fixed sleeps race the micro-batch clock
-        t0 = _time.time()
-        while _time.time() - t0 < deadline_s:
-            if pred():
-                return True
-            _time.sleep(0.3)
-        return False
-
-    def drive(ttl, name):
-        inp = str(tmp_path / f"in_{name}")
-        spark.createDataFrame(
-            [("u1", _ts(10), "A", 1)], cols
-        ).coalesce(1).write.mode("overwrite").parquet(inp)
-        stream = spark.readStream.schema(
-            "user_id string, ts timestamp, event_type string, eid long"
-        ).parquet(inp)
-        q = (
-            funnel_stream(stream, ["A", "B"], state_ttl_ms=ttl)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / f"out_{name}"))
-            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-            .outputMode("append")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        try:
-            # barrier 1: the A event is processed (depth-1 row landed)
-            assert wait_for(lambda: 1 in read_depths(name))
-            # TTL run: wait well past the TTL so the idle timer fires
-            # in one of the intervening micro-batches
-            _time.sleep(3)
-            spark.createDataFrame(
-                [("u1", _ts(20), "B", 2)], cols
-            ).coalesce(1).write.mode("append").parquet(inp)
-            if ttl is None:
-                # barrier 2: control run must process B to depth 2
-                assert wait_for(lambda: 2 in read_depths(name))
-            else:
-                # expired run: give B ample time to be processed; the
-                # assertion below is that depth 2 NEVER appears
-                _time.sleep(6)
-        finally:
-            q.stop()
-        return read_depths(name)
-
-    assert max(drive(500, "ttl")) == 1  # expired: B cannot advance
-    assert max(drive(None, "exact")) == 2  # NoTimeout control completes
-
-
-def test_retention_stream_equals_batch(spark, tmp_path):
-    """Streaming retention over an ordered log == batch
-    retention_cohorts(return_users=True): the emitted (key, cohort,
-    offset) cell set matches, each cell exactly once, across THREE
-    micro-batches (a user acquired in batch 1 stays correctly
-    cohorted for batch-3 activity; non-activity first events cohort
-    but emit nothing; NULL ts skipped)."""
-    from ocr_compare_spark.operators.temporal import retention_cohorts
-    from ocr_compare_spark.streaming.jobs import retention_stream
-
-    day = 86400.0
-    rows = []
-
-    def ev(u, s, typ, eid):
-        rows.append((u, None if s is None else _ts(s), typ, eid))
-
-    ev("u1", 0.5 * day, "view", 1)   # cohort day 0, not activity
-    ev("u2", 0.2 * day, "buy", 2)    # cohort day 0 + activity offset 0
-    b1 = rows[:]; rows = []
-    ev("u1", 1.5 * day, "buy", 3)    # offset 1
-    ev("u1", 1.9 * day, "buy", 4)    # same cell — no second emission
-    ev("u3", None, "buy", 5)         # NULL ts — skipped entirely
-    b2 = rows[:]; rows = []
-    ev("u1", 3.5 * day, "buy", 6)    # offset 3
-    ev("u2", 2.5 * day, "buy", 7)    # offset 2
-    b3 = rows[:]
-
-    cols = ["user_id", "ts", "event_type", "eid"]
-    inp = str(tmp_path / "in")
-    for j, chunk in enumerate((b1, b2, b3)):
-        spark.createDataFrame(chunk, cols).coalesce(1).write.mode(
-            "append" if j else "overwrite"
-        ).parquet(inp)
-    stream = (
-        spark.readStream.schema(
-            "user_id string, ts timestamp, event_type string, eid long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
-        .withColumn("is_act", F.col("event_type") == "buy")
-    )
-    out_path, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (
-        retention_stream(stream, is_activity_col="is_act")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.read.parquet(out_path).collect()
-    got = [(r.user_id, r.cohort_start, r.offset_n) for r in emitted]
-    assert len(got) == len(set(got))  # exactly-once per cell
-
-    batch = {
-        (r.user_id, r.cohort_start, r.offset_n)
-        for r in retention_cohorts(
-            spark.createDataFrame(b1 + b2 + b3, cols),
-            activity_filter=F.col("event_type") == "buy",
-            return_users=True,
-        ).collect()
-    }
-    assert set(got) == batch
-    # triangle sanity: u1 has offsets 1 and 3, u2 offsets 0 and 2
-    offs = {(u, o) for u, _, o in got}
-    assert offs == {("u1", 1), ("u1", 3), ("u2", 0), ("u2", 2)}
