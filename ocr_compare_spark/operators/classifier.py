@@ -159,22 +159,17 @@ def score_nb(
 #   shared-loop convention.
 
 
-def _logreg_z(vec_col: str, wb: list[float], n_col: str | None = None) -> Column:
+def _logreg_z(vec_col: str, wb: list[float]) -> Column:
     """z = b + dot(w, v)/n with the dot folded in INDEX order and n =
-    sum(v) (exact integers; pass a precomputed ``n_col`` to skip the
-    fold — the training loop hoists it, review finding) — one
-    division AFTER the fold, so the mirror's float op sequence
-    matches exactly."""
+    sum(v) (exact integers) — one division AFTER the fold, so the
+    mirror's float op sequence matches exactly."""
     warr = F.array(*[F.lit(float(x)) for x in wb[1:]])
     dot = F.aggregate(
         F.zip_with(F.col(vec_col), warr, lambda v, w: w * v),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    if n_col is not None:
-        n = F.col(n_col)
-    else:
-        n = F.aggregate(F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x)
+    n = F.aggregate(F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x)
     return F.lit(float(wb[0])) + dot / n
 
 

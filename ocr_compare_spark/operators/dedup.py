@@ -537,8 +537,6 @@ def embed_near_dups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     target_block_size: int = 1024,
-    n: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via sign-orthant blocking
     (the fifth dedup tier: semantic near-dups that no token hash sees).
@@ -570,15 +568,9 @@ def embed_near_dups(
     from ocr_compare_spark.operators.similarity import cosine_native
 
     if sign_bits is None:
-        # ``n``/``dim`` hints skip the two sizing jobs — a count() on a
-        # parquet source is metadata-cheap, but on a DERIVED DataFrame
-        # it recomputes the whole upstream plan; callers that know the
-        # corpus shape should pass both.
-        if n is None:
-            n = emb.count()
-        if dim is None:
-            dim_row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-            dim = int(dim_row["d"]) if dim_row and dim_row["d"] is not None else 1
+        n = emb.count()
+        dim_row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+        dim = int(dim_row["d"]) if dim_row and dim_row["d"] is not None else 1
         sign_bits = auto_sign_bits(n, dim, target_block_size)
     block = F.lit(0)
     for b in range(sign_bits):
@@ -610,7 +602,6 @@ def paragraph_dedup(
     text_col: str,
     sep: str = "\n\n",
     min_dup_count: int = 2,
-    keep_first: bool = True,
 ) -> DataFrame:
     """Cross-document PARAGRAPH-level exact dedup — the CCNet/Dolma
     pass that document-level dedup cannot express: boilerplate
@@ -621,12 +612,10 @@ def paragraph_dedup(
 
     Semantics: split ``text_col`` on ``sep``; a paragraph whose md5
     occurs in >= ``min_dup_count`` (doc, position) slots corpus-wide
-    is a duplicate. With ``keep_first`` the single occurrence with the
-    smallest (id, position) survives (CCNet keep-one); without it every
-    occurrence of a duplicated paragraph is dropped (Dolma-style
-    boilerplate removal). Whitespace-only paragraphs are never
-    dedup'd — they are separator artifacts, and hashing them would
-    weld unrelated documents to one "duplicate".
+    is a duplicate, and only its occurrence with the smallest
+    (id, position) survives (CCNet keep-one). Whitespace-only
+    paragraphs are never dedup'd — they are separator artifacts, and
+    hashing them would weld unrelated documents to one "duplicate".
 
     Scale shape: exactly TWO shuffles, both on well-spread keys —
     (1) paragraph rows shuffle once on the md5 hash, where a single
@@ -662,9 +651,7 @@ def paragraph_dedup(
     ranked = hashed.withColumn("n_occ", F.count("*").over(w)).withColumn(
         "occ_rank", F.row_number().over(w_rank)
     )
-    keep = (F.col("n_occ") < min_dup_count) | F.col("is_blank")
-    if keep_first:
-        keep = keep | (F.col("occ_rank") == 1)
+    keep = (F.col("n_occ") < min_dup_count) | F.col("is_blank") | (F.col("occ_rank") == 1)
     flagged = ranked.withColumn("keep", keep)
     # second shuffle: ordered reassembly on the doc id
     return flagged.groupBy("id").agg(
@@ -1180,7 +1167,6 @@ def d4_prune(
     proto_frac: float = 0.1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "literal",
 ) -> DataFrame:
     """D4 (Tirumala et al. 2023, arXiv:2308.12284): semantic dedup
     THEN per-cluster prototypicality pruning — after SemDeDup drops
@@ -1223,7 +1209,6 @@ def d4_prune(
         threshold=threshold,
         id_col=id_col,
         vec_col=vec_col,
-        method=method,
     ).localCheckpoint()
     wr = Window.partitionBy("cell").orderBy(
         F.col("centsim").desc(), F.col("id").asc()

@@ -133,7 +133,6 @@ def dsir_log_weights(
     target: DataFrame,
     id_col: str,
     text_col: str,
-    target_text_col: str | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     smoothing: float = 1.0,
     checkpoint: bool = False,
@@ -144,9 +143,8 @@ def dsir_log_weights(
     ``logw6`` is the exact integer-microunit sum and ``log_weight``
     = logw6/1e6. Documents with zero features (no ``[a-z0-9]+`` word)
     carry no evidence and are omitted. q is fit on ``candidates``
-    itself (the raw pool, as in the paper); p on ``target``."""
-    if target_text_col is None:
-        target_text_col = text_col
+    itself (the raw pool, as in the paper); p on ``target``, which
+    carries its text in the same ``text_col``."""
     if checkpoint:
         candidates = candidates.localCheckpoint()
     if num_partitions:
@@ -171,7 +169,7 @@ def dsir_log_weights(
         F.col(id_col), F.explode(gram_buckets(text_col, n_buckets)).alias("_bkt")
     ).localCheckpoint(eager=True)
     q_counts, q_total = _bucket_counts_of(grams)
-    p_counts, p_total = _bucket_counts(target, target_text_col, n_buckets)
+    p_counts, p_total = _bucket_counts(target, text_col, n_buckets)
 
     ratios = [
         (b, log_ratio6(p_counts.get(b, 0), c, p_total, q_total, n_buckets, smoothing))

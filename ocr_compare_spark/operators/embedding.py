@@ -54,7 +54,6 @@ def hashed_tf(
     text_col: str,
     dim: int = 64,
     signed: bool = True,
-    lowercase: bool = True,
     num_partitions: int | None = None,
     vec_col: str = "vector",
 ) -> DataFrame:
@@ -82,16 +81,13 @@ def hashed_tf(
         from ocr_compare_spark.operators.adaptive import spread_small_input
 
         df = spread_small_input(df)
-    c = F.col(text_col)
-    if lowercase:
-        # lowercasing stays JVM-side: the Arrow pass below then hashes
-        # byte-identical strings to the old relational path (Python
-        # str.lower and UTF8String.toLowerCase differ on locale edge
-        # cases; tokenization does not — Java regex \s and Python
-        # re.ASCII \s are the same ASCII class, the py_hashed_tf
-        # mirror-parity rule)
-        c = F.lower(c)
-    src = df.select(F.col(id_col), c.alias("_t"))
+    # lowercasing stays JVM-side: the Arrow pass below then hashes
+    # byte-identical strings to the old relational path (Python
+    # str.lower and UTF8String.toLowerCase differ on locale edge
+    # cases; tokenization does not — Java regex \s and Python
+    # re.ASCII \s are the same ASCII class, the py_hashed_tf
+    # mirror-parity rule)
+    src = df.select(F.col(id_col), F.lower(F.col(text_col)).alias("_t"))
     out_schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
@@ -141,12 +137,11 @@ def hashed_tf(
     return src.mapInPandas(gen, out_schema)
 
 
-def py_hashed_tf(text: str, dim: int, signed: bool = True, lowercase: bool = True):
+def py_hashed_tf(text: str, dim: int, signed: bool = True):
     """Pure-python mirror of hashed_tf for one document (pytest
     ground truth). Returns None for an empty token stream (the
     no-row contract)."""
-    if lowercase:
-        text = text.lower()
+    text = text.lower()
     # re.ASCII: Java \s is ASCII-only (the CLAUDE.md mirror-parity
     # rule — bpe py_words precedent); a unicode \s here would split
     # NBSP-joined words the engine keeps whole

@@ -60,7 +60,6 @@ def pagerank(
     d_den: int = 100,
     src: str = "src",
     dst: str = "dst",
-    tol6: int | None = None,
 ) -> DataFrame:
     """Damped PageRank in integer microunits: (node, rank6).
 
@@ -68,11 +67,6 @@ def pagerank(
     d_den applied by exact integer floor division (default 0.85).
     ``iters`` fixed rounds — at crawl-graph diameters a handful of
     rounds orders the frontier; convergence tests live in pytest.
-    ``tol6`` adds early stopping: after each round, if
-    max|rank6' - rank6| <= tol6, return (one extra node-sized
-    aggregate per round — ranks are already checkpointed, so the
-    check is cheap; the RESULT stays a pure function of the input
-    because the integer ranks are deterministic).
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
@@ -119,7 +113,6 @@ def pagerank(
     zero_seed = nodes.select("node", F.lit(0).cast("long").alias("c"))
     # round-join build side decided ONCE from the real rank table
     side = build_side(ranks, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
-    prev_ranks = ranks
     for _ in range(iters):
         contrib = keyed.join(
             side(ranks.select(F.col("node").alias("_src"), "rank6")),
@@ -138,20 +131,7 @@ def pagerank(
         # doubling; see connected_components). The LAST round stays
         # checkpointed too: callers consume the result
         # more than once and rely on it being materialized.
-        new_ranks = ranks.localCheckpoint(eager=True)
-        if tol6 is not None:
-            delta = (
-                prev_ranks.select("node", F.col("rank6").alias("_old"))
-                .join(new_ranks, "node")
-                .agg(F.max(F.abs(F.col("rank6") - F.col("_old"))))
-                .collect()[0][0]
-            )
-            ranks = new_ranks
-            if delta is not None and delta <= tol6:
-                break
-        else:
-            ranks = new_ranks
-        prev_ranks = ranks
+        ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 

@@ -36,8 +36,7 @@ the corpus-sized stream is filtered to matching terms before the
 (query, doc) aggregate. Top-k per query is the collect_list +
 array_sort + slice pattern (bounded by matches per query), never a
 window over the full score stream. ``n_docs=`` / ``sum_dl=`` hints
-skip the corpus-stats job when the caller already knows them (the
-repo's embed_near_dups convention).
+skip the corpus-stats job when the caller already knows them.
 
 Reference analog: the reference repo has no retrieval stage; this is
 part of the training-data-pipeline family (keyword/TF-IDF sibling in
@@ -55,15 +54,6 @@ from ocr_compare_spark.operators.keywords import _words
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
-
-
-def postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(term, id, tf) — the inverted-index postings table."""
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(_words(text_col)).alias("term"))
-        .groupBy("term", "id")
-        .agg(F.count("*").alias("tf"))
-    )
 
 
 def doc_lengths(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -22,8 +22,7 @@ one ObjectHashAggregate for the per-doc top-k (collect_list of
 14-byte-ish structs bounded by the doc's distinct-term count; the
 array_sort+slice keeps only k on output). No window over the full
 term stream, no driver-side vocabulary. ``n_docs=`` hint skips the
-corpus-count job when the caller already knows it (the repo's
-embed_near_dups convention).
+corpus-count job when the caller already knows it.
 """
 
 from __future__ import annotations

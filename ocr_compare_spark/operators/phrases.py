@@ -73,7 +73,6 @@ def pmi_phrases(
     text_col: str,
     min_count: int = DEFAULT_MIN_COUNT,
     k: int = DEFAULT_K,
-    n_tokens: int | None = None,
 ) -> DataFrame:
     """Top-k collocations: (rank, w1, w2, c_ab, pmi6) by
     (pmi6 desc, w1 asc, w2 asc). Bigrams below ``min_count`` are
@@ -89,8 +88,7 @@ def pmi_phrases(
     # ReuseExchange does NOT fire across differently-aliased sides):
     # checkpoint or the corpus tokenization runs three times
     uni = unigram_counts(df, text_col).localCheckpoint()
-    if n_tokens is None:
-        n_tokens = uni.agg(F.sum("c")).collect()[0][0] or 0
+    n_tokens = uni.agg(F.sum("c")).collect()[0][0] or 0
     big = bigram_counts(df, text_col).filter(F.col("c_ab") >= int(min_count))
     ua = uni.select(F.col("term").alias("w1"), F.col("c").alias("c_a"))
     ub = uni.select(F.col("term").alias("w2"), F.col("c").alias("c_b"))

@@ -5,7 +5,7 @@ Two operations every pretraining pipeline runs after curation
 shards"):
 
 - **hash sampling**: keep a deterministic pseudo-uniform fraction of
-  rows, optionally a different rate per stratum (language, source).
+  rows.
   ``df.sample()`` is WRONG at scale for this: Spark's Bernoulli
   sampler draws from an RNG seeded per partition, so the kept set
   changes whenever the partition layout changes (different cluster
@@ -58,28 +58,12 @@ def hash_frac(key: str | Column) -> Column:
     ) / F.lit(_TWO_32)
 
 
-def hash_sample(
-    df: DataFrame,
-    key_col: str,
-    rate: float,
-    strata_col: str | None = None,
-    rates: dict[str, float] | None = None,
-) -> DataFrame:
+def hash_sample(df: DataFrame, key_col: str, rate: float) -> DataFrame:
     """Keep rows whose hash_frac(key) < rate — a deterministic,
     zero-shuffle Bernoulli sample keyed by content, not by partition
     layout (see module docstring for why ``df.sample`` cannot give
-    this guarantee). With ``rates``, each stratum value gets its own
-    rate (missing strata fall back to ``rate``)."""
-    frac = hash_frac(key_col)
-    if rates:
-        if strata_col is None:
-            raise ValueError("rates= requires strata_col=")
-        thr: Column = F.lit(float(rate))
-        for value, r in sorted(rates.items()):
-            thr = F.when(F.col(strata_col) == value, F.lit(float(r))).otherwise(thr)
-    else:
-        thr = F.lit(float(rate))
-    return df.filter(frac < thr)
+    this guarantee)."""
+    return df.filter(hash_frac(key_col) < F.lit(float(rate)))
 
 
 def _order_cols(priority_col: str, id_col: str) -> list[Column]:
@@ -255,9 +239,6 @@ def assign_token_shards(
     id_col: str,
     shard_col: str = "shard",
     cum_col: str = "cum_tokens",
-    method: str = "bucketed",
-    n_buckets: int = 1024,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Deterministic training-shard assignment — the step after mix
     construction: pack each stratum's documents (in (priority, id)
@@ -273,22 +254,12 @@ def assign_token_shards(
     needs: re-emitting shard 17 after a failure yields byte-identical
     membership).
 
-    method="bucketed" (default) rides the distributed prefix sum of
+    The cumulative sum rides the distributed prefix sum of
     token_budget_sample_bucketed with an unbounded budget — window
-    parallelism #strata x #buckets; method="exact" is the one-window
-    reference shape (pytest pins them identical)."""
-    if method == "exact":
-        w = Window.partitionBy(strata_col).orderBy(*_order_cols(priority_col, id_col))
-        base = df.withColumn(
-            cum_col, F.sum(F.col(token_col)).over(w).cast("long")
-        )
-    elif method == "bucketed":
-        base = token_budget_sample_bucketed(
-            df, strata_col, token_col, _NO_BUDGET, priority_col, id_col,
-            cum_col=cum_col, n_buckets=n_buckets, checkpoint=checkpoint,
-        )
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    parallelism #strata x #buckets."""
+    base = token_budget_sample_bucketed(
+        df, strata_col, token_col, _NO_BUDGET, priority_col, id_col, cum_col=cum_col
+    )
     shard = F.floor((F.col(cum_col) - F.col(token_col)) / tokens_per_shard)
     return base.withColumn(shard_col, shard.cast("int"))
 
@@ -302,9 +273,6 @@ def pack_sequences(
     id_col: str,
     seq_col: str = "seq_no",
     cum_col: str = "cum_tokens",
-    method: str = "bucketed",
-    n_buckets: int = 1024,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """GPT-style concat-and-chunk sequence packing — the step that
     turns a document mix into fixed-length training sequences.
@@ -329,10 +297,9 @@ def pack_sequences(
 
     Zero-token documents occupy no stream positions and are dropped.
 
-    Scale shape: ONE prefix-sum shuffle (method="bucketed" rides the
-    distributed cumsum of token_budget_sample_bucketed — window
-    parallelism #strata x #buckets; method="exact" is the one-window
-    reference shape, pytest-pinned identical) followed by a narrow
+    Scale shape: ONE prefix-sum shuffle (the distributed cumsum of
+    token_budget_sample_bucketed — window parallelism #strata x
+    #buckets) followed by a narrow
     native explode(sequence(first_seq, last_seq)): a document with T
     tokens emits at most floor(T/seq_len) + 1 rows, so output size is
     O(total tokens / seq_len + rows) independent of cluster size.
@@ -343,16 +310,9 @@ def pack_sequences(
     failure."""
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    if method == "exact":
-        w = Window.partitionBy(strata_col).orderBy(*_order_cols(priority_col, id_col))
-        base = df.withColumn(cum_col, F.sum(F.col(token_col)).over(w).cast("long"))
-    elif method == "bucketed":
-        base = token_budget_sample_bucketed(
-            df, strata_col, token_col, _NO_BUDGET, priority_col, id_col,
-            cum_col=cum_col, n_buckets=n_buckets, checkpoint=checkpoint,
-        )
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    base = token_budget_sample_bucketed(
+        df, strata_col, token_col, _NO_BUDGET, priority_col, id_col, cum_col=cum_col
+    )
     L = F.lit(int(seq_len)).cast("long")
     end = F.col(cum_col)
     start = end - F.col(token_col)
@@ -505,30 +465,21 @@ def unimax_sample(
     id_col: str,
     total_budget: int,
     max_epochs: float = 1.0,
-    priority_col: str | None = None,
-    bucketed: bool = True,
-    n_buckets: int = 1024,
-    checkpoint: bool = True,
     cum_col: str = "cum_tokens",
     budget_col: str | None = None,
 ) -> DataFrame:
     """UniMax corpus mix: per-stratum budgets from
     :func:`unimax_budgets` (one tiny guarded weight aggregate),
-    applied as a deterministic token-budget prefix per stratum.
-    Default priority is hash_frac(id) — a layout-invariant uniform
-    mix within each stratum; pass ``priority_col`` to mix
-    quality-first instead. ``budget_col`` optionally attaches the
-    applied budget. Rows with NULL strata have no capacity and drop.
+    applied as a deterministic token-budget prefix per stratum in
+    hash_frac(id) order — a layout-invariant uniform mix within each
+    stratum. ``budget_col`` optionally attaches the applied budget.
+    Rows with NULL strata have no capacity and drop.
 
-    ``checkpoint`` localCheckpoints the input ONCE up front (the
-    weight collect + the sampler would otherwise each re-evaluate a
-    compute-heavy upstream — the ADVICE-r4 trap); the nested
-    bucketed sampler then reuses that boundary."""
-    if checkpoint:
-        df = df.localCheckpoint()
-    if priority_col is None:
-        priority_col = "_prio"
-        df = df.withColumn(priority_col, hash_frac(id_col))
+    The input is localCheckpointed ONCE up front (the weight collect
+    + the sampler would otherwise each re-evaluate a compute-heavy
+    upstream — the ADVICE-r4 trap); the nested bucketed sampler then
+    reuses that boundary."""
+    df = df.localCheckpoint().withColumn("_prio", hash_frac(id_col))
     sums = (
         df.groupBy(strata_col)
         .agg(F.sum(F.col(token_col)).alias("_n"))
@@ -544,20 +495,13 @@ def unimax_sample(
         total_budget,
         max_epochs,
     )
-    if bucketed:
-        out = token_budget_sample_bucketed(
-            df, strata_col, token_col, budgets, priority_col, id_col,
-            cum_col=cum_col, n_buckets=n_buckets, checkpoint=False,
-        )
-    else:
-        out = token_budget_sample(
-            df, strata_col, token_col, budgets, priority_col, id_col, cum_col=cum_col
-        )
+    out = token_budget_sample_bucketed(
+        df, strata_col, token_col, budgets, "_prio", id_col,
+        cum_col=cum_col, checkpoint=False,
+    )
     if budget_col:
         out = out.withColumn(budget_col, _budget_expr(budgets, strata_col))
-    if priority_col == "_prio":
-        out = out.drop("_prio")
-    return out
+    return out.drop("_prio")
 
 
 def cap_per_key(
@@ -565,41 +509,23 @@ def cap_per_key(
     key_col: str,
     max_rows: int,
     id_col: str,
-    priority_col: str | None = None,
-    method: str = "bucketed",
-    n_buckets: int = 1024,
     checkpoint: bool = True,
 ) -> DataFrame:
     """RefinedWeb-style per-key row cap: keep at most ``max_rows``
     rows per key (e.g. registered domain — a handful of mega-hosts
     otherwise dominate a crawl corpus). This IS token-budget
     semantics with every row costing one token, so it reuses the
-    distributed prefix-sum machinery (bucketed by default; "exact"
-    = the single-window reference path).
+    distributed prefix-sum machinery.
 
-    The kept set is the deterministic (priority, id)-first prefix per
-    key — layout- and cluster-size-invariant like hash_sample.
-    ``priority_col`` defaults to ``hash_frac(id_col)`` (a uniform
-    per-key sample); pass e.g. ``1 - quality`` for quality-first."""
-    out = df
-    helper = ["_one"]
-    if priority_col is None:
-        out = out.withColumn("_prio", hash_frac(id_col))
-        priority_col = "_prio"
-        helper.append("_prio")
-    out = out.withColumn("_one", F.lit(1))
-    if method == "exact":
-        kept = token_budget_sample(
-            out, key_col, "_one", max_rows, priority_col, id_col, cum_col="_cum"
-        )
-    elif method == "bucketed":
-        kept = token_budget_sample_bucketed(
-            out, key_col, "_one", max_rows, priority_col, id_col,
-            cum_col="_cum", n_buckets=n_buckets, checkpoint=checkpoint,
-        )
-    else:
-        raise ValueError(f"unknown method {method!r}")
-    return kept.drop("_cum", *helper)
+    The kept set is the deterministic (hash_frac(id), id)-first
+    prefix per key (a uniform per-key sample) — layout- and
+    cluster-size-invariant like hash_sample."""
+    out = df.withColumn("_prio", hash_frac(id_col)).withColumn("_one", F.lit(1))
+    kept = token_budget_sample_bucketed(
+        out, key_col, "_one", max_rows, "_prio", id_col,
+        cum_col="_cum", checkpoint=checkpoint,
+    )
+    return kept.drop("_cum", "_one", "_prio")
 
 
 # ------------------------------------------------- train/val/test

@@ -1,16 +1,12 @@
 """Document-scanner geometry pipeline — pure numpy, Spark-seamed.
 
 Re-expresses the reference's scan/document_scanner.py:52-252
-(DocumentScanner: Canny edge detection, contour->quad selection,
-four-point perspective alignment, scan-like enhancement) WITHOUT cv2
-(absent from this container). Every kernel is real vectorized numpy —
-no stubs:
+(DocumentScanner: contour->quad selection, four-point perspective
+alignment, scan-like enhancement) WITHOUT cv2 (not a dependency).
+Every kernel is real vectorized numpy — no stubs. The
+reference's Canny edge pass (:69-84) has no counterpart: the quad fit
+below needs no edge map. The kernels:
 
-- detect_edges == reference :69-84 (GaussianBlur(5x5) + Canny(75,200)):
-  separable Gaussian, Sobel gradients, 4-direction non-max
-  suppression, double threshold, hysteresis by bounded strong-into-
-  weak dilation. scan_documents does not run it: the quad fit below
-  needs no edge map.
 - find_document_quad + four_point_transform == reference :86-116 with
   ONE documented substitution: the findContours + approxPolyDP quad search
   (:103-111) is replaced by a threshold-mask extreme-point quad fit.
@@ -90,49 +86,6 @@ def to_gray(img: np.ndarray) -> np.ndarray:
 def gaussian_blur(gray: np.ndarray, ksize: int = 5, sigma: float | None = None) -> np.ndarray:
     k = _gauss_kernel1d(ksize, sigma)
     return _corr1d(_corr1d(gray.astype(np.float64), k, 0), k, 1)
-
-
-def canny(gray: np.ndarray, lo: float = 75.0, hi: float = 200.0) -> np.ndarray:
-    """Canny edge map (uint8 0/255). Sobel gradients, 4-direction
-    non-max suppression, double threshold, hysteresis by bounded
-    strong-into-weak 8-connected growth. Reference :83 uses
-    cv2.Canny(blurred, 75, 200) — call on a pre-blurred input the
-    same way (detect_edges does)."""
-    g = gray.astype(np.float64)
-    sm = np.array([1.0, 2.0, 1.0])
-    dv = np.array([-1.0, 0.0, 1.0])
-    gx = _corr1d(_corr1d(g, sm, 0), dv, 1)
-    gy = _corr1d(_corr1d(g, sm, 1), dv, 0)
-    mag = np.hypot(gx, gy)
-    h, w = mag.shape
-    # quantize gradient direction to 4 bins: 0=E/W, 1=NE/SW, 2=N/S, 3=NW/SE
-    ang = np.arctan2(gy, gx)
-    d = (np.round(ang / (np.pi / 4.0)).astype(int)) % 4
-    padm = np.pad(mag, 1, mode="constant")
-
-    def nb(dy: int, dx: int) -> np.ndarray:
-        return padm[1 + dy : 1 + dy + h, 1 + dx : 1 + dx + w]
-
-    n1 = np.choose(d, [nb(0, 1), nb(-1, 1), nb(-1, 0), nb(-1, -1)])
-    n2 = np.choose(d, [nb(0, -1), nb(1, -1), nb(1, 0), nb(1, 1)])
-    keep = (mag >= n1) & (mag >= n2)
-    strong = keep & (mag >= hi)
-    weak = keep & (mag >= lo)
-    cur = strong
-    for _ in range(h + w):  # bounded fixpoint: a chain can't exceed the perimeter
-        grown = weak & _dilate(cur.astype(np.uint8), 3).astype(bool)
-        nxt = cur | grown
-        if nxt.sum() == cur.sum():
-            break
-        cur = nxt
-    return np.where(cur, 255, 0).astype(np.uint8)
-
-
-def detect_edges(img: np.ndarray) -> np.ndarray:
-    """gray -> GaussianBlur(5x5) -> Canny(75, 200); reference :69-84."""
-    if img is None:
-        raise ValueError("Input image is None.")
-    return canny(gaussian_blur(to_gray(img), 5), 75.0, 200.0)
 
 
 def _dilate(binary: np.ndarray, k: int) -> np.ndarray:

@@ -912,22 +912,19 @@ def mine_hard_negatives(
 def recall_at_k(
     approx: DataFrame,
     truth: DataFrame,
-    k: int | None = None,
     query_col: str = "query_id",
     id_col: str = "neighbor_id",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """In-engine ANN quality evaluation: per-query recall@k of an
     approximate ranking against an exact one (the number every IVF/
     LSH/PQ deployment is tuned on — FAISS's own benchmark metric).
 
-    Inputs are two rankings shaped (query_col, rank_col, id_col)
-    (the repo's ANN contract). If ``k`` is given both sides are cut
-    to rank <= k first; otherwise the rankings are taken as-is (they
-    may already be top-k, and the truth side may be shorter than k
-    when the corpus is small — recall divides by the TRUTH size, so
-    an approximate ranking that returns everything the exact one
-    returns scores 1.0 regardless).
+    Inputs are two rankings shaped (query_col, rank, id_col) (the
+    repo's ANN contract), taken as-is: they are already top-k,
+    and the truth side may be shorter than k when the corpus is
+    small — recall divides by the TRUTH size, so an approximate
+    ranking that returns everything the exact one returns scores 1.0
+    regardless.
 
     Output: (query_col, n_hits, n_truth, recall6) — recall6 =
     floor(n_hits / n_truth * 1e6 + 0.5) as int64 microunits: the
@@ -939,17 +936,11 @@ def recall_at_k(
     the vectors — one equi-join + two map-side-combined groupBys;
     at 100 TB the eval query set is the small side by construction
     (rankings are k rows per query)."""
-    a = approx.select(query_col, rank_col, id_col)
-    t = truth.select(query_col, rank_col, id_col)
-    if k is not None:
-        if k <= 0:
-            raise ValueError(f"recall_at_k: k must be positive, got {k!r}")
-        a = a.filter(F.col(rank_col) <= k)
-        t = t.filter(F.col(rank_col) <= k)
+    a = approx.select(query_col, id_col)
+    t = truth.select(query_col, id_col)
     n_truth = t.groupBy(query_col).agg(F.count("*").alias("n_truth"))
     hits = (
-        a.select(query_col, id_col)
-        .join(t.select(query_col, id_col), [query_col, id_col], "inner")
+        a.join(t, [query_col, id_col], "inner")
         .groupBy(query_col)
         .agg(F.count("*").alias("n_hits"))
     )

@@ -57,30 +57,14 @@ def sitemap_kind(col: str | Column) -> Column:
     )
 
 
-def sitemap_xml(urls: Column, lastmods: Column | None = None) -> Column:
-    """Build a urlset document from an array<string> of urls (and an
-    optional positionally-aligned array of lastmod strings) —
+def sitemap_xml(urls: Column) -> Column:
+    """Build a urlset document from an array<string> of urls —
     entity-escaped, one <url> entry per element, deterministic
     byte-for-byte given the input order."""
-    if lastmods is None:
-        entries = F.transform(
-            urls,
-            lambda u: F.concat(F.lit("<url><loc>"), xml_escape(u), F.lit("</loc></url>")),
-        )
-    else:
-        entries = F.transform(
-            urls,
-            lambda u, i: F.concat(
-                F.lit("<url><loc>"),
-                xml_escape(u),
-                F.lit("</loc>"),
-                F.when(
-                    F.get(lastmods, i).isNotNull(),
-                    F.concat(F.lit("<lastmod>"), F.get(lastmods, i), F.lit("</lastmod>")),
-                ).otherwise(F.lit("")),
-                F.lit("</url>"),
-            ),
-        )
+    entries = F.transform(
+        urls,
+        lambda u: F.concat(F.lit("<url><loc>"), xml_escape(u), F.lit("</loc></url>")),
+    )
     return F.concat(
         F.lit('<?xml version="1.0" encoding="UTF-8"?>\n<urlset>'),
         F.array_join(entries, ""),

@@ -284,38 +284,21 @@ def cms_build(
     key_col: str,
     depth: int = 4,
     width: int = 2048,
-    weight_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Counter table (row, pos, cnt): explode the depth positions per
-    input row, ONE groupBy sum (map-side combine). Output is at most
+    input row, ONE groupBy count (map-side combine). Output is at most
     depth*width rows no matter the input size — the whole point.
-    ``num_partitions`` = the hll_registers repartition hint (same
-    narrow-source md5 trap). NULL keys are ignored (they would
-    otherwise vanish via the NULL-position explode anyway — made
-    explicit so the contract is visible)."""
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    df = df.filter(F.col(key_col).isNotNull())
-    wcol = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    staged = df.select(
-        F.explode(cms_position_cols(key_col, depth, width)).alias("rp"),
-        wcol.alias("_w"),
+    NULL keys are ignored (they would otherwise vanish via the
+    NULL-position explode anyway — made explicit so the contract is
+    visible)."""
+    staged = df.filter(F.col(key_col).isNotNull()).select(
+        F.explode(cms_position_cols(key_col, depth, width)).alias("rp")
     )
     return (
-        staged.select(F.col("rp.row").alias("row"), F.col("rp.pos").alias("pos"), "_w")
+        staged.select(F.col("rp.row").alias("row"), F.col("rp.pos").alias("pos"))
         .groupBy("row", "pos")
-        .agg(F.sum("_w").alias("cnt"))
+        .agg(F.count("*").alias("cnt"))
     )
-
-
-def cms_merge(*counter_tables: DataFrame) -> DataFrame:
-    """CMS(A ⊎ B) = counter-wise sum — merge shard sketches without
-    touching the shards again."""
-    out = counter_tables[0]
-    for t in counter_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("row", "pos").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(
@@ -348,48 +331,17 @@ def cms_heavy_hitters(
     depth: int = 4,
     width: int = 2048,
     threshold: int = 100,
-    counters: DataFrame | None = None,
-    num_partitions: int | None = None,
-    confirm: bool = False,
 ) -> DataFrame:
     """Keys whose CM estimate >= threshold, with the estimate. The
     candidate set is the stream's distinct keys (batch setting —
-    no heap needed); the REPORTED count still comes from the sketch,
-    so merged multi-shard counters give cross-shard totals without a
-    global key shuffle. One-sided: no true heavy hitter is missed
-    (est >= true); collision overestimates can admit extras, bounded
-    by the depth/width sizing.
-
-    ``confirm=True`` runs the production two-pass shape: the sketch
-    produces the (small) candidate set cheaply, then ONE exact pass
-    counts only rows matching a candidate (broadcast semi-join — the
-    decontam shape; the full key space never shuffles) and drops the
-    collision-admitted extras. Output gains exact_cnt and is filtered
-    on it, making the result exactly the true heavy hitters OF ``df``
-    — the exact pass counts df's unweighted rows, so confirm requires
-    counters that describe exactly df (None, or cms_build(df) without
-    weight_col). For merged multi-shard or weighted counters the
-    one-sided sketch answer (confirm=False) is the correct tool:
-    confirming against one shard would silently drop a key whose mass
-    lives across shards."""
-    if counters is None:
-        counters = cms_build(df, key_col, depth, width, num_partitions=num_partitions)
+    no heap needed); the REPORTED count comes from the sketch.
+    One-sided: no true heavy hitter is missed (est >= true);
+    collision overestimates can admit extras, bounded by the
+    depth/width sizing."""
+    counters = cms_build(df, key_col, depth, width)
     cand = df.select(key_col).distinct()
     est = cms_estimate(cand, counters, key_col, depth, width)
-    hh = est.filter(F.col("est_cnt") >= threshold)
-    if not confirm:
-        return hh
-    # hh feeds BOTH the semi-join build side and the final probe —
-    # differently-aliased consumers, so without a checkpoint the
-    # distinct+estimate pipeline runs twice (the pagerank/bm25
-    # two-consumer rule); the candidate set is small by construction
-    hh = hh.localCheckpoint(eager=True)
-    exact = (
-        df.join(F.broadcast(hh.select(key_col)), key_col, "left_semi")
-        .groupBy(key_col)
-        .agg(F.count("*").alias("exact_cnt"))
-    )
-    return hh.join(exact, key_col).filter(F.col("exact_cnt") >= threshold)
+    return est.filter(F.col("est_cnt") >= threshold)
 
 
 # -------------------------------------------------------- DDSketch
@@ -466,17 +418,6 @@ def dd_build(
     return staged.groupBy(*group_cols, "bkt").agg(F.count("*").alias("cnt"))
 
 
-def dd_merge(*bucket_tables: DataFrame) -> DataFrame:
-    """DD(A ⊎ B) = bucket-wise counter sum — shard/crawl-batch
-    sketches fold without rescanning (save_sketch/load_sketch work
-    unchanged on the bucket table)."""
-    out = bucket_tables[0]
-    for t in bucket_tables[1:]:
-        out = out.unionByName(t)
-    keys = [c for c in out.columns if c != "cnt"]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
-
-
 def dd_quantiles(
     sketch: DataFrame,
     qs: Sequence[float],
@@ -547,38 +488,3 @@ def dd_quantiles(
         "n_buckets",
         F.floor(est * 1e6 + F.lit(0.5)).cast("long").alias("est6"),
     )
-
-
-# ---------------------------------------------------- persistence
-
-
-def save_sketch(df: DataFrame, path: str) -> None:
-    """Persist a register table (HLL), counter table (CMS) or bucket
-    table (DD) as parquet — the artifact a recurring crawl job reloads
-    before each batch: load prior sketch, build this batch's,
-    hll_merge / cms_merge / dd_merge, save back. The tables are
-    bounded (<= m rows per group / <= d*w rows) so the write is
-    trivially small.
-
-    The fold saves back TO THE PATH IT LOADED FROM, so the plan is
-    cut with localCheckpoint first — overwrite-writing a lazy plan
-    that still reads the target path throws Spark's 'Cannot
-    overwrite a path that is also being read from'. The write itself
-    goes to a temp sibling then renames into place: mode('overwrite')
-    deletes the target BEFORE the job commits, so a mid-save crash
-    would otherwise lose the accumulated sketch — with the rename, a
-    crash leaves either the old sketch intact or the new one
-    complete. (Local-FS rename; on an object store use the committer
-    instead.)"""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "._tmp"
-    df.localCheckpoint(eager=True).write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
-
-
-def load_sketch(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)

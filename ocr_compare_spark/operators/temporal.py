@@ -87,8 +87,8 @@ def asof_join(
     suffix: str = "_r",
 ) -> DataFrame:
     """As-of join (left outer): every ``left`` row gains the payload of
-    the nearest ``right`` row at-or-before it (backward) / at-or-after
-    it (forward) per key, or NULLs when no right row qualifies.
+    the nearest ``right`` row at-or-before it per key, or NULLs when
+    no right row qualifies.
 
     - ``on``: equality key column name(s), same names on both sides.
     - ``payload``: right columns to attach (default: every right
@@ -98,15 +98,16 @@ def asof_join(
       ``right_ts+suffix``.
     - ``tolerance_us``: max |left_ts - matched_ts| in microseconds;
       matches farther away become NULLs (the row is kept).
+    - ``direction``: only ``"backward"`` is supported; any other
+      value raises ``ValueError``.
     - ``tiebreak``: numeric right column ordering duplicates at equal
-      (key, ts) — backward keeps the largest, forward the smallest.
+      (key, ts) — the largest wins.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    if direction != "backward":
+        raise ValueError(f"direction must be backward, got {direction!r}")
     keys = [on] if isinstance(on, str) else list(on)
     if payload is None:
         payload = [c for c in right.columns if c not in keys and c != right_ts]
-    sign = 1 if direction == "backward" else -1
 
     # right side: slim (keys, sort cols, payload struct) — the only
     # extra width the shuffle pays beyond the left table itself.
@@ -121,9 +122,9 @@ def asof_join(
     tb = F.col(tiebreak).cast("long") if tiebreak is not None else F.lit(0).cast("long")
     r = right.select(
         *[F.col(k) for k in keys],
-        (F.lit(sign) * _micros(right_ts)).alias("_sort_us"),
+        _micros(right_ts).alias("_sort_us"),
         F.lit(0).alias("_side"),
-        (F.lit(sign) * tb).alias("_tb"),
+        tb.alias("_tb"),
         r_struct.alias("_r"),
     )
     struct_t = r.schema["_r"].dataType
@@ -131,7 +132,7 @@ def asof_join(
     left_data = [c for c in left.columns if c not in keys]
     l = left.select(
         *[F.col(k) for k in keys],
-        (F.lit(sign) * _micros(left_ts)).alias("_sort_us"),
+        _micros(left_ts).alias("_sort_us"),
         F.lit(1).alias("_side"),
         F.lit(_LONG_MAX).alias("_tb"),
         F.lit(None).cast(struct_t).alias("_r"),
@@ -156,8 +157,7 @@ def asof_join(
         .filter(F.col("_side") == 1)
     )
 
-    lm = _micros(left_ts)
-    dist = (lm - F.col("_m._match_us")) if direction == "backward" else (F.col("_m._match_us") - lm)
+    dist = _micros(left_ts) - F.col("_m._match_us")
     ok = F.col("_m").isNotNull()
     if tolerance_us is not None:
         ok = ok & (dist <= F.lit(int(tolerance_us)))

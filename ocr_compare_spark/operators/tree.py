@@ -12,9 +12,9 @@ lexicographically-ordered array of block structs keyed by
 ``depth`` and ``page_span`` alongside. Parents are prefixes of their
 children's paths — O(1) to derive, no recursion in the plan.
 
-Pages carry width/height (reference Page.width/height,
-ocr_schema.py:170-187) when a pages_meta table is supplied (PDF
-MediaBox dims; HTML pages have none).
+Pages keep the reference's width/height slots (Page.width/height,
+ocr_schema.py:170-187) as NULL; the PDF MediaBox dims are the rows
+of :func:`explode_pages_meta`.
 
 Scale shape: one repartition on (url, engine) up front, then every
 groupBy key is a superset prefix — the whole cascade is
@@ -100,7 +100,7 @@ def explode_pages_meta(results: DataFrame) -> DataFrame:
     ).select("url", "engine", "m.page_no", "m.width", "m.height")
 
 
-def to_tree(spans: DataFrame, pages_meta: DataFrame | None = None) -> DataFrame:
+def to_tree(spans: DataFrame) -> DataFrame:
     """span rows -> (url, engine, document) where document is the
     nested struct  pages: array<struct<page_no, width, height,
     blocks: array<struct<block_path, block_no, depth, block_type,
@@ -412,16 +412,12 @@ def to_tree(spans: DataFrame, pages_meta: DataFrame | None = None) -> DataFrame:
         ),
     )
     pages = pages.withColumn("page_bbox", page_bbox)
-    if pages_meta is not None:
-        pages = pages.join(pages_meta, base + ["page_no"], "left")
-    else:
-        pages = pages.withColumn("width", F.lit(None).cast("double")).withColumn(
-            "height", F.lit(None).cast("double")
-        )
     pages = pages.withColumn(
         "page",
         F.struct(
-            F.col("page_no"), F.col("width"), F.col("height"),
+            F.col("page_no"),
+            F.lit(None).cast("double").alias("width"),
+            F.lit(None).cast("double").alias("height"),
             F.col("page_conf").alias("conf"), F.col("page_bbox").alias("bbox"),
             F.col("blocks"),
         ),

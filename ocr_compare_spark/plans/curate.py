@@ -83,7 +83,6 @@ def curate(
     decontam_min_hits: int = 1,
     sample_rate: float | None = None,
     token_budget: int | None = None,
-    num_partitions: int | None = None,
     blocked_domains: tuple[str, ...] = (),
     blocked_patterns: tuple[str, ...] = (),
     max_cross_entropy: float | None = None,
@@ -121,8 +120,7 @@ def curate(
     from ocr_compare_spark.operators.extract import run_engines_fused
     from ocr_compare_spark.operators.winner import pick_winner
 
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    num_partitions = spark.sparkContext.defaultParallelism
 
     pages = synth.pages_from_documents(spark, input_dir)
     n_in = pages.count()

@@ -30,7 +30,7 @@ crawl batch.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ocr_compare_spark.operators.dedup import latest_snapshot
 from ocr_compare_spark.sources.cache import cached_extract

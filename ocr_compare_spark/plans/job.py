@@ -38,7 +38,6 @@ def build_and_run(
     output_dir: str | None,
     replicate: int = 1,
     with_alignment: bool = True,
-    with_spans: bool = False,
     num_partitions: int | None = None,
     cache_dir: str | None = None,
     force_refresh: bool = False,
@@ -115,9 +114,9 @@ def build_and_run(
             return_fresh=True,
         )
     else:
-        results = run_engines_fused(pages, with_spans=with_spans, num_partitions=num_partitions)
-        if not with_spans:
-            results = results.drop("spans")  # all-null column: don't stage it
+        results = run_engines_fused(
+            pages, with_spans=False, num_partitions=num_partitions
+        ).drop("spans")  # all-null column: don't stage it
     observed, obs = mx.observe_extraction(results)
     observed.write.mode("overwrite").parquet(staging)
     if cache_dir:

@@ -39,12 +39,12 @@ def write_documents(
     path: str,
     id_col: str = "id",
     text_col: str = "text",
-    source_col: str | None = None,
     metadata_cols: list[str] | None = None,
     partition_by: str | None = None,
     shards_per_partition: int | None = None,
 ) -> None:
-    """Write a Dolma documents tree: gzip JSONL, one record per doc.
+    """Write a Dolma documents tree: gzip JSONL, one record per doc
+    (``source`` is NULL).
 
     ``metadata_cols`` pack into the nested ``metadata`` object (JVM
     to_json — no Python serialization). ``partition_by`` makes
@@ -55,7 +55,7 @@ def write_documents(
     out = df.select(
         F.col(id_col).cast("string").alias("id"),
         F.col(text_col).alias("text"),
-        (F.col(source_col) if source_col else F.lit(None).cast("string")).alias("source"),
+        F.lit(None).cast("string").alias("source"),
         (
             F.to_json(F.struct(*[F.col(c) for c in metadata_cols]))
             if metadata_cols
@@ -72,15 +72,11 @@ def write_documents(
     w.json(path)
 
 
-def read_documents(
-    spark: SparkSession, path: str, partition_by: str | None = None
-) -> DataFrame:
+def read_documents(spark: SparkSession, path: str) -> DataFrame:
     """Read a documents tree back. Explicit schema (no inference
-    scan); Hive partition columns come back from the directory names."""
-    schema = DOCUMENTS_SCHEMA
-    if partition_by:
-        schema = schema.add(T.StructField(partition_by, T.StringType(), True))
-    return spark.read.schema(schema).json(path)
+    scan); Spark's partition discovery appends the Hive partition
+    columns from the directory names."""
+    return spark.read.schema(DOCUMENTS_SCHEMA).json(path)
 
 
 def metadata_field(df: DataFrame, field: str, dtype: str = "string") -> DataFrame:

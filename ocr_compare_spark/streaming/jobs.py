@@ -4,8 +4,8 @@ The reference is strictly batch (SURVEY.md §2.9) — one document per
 call, no watermarks or state. What the north_rule needs is
 *resumability*, which batch-with-manifest covers
 (sources/checkpoint.py). This module adds the streaming expression
-of the same pipeline for incremental ingest, plus the standard
-event-stream operators, because a web-scale crawl table grows
+of the same pipeline for incremental ingest, plus stateful dedup
+across micro-batches, because a web-scale crawl table grows
 continuously:
 
 - ``extraction_stream``: file-source stream over the pages table ->
@@ -14,8 +14,6 @@ continuously:
   Spark's own streaming checkpoints — each micro-batch is committed
   or re-run as a unit, so a killed job resumes without duplicates
   (the streaming twin of the per-partition manifest).
-- ``windowed_event_counts``: tumbling event-time window + watermark.
-- ``sessionize_stream``: session windows via ``session_window``.
 - ``first_seen_stream``: first document per content hash across
   micro-batches, on explicit per-key state.
 """
@@ -54,64 +52,13 @@ def extraction_stream(
     )
 
 
-def windowed_event_counts(events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """Tumbling event-time window aggregation with late-data bound.
-    Works on both batch and streaming DataFrames (same plan)."""
-    ts = F.col("ts").cast("timestamp")
-    return (
-        events.withColumn("ts", ts)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def sessionize_stream(events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
-    """Gap-based session windows (session_window) — the streaming
-    native form of the batch lag+cumsum sessionization."""
-    ts = F.col("ts").cast("timestamp")
-    return (
-        events.withColumn("ts", ts)
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("sess.start").alias("sess_start"),
-            F.col("sess.end").alias("sess_end"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def dedup_stream(pages_stream: DataFrame, watermark: str | None = None) -> DataFrame:
-    """Streaming exact dedup on the content hash — Spark-native
-    stateful dropDuplicates (state = one key per distinct content,
-    exactly the cache key of cached_ocr_executor.py:203-231). With a
-    watermark the state is bounded for unbounded streams; without,
-    it is the exact global dedup for AvailableNow backfills."""
-    keyed = pages_stream.withColumn("content_hash", F.md5(F.col("html")))
-    if watermark:
-        keyed = keyed.withWatermark("warc_ts", watermark)
-        return keyed.dropDuplicatesWithinWatermark(["content_hash"])
-    return keyed.dropDuplicates(["content_hash"])
-
-
 def first_seen_stream(pages_stream: DataFrame, hash_col: str = "html") -> DataFrame:
     """Custom stateful operator via applyInPandasWithState (the
     escape hatch for semantics the built-ins can't express): emit
     only the FIRST document seen per content hash ACROSS micro-
     batches, carrying a per-key boolean state. Functionally the
-    streaming twin of the result cache's skip path — kept alongside
-    dedup_stream to exercise explicit GroupState plumbing.
+    streaming twin of the result cache's skip path, on explicit
+    GroupState plumbing.
 
     ``hash_col`` picks the content column to dedup on (binary or
     string). WHICH member row is emitted per key follows arrival

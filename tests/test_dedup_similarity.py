@@ -421,27 +421,6 @@ def test_auto_sign_bits_dim_clamp():
     assert dedup.auto_sign_bits(10**6, dim=64) > 4
 
 
-def test_embed_near_dups_hints_skip_sizing_jobs(vectors):
-    """n/dim hints must make the auto path run ZERO Spark jobs at
-    plan-build time (on a derived input, count()/first() re-run the
-    whole upstream plan) and still match the pinned-bits result."""
-    df, mat = vectors
-    sc = df.sparkSession.sparkContext
-    sc.setJobGroup("embed_hints", "no jobs expected at plan build")
-    try:
-        out = dedup.embed_near_dups(
-            df, threshold=0.9, n=len(mat), dim=mat.shape[1], target_block_size=1 << 30
-        )
-        ids = sc.statusTracker().getJobIdsForGroup("embed_hints")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(ids) == []
-    # huge target block -> auto sizes to the 4-bit floor = the pinned run
-    want = {tuple(r) for r in dedup.embed_near_dups(df, threshold=0.9, sign_bits=4).collect()}
-    got = {tuple(r) for r in out.collect()}
-    assert got == want
-
-
 def test_connected_components_cliques_and_chain(spark):
     """Near-dup clustering: cliques collapse to min-id components and
     a CHAIN (diameter 3 — worse than LSH banding ever produces)
@@ -500,10 +479,9 @@ def test_paragraph_dedup_keep_first(spark):
     assert out[4]["text"] == "unique doc four"
 
 
-def test_paragraph_dedup_drop_all_and_blank_safety(spark):
-    # keep_first=False: every copy of a duplicated paragraph goes
-    # (Dolma boilerplate removal); blank/whitespace paragraphs are
-    # NEVER treated as cross-doc duplicates
+def test_paragraph_dedup_blank_safety(spark):
+    # blank/whitespace paragraphs are NEVER treated as cross-doc
+    # duplicates; the repeated "same" survives only in doc 1
     rows = [
         (1, "same\n\n\n\nkeep a"),   # middle paragraph is empty
         (2, "same\n\n \n\nkeep b"),  # middle paragraph is a space
@@ -516,9 +494,9 @@ def test_paragraph_dedup_drop_all_and_blank_safety(spark):
     df = spark.createDataFrame(rows, "id int, text string")
     out = {
         r["id"]: r.asDict()
-        for r in dedup.paragraph_dedup(df, "id", "text", keep_first=False).collect()
+        for r in dedup.paragraph_dedup(df, "id", "text").collect()
     }
-    assert out[1]["text"] == "\n\nkeep a" and out[1]["n_dropped"] == 1
+    assert out[1]["text"] == "same\n\n\n\nkeep a" and out[1]["n_dropped"] == 0
     assert out[2]["text"] == " \n\nkeep b" and out[2]["n_dropped"] == 1
     assert out[3]["text"] == "only here" and out[3]["n_dropped"] == 0
     assert out[4]["text"] == "\t\n\nkeep c" and out[4]["n_dropped"] == 1
@@ -980,18 +958,17 @@ def test_d4_prune_semantics(spark):
 
 
 def test_d4_prune_data_matches_literal_and_cut_exact(spark, sf_dir):
-    """The data path (broadcast GEMM assignment) yields the same d4
-    decision set as the literal path at the gate config, and the
-    per-cell pruned count is exactly floor(round6(frac * n_cell))."""
+    """The semdedup data path (broadcast GEMM assignment) yields the
+    same semdedup decision set d4_prune builds on at the gate config,
+    and the per-cell pruned count is exactly
+    floor(round6(frac * n_cell))."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     lit_ = dedup.d4_prune(emb, threshold=0.3, proto_frac=0.15).collect()
     data = {
-        (r.id, r.cell, r.kept, r.proto_rank, r.d4_kept)
-        for r in dedup.d4_prune(
-            emb, threshold=0.3, proto_frac=0.15, method="data"
-        ).collect()
+        (r.id, r.cell, r.kept)
+        for r in dedup.semdedup(emb, threshold=0.3, method="data").collect()
     }
-    assert {(r.id, r.cell, r.kept, r.proto_rank, r.d4_kept) for r in lit_} == data
+    assert {(r.id, r.cell, r.kept) for r in lit_} == data
     by_cell: dict = {}
     for r in lit_:
         if r.kept:

@@ -24,10 +24,10 @@ def test_documents_roundtrip(spark, sf_dir, tmp_path):
     d = _docs(spark, sf_dir)
     path = str(tmp_path / "docs")
     jsonl.write_documents(
-        d, path, id_col="doc_id", source_col="source",
+        d, path, id_col="doc_id",
         metadata_cols=["n_chars"], partition_by="lang", shards_per_partition=2,
     )
-    back = jsonl.read_documents(spark, path, partition_by="lang")
+    back = jsonl.read_documents(spark, path)
     assert back.count() == d.count()
     # text round-trips byte-exactly, lang comes from the dir name
     orig = {(str(r.doc_id)): (r.text, r.lang) for r in d.collect()}
@@ -70,7 +70,7 @@ def test_curate_dolma_export(spark, sf_dir, tmp_path):
     dpath = str(tmp_path / "dolma")
     m = curate(spark, sf_dir, None, min_quality=0.0, min_tokens=1,
                jaccard_threshold=0.8, dolma_out=dpath)
-    back = jsonl.read_documents(spark, dpath, partition_by="lang")
+    back = jsonl.read_documents(spark, dpath)
     assert back.count() == m["docs_out"] > 0
     # ids are urls, text is the winner doc_text, metadata is typed
     assert back.filter(~F.col("id").startswith("https://")).count() == 0

@@ -1,5 +1,7 @@
 """Reach guard: every top-level library name must be called, directly or
-transitively, from the driver entry, a benchmark or a tool.
+transitively, from the driver entry, a benchmark or a tool; every
+branch-selecting parameter must be turned by one of those callers; and
+no library module imports a name it never uses.
 
 Roots are the code identifiers of the non-test corpus (``__spark_entry__.py``,
 ``bench.py``, ``bench_extra.py``, ``loopbench/``, ``tools/``) plus those of
@@ -13,8 +15,17 @@ Names resolve by identifier, not by module: a live definition keeps any
 same-named definition elsewhere alive, never the reverse, so the guard
 can miss dead code but never flags live code. Names only tests reach are
 deleted with their tests, or listed in KEEP with the reason they stay.
-DEFERRED lists unreached names that still stand with their tests; they
-are the next deletions, and the guard keeps the list from going stale.
+
+The parameter rule looks inside every top-level library ``def``: a
+defaulted parameter read by the test of an ``if``/``elif``/ternary/
+``while`` in its body selects a code path. It counts as set when some
+root or library call (resolved by bare name, as above) passes it a
+value other than its default, by keyword or by position; any
+non-literal argument counts as set, and so does a call with ``*args``
+or ``**kwargs``. A test that only does ``isinstance(p, ...)``
+normalizes a type and selects nothing. A parameter no caller sets
+selects a path no caller takes: the parameter goes, with that path,
+or it is listed in KNOB_KEEP with the reason it stays.
 """
 
 from __future__ import annotations
@@ -45,16 +56,11 @@ KEEP = {
     "read_documents": "reads back what the live write_documents writes (curate's Dolma export)",
 }
 
-DEFERRED = {
-    "cms_merge": "CMS shard fold, pinned equal to a build over the union",
-    "dd_merge": "DDSketch shard fold, pinned equal to a build over the union",
-    "save_sketch": "crash-safe sketch persistence for the cross-crawl fold",
-    "load_sketch": "reads back what save_sketch writes",
-    "windowed_event_counts": "tumbling event-time windows over the events table",
-    "sessionize_stream": "gap-based session windows over the events table",
-    "dedup_stream": "streaming content-hash dedup, pinned equal to the batch dedup",
-    "detect_edges": "the reference's Canny edge pass, which scan_documents does not run",
-    "postings": "the (term, id, tf) inverted-index table",
+KNOB_KEEP = {
+    "extract_links.with_anchor_text": "the driver entry passes False; True raises ValueError",
+    "asof_join.direction": "the driver entry passes 'backward'; any other value raises ValueError",
+    "pairwise_compare.num_partitions": "bench.py passes None; whether compare takes a width "
+    "setting is open on the core-loop performance work",
 }
 
 
@@ -129,9 +135,8 @@ def _closure(start, edges):
 
 def _unreached_names():
     """(unreached, stale): unreached maps each top-level library name
-    no root reaches to its file:line sites; stale holds the KEEP and
-    DEFERRED names that are gone or that a root reaches without the
-    exemption."""
+    no root reaches to its file:line sites; stale holds the KEEP names
+    that are gone or that a root reaches without the exemption."""
     roots: set[str] = set()
     for f in _files(TRAFFIC):
         tree = _parse(f)
@@ -151,7 +156,7 @@ def _unreached_names():
             for name in names:
                 edges.setdefault(name, set()).update(body)
                 where.setdefault(name, []).append(f"{f.relative_to(ROOT)}:{node.lineno}")
-    exempt = set(KEEP) | set(DEFERRED)
+    exempt = set(KEEP)
     reached = _closure(roots | exempt, edges)
     unreached = {n: w for n, w in where.items() if n not in reached}
     # an exempt name some root reaches without the exemption is stale
@@ -166,4 +171,191 @@ def test_every_library_name_is_reached():
             "library names no query, benchmark or tool reaches (delete them or add to KEEP):\n"
             + "\n".join(f"  {n}  {', '.join(w)}" for n, w in sorted(unreached.items()))
         )
-    assert not stale, f"stale KEEP/DEFERRED entries (gone, or reached without them): {sorted(stale)}"
+    assert not stale, f"stale KEEP entries (gone, or reached without them): {sorted(stale)}"
+
+
+# ------------------------------------------------------------ parameters
+
+_NOT_LITERAL = object()
+
+
+def _literal(node):
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return _NOT_LITERAL
+
+
+def _is_default(value, default):
+    if ast.dump(value) == ast.dump(default):
+        return True
+    lit = _literal(value)
+    return lit is not _NOT_LITERAL and lit == _literal(default)
+
+
+def _knobs(fn):
+    """{param: (default node, positional index or None)} for each
+    defaulted parameter of ``fn`` that a branch test in its body reads
+    other than as the first argument of ``isinstance``."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaults = dict(zip([p.arg for p in pos[len(pos) - len(a.defaults):]], a.defaults))
+    defaults.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    tested = set()
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.If, ast.IfExp, ast.While)):
+            typed = {
+                id(c.args[0])
+                for c in ast.walk(node.test)
+                if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+                and c.func.id == "isinstance" and c.args
+            }
+            tested |= {
+                n.id for n in ast.walk(node.test)
+                if isinstance(n, ast.Name) and n.id in defaults and id(n) not in typed
+            }
+    index = {p.arg: i for i, p in enumerate(pos)}
+    return {p: (defaults[p], index.get(p)) for p in tested}
+
+
+def _unset_knobs(library, callers):
+    """{"def.param": [where, ...]} for every knob of a top-level def in
+    ``library`` that no call in ``callers`` sets. Both are lists of
+    (label, parsed module)."""
+    knobs: dict[str, list] = {}
+    for label, tree in library:
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                k = _knobs(node)
+                if k:
+                    knobs.setdefault(node.name, []).append((f"{label}:{node.lineno}", k))
+    set_: set[tuple[str, str]] = set()
+    for _, tree in callers:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            if name not in knobs:
+                continue
+            star = any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            for _, k in knobs[name]:
+                for param, (default, idx) in k.items():
+                    passed = [kw.value for kw in call.keywords if kw.arg == param]
+                    if idx is not None and idx < len(call.args):
+                        passed.append(call.args[idx])
+                    if star or any(not _is_default(v, default) for v in passed):
+                        set_.add((name, param))
+    return {
+        f"{name}.{param}": [where]
+        for name, defs in knobs.items()
+        for where, k in defs
+        for param in k
+        if (name, param) not in set_
+    }
+
+
+def _knob_findings(library, callers, keep):
+    """(flagged, stale): flagged maps each unset knob outside ``keep``
+    to its sites; stale holds the ``keep`` entries that are not unset
+    knobs (set by a caller, no longer a branch test, or gone)."""
+    unset = _unset_knobs(library, callers)
+    return {k: w for k, w in unset.items() if k not in keep}, sorted(set(keep) - set(unset))
+
+
+def _labelled(paths):
+    return [(str(f.relative_to(ROOT)), _parse(f)) for f in _files(paths)]
+
+
+def test_every_knob_is_turned():
+    library = _labelled([LIBRARY])
+    flagged, stale = _knob_findings(library, _labelled(TRAFFIC) + library, KNOB_KEEP)
+    if flagged:
+        pytest.fail(
+            "library parameters that select a branch no query, benchmark or tool takes "
+            "(delete them with their branch or add to KNOB_KEEP):\n"
+            + "\n".join(f"  {k}  {', '.join(w)}" for k, w in sorted(flagged.items()))
+        )
+    assert not stale, f"stale KNOB_KEEP entries (set by a caller, or not a knob): {stale}"
+
+
+_KNOB_LIB = """
+def f(x, mode="a"):
+    if mode == "b":
+        return 1
+    return 0
+
+
+def g(on=None):
+    if isinstance(on, str):
+        on = [on]
+    return on
+"""
+
+
+def _findings(callers, keep=()):
+    return _knob_findings(
+        [("lib", ast.parse(_KNOB_LIB))], [("caller", ast.parse(callers))], dict.fromkeys(keep, "")
+    )
+
+
+def test_knob_rule_flags_an_unset_branch_parameter():
+    flagged, stale = _findings("f(1)\nf(2, mode='a')\nf(3, 'a')\ng()\n")
+    assert set(flagged) == {"f.mode"} and not stale
+
+
+def test_knob_rule_skips_isinstance_normalization():
+    flagged, _ = _findings("g()\nf(1, mode='b')\n")
+    assert "g.on" not in flagged and not flagged
+
+
+@pytest.mark.parametrize(
+    "call",
+    ["f(1, mode=m)", "f(1, m)", "f(1, 'b')", "f(*args)", "f(1, **kw)"],
+    ids=["keyword-name", "positional-name", "positional-literal", "star-args", "star-kwargs"],
+)
+def test_knob_rule_counts_a_non_default_argument_as_set(call):
+    flagged, _ = _findings(call + "\n")
+    assert not flagged
+
+
+def test_knob_rule_fails_a_stale_keep_entry():
+    _, stale = _findings("f(1, mode='b')\n", keep=["f.mode", "h.gone"])
+    assert stale == ["f.mode", "h.gone"]
+    _, stale = _findings("f(1)\n", keep=["f.mode"])
+    assert not stale
+
+
+# --------------------------------------------------------------- imports
+
+
+def _unused_imports(label, tree, lines):
+    """label:line names a module imports and never reads (``__future__``
+    and lines marked ``noqa: F401`` — re-exports — aside)."""
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if "noqa: F401" in lines[node.lineno - 1]:
+            continue
+        for alias in node.names:
+            bound = alias.asname or alias.name.split(".")[0]
+            if bound not in used:
+                out.append(f"{label}:{node.lineno} {bound}")
+    return out
+
+
+def test_library_has_no_unused_imports():
+    found = [
+        hit
+        for f in _files([LIBRARY])
+        for hit in _unused_imports(
+            str(f.relative_to(ROOT)), _parse(f), f.read_text(encoding="utf-8").splitlines()
+        )
+    ]
+    assert not found, "unused imports:\n" + "\n".join(found)

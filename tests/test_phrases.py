@@ -54,17 +54,12 @@ def test_pmi_matches_mirror(spark):
     assert ("busy", "the") not in pairs
 
 
-def test_min_count_and_hint(spark):
+def test_min_count(spark):
     df = spark.createDataFrame([(d,) for d in DOCS], ["text"])
-    n_true = sum(len(re.findall("[a-z0-9]+", d.lower())) for d in DOCS)
     rows = lambda r: [(x.rank, x.w1, x.w2, x.c_ab, x.pmi6) for x in r]  # noqa: E731
-    with_hint = rows(pmi_phrases(df, "text", min_count=4, k=50, n_tokens=n_true).collect())
-    # the TRUE-total hint must reproduce the default (computed) path
-    # bit-for-bit — pmi6 included, so a hint that is ignored or
-    # misapplied fails here
-    default = rows(pmi_phrases(df, "text", min_count=4, k=50).collect())
-    assert with_hint == default == py_pmi_phrases(DOCS, 4, 50)
+    got = rows(pmi_phrases(df, "text", min_count=4, k=50).collect())
+    assert got == py_pmi_phrases(DOCS, 4, 50)
     # only the pairs seen >= 4 times corpus-wide survive min_count=4:
     # (a1,b2) x4 in the repeat doc, (new,york) x4 across docs 0/2/3
-    assert {(w1, w2) for _, w1, w2, _, _ in with_hint} == {("a1", "b2"), ("new", "york")}
-    assert all(c >= 4 for _, _, _, c, _ in with_hint)
+    assert {(w1, w2) for _, w1, w2, _, _ in got} == {("a1", "b2"), ("new", "york")}
+    assert all(c >= 4 for _, _, _, c, _ in got)

@@ -43,21 +43,6 @@ def test_hash_sample_rate_monotone_nested(spark, sf_dir):
     assert small < big  # thresholding the same hash nests samples
 
 
-def test_hash_sample_per_stratum_rates(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    langs = [r.lang for r in d.select("lang").distinct().collect()]
-    assert len(langs) >= 2
-    keep_all, keep_none = langs[0], langs[1]
-    out = sampling.hash_sample(
-        d, "doc_id", 0.5, strata_col="lang",
-        rates={keep_all: 1.0, keep_none: 0.0},
-    )
-    counts = {r.lang: r.n for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    in_counts = {r.lang: r.n for r in d.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert counts[keep_all] == in_counts[keep_all]
-    assert keep_none not in counts
-
-
 def test_token_budget_prefix_semantics(spark, sf_dir):
     d = _docs(spark, sf_dir)
     budget = 2000
@@ -125,16 +110,19 @@ def test_token_budget_bucketed_prunes_dead_buckets(spark, sf_dir):
 
 
 def test_shard_assignment_bucketed_equals_exact(spark, sf_dir):
+    # the bucketed prefix sum equals the one-window exact prefix of
+    # token_budget_sample under an unbounded budget, and the shard is
+    # the start offset's floor division
     d = _docs(spark, sf_dir)
-    kw = dict(tokens_per_shard=5000, priority_col="prio", id_col="doc_id")
-    exact = sampling.assign_token_shards(
-        d, "lang", "token_count", method="exact", **kw
-    ).orderBy("doc_id").collect()
+    exact = sampling.token_budget_sample(
+        d, "lang", "token_count", 10**15, "prio", "doc_id"
+    ).collect()
+    want = {r.doc_id: (r.cum_tokens, (r.cum_tokens - r.token_count) // 5000) for r in exact}
     bucketed = sampling.assign_token_shards(
-        d, "lang", "token_count", method="bucketed", **kw
-    ).orderBy("doc_id").collect()
-    assert exact == bucketed  # incl. cum_tokens AND shard
-    assert len(exact) == d.count()  # sharding drops nothing
+        d.repartition(7), "lang", "token_count", 5000, "prio", "doc_id"
+    ).collect()
+    assert {r.doc_id: (r.cum_tokens, r.shard) for r in bucketed} == want
+    assert len(bucketed) == d.count()  # sharding drops nothing
 
 
 def test_shard_packing_properties(spark, sf_dir):
@@ -187,8 +175,8 @@ def test_write_token_shards_one_file_per_shard(spark, sf_dir, tmp_path):
 
 def test_cap_per_key_domain_balancing(spark):
     """Per-key row cap == the deterministic (priority, id)-first
-    prefix: bucketed == exact == a driver-side replay; skewed keys
-    are cut to the cap, small keys untouched, layout-invariant."""
+    prefix: equal to a driver-side replay; skewed keys are cut to
+    the cap, small keys untouched, layout-invariant."""
     import pyspark.sql.functions as F
 
     from ocr_compare_spark.operators.sampling import cap_per_key, hash_frac
@@ -218,9 +206,9 @@ def test_cap_per_key_domain_balancing(spark):
         want = sorted(sorted(ids, key=lambda i: (fr[i], i))[:n])
         assert by_dom[dom] == want, dom
 
-    # exact path + partition layout invariance
-    exact = cap_per_key(df.repartition(13), "domain", 10, "id", method="exact")
-    assert {r["id"] for r in exact.select("id").collect()} == {
+    # partition layout invariance
+    relaid = cap_per_key(df.repartition(13), "domain", 10, "id")
+    assert {r["id"] for r in relaid.select("id").collect()} == {
         r["id"] for r in got.select("id").collect()
     }
     assert got.columns == df.columns  # helper columns dropped
@@ -356,11 +344,6 @@ def test_unimax_sample_matches_manual_prefix(spark, sf_dir):
     assert set(per_lang_cum) == set(budgets)
     assert all(per_lang_cum[l] <= budgets[l] for l in per_lang_cum)
     assert budgets["en"] < int(weights["en"] * epochs)  # budget-limited
-    # exact (non-bucketed) path identical
-    out2 = sampling.unimax_sample(
-        d, "lang", "token_count", "doc_id", total, epochs, bucketed=False
-    ).collect()
-    assert {(r.lang, r.doc_id): r.cum_tokens for r in out2} == expect
 
 
 def test_pack_sequences_hand_corpus(spark):
@@ -370,9 +353,7 @@ def test_pack_sequences_hand_corpus(spark):
     mid-sequence-2 with seq_start 44."""
     rows = [("en", "a", 100, 0.1), ("en", "b", 200, 0.2), ("en", "c", 50, 0.3)]
     d = spark.createDataFrame(rows, "lang string, doc_id string, token_count int, prio double")
-    out = sampling.pack_sequences(
-        d, "lang", "token_count", 128, "prio", "doc_id", method="exact"
-    )
+    out = sampling.pack_sequences(d, "lang", "token_count", 128, "prio", "doc_id")
     got = sorted(
         (r.doc_id, r.seq_no, r.seq_start, r.tok_start, r.tok_end)
         for r in out.collect()
@@ -390,14 +371,12 @@ def test_pack_sequences_tiling_and_methods(spark, sf_dir):
     """Corpus-level invariants: per (lang, seq_no) the segments tile
     [0, seq_len) exactly (every sequence but the stratum-last is
     full, no gaps, no overlaps), per doc the tok slices tile
-    [0, token_count), zero-token docs drop, bucketed == exact, and
+    [0, token_count), zero-token docs drop, the bucketed prefix sum
+    equals the exact one-window prefix of token_budget_sample, and
     the packing is partition-layout invariant."""
     L = 256
     d = _docs(spark, sf_dir)
-    exact = sampling.pack_sequences(
-        d, "lang", "token_count", L, "prio", "doc_id", method="exact"
-    )
-    rows = exact.collect()
+    rows = sampling.pack_sequences(d, "lang", "token_count", L, "prio", "doc_id").collect()
     assert rows and all(r.token_count > 0 for r in rows)
 
     # per-sequence tiling: sort segments by seq_start; each begins
@@ -431,15 +410,16 @@ def test_pack_sequences_tiling_and_methods(spark, sf_dir):
             assert a.tok_end == b.tok_start and b.seq_no == a.seq_no + 1
         assert segs[-1].tok_end == segs[0].token_count
 
+    exact = sampling.token_budget_sample(
+        d.filter(F.col("token_count") > 0), "lang", "token_count", 10**15, "prio", "doc_id"
+    )
+    assert {(r.doc_id, r.cum_tokens) for r in rows} == {
+        (r.doc_id, r.cum_tokens) for r in exact.collect()
+    }
     key = lambda r: (r.lang, r.doc_id, r.seq_no, r.seq_start, r.tok_start, r.tok_end, r.cum_tokens)
     want = sorted(key(r) for r in rows)
-    bucketed = sampling.pack_sequences(
-        d, "lang", "token_count", L, "prio", "doc_id",
-        method="bucketed", n_buckets=32, checkpoint=False,
-    )
-    assert sorted(key(r) for r in bucketed.collect()) == want
     relaid = sampling.pack_sequences(
-        d.repartition(13), "lang", "token_count", L, "prio", "doc_id", method="exact"
+        d.repartition(13), "lang", "token_count", L, "prio", "doc_id"
     )
     assert sorted(key(r) for r in relaid.collect()) == want
 
@@ -447,9 +427,7 @@ def test_pack_sequences_tiling_and_methods(spark, sf_dir):
 def test_pack_sequences_drops_zero_token_docs(spark):
     rows = [("en", "a", 0, 0.1), ("en", "b", 10, 0.2)]
     d = spark.createDataFrame(rows, "lang string, doc_id string, token_count int, prio double")
-    out = sampling.pack_sequences(
-        d, "lang", "token_count", 8, "prio", "doc_id", method="exact"
-    ).collect()
+    out = sampling.pack_sequences(d, "lang", "token_count", 8, "prio", "doc_id").collect()
     assert {r.doc_id for r in out} == {"b"}
     assert sorted((r.seq_no, r.seq_start, r.tok_start, r.tok_end) for r in out) == [
         (0, 0, 0, 8), (1, 0, 8, 10)

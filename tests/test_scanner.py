@@ -83,21 +83,6 @@ def test_output_dims_match_reference_int_truncation():
     assert h == int(max(np.hypot(2, 40), np.hypot(1, 40)))
 
 
-def test_canny_edges_ring_the_document():
-    img = decode_image(synth.scan_payload_bytes(11))
-    edges = scanner.detect_edges(img)
-    assert set(np.unique(edges)) <= {0, 255}
-    # edges exist, and only near intensity transitions (not in the
-    # flat background corner)
-    assert (edges > 0).sum() > 50
-    assert edges[:3, :3].max() == 0
-
-
-def test_canny_flat_image_has_no_edges():
-    flat = np.full((32, 32), 128, dtype=np.uint8)
-    assert scanner.canny(flat).max() == 0
-
-
 def test_find_quad_rejects_flat_and_tiny():
     assert scanner.find_document_quad(np.full((20, 20), 50.0)) is None
     spot = np.full((20, 20), 10.0)

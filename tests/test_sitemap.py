@@ -46,17 +46,6 @@ def test_generate_parse_roundtrip(spark):
     )
     back = [r.loc for r in sitemap.parse_sitemap(df).orderBy("loc").collect()]
     assert back == sorted(urls)
-    # with aligned lastmods (one null)
-    df2 = spark.createDataFrame(
-        [(urls, ["2026-01-01", None, "2026-03-03"])],
-        "urls array<string>, lm array<string>",
-    ).select(sitemap.sitemap_xml(F.col("urls"), F.col("lm")).alias("sitemap_xml"))
-    got = {(r.loc, r.lastmod) for r in sitemap.parse_sitemap(df2).collect()}
-    assert got == {
-        ("https://h/doc/1", "2026-01-01"),
-        ("https://h/p?a=1&b=<2>", None),
-        ('https://h/"q"&\'r\'', "2026-03-03"),
-    }
 
 
 @settings(max_examples=30, deadline=None)

@@ -193,32 +193,6 @@ def test_cms_one_sided_and_accurate_when_wide(spark):
         assert est[f"f{n}"] == true
 
 
-def test_cms_weighted_build(spark):
-    df = spark.createDataFrame(
-        [("a", 5), ("a", 7), ("b", 1)], "key string, w long"
-    )
-    counters = sk.cms_build(df, "key", D, W, weight_col="w")
-    est = {
-        r.key: r.est_cnt
-        for r in sk.cms_estimate(
-            df.select("key").distinct(), counters, "key", D, W
-        ).collect()
-    }
-    assert est == {"a": 12, "b": 1}
-
-
-def test_cms_merge_equals_union_build(spark):
-    a = _keys(spark, 200, "x")
-    b = _keys(spark, 150, "x")  # full overlap with a's first 150
-    ca = sk.cms_build(a, "key", D, W)
-    cb = sk.cms_build(b, "key", D, W)
-    merged = sk.cms_merge(ca, cb)
-    union = sk.cms_build(a.unionByName(b), "key", D, W)
-    got = {(r.row, r.pos): r.cnt for r in merged.collect()}
-    want = {(r.row, r.pos): r.cnt for r in union.collect()}
-    assert got == want  # counter-wise identical
-
-
 def test_cms_broadcast_path_equals_relational(spark):
     # every key lands once in each of the D rows: the counter mass is
     # D x the row count, all inside the (D, W) grid
@@ -280,32 +254,6 @@ def test_curate_profile_stage(spark, sf_dir):
     assert m2["profile"] is None
 
 
-def test_sketch_persistence_cross_crawl_fold(spark, tmp_path):
-    # the recurring-crawl composition: crawl 1 builds + saves; crawl 2
-    # loads, merges its own sketch, saves back; the folded sketch ==
-    # building over both crawls at once (exactly, for HLL and CMS)
-    p_hll = str(tmp_path / "hll")
-    p_cms = str(tmp_path / "cms")
-    c1 = _keys(spark, 300, "s")
-    c2 = _keys(spark, 260, "s")  # overlaps 260, adds 0; plus 40 new below
-    c2 = c2.unionByName(_keys(spark, 40, "new"))
-
-    sk.save_sketch(sk.hll_registers(c1, "key", (), P), p_hll)
-    sk.save_sketch(sk.cms_build(c1, "key", D, W), p_cms)
-
-    merged_h = sk.hll_merge(sk.load_sketch(spark, p_hll), sk.hll_registers(c2, "key", (), P))
-    merged_c = sk.cms_merge(sk.load_sketch(spark, p_cms), sk.cms_build(c2, "key", D, W))
-    sk.save_sketch(merged_h, str(tmp_path / "hll2"))
-
-    both = c1.unionByName(c2)
-    want_h = sk.hll_count_distinct(both, "key", (), P).first().est6
-    got_h = sk.hll_estimate(sk.load_sketch(spark, str(tmp_path / "hll2")), (), P).first().est6
-    assert got_h == want_h
-    want_c = {(r.row, r.pos): r.cnt for r in sk.cms_build(both, "key", D, W).collect()}
-    got_c = {(r.row, r.pos): r.cnt for r in merged_c.collect()}
-    assert got_c == want_c
-
-
 def test_hll_null_keys_ignored(spark):
     # a NULL key must not poison the group (md5(NULL) -> NULL _term
     # -> NULL fold); semantics match approx_count_distinct: ignored
@@ -324,36 +272,6 @@ def test_cms_null_keys_contract(spark):
     counters = sk.cms_build(df, "key", D, W)
     rel = {r.key: r.est_cnt for r in sk.cms_estimate(df.distinct(), counters, "key", D, W).collect()}
     assert rel == {"a": 2, "None": 1}  # NULL row absent; literal 'None' distinct from it
-
-
-def test_save_sketch_fold_back_to_same_path(spark, tmp_path):
-    # the documented recipe writes back TO THE PATH IT LOADED FROM —
-    # without the checkpoint inside save_sketch this throws 'Cannot
-    # overwrite a path that is also being read from'
-    p = str(tmp_path / "fold")
-    sk.save_sketch(sk.hll_registers(_keys(spark, 100, "f"), "key", (), P), p)
-    merged = sk.hll_merge(
-        sk.load_sketch(spark, p),
-        sk.hll_registers(_keys(spark, 160, "f"), "key", (), P),
-    )
-    sk.save_sketch(merged, p)  # same path: must not raise
-    want = sk.hll_count_distinct(_keys(spark, 160, "f"), "key", (), P).first().est6
-    got = sk.hll_estimate(sk.load_sketch(spark, p), (), P).first().est6
-    assert got == want
-
-
-def test_cms_heavy_hitters_confirmed_exact(spark):
-    # two-pass shape: undersized sketch (4x16 over 20 keys forces
-    # collision overestimates) -> candidates -> exact confirm pass
-    # returns EXACTLY the true heavy hitters with true counts
-    df = _freq_df(spark)
-    got = {
-        r.key: r.exact_cnt
-        for r in sk.cms_heavy_hitters(
-            df, "key", depth=4, width=16, threshold=100, confirm=True
-        ).collect()
-    }
-    assert got == {f"f{n}": n * n for n in range(10, 21)}
 
 
 # -------------------------------------------------------- DDSketch
@@ -401,16 +319,6 @@ def test_dd_relative_error_guarantee(spark):
         assert abs(est - true) <= alpha * true + 1e-6, (r.q, est, true)
 
 
-def test_dd_merge_equals_union_build_exactly(spark):
-    a = _vals(spark, [("g", float(i % 37) + 1.0) for i in range(300)])
-    b = _vals(spark, [("g", float(i % 91) * 3.5 + 1.0) for i in range(200)])
-    merged = sk.dd_merge(
-        sk.dd_build(a, "v", ("grp",)), sk.dd_build(b, "v", ("grp",))
-    )
-    union = sk.dd_build(a.unionByName(b), "v", ("grp",))
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, union.collect()))
-
-
 def test_dd_partition_invariant(spark):
     rows = [("g", float(i) + 0.5) for i in range(1, 500)]
     s1 = sk.dd_build(_vals(spark, rows, parts=1), "v", ("grp",))
@@ -435,14 +343,3 @@ def test_dd_zero_store_and_nulls(spark):
     assert min(bkts) == sk.DD_ZERO_BKT
 
 
-def test_dd_persistence_fold(spark, tmp_path):
-    path = str(tmp_path / "dd_sketch")
-    a = _vals(spark, [("g", float(i) + 1.0) for i in range(100)])
-    b = _vals(spark, [("g", float(i) * 2.0 + 1.0) for i in range(100)])
-    sk.save_sketch(sk.dd_build(a, "v", ("grp",)), path)
-    folded = sk.dd_merge(sk.load_sketch(spark, path), sk.dd_build(b, "v", ("grp",)))
-    sk.save_sketch(folded, path)
-    expect = sk.dd_build(a.unionByName(b), "v", ("grp",))
-    assert sorted(map(tuple, sk.load_sketch(spark, path).collect())) == sorted(
-        map(tuple, expect.collect())
-    )

@@ -10,11 +10,7 @@ from pyspark.sql import functions as F
 
 from ocr_compare_spark import synth
 from ocr_compare_spark.operators.multimodal import extract_media_features
-from ocr_compare_spark.streaming.jobs import (
-    extraction_stream,
-    sessionize_stream,
-    windowed_event_counts,
-)
+from ocr_compare_spark.streaming.jobs import extraction_stream
 
 
 @pytest.fixture(scope="module")
@@ -44,20 +40,6 @@ def test_extraction_stream_availablenow(spark, pages_path, tmp_path_factory):
         batch.select("url", "engine", "doc_text")
     )
     assert diff.count() == 0
-
-
-def test_windowed_counts_batch_equivalence(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = windowed_event_counts(events)
-    rows = out.collect()
-    assert rows and all(r.n > 0 for r in rows)
-    assert sum(r.n for r in rows) == events.count()
-
-
-def test_sessionize_stream_shape(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = sessionize_stream(events).collect()
-    assert out and all(r.n_events > 0 for r in out)
 
 
 def test_media_features_deterministic(spark, pages_path):
@@ -159,37 +141,6 @@ def test_first_seen_stream_stateful_dedup(spark, tmp_path):
     rows = spark.sql("SELECT * FROM first_seen_t").collect()
     hashes = [r.content_hash for r in rows]
     assert len(hashes) == len(set(hashes)) == 3  # 4 docs, 1 duplicate content
-
-
-def test_dedup_stream_matches_batch(spark, tmp_path):
-    """Native streaming dropDuplicates == batch dedup on the same
-    files (stream-batch parity for the dedup operator)."""
-    from pyspark.sql import functions as F
-
-    from ocr_compare_spark.schema import PAGES_SCHEMA
-    from ocr_compare_spark.streaming.jobs import dedup_stream
-
-    d = _two_batch_pages_dir(spark, tmp_path)
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA).option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.content_hash for r in spark.sql("SELECT * FROM dedup_t").collect()}
-    batch = {
-        r.content_hash
-        for r in spark.read.parquet(d).withColumn("content_hash", F.md5("html"))
-        .dropDuplicates(["content_hash"]).collect()
-    }
-    assert got == batch and len(got) == 3
 
 
 def test_image_codec_roundtrips():

@@ -65,8 +65,7 @@ def _pandas_asof(left, right, direction, tol_s=None):
     }
 
 
-@pytest.mark.parametrize("direction,tol", [("backward", None), ("forward", None),
-                                           ("backward", 40), ("forward", 40)])
+@pytest.mark.parametrize("direction,tol", [("backward", None), ("backward", 40)])
 def test_asof_matches_merge_asof(spark, direction, tol):
     left, right = _fixture()
     l = _mk_events(spark, left)
@@ -83,6 +82,16 @@ def test_asof_matches_merge_asof(spark, direction, tol):
         assert row.rval == ev
         if er is None:
             assert row.ts_r is None
+
+
+def test_asof_forward_direction_raises(spark):
+    # only the backward as-of join has a caller; forward is refused,
+    # not silently answered with backward matches
+    left, right = _fixture()
+    l = _mk_events(spark, left)
+    r = _mk_events(spark, right, cols=("key", "ts", "reid", "rval"))
+    with pytest.raises(ValueError):
+        asof_join(l, r, on="key", direction="forward")
 
 
 def test_asof_payload_collision_and_match_ts(spark):
