@@ -1,30 +1,7 @@
-"""Linear quality classifier (multinomial Naive Bayes) — the
-"fastText quality filter" stage of CCNet / GPT-3 / RefinedWeb-style
-pipelines: train on a high-quality reference corpus (positive) vs
-random crawl (negative), then keep pages the model scores positive.
-
-NB with Laplace smoothing IS a linear text classifier (per-token
-log-odds weights + a prior bias), which is exactly the shape the
-published pipelines use — and unlike logistic regression it trains
-in ONE distributed counting pass, no iterations.
-
-Spark shape (same scale story as operators/lm.py):
-
-- **train**: one union + ONE map-side-combined ``groupBy(token)``
-  over both corpora; totals and vocab size attach via broadcast
-  1-row aggregates (fully lazy, no driver collect); optional vocab
-  cap is a distributed top-K with a deterministic (cnt desc, token
-  asc) tie-break. The model is a ``(token, weight)`` table with the
-  OOV weight and prior bias riding along as replicated columns
-  (lm.py's ``total`` convention).
-- **score**: broadcast model join on the exploded token stream +
-  map-side-combined regroup — only (id, weight) slim rows shuffle.
-  Plan is O(1) in vocab size.
-
-Determinism contract: weights are ``round6``-ed BEFORE summation
-(floor(x*1e6+0.5)/1e6 — lm.py's cross-engine rounding), so scores
-are exact sums of 6-decimal terms and the pure-Python mirror
-(tests) reproduces them bit-for-bit.
+"""Linear quality classifier — the "quality filter" stage of GPT-3 /
+CCNet / RefinedWeb-style pipelines: train on a high-quality reference
+corpus (positive) vs random crawl (negative), then keep pages the
+model scores positive.
 """
 
 from __future__ import annotations
@@ -33,109 +10,14 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ocr_compare_spark.operators.lm import _round6, _tokens
-
-#: Laplace smoothing pseudo-count per (token, class).
-DEFAULT_ALPHA = 0.5
-
-
-def train_nb(
-    pos: DataFrame,
-    neg: DataFrame,
-    text_col: str = "text",
-    vocab_size: int | None = None,
-    alpha: float = DEFAULT_ALPHA,
-) -> DataFrame:
-    """Train on two corpora -> model table
-    ``(token, c_pos, c_neg, weight, w_oov, bias)`` where
-
-    - ``weight = round6(ln((c_pos+a)/(N_pos+a(V+1)))
-                 - ln((c_neg+a)/(N_neg+a(V+1))))``
-    - ``w_oov`` is the same with c=0 (the +1 in the denominator IS
-      the OOV bucket),
-    - ``bias = round6(ln(docs_pos / docs_neg))`` (class prior),
-    - ``N_*`` are FULL per-class token totals (pre-cap, lm.py
-      convention: capping changes what is OOV, not in-vocab weights),
-    - ``V`` is the post-cap vocab size.
-    """
-    a = float(alpha)
-    labeled = pos.select(
-        F.explode(_tokens(text_col)).alias("token"), F.lit(1).alias("y")
-    ).unionByName(
-        neg.select(F.explode(_tokens(text_col)).alias("token"), F.lit(0).alias("y"))
-    )
-    counts = labeled.groupBy("token").agg(
-        F.sum("y").alias("c_pos"),
-        (F.count("*") - F.sum("y")).alias("c_neg"),
-    )
-    totals = counts.agg(
-        F.sum("c_pos").alias("n_pos"), F.sum("c_neg").alias("n_neg")
-    )
-    if vocab_size is not None:
-        counts = counts.orderBy(
-            F.desc(F.col("c_pos") + F.col("c_neg")), F.asc("token")
-        ).limit(vocab_size)
-    vsize = counts.agg(F.count("*").alias("v"))
-    priors = pos.agg(F.count("*").alias("docs_pos")).crossJoin(
-        neg.agg(F.count("*").alias("docs_neg"))
-    )
-
-    def _lodds(cp: Column, cn: Column) -> Column:
-        dp = F.col("n_pos") + a * (F.col("v") + 1)
-        dn = F.col("n_neg") + a * (F.col("v") + 1)
-        return _round6(F.log((cp + a) / dp) - F.log((cn + a) / dn))
-
-    return (
-        counts.crossJoin(F.broadcast(totals))
-        .crossJoin(F.broadcast(vsize))
-        .crossJoin(F.broadcast(priors))
-        .select(
-            "token",
-            "c_pos",
-            "c_neg",
-            _lodds(F.col("c_pos"), F.col("c_neg")).alias("weight"),
-            _lodds(F.lit(0), F.lit(0)).alias("w_oov"),
-            _round6(F.log(F.col("docs_pos") / F.col("docs_neg"))).alias("bias"),
-        )
-    )
-
-
-def score_nb(
-    df: DataFrame,
-    model: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Score documents -> ``(id_col, n_tokens, n_oov, nb_score,
-    nb_label)`` where ``nb_score = round6(bias + sum(weight_i))``
-    (OOV tokens contribute ``w_oov``) and ``nb_label = score > 0``.
-    Broadcast model join; only slim rows shuffle."""
-    meta = F.broadcast(model.select("w_oov", "bias").limit(1))
-    toks = df.select(F.col(id_col), F.explode(_tokens(text_col)).alias("token"))
-    joined = toks.join(
-        F.broadcast(model.select("token", "weight")), "token", "left"
-    ).crossJoin(meta)
-    return (
-        joined.groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum(F.when(F.col("weight").isNull(), 1).otherwise(0)).alias("n_oov"),
-            _round6(
-                F.first("bias") + F.sum(F.coalesce(F.col("weight"), F.col("w_oov")))
-            ).alias("nb_score"),
-        )
-        .withColumn("nb_label", F.col("nb_score") > 0)
-    )
-
 
 # ---------------------------------------------------------------------------
 # Logistic regression over hashed text features (the GPT-3 recipe)
 #
 # GPT-3's Common Crawl filter was literally "a logistic regression
 # classifier" over text features, reference corpus = positive, raw
-# crawl = negative (Brown et al. 2020, App. A) — NB above covers the
-# one-pass fastText/CCNet shape; this is the iterative discriminative
-# counterpart, trained fully inside the engine.
+# crawl = negative (Brown et al. 2020, App. A); this is that discriminative
+# model, trained fully inside the engine.
 #
 # Shape per GD iteration (full-batch, deterministic):
 # - features x = unsigned hashed-TF vector (embedding.hashed_tf,

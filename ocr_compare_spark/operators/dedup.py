@@ -314,7 +314,7 @@ def lsh_candidates(
     ).localCheckpoint(eager=True)
     sh_side = build_side(sigs.select("id", "sh"), SH_BROADCAST_MAX_BYTES, "merge")
     band_side = build_side(_band_rows(sigs, "store_id"), SH_BROADCAST_MAX_BYTES, "merge")
-    verified = _band_join_verify(sigs, sigs, verify_threshold, sh_side, band_side).select(
+    verified = _band_join_verify(sigs, verify_threshold, sh_side, band_side).select(
         F.col("new_id").alias("id_a"), F.col("store_id").alias("id_b"), "jaccard"
     )
 
@@ -919,44 +919,6 @@ def substring_dedup(
     )
 
 
-def dedup_lines_within_doc(text_col: str | Column = "text") -> dict[str, Column]:
-    """WITHIN-document exact line dedup (the Dolma/CCNet in-page
-    boilerplate pass): keep only the FIRST occurrence of each
-    non-blank line, preserving order and blank lines (dropping
-    repeated blanks would silently weld paragraphs). Catches the
-    nav/footer/sidebar lines a template repeats inside one page —
-    cross-document repetition is :func:`paragraph_dedup` /
-    :func:`substring_dedup`.
-
-    Pure per-row native expression, zero shuffle: the text is split
-    into lines once, then an indexed filter keeps line i iff it is
-    blank or ``array_position`` (first match, 1-based) equals i+1.
-    Cost per row is one split plus O(lines**2) line compares from the
-    position scan (the filter lambda reads the bound line array; a
-    lambda re-splitting the text would cost O(lines * chars)) — lines-per-page is small and constant, so this
-    stays cheap at any corpus scale.
-
-    Returns ``{"text": <deduped text>, "n_dup_lines_removed": <count>}``.
-    """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-
-    def dedup_lines(lines: Column) -> Column:
-        kept = F.filter(
-            lines,
-            lambda x, i: x.rlike(r"^\s*$") | (F.array_position(lines, x) == i + 1),
-        )
-        return _bind(
-            kept,
-            lambda k: F.struct(
-                F.array_join(k, "\n").alias("text"),
-                (F.size(lines) - F.size(k)).alias("n_dup_lines_removed"),
-            ),
-        )
-
-    out = _bind(F.split(c, r"\n"), dedup_lines)
-    return {f: out.getField(f) for f in ("text", "n_dup_lines_removed")}
-
-
 # ------------------------------------------------------ semantic dedup
 
 
@@ -1250,15 +1212,8 @@ def minhash_tables(
 ) -> DataFrame:
     """MinHash record per doc: ``(id, bands array<long>, sh
     array<long>)`` — the band hashes that generate LSH candidates plus
-    the distinct shingle hashes that verify them. It is the one
-    signature construction: lsh_candidates runs it over its exact-dup
-    representatives, and it is the SIGNATURE STORE row for cross-crawl
-    near-dup (Dolma/RedPajama style cross-dump dedup): write it as
-    parquet per curated batch, and each new crawl joins against the
-    accumulated store without ever re-reading prior crawls' TEXT.
-    ~(num_hashes/8 + |shingles|) * 8 bytes per doc vs the full page —
-    the store is orders of magnitude smaller than the corpus it
-    shields.
+    the distinct shingle hashes that verify them; lsh_candidates runs
+    it over its exact-dup representatives.
 
     Each shingle string is hashed exactly once (h0); the num_hashes
     lanes re-hash that 8-byte long instead of the ~20-byte string
@@ -1294,19 +1249,12 @@ def _band_rows(sigs: DataFrame, idn: str) -> DataFrame:
     )
 
 
-def _band_join_verify(
-    new_sigs: DataFrame,
-    store_sigs: DataFrame,
-    verify_threshold: float,
-    sh_side=lambda t: t,
-    band_side=lambda t: t,
-) -> DataFrame:
-    """Band-bucket equi-join of two :func:`minhash_tables` tables,
+def _band_join_verify(sigs: DataFrame, verify_threshold: float, sh_side, band_side) -> DataFrame:
+    """Band-bucket self-join of a :func:`minhash_tables` table,
     verified by exact hashed-shingle Jaccard: ``(new_id, store_id,
-    jaccard)``. The same DataFrame on both sides gives within-table
-    pairs (new_id < store_id dedups the symmetric join). ``band_side``
-    wraps the store side's band rows and ``sh_side`` both shingle-set
-    lookups (e.g. ``F.broadcast``).
+    jaccard)`` with new_id < store_id (dedups the symmetric join).
+    ``band_side`` wraps one side's band rows and ``sh_side`` both
+    shingle-set lookups (:func:`build_side` wrappers).
 
     Verifying on the HASHED shingle sets (array<long>) equals Jaccard
     over the strings up to a ~n^2/2^64 collision probability
@@ -1314,117 +1262,22 @@ def _band_join_verify(
     longs instead of ~20-byte shingle strings (measured 1.5x on
     lsh_candidates at 60k docs x 12-way dups)."""
 
-    def _sh(sigs, idn, shn):
+    def _sh(idn, shn):
         return sh_side(sigs.select(F.col("id").alias(idn), F.col("sh").alias(shn)))
 
-    same = new_sigs is store_sigs
-    pairs = _band_rows(new_sigs, "new_id").join(
-        band_side(_band_rows(store_sigs, "store_id")), ["band_id", "band_hash"]
+    pairs = (
+        _band_rows(sigs, "new_id")
+        .join(band_side(_band_rows(sigs, "store_id")), ["band_id", "band_hash"])
+        .filter(F.col("new_id") < F.col("store_id"))
     )
-    if same:
-        pairs = pairs.filter(F.col("new_id") < F.col("store_id"))
-    # distinct sides keep EQUAL-key pairs: the same url re-crawled is
-    # precisely the unchanged-page dup the store exists to catch (the
-    # store must therefore never already contain the current batch)
     pairs = pairs.select("new_id", "store_id").distinct()
     return (
-        pairs.join(_sh(new_sigs, "new_id", "sh_a"), "new_id")
-        .join(_sh(store_sigs, "store_id", "sh_b"), "store_id")
+        pairs.join(_sh("new_id", "sh_a"), "new_id")
+        .join(_sh("store_id", "sh_b"), "store_id")
         .select(
             "new_id",
             "store_id",
             F.round(jaccard_arrays(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= verify_threshold)
-    )
-
-
-def cross_batch_near_dups(
-    new_sigs: DataFrame,
-    store_sigs: DataFrame,
-    verify_threshold: float = 0.7,
-) -> DataFrame:
-    """Near-dups of the NEW batch against the accumulated signature
-    store (both sides :func:`minhash_tables` rows): ``(new_id,
-    store_id, jaccard)``, by the band join + Jaccard verify that
-    lsh_candidates also runs. Catalyst picks the join sides from the
-    inputs' own statistics (lsh_candidates, whose input is a
-    checkpoint with frozen stats, picks them from a measured size).
-
-    The incremental loop: detect -> drop/cluster the hits -> append
-    the SURVIVORS' signature rows to the store -> next batch. Pass
-    the same batch as both sides for within-batch pairs."""
-    return _band_join_verify(new_sigs, store_sigs, verify_threshold)
-
-
-def dedup_keep_best(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    quality_col: str,
-) -> DataFrame:
-    """dedup_keep_list with a QUALITY-aware representative: instead
-    of "keep the min id", each near-dup component keeps its
-    highest-``quality_col`` member (ties to the lowest id — total
-    order, so the keep set is deterministic and exactly one member
-    per component survives). This is how production curation picks
-    the survivor of a dup cluster — longest / highest-quality-score /
-    most-recent — rather than an arbitrary id (pass e.g.
-    textstats.quality_score(), a length, or a timestamp cast to
-    double as the quality column).
-
-    Scale shape: components come from the same min-label propagation
-    (connected_components over the pairs graph — tiny next to the
-    corpus); the best-member election is one groupBy(component) +
-    max_by over SLIM (component, quality, id) rows (map-side
-    combined, deliberately NOT a window — the CLAUDE.md winner.py
-    rule), then a broadcast-friendly join back. Returns df +
-    (component, keep)."""
-    comps = connected_components(pairs)
-    # slim (id, quality, component) stream under an INTERNAL alias
-    # (id_col may itself be named 'id' — comps' output column);
-    # localCheckpoint because it feeds TWO consumers (the best-member
-    # election and the keyed join-back) — without the cut the
-    # caller's upstream DAG runs twice (the differently-aliased-
-    # consumer recompute trap)
-    labeled = (
-        df.select(F.col(id_col).alias("_kb_id"), F.col(quality_col).alias("_q"))
-        .join(comps, F.col("_kb_id") == comps.id, "left")
-        .drop("id")
-        .withColumn("component", F.coalesce(F.col("component"), F.col("_kb_id")))
-        .localCheckpoint()
-    )
-    # min of (quality-class, negated quality, id) == highest quality,
-    # ties to the LOWEST id — the id rides in its NATIVE orderable
-    # type (string urls work; only the quality is negated, and it is
-    # already double by contract). The leading EXPLICIT class rank
-    # (0 = real score incl. ±inf, 1 = NULL, 2 = NaN) replaces the old
-    # +inf sentinel, which COLLIDED with a real -inf score (review
-    # finding) — real always beats NULL, NULL beats NaN (the pinned
-    # contract), and degenerate clusters still elect via the id
-    # tiebreak (NaN == NaN under Spark's struct total order).
-    qd = F.col("_q").cast("double")
-    qclass = (
-        F.when(F.col("_q").isNull(), F.lit(1))
-        .when(F.isnan(qd), F.lit(2))
-        .otherwise(F.lit(0))
-    )
-    best = labeled.groupBy("component").agg(
-        F.min_by(
-            F.col("_kb_id"),
-            F.struct(
-                qclass.alias("qc"),
-                F.coalesce(-qd, F.lit(0.0)).alias("nq"),
-                F.col("_kb_id").alias("i"),
-            ),
-        ).alias("_best_id")
-    )
-    keyed = labeled.select("_kb_id", "component").join(best, "component")
-    return df.join(
-        keyed.select(
-            F.col("_kb_id").alias(id_col),
-            "component",
-            (F.col("_kb_id") == F.col("_best_id")).alias("keep"),
-        ),
-        id_col,
     )

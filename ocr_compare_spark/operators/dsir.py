@@ -135,7 +135,6 @@ def dsir_log_weights(
     text_col: str,
     n_buckets: int = DEFAULT_BUCKETS,
     smoothing: float = 1.0,
-    checkpoint: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-candidate log importance weight under the hashed-n-gram
@@ -145,8 +144,6 @@ def dsir_log_weights(
     carry no evidence and are omitted. q is fit on ``candidates``
     itself (the raw pool, as in the paper); p on ``target``, which
     carries its text in the same ``text_col``."""
-    if checkpoint:
-        candidates = candidates.localCheckpoint()
     if num_partitions:
         # the gram stream is byte-light but compute-heavy (md5 per
         # uni+bigram) — a narrow parquet input leaves most cores

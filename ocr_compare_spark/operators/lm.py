@@ -218,77 +218,3 @@ def perplexity_scores(
         "n_oov",
         _round6(-F.col("_s") / F.col("n_tokens")).alias("cross_entropy"),
     ).withColumn("ppl", _round6(F.exp(F.col("cross_entropy"))))
-
-
-# ------------------------------------------- CCNet paragraph filter
-
-
-def paragraph_ppl_filter(
-    df: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_cross_entropy: float = 10.0,
-    sep: str = "\n\n",
-) -> DataFrame:
-    """CCNet's REAL granularity: score every PARAGRAPH against the
-    LM and drop the high-cross-entropy ones, reassembling each
-    document's survivors in order — a page is usually good prose
-    wrapped in junk (nav, footers, tag clouds), so paragraph-level
-    filtering keeps documents a doc-level CE gate would lose whole.
-
-    Per-paragraph CE follows the exact doc-level contract
-    (``round6(-sum(round6 logprob)/n)``, OOV = the lm's fixed
-    half-count mass), so a paragraph scores identically here and as
-    a standalone document under :func:`perplexity_scores` —
-    pytest-pinned. Whitespace-only paragraphs are separator
-    artifacts: kept unconditionally (paragraph_dedup's blank rule).
-
-    Scale shape: TWO shuffles, no join-back — the token stream
-    broadcast-joins the lm (map-side), the score aggregation GROUPS
-    BY (id, pos, para) so the paragraph text rides the partial
-    aggregate once, and the survivors shuffle once more for the
-    ordered per-document reassembly.
-
-    Output: ``(id, text, n_paras, n_dropped)``.
-    """
-    paras = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), F.lit(sep), -1)).alias("pos", "para"),
-    ).withColumn(
-        # whole-class whitespace test: F.trim strips only 0x20, so a
-        # tab/CR-only paragraph would otherwise score as OOV junk and
-        # be dropped instead of kept as a separator artifact
-        "is_blank", F.col("para").rlike(r"^\s*$")
-    )
-    toks = paras.select(
-        "id", "pos", "para", "is_blank", F.explode(_tokens("para")).alias("token")
-    )
-    tot = lm.select(F.first("total").alias("total")).limit(1)
-    scored = (
-        toks.join(F.broadcast(lm.select("token", "logprob")), "token", "left")
-        .crossJoin(F.broadcast(tot))
-    )
-    agg = scored.groupBy("id", "pos", "para", "is_blank").agg(
-        F.count("*").alias("_n"),
-        F.sum(F.coalesce(F.col("logprob"), _oov_logprob_col())).alias("_s"),
-    )
-    ce = _round6(-F.col("_s") / F.col("_n"))
-    flagged = agg.withColumn(
-        "keep", F.col("is_blank") | (ce <= max_cross_entropy)
-    )
-    return flagged.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("keep"), F.struct(F.col("pos"), F.col("para")))
-                    )
-                ),
-                lambda s: s.para,
-            ),
-            sep,
-        ).alias("text"),
-        F.count("*").alias("n_paras"),
-        F.sum(F.when(~F.col("keep"), 1).otherwise(0)).alias("n_dropped"),
-    )

@@ -1,12 +1,11 @@
 """Deterministic corpus sampling for training-data mixtures.
 
-Two operations every pretraining pipeline runs after curation
-(mix construction — the step between "curated corpus" and "training
-shards"):
+Two building blocks of mix construction (which documents, and how
+many tokens of each stratum, a training run sees):
 
-- **hash sampling**: keep a deterministic pseudo-uniform fraction of
-  rows.
-  ``df.sample()`` is WRONG at scale for this: Spark's Bernoulli
+- **hash fractions**: a deterministic pseudo-uniform value per row
+  key (:func:`hash_frac`) — the keep test of the temperature mix and
+  the priority of a uniform budget mix. ``df.sample()`` is WRONG at scale for this: Spark's Bernoulli
   sampler draws from an RNG seeded per partition, so the kept set
   changes whenever the partition layout changes (different cluster
   size, AQE decision, upstream repartition). Hashing the row KEY into
@@ -56,14 +55,6 @@ def hash_frac(key: str | Column) -> Column:
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast(
         "double"
     ) / F.lit(_TWO_32)
-
-
-def hash_sample(df: DataFrame, key_col: str, rate: float) -> DataFrame:
-    """Keep rows whose hash_frac(key) < rate — a deterministic,
-    zero-shuffle Bernoulli sample keyed by content, not by partition
-    layout (see module docstring for why ``df.sample`` cannot give
-    this guarantee)."""
-    return df.filter(hash_frac(key_col) < F.lit(float(rate)))
 
 
 def _order_cols(priority_col: str, id_col: str) -> list[Column]:
@@ -150,7 +141,7 @@ def token_budget_sample_bucketed(
     ``checkpoint`` (default True) localCheckpoints the keyed input:
     the operator evaluates it TWICE — once for the driver bucket-sum
     collect and once for the survivors join — and on a compute-heavy
-    upstream (curate's post-LSH DAG) the second evaluation re-runs
+    upstream (a post-LSH DAG) the second evaluation re-runs
     the whole pipeline (ADVICE r4). Pass False only when the input is
     already a cheap scan or a persisted boundary."""
     bkt = F.least(
@@ -230,40 +221,6 @@ def token_budget_sample_bucketed(
 _NO_BUDGET = 1 << 60
 
 
-def assign_token_shards(
-    df: DataFrame,
-    strata_col: str,
-    token_col: str,
-    tokens_per_shard: int,
-    priority_col: str,
-    id_col: str,
-    shard_col: str = "shard",
-    cum_col: str = "cum_tokens",
-) -> DataFrame:
-    """Deterministic training-shard assignment — the step after mix
-    construction: pack each stratum's documents (in (priority, id)
-    order) into consecutive shards of ~``tokens_per_shard`` tokens.
-
-    A document belongs to the shard its STARTING token offset falls
-    in (``floor((cum - tokens) / tokens_per_shard)``), so every shard
-    is a contiguous slice of the global order, shard token sums are
-    < tokens_per_shard + max_doc_tokens, and — because the cumulative
-    sum is a pure function of (stratum, priority, id, tokens) — the
-    assignment is identical across reruns, cluster sizes and
-    partition layouts (the property a resumable shard-writing job
-    needs: re-emitting shard 17 after a failure yields byte-identical
-    membership).
-
-    The cumulative sum rides the distributed prefix sum of
-    token_budget_sample_bucketed with an unbounded budget — window
-    parallelism #strata x #buckets."""
-    base = token_budget_sample_bucketed(
-        df, strata_col, token_col, _NO_BUDGET, priority_col, id_col, cum_col=cum_col
-    )
-    shard = F.floor((F.col(cum_col) - F.col(token_col)) / tokens_per_shard)
-    return base.withColumn(shard_col, shard.cast("int"))
-
-
 def pack_sequences(
     df: DataFrame,
     strata_col: str,
@@ -293,7 +250,7 @@ def pack_sequences(
       reset mask is "seq_start == 0 marks a continuation, else a new
       document starts here"),
     - ``cum_col``   — the document's global cumulative token count
-      (the same prefix sum assign_token_shards exposes).
+      (the budget samplers' prefix sum).
 
     Zero-token documents occupy no stream positions and are dropped.
 
@@ -327,24 +284,6 @@ def pack_sequences(
         out.withColumn("seq_start", (seg_start - seq_base).cast("long"))
         .withColumn("tok_start", (seg_start - start).cast("long"))
         .withColumn("tok_end", (seg_end - start).cast("long"))
-    )
-
-
-def write_token_shards(
-    df: DataFrame,
-    path: str,
-    strata_col: str = "lang",
-    shard_col: str = "shard",
-) -> None:
-    """Materialize shard-assigned rows as one directory per
-    (stratum, shard). The repartition co-locates each shard's rows in
-    a single task, so every shard directory gets exactly one parquet
-    part — the layout a training loader streams sequentially."""
-    (
-        df.repartition(F.col(strata_col), F.col(shard_col))
-        .write.mode("overwrite")
-        .partitionBy(strata_col, shard_col)
-        .parquet(path)
     )
 
 
@@ -382,7 +321,6 @@ def temperature_mix(
     key_col: str,
     alpha: float,
     rate_col: str | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Temperature-balanced corpus mixing (the mC4/XLM-R language-
     balancing step): downsample head strata so stratum l contributes
@@ -394,19 +332,15 @@ def temperature_mix(
       :func:`temperature_rates`;
     - the data path is a zero-shuffle deterministic filter —
       ``hash_frac(key) < rate[stratum]`` as a literal when-chain, so
-      the kept set is layout- and cluster-size-invariant like
-      hash_sample (a rerun or a resume keeps exactly the same rows).
+      the kept set is layout- and cluster-size-invariant (a
+      rerun or a resume keeps exactly the same rows).
 
     Rows whose stratum is NULL or had non-positive total weight are
     dropped (they have no defined rate). ``rate_col`` optionally
     attaches the applied rate.
 
-    ``checkpoint=True`` localCheckpoints the input first: the operator
-    evaluates its lineage twice (weight collect + filter), so pass
-    True when the upstream is compute-heavy and not already persisted
-    (the ADVICE-r4 double-evaluation trap)."""
-    if checkpoint:
-        df = df.localCheckpoint()
+    The operator evaluates its lineage twice (weight collect +
+    filter): persist a compute-heavy upstream first."""
     sums = (
         df.groupBy(strata_col)
         .agg(F.sum(F.col(weight_col)).alias("_n"))
@@ -504,30 +438,6 @@ def unimax_sample(
     return out.drop("_prio")
 
 
-def cap_per_key(
-    df: DataFrame,
-    key_col: str,
-    max_rows: int,
-    id_col: str,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """RefinedWeb-style per-key row cap: keep at most ``max_rows``
-    rows per key (e.g. registered domain — a handful of mega-hosts
-    otherwise dominate a crawl corpus). This IS token-budget
-    semantics with every row costing one token, so it reuses the
-    distributed prefix-sum machinery.
-
-    The kept set is the deterministic (hash_frac(id), id)-first
-    prefix per key (a uniform per-key sample) — layout- and
-    cluster-size-invariant like hash_sample."""
-    out = df.withColumn("_prio", hash_frac(id_col)).withColumn("_one", F.lit(1))
-    kept = token_budget_sample_bucketed(
-        out, key_col, "_one", max_rows, "_prio", id_col,
-        cum_col="_cum", checkpoint=checkpoint,
-    )
-    return kept.drop("_cum", "_one", "_prio")
-
-
 # ------------------------------------------------- train/val/test
 
 
@@ -557,7 +467,7 @@ def split_bounds(weights: Mapping[str, float]) -> list[tuple[str, float]]:
 #: Domain-separation prefix for the split hash: every OTHER sampler
 #: in this module draws its uniform from hash_frac(key) directly, so
 #: an eval split drawn from the same stream would be perfectly
-#: correlated with sampling survival (e.g. hash_sample(rate=0.1)
+#: correlated with sampling survival (e.g. hash_frac(key) < 0.1
 #: upstream leaves only u < 0.1 rows — all 'train', val/test EMPTY).
 #: Prefixing the key gives the split its own independent draw.
 SPLIT_HASH_DOMAIN = "split:"
@@ -578,10 +488,10 @@ def assign_split(
 ) -> DataFrame:
     """Deterministic train/val/test assignment: u = split_frac(key)
     (hash_frac over the 'split:'-prefixed key — an INDEPENDENT draw
-    from the one hash_sample/temperature_mix/token-budget priority
+    from the one temperature_mix/token-budget priority
     use, so composing a split after any of those samplers cannot
     correlate; an unprefixed draw would leave val/test empty after
-    hash_sample(rate < train weight)), split = the first bucket
+    a hash_frac filter below the train weight), split = the first bucket
     whose cumulative bound exceeds u. Pure function of the key —
     zero shuffle, rerun-stable, layout- and cluster-size-independent
     (the df.sample() objections in the module docstring apply doubly
@@ -607,9 +517,9 @@ def assign_split(
 
 
 #: Domain-separation prefix for the bottom-k draw — same argument as
-#: SPLIT_HASH_DOMAIN: an unprefixed draw shares the hash_sample /
+#: SPLIT_HASH_DOMAIN: an unprefixed draw shares the hash_frac /
 #: temperature_mix survival stream, so "the k smallest hashes per
-#: stratum" after hash_sample(rate) would be EXACTLY the sample's own
+#: stratum" after a hash_frac filter would be EXACTLY the sample's own
 #: survivor prefix (perfectly correlated) instead of an independent
 #: subsample.
 BOTTOMK_HASH_DOMAIN = "bottomk:"
@@ -636,11 +546,11 @@ def bottomk_sample(
     order sketching (Cohen & Kaplan 2007): because the prefixed md5
     draw is uniform, the k smallest hashes are a uniform simple
     random sample WITHOUT replacement of exactly min(k, n) of the
-    stratum's DISTINCT keys — the fixed-size counterpart to
-    hash_sample's fixed-RATE Bernoulli sample, with the same run/
+    stratum's DISTINCT keys — the fixed-size counterpart to a
+    fixed-RATE hash_frac filter, with the same run/
     layout/cluster-size determinism (df.sample and RDD-takeSample
-    give neither exact size + determinism together). Like
-    hash_sample, selection is key-level: if a key value repeats
+    give neither exact size + determinism together). Like a
+    hash_frac filter, selection is key-level: if a key value repeats
     within its stratum, ALL its rows ride the one selected slot
     (keys are normally unique ids, where rows == keys). Rows with a
     NULL key take no draw and never sample (the HLL NULL-key rule);
@@ -657,7 +567,7 @@ def bottomk_sample(
     (stratum, key, frac) projection — full rows never shuffle
     (CLAUDE.md window rule); the winners join back null-safely. At
     100 TB, pre-filter with ``bottomk_frac(key) < safety * k / n``
-    (the SAME prefixed draw — NOT hash_sample, whose unprefixed
+    (the SAME prefixed draw — NOT hash_frac, whose unprefixed
     stream is independent by design and would discard true bottom-k
     members) to cut the window's input: the bottom-k of that prefix
     equals the stratum's true bottom-k whenever the prefix keeps

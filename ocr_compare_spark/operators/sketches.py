@@ -394,7 +394,6 @@ def dd_build(
     value_col: str,
     group_cols: Sequence[str] = (),
     alpha: float = 0.01,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-group DDSketch bucket table (group_cols..., bkt, cnt):
     ONE map-side-combined groupBy — the only shuffle, moving at most
@@ -410,8 +409,6 @@ def dd_build(
     PARTITION-INVARIANT and merge == build-on-union EXACTLY (the
     hll_merge property, here with no estimator error either).
     NULL values are ignored (approx-aggregate semantics)."""
-    if num_partitions:
-        df = df.repartition(num_partitions)
     df = df.filter(F.col(value_col).isNotNull())
     b = dd_bucket_col(value_col, alpha)
     staged = df.select(*group_cols, b.alias("bkt"))

@@ -8,7 +8,6 @@ the standard corpus-quality signals.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 # Fixed stopword list (deterministic; the synthetic corpus vocabulary
@@ -135,166 +134,6 @@ def gopher_columns(text_col: str = "text") -> dict[str, Column]:
         "ellipsis_line_frac": frac(n_ell_end, n_lines),
         "alpha_word_frac": frac(n_alpha, n),
     }
-
-
-#: Gopher keep-thresholds (Rae et al. 2021 §A1.1), exposed so curate
-#: and callers share one definition.
-GOPHER_THRESHOLDS = {
-    "min_mean_word_len": 3.0,
-    "max_mean_word_len": 10.0,
-    "max_symbol_word_ratio": 0.1,
-    "max_bullet_line_frac": 0.9,
-    "max_ellipsis_line_frac": 0.3,
-    "min_alpha_word_frac": 0.8,
-}
-
-
-def gopher_pass(text_col: str = "text") -> Column:
-    """True when a document passes every Gopher signal threshold
-    (repetition signals are gated separately via
-    ``repetition_columns``)."""
-    g = gopher_columns(text_col)
-    th = GOPHER_THRESHOLDS
-    return (
-        g["mean_word_len"].between(th["min_mean_word_len"], th["max_mean_word_len"])
-        & (g["symbol_word_ratio"] <= th["max_symbol_word_ratio"])
-        & (g["bullet_line_frac"] < th["max_bullet_line_frac"])
-        & (g["ellipsis_line_frac"] < th["max_ellipsis_line_frac"])
-        & (g["alpha_word_frac"] >= th["min_alpha_word_frac"])
-    )
-
-
-def normalize_unicode(col: str | Column, form: str = "NFC") -> Column:
-    """Unicode normalization of a text column (NFC by default; NFKC
-    folds compatibility forms — fullwidth ASCII, ligatures — which is
-    what tokenizer-bound web text usually wants). Crawled pages mix
-    composed and decomposed encodings of the SAME string, which
-    silently splits exact-dedup/shingle hashes and vocab counts;
-    normalizing before any hash-keyed stage welds them back.
-
-    The ONE text operator here that is not Catalyst-native: the JVM
-    has no normalization expression, so this is an Arrow-batched
-    pandas UDF over Python's unicodedata (NFC verified against
-    DuckDB's independent nfc_normalize in tests). Idempotent."""
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form: {form!r}")
-    c = F.col(col) if isinstance(col, str) else col
-
-    @F.pandas_udf("string")
-    def norm(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(
-            lambda x: unicodedata.normalize(form, x) if x is not None else None
-        )
-
-    return norm(c)
-
-
-#: C4 line/page rule constants (Raffel et al. 2020 §2.2). ASCII-only
-#: regex (no lookaround) so Java (Spark) == RE2 (DuckDB) semantics.
-#: Trailing whitespace (incl. the '\r' every CRLF document leaves on
-#: '\n'-split lines) is absorbed by the pattern itself — F.rtrim
-#: strips only 0x20 spaces, so an rtrim-based check wiped CRLF pages
-#: wholesale (review r5).
-C4_TERMINAL_PUNCT = r'[.!?"]\s*$'
-C4_MIN_LINE_WORDS = 5
-#: dropped-line phrase rules: the "javascript" boilerplate line rule
-#: plus the cookie/policy-notice family (lowercased substring match).
-C4_LINE_DROP_PATTERN = (
-    "javascript|terms of use|privacy policy|cookie policy|uses cookies"
-)
-#: sentence terminators in the retained text: a terminal punct mark,
-#: optional closing quote, then whitespace or end-of-text. Consuming
-#: match (no lookahead — RE2 parity); "!!"-style runs count once.
-C4_SENTENCE_PATTERN = "[.!?][\"']?(\\s|$)"
-C4_MIN_SENTENCES = 3
-
-
-def c4_kept_lines(text_col: str | Column = "text") -> Column:
-    """The C4 line filter as an array column: the document's lines
-    ('\\n'-split) that survive all three line rules —
-
-    - end in terminal punctuation ``. ! ? "`` (trailing whitespace,
-      including CRLF's ``\\r``, allowed after it);
-    - contain at least :data:`C4_MIN_LINE_WORDS` whitespace words;
-    - contain none of the drop phrases (``javascript`` + the
-      cookie/policy-notice family), case-insensitive.
-
-    Per-row native filter lambda, zero shuffle."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.filter(
-        F.split(c, r"\n"),
-        lambda x: x.rlike(C4_TERMINAL_PUNCT)
-        # non-empty word count: a plain split counts the empty tokens
-        # that leading/trailing whitespace ('\r'!) produces
-        & (
-            F.size(F.filter(F.split(x, r"\s+"), lambda t: t != ""))
-            >= C4_MIN_LINE_WORDS
-        )
-        & ~F.lower(x).rlike(C4_LINE_DROP_PATTERN),
-    )
-
-
-def c4_clean_text(text_col: str | Column = "text") -> Column:
-    """Line-filtered document text: kept lines re-joined with '\\n'
-    (a document with no surviving line becomes the empty string)."""
-    return F.array_join(c4_kept_lines(text_col), "\n")
-
-
-def c4_columns(
-    text_col: str | Column = "text", already_clean: bool = False
-) -> dict[str, Column]:
-    """C4 page-level signals, evaluated on the line-FILTERED text
-    (C4 applies the line rules first, then judges the page):
-
-    - ``c4_line_kept_frac``: surviving-line fraction (1.0 when
-      ``already_clean``);
-    - ``c4_n_sentences``: terminal-punctuation sentence count in the
-      retained text (page keep needs >= 3);
-    - ``c4_has_lorem``: retained text contains ``lorem ipsum``;
-    - ``c4_has_brace``: retained text contains ``{`` (code page).
-
-    ``already_clean=True`` skips the line filter: pass it when the
-    column has ALREADY been rewritten with :func:`c4_clean_text`
-    (Catalyst inlines an expression-backed column into every lambda
-    that references it — the CLAUDE.md trap — so re-deriving the
-    filter here would run the per-line fold once per signal)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    cleaned = c if already_clean else c4_clean_text(c)
-    if already_clean:
-        kept_frac = F.lit(1.0)
-    else:
-        n_lines = F.size(F.split(c, r"\n"))
-        n_kept = F.size(c4_kept_lines(c))
-        kept_frac = F.round(
-            F.when(n_lines > 0, n_kept / n_lines).otherwise(F.lit(0.0)), 6
-        )
-    return {
-        "c4_line_kept_frac": kept_frac,
-        "c4_n_sentences": F.size(
-            F.regexp_extract_all(cleaned, F.lit(C4_SENTENCE_PATTERN), 0)
-        ),
-        "c4_has_lorem": F.lower(cleaned).contains("lorem ipsum"),
-        "c4_has_brace": cleaned.contains("{"),
-    }
-
-
-def c4_page_pass(
-    text_col: str | Column = "text", already_clean: bool = False
-) -> Column:
-    """True when the line-filtered page survives the C4 page rules:
-    >= 3 sentences, no ``lorem ipsum``, no ``{``. (The third C4 page
-    rule — the bad-words list — is a caller-supplied phrase list via
-    :data:`C4_LINE_DROP_PATTERN`-style extension; no list is embedded
-    here. Cross-document three-sentence-span dedup is
-    ``dedup.substring_dedup``.)"""
-    s = c4_columns(text_col, already_clean=already_clean)
-    return (
-        (s["c4_n_sentences"] >= C4_MIN_SENTENCES)
-        & ~s["c4_has_lorem"]
-        & ~s["c4_has_brace"]
-    )
 
 
 def quality_score() -> Column:

@@ -9,7 +9,6 @@ the library never calls them.
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 import re
 
@@ -19,7 +18,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ocr_compare_spark.engines.html_tree import RawBlock, _BlockParser
 from ocr_compare_spark.functions.url import TRACKING_PARAM_PATTERN
 from ocr_compare_spark.operators.bpe import EOW
-from ocr_compare_spark.operators.classifier import DEFAULT_ALPHA
 from ocr_compare_spark.operators.compare import _strip_affixes
 from ocr_compare_spark.operators.robots import pattern_to_regex
 from ocr_compare_spark.operators.sketches import (
@@ -122,64 +120,6 @@ def train_bpe_py(
 
 # ---------------------------------------------------------------------
 # operators/classifier.py
-
-
-def _py_tokens(text: str) -> list[str]:
-    """Spark ``F.split(_, '\\s+')`` semantics (limit -1): BOTH leading
-    and trailing empty tokens are kept — ``'a b '`` tokenizes to
-    ``['a', 'b', '']`` on both sides (review r5: the mirror previously
-    dropped trailing empties, diverging on trailing whitespace)."""
-    return re.split(r"\s+", text)
-
-
-def _r6(x: float) -> float:
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
-def train_nb_py(
-    pos_texts: list[str],
-    neg_texts: list[str],
-    vocab_size: int | None = None,
-    alpha: float = DEFAULT_ALPHA,
-) -> dict:
-    """Mirror of train_nb: returns {'weights': {token: w}, 'w_oov',
-    'bias'} under the identical smoothing/cap/rounding contract."""
-    cp: dict[str, int] = {}
-    cn: dict[str, int] = {}
-    for t in pos_texts:
-        for w in _py_tokens(t):
-            cp[w] = cp.get(w, 0) + 1
-    for t in neg_texts:
-        for w in _py_tokens(t):
-            cn[w] = cn.get(w, 0) + 1
-    vocab = sorted(set(cp) | set(cn))
-    n_pos, n_neg = sum(cp.values()), sum(cn.values())
-    if vocab_size is not None:
-        vocab = sorted(
-            vocab, key=lambda w: (-(cp.get(w, 0) + cn.get(w, 0)), w)
-        )[:vocab_size]
-    v = len(vocab)
-    dp = n_pos + alpha * (v + 1)
-    dn = n_neg + alpha * (v + 1)
-
-    def lodds(p: int, n: int) -> float:
-        return _r6(math.log((p + alpha) / dp) - math.log((n + alpha) / dn))
-
-    return {
-        "weights": {w: lodds(cp.get(w, 0), cn.get(w, 0)) for w in vocab},
-        "w_oov": lodds(0, 0),
-        "bias": _r6(math.log(len(pos_texts) / len(neg_texts))),
-    }
-
-
-def score_nb_py(text: str, model: dict) -> tuple[int, int, float, bool]:
-    toks = _py_tokens(text)
-    n_oov = sum(1 for w in toks if w not in model["weights"])
-    s = _r6(
-        model["bias"]
-        + sum(model["weights"].get(w, model["w_oov"]) for w in toks)
-    )
-    return len(toks), n_oov, s, s > 0
 
 
 def score_logreg_py(text: str, model: dict, threshold: float = 0.5):
@@ -346,17 +286,6 @@ def _py_positions(key: str, m_bits: int, k: int) -> list[int]:
     h1 = int(d[:8], 16)
     h2 = int(d[8:16], 16) * 2 + 1
     return [(h1 + i * h2) % m_bits for i in range(k)]
-
-
-# ---------------------------------------------------------------------
-# sources/jsonl.py
-
-
-def py_document_record(id: str, text: str, source=None, metadata=None) -> str:
-    """Reference single-record serializer (pytest mirror)."""
-    rec = {"id": id, "text": text, "source": source,
-           "metadata": metadata if metadata is not None else None}
-    return json.dumps({k: v for k, v in rec.items() if v is not None})
 
 
 # ---------------------------------------------------------------------

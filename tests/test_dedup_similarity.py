@@ -818,49 +818,6 @@ def test_substring_dedup_randomized_mirror(spark):
         assert got == exp, f"seed={seed} window={win}"
 
 
-def test_dedup_lines_within_doc(spark):
-    """First occurrence survives, order kept, blanks never collapse
-    (welding paragraphs would corrupt every downstream split); DuckDB
-    twin via the same indexed-lambda shape."""
-    import duckdb
-
-    cases = [
-        (1, "nav bar\ncontent one\nnav bar\ncontent two\nnav bar"),
-        (2, "a\n\nb\n\na\n\nb"),            # blanks preserved, a/b dedup
-        (3, "only\nunique\nlines"),
-        (4, ""),
-        (5, "x\n \nx\n \nx"),               # space-only lines all survive
-    ]
-    df = spark.createDataFrame(cases, "doc_id int, text string")
-    cols = dedup.dedup_lines_within_doc("text")
-    got = {
-        r["doc_id"]: (r["t"], r["n"])
-        for r in df.select(
-            "doc_id", cols["text"].alias("t"),
-            cols["n_dup_lines_removed"].alias("n"),
-        ).collect()
-    }
-    assert got[1] == ("nav bar\ncontent one\ncontent two", 2)
-    # 7 lines [a,'',b,'',a,'',b]: dup a/b removed, all 3 blanks stay
-    assert got[2] == ("a\n\nb\n\n", 2)
-    assert got[3] == ("only\nunique\nlines", 0)
-    assert got[4] == ("", 0)
-    assert got[5] == ("x\n \n ", 2)  # [x,' ',' '] — dup x's removed
-
-    con = duckdb.connect()
-    sql = r"""
-      WITH l AS (SELECT string_split(text, chr(10)) AS lines
-                 FROM (SELECT ? AS text)),
-      k AS (SELECT lines, list_filter(lines, (x, i) ->
-              regexp_matches(x, '^\s*$') OR list_position(lines, x) = i
-            ) AS kept FROM l)
-      SELECT array_to_string(kept, chr(10)), len(lines) - len(kept) FROM k
-    """
-    for doc_id, text in cases:
-        t, n = con.execute(sql, [text]).fetchone()
-        assert (t, n) == got[doc_id], doc_id
-
-
 # ------------------------------------------------------ semantic dedup
 
 
@@ -984,63 +941,21 @@ def test_d4_prune_data_matches_literal_and_cut_exact(spark, sf_dir):
     assert pruned_total > 0  # nontrivial at the gate config
 
 
-def test_cross_batch_near_dups_store_loop(spark, corpus, tmp_path):
-    """The incremental cross-crawl loop: signature store written as
-    parquet shields later batches from re-reading prior text; parity
-    with lsh_candidates on a distinct-text corpus."""
-    base = corpus.filter(F.col("doc_id") < 100)  # 60 distinct docs
-
-    # --- parity: self cross-batch == lsh_candidates (distinct texts,
-    # so exact-dup canonicalization is the identity there)
-    sigs = dedup.minhash_tables(base, "doc_id", "text").cache()
-    self_pairs = dedup.cross_batch_near_dups(sigs, sigs, verify_threshold=0.5)
-    a = sorted((r.new_id, r.store_id, r.jaccard) for r in self_pairs.collect())
+def test_band_self_join_matches_lsh_candidates(spark, corpus):
+    """The band self-join over minhash_tables equals lsh_candidates on
+    a distinct-text corpus (exact-dup canonicalization is the identity
+    there); the planted near-dup 1001 of doc 1 makes a pair."""
+    base = corpus.filter(F.col("doc_id") != 1000)  # drop the exact dup
+    sigs = dedup.minhash_tables(base, "doc_id", "text")
+    pairs = dedup._band_join_verify(sigs, 0.5, lambda t: t, lambda t: t)
+    a = sorted((r.new_id, r.store_id, r.jaccard) for r in pairs.collect())
     b = sorted(
         (r.id_a, r.id_b, r.jaccard)
         for r in dedup.lsh_candidates(
             base, "doc_id", "text", verify_threshold=0.5
         ).collect()
     )
-    assert a == b
-
-    # --- crawl 1 -> store; crawl 2 has one near-dup of doc 1 and one
-    # fresh doc; crawl 3 near-dups the crawl-2 SURVIVOR
-    store_dir = str(tmp_path / "sigstore")
-    sigs.write.mode("overwrite").parquet(store_dir)
-
-    t1 = base.filter(F.col("doc_id") == 1).first().text.split()
-    t1[5] = "EDITED"
-    batch2 = spark.createDataFrame(
-        [(2001, " ".join(t1)), (2002, "entirely fresh words " * 30)],
-        ["doc_id", "text"],
-    )
-    sig2 = dedup.minhash_tables(batch2, "doc_id", "text").cache()
-    store = spark.read.parquet(store_dir)
-    hits = dedup.cross_batch_near_dups(sig2, store, verify_threshold=0.5)
-    got = {(r.new_id, r.store_id) for r in hits.collect()}
-    assert (2001, 1) in got
-    assert not any(n == 2002 for n, _ in got)
-
-    # survivors (non-hit new docs) append to the store
-    survivors = sig2.join(
-        hits.select("new_id").distinct().withColumnRenamed("new_id", "id"),
-        "id",
-        "left_anti",
-    )
-    survivors.write.mode("append").parquet(store_dir)
-
-    batch3 = spark.createDataFrame(
-        [(3001, "entirely fresh words " * 30)], ["doc_id", "text"]
-    )
-    sig3 = dedup.minhash_tables(batch3, "doc_id", "text")
-    hits3 = dedup.cross_batch_near_dups(
-        sig3, spark.read.parquet(store_dir), verify_threshold=0.5
-    )
-    got3 = {(r.new_id, r.store_id, r.jaccard) for r in hits3.collect()}
-    # 3001 duplicates the crawl-2 survivor 2002 (jaccard 1.0), which
-    # IS in the store precisely because it survived crawl 2
-    assert (3001, 2002, 1.0) in got3
-    assert all(s == 2002 for _, s, _ in got3)
+    assert a == b and (1, 1001) in {(x, y) for x, y, _ in a}
 
 
 # ------------------------------------------------ product quantization

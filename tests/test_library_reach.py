@@ -6,14 +6,19 @@ no library module imports a name it never uses.
 Roots are the code identifiers of the non-test corpus (``__spark_entry__.py``,
 ``bench.py``, ``bench_extra.py``, ``loopbench/``, ``tools/``) plus those of
 the library's module-level statements that are neither definitions nor
-imports. Edges run from each top-level library definition to the
+imports. A library module's ``if __name__ == "__main__":`` block is a root
+only when the module is listed in ENTRY_POINTS with the reason it runs
+as a program. Edges run from each top-level library definition to the
 identifiers in its body. Identifiers are ``Name`` ids, ``Attribute`` attrs,
 import aliases and identifier-shaped string constants; docstrings and
 comments are not code, so a name a docstring mentions is not reached by it.
 
 Names resolve by identifier, not by module: a live definition keeps any
 same-named definition elsewhere alive, never the reverse, so the guard
-can miss dead code but never flags live code. Names only tests reach are
+can miss dead code but never flags live code. The one exception is
+``main``, which every script spells: a library ``def main`` is reached
+only through its own module's ``__main__`` block, never by a traffic
+file's own ``main`` or a string ``"main"``. Names only tests reach are
 deleted with their tests, or listed in KEEP with the reason they stay.
 
 The parameter rule looks inside every top-level library ``def``: a
@@ -52,8 +57,11 @@ KEEP = {
     "run_with_checkpoints": "the north_rule resume seam (per-bucket output + manifest)",
     "read_output": "reads back what run_with_checkpoints wrote (the resume seam)",
     "table_raw_text": "the reference's raw_text table variant",
-    "metadata_field": "reads back the live jsonl writer's metadata packing",
-    "read_documents": "reads back what the live write_documents writes (curate's Dolma export)",
+}
+
+ENTRY_POINTS = {
+    "ocr_compare_spark/plans/job.py": "the north_rule's spark-submit job (checkpoint, lineage, "
+    "metrics); loopbench flagship copies its shape",
 }
 
 KNOB_KEEP = {
@@ -76,6 +84,10 @@ def _files(paths):
             yield from sorted(p.rglob("*.py"))
         elif p.exists():
             yield p
+
+
+def _labelled(paths):
+    return [(str(f.relative_to(ROOT)), _parse(f)) for f in _files(paths)]
 
 
 def _docstrings(tree):
@@ -133,20 +145,47 @@ def _closure(start, edges):
     return seen
 
 
-def _unreached_names():
-    """(unreached, stale): unreached maps each top-level library name
-    no root reaches to its file:line sites; stale holds the KEEP names
-    that are gone or that a root reaches without the exemption."""
+def _is_main_block(node):
+    """``if __name__ == "__main__":`` (either operand order)."""
+    if not (isinstance(node, ast.If) and isinstance(node.test, ast.Compare)):
+        return False
+    sides = [node.test.left, *node.test.comparators]
+    return len(sides) == 2 and {
+        s.id if isinstance(s, ast.Name) else s.value if isinstance(s, ast.Constant) else None
+        for s in sides
+    } == {"__name__", "__main__"}
+
+
+def _main_of(label):
+    """The key of module ``label``'s ``def main``: ``main`` resolves per
+    module, so no other module's ``main`` (or the word) reaches it."""
+    return f"main[{label}]"
+
+
+def _reach(traffic, library, keep, entry_points):
+    """(unreached, stale_keep, stale_entry) over lists of (label, parsed
+    module). unreached maps each top-level library name no root reaches
+    to its label:line sites; stale_keep holds the ``keep`` names that are
+    gone or that a root reaches without the exemption; stale_entry holds
+    the ``entry_points`` labels that are not a library module with a
+    ``__main__`` block."""
     roots: set[str] = set()
-    for f in _files(TRAFFIC):
-        tree = _parse(f)
+    for _, tree in traffic:
         roots |= _identifiers(tree, _docstrings(tree))
     edges: dict[str, set[str]] = {}
     where: dict[str, list[str]] = {}
-    for f in _files([LIBRARY]):
-        tree = _parse(f)
+    entries = set()
+    for label, tree in library:
         docs = _docstrings(tree)
         for node in tree.body:
+            if _is_main_block(node):
+                if label in entry_points:
+                    entries.add(label)
+                    body = _identifiers(node, docs)
+                    roots |= body - {"main"}
+                    if "main" in body:
+                        roots.add(_main_of(label))
+                continue
             names = _defined_names(node)
             if not names:
                 if not isinstance(node, (ast.Import, ast.ImportFrom)):
@@ -154,24 +193,82 @@ def _unreached_names():
                 continue
             body = _identifiers(node, docs)
             for name in names:
-                edges.setdefault(name, set()).update(body)
-                where.setdefault(name, []).append(f"{f.relative_to(ROOT)}:{node.lineno}")
-    exempt = set(KEEP)
+                key = _main_of(label) if name == "main" else name
+                edges.setdefault(key, set()).update(body)
+                where.setdefault(key, []).append(f"{label}:{node.lineno}")
+    exempt = set(keep)
     reached = _closure(roots | exempt, edges)
     unreached = {n: w for n, w in where.items() if n not in reached}
     # an exempt name some root reaches without the exemption is stale
     kept_alone = _closure(roots, edges)
-    return unreached, {n for n in exempt if n in kept_alone or n not in edges}
+    stale_keep = {n for n in exempt if n in kept_alone or n not in edges}
+    return unreached, stale_keep, set(entry_points) - entries
 
 
 def test_every_library_name_is_reached():
-    unreached, stale = _unreached_names()
+    unreached, stale_keep, stale_entry = _reach(
+        _labelled(TRAFFIC), _labelled([LIBRARY]), KEEP, ENTRY_POINTS
+    )
     if unreached:
         pytest.fail(
-            "library names no query, benchmark or tool reaches (delete them or add to KEEP):\n"
+            "library names no query, benchmark, tool or entry point reaches "
+            "(delete them or add to KEEP):\n"
             + "\n".join(f"  {n}  {', '.join(w)}" for n, w in sorted(unreached.items()))
         )
-    assert not stale, f"stale KEEP entries (gone, or reached without them): {sorted(stale)}"
+    assert not stale_keep, f"stale KEEP entries (gone, or reached alone): {sorted(stale_keep)}"
+    assert not stale_entry, f"stale ENTRY_POINTS (gone, or no __main__): {sorted(stale_entry)}"
+
+
+_CLI_LIB = """
+BLOCK_TAGS = ("div", "main", "p")
+
+
+def helper():
+    return 1
+
+
+def main():
+    return helper()
+
+
+if __name__ == "__main__":
+    main()
+"""
+
+_CLI_TRAFFIC = """
+from lib.cli import BLOCK_TAGS
+
+
+def main():
+    return len(BLOCK_TAGS)
+
+
+if __name__ == "__main__":
+    main()
+"""
+
+
+def _cli_reach(entry_points):
+    traffic = [("bench.py", ast.parse(_CLI_TRAFFIC))]
+    return _reach(traffic, [("lib/cli.py", ast.parse(_CLI_LIB))], {}, entry_points)
+
+
+def test_reach_rule_flags_a_cli_module_whose_main_only_collides():
+    unreached, _, stale_entry = _cli_reach({})
+    assert set(unreached) == {"main[lib/cli.py]", "helper"} and not stale_entry
+
+
+def test_reach_rule_roots_a_declared_entry_point():
+    unreached, _, stale_entry = _cli_reach({"lib/cli.py": "the CLI"})
+    assert not unreached and not stale_entry
+
+
+def test_reach_rule_fails_a_stale_entry_point():
+    _, _, stale = _cli_reach({"lib/cli.py": "the CLI", "lib/gone.py": "deleted"})
+    assert stale == {"lib/gone.py"}
+    lib = [("lib/plain.py", ast.parse("def f():\n    return 1\n"))]
+    _, _, stale = _reach([], lib, {}, {"lib/plain.py": "no __main__ block"})
+    assert stale == {"lib/plain.py"}
 
 
 # ------------------------------------------------------------ parameters
@@ -263,10 +360,6 @@ def _knob_findings(library, callers, keep):
     knobs (set by a caller, no longer a branch test, or gone)."""
     unset = _unset_knobs(library, callers)
     return {k: w for k, w in unset.items() if k not in keep}, sorted(set(keep) - set(unset))
-
-
-def _labelled(paths):
-    return [(str(f.relative_to(ROOT)), _parse(f)) for f in _files(paths)]
 
 
 def test_every_knob_is_turned():

@@ -1,6 +1,5 @@
 """Session-10 additions: reciprocal-rank fusion (index.rrf_fuse),
-exact-size bottom-k sampling (sampling.bottomk_sample) and the
-quality-aware dup-cluster representative (dedup.dedup_keep_best).
+and exact-size bottom-k sampling (sampling.bottomk_sample).
 """
 
 from __future__ import annotations
@@ -9,7 +8,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from ocr_compare_spark.operators import dedup, index as index_ops, sampling
+from ocr_compare_spark.operators import index as index_ops, sampling
 from ocr_compare_spark.operators import embedding as emb_ops
 
 
@@ -158,13 +157,14 @@ def test_bottomk_global_and_independence_from_hash_sample(spark):
     # global (no strata): exactly k rows
     out = sampling.bottomk_sample(df, "doc_id", k=5)
     assert out.count() == 5
-    # domain separation: composing after hash_sample must still be a
-    # uniform subsample of the SURVIVORS, not the survivors' own
-    # hash-order prefix (the assign_split correlation regression) —
-    # with a shared stream the bottom-k of survivors would equal the
-    # global bottom-k exactly (survivors = smallest unprefixed
-    # hashes; bottom-k = smallest hashes of those)
-    surv = sampling.hash_sample(df, "doc_id", rate=0.3)
+    # domain separation: composing after a hash_frac filter (the
+    # unprefixed sampler stream) must still be a uniform subsample of
+    # the SURVIVORS, not the survivors' own hash-order prefix (the
+    # assign_split correlation regression) — with a shared stream the
+    # bottom-k of survivors would equal the global bottom-k exactly
+    # (survivors = smallest unprefixed hashes; bottom-k = smallest
+    # hashes of those)
+    surv = df.filter(sampling.hash_frac("doc_id") < 0.3)
     got = {
         r["doc_id"]
         for r in sampling.bottomk_sample(surv, "doc_id", k=8).collect()
@@ -185,8 +185,8 @@ def test_bottomk_null_strata_null_keys_and_dup_keys(spark):
     (null-safe join-back — an EqualTo join silently dropped its
     winners); NULL keys take no draw and never sample; a key value
     repeated within its stratum holds ONE rank slot and fans out to
-    all its rows on the join-back (key-level selection, the
-    hash_sample semantics)."""
+    all its rows on the join-back (key-level selection, as a
+    hash_frac filter selects)."""
     rows = [(i, None) for i in range(10)]  # NULL stratum, 10 keys
     rows += [(100 + i, "en") for i in range(10)]
     rows += [(None, "en")]  # NULL key: excluded
@@ -222,89 +222,3 @@ def test_bottomk_rejects_nonpositive_k(spark):
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
-
-
-# ------------------------------------------------------------ compression ratio
-
-
-# ------------------------------------------------------------ keep-best
-
-
-def test_dedup_keep_best_elects_highest_quality(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, 0.2),
-            (2, 0.9),  # component {1,2,3}: 2 wins on quality
-            (3, 0.5),
-            (4, 0.7),
-            (5, 0.7),  # component {4,5}: quality tie -> lowest id (4)
-            (6, None),  # singleton with NULL quality keeps itself
-            (7, 0.1),  # singleton
-        ],
-        "doc_id long, q double",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5)], "id_a long, id_b long"
-    )
-    out = dedup.dedup_keep_best(docs, pairs, "doc_id", "q").collect()
-    keep = {r["doc_id"]: r["keep"] for r in out}
-    comp = {r["doc_id"]: r["component"] for r in out}
-    assert keep == {1: False, 2: True, 3: False, 4: True, 5: False, 6: True, 7: True}
-    assert comp[1] == comp[2] == comp[3]
-    assert comp[4] == comp[5]
-    # exactly one keeper per component
-    by_comp: dict = {}
-    for r in out:
-        by_comp.setdefault(r["component"], []).append(r["keep"])
-    assert all(sum(ks) == 1 for ks in by_comp.values())
-    # NULL quality loses to any non-null member
-    docs2 = spark.createDataFrame(
-        [(1, None), (2, 0.01)], "doc_id long, q double"
-    )
-    pairs2 = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    keep2 = {
-        r["doc_id"]: r["keep"]
-        for r in dedup.dedup_keep_best(docs2, pairs2, "doc_id", "q").collect()
-    }
-    assert keep2 == {1: False, 2: True}
-
-
-def test_dedup_keep_best_string_ids_and_nan_quality(spark):
-    """Review-pass contracts: ids stay in their NATIVE orderable type
-    (string urls — the dedup_keep_list drop-in promise; the old
-    -id tiebreak only worked for numerics), and a NaN quality loses
-    to every real score AND to NULL (NaN sorts greatest in Spark's
-    double order, so it would have won under a max_by)."""
-    docs = spark.createDataFrame(
-        [
-            ("http://a/1", 0.2),
-            ("http://a/2", 0.2),  # tie with a/1 -> lexicographically lowest
-            ("http://b/9", 0.9),
-        ],
-        "url string, q double",
-    )
-    pairs = spark.createDataFrame(
-        [("http://a/1", "http://a/2"), ("http://a/2", "http://b/9")],
-        "id_a string, id_b string",
-    )
-    keep = {
-        r["url"]: r["keep"]
-        for r in dedup.dedup_keep_best(docs, pairs, "url", "q").collect()
-    }
-    assert keep == {"http://a/1": False, "http://a/2": False, "http://b/9": True}
-
-    nan = float("nan")
-    docs2 = spark.createDataFrame(
-        [(1, nan), (2, 0.01), (3, None), (4, nan), (5, None)],
-        "doc_id long, q double",
-    )
-    pairs2 = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5)], "id_a long, id_b long"
-    )
-    keep2 = {
-        r["doc_id"]: r["keep"]
-        for r in dedup.dedup_keep_best(docs2, pairs2, "doc_id", "q").collect()
-    }
-    # cluster {1,2,3}: NaN and NULL lose to the real 0.01
-    # cluster {4,5}: NaN loses to NULL; ties resolved by lowest id
-    assert keep2 == {1: False, 2: True, 3: False, 4: False, 5: True}

@@ -1,5 +1,5 @@
 """Deterministic sampling operators (operators/sampling.py):
-layout-independence of hash sampling, and exact == bucketed
+layout-independence of the hash-keyed mixes, and exact == bucketed
 prefix-sum equality for the token-budget mix."""
 
 from __future__ import annotations
@@ -18,29 +18,6 @@ def _docs(spark, sf_dir):
         "doc_id", "lang", cols["token_count"].alias("token_count"),
         sampling.hash_frac("doc_id").alias("prio"),
     )
-
-
-def test_hash_sample_deterministic_and_layout_independent(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    kept1 = {r.doc_id for r in sampling.hash_sample(d, "doc_id", 0.5).collect()}
-    kept2 = {r.doc_id for r in sampling.hash_sample(d, "doc_id", 0.5).collect()}
-    assert kept1 == kept2
-    # repartitioning must not change the kept set (df.sample cannot
-    # guarantee this — the reason this operator exists)
-    kept3 = {
-        r.doc_id
-        for r in sampling.hash_sample(d.repartition(13), "doc_id", 0.5).collect()
-    }
-    assert kept1 == kept3
-    n = d.count()
-    assert 0.4 * n < len(kept1) < 0.6 * n  # uniformity sanity at n=500
-
-
-def test_hash_sample_rate_monotone_nested(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    small = {r.doc_id for r in sampling.hash_sample(d, "doc_id", 0.2).collect()}
-    big = {r.doc_id for r in sampling.hash_sample(d, "doc_id", 0.6).collect()}
-    assert small < big  # thresholding the same hash nests samples
 
 
 def test_token_budget_prefix_semantics(spark, sf_dir):
@@ -107,111 +84,6 @@ def test_token_budget_bucketed_prunes_dead_buckets(spark, sf_dir):
     )
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join Inner" in plan or "join" in plan.lower()
-
-
-def test_shard_assignment_bucketed_equals_exact(spark, sf_dir):
-    # the bucketed prefix sum equals the one-window exact prefix of
-    # token_budget_sample under an unbounded budget, and the shard is
-    # the start offset's floor division
-    d = _docs(spark, sf_dir)
-    exact = sampling.token_budget_sample(
-        d, "lang", "token_count", 10**15, "prio", "doc_id"
-    ).collect()
-    want = {r.doc_id: (r.cum_tokens, (r.cum_tokens - r.token_count) // 5000) for r in exact}
-    bucketed = sampling.assign_token_shards(
-        d.repartition(7), "lang", "token_count", 5000, "prio", "doc_id"
-    ).collect()
-    assert {r.doc_id: (r.cum_tokens, r.shard) for r in bucketed} == want
-    assert len(bucketed) == d.count()  # sharding drops nothing
-
-
-def test_shard_packing_properties(spark, sf_dir):
-    """Shards are contiguous prefix slices: per (lang, shard) the
-    token sum is < size + max_doc_tokens, shard ids are dense from 0,
-    and the assignment is partition-layout independent."""
-    size = 4000
-    d = _docs(spark, sf_dir)
-    out = sampling.assign_token_shards(
-        d, "lang", "token_count", size, "prio", "doc_id"
-    )
-    rows = out.collect()
-    max_tok = max(r["token_count"] for r in rows)
-    by_shard: dict[tuple, int] = {}
-    for r in rows:
-        by_shard[(r["lang"], r["shard"])] = by_shard.get((r["lang"], r["shard"]), 0) + r["token_count"]
-    assert all(t < size + max_tok for t in by_shard.values())
-    for lang in {r["lang"] for r in rows}:
-        ids = sorted(s for (lg, s) in by_shard if lg == lang)
-        assert ids == list(range(len(ids)))  # dense from 0
-        # every non-final shard is "full": adding its successor's
-        # first doc would cross the boundary (start-offset packing)
-        sums = [by_shard[(lang, s)] for s in ids]
-        assert all(t >= 1 for t in sums)
-    # layout independence
-    rows2 = sampling.assign_token_shards(
-        d.repartition(13), "lang", "token_count", size, "prio", "doc_id"
-    ).collect()
-    assert {(r["doc_id"], r["shard"]) for r in rows2} == {
-        (r["doc_id"], r["shard"]) for r in rows
-    }
-
-
-def test_write_token_shards_one_file_per_shard(spark, sf_dir, tmp_path):
-    import glob
-
-    d = _docs(spark, sf_dir)
-    out = sampling.assign_token_shards(d, "lang", "token_count", 8000, "prio", "doc_id")
-    path = str(tmp_path / "shards")
-    sampling.write_token_shards(out, path)
-    parts = glob.glob(f"{path}/lang=*/shard=*/part-*.parquet")
-    dirs = {p.rsplit("/", 1)[0] for p in parts}
-    assert len(parts) == len(dirs) > 0  # exactly one part file per shard dir
-    back = spark.read.parquet(path)
-    assert back.count() == d.count()
-    # round-trip preserves the assignment (shard is a partition col)
-    orig = {(r["doc_id"], r["shard"]) for r in out.collect()}
-    assert {(r["doc_id"], int(r["shard"])) for r in back.collect()} == orig
-
-
-def test_cap_per_key_domain_balancing(spark):
-    """Per-key row cap == the deterministic (priority, id)-first
-    prefix: equal to a driver-side replay; skewed keys are cut to
-    the cap, small keys untouched, layout-invariant."""
-    import pyspark.sql.functions as F
-
-    from ocr_compare_spark.operators.sampling import cap_per_key, hash_frac
-
-    rows = (
-        [(f"d{i}", "mega.example.com") for i in range(200)]
-        + [(f"s{i}", "small.example.org") for i in range(3)]
-        + [(f"m{i}", "mid.example.net") for i in range(10)]
-    )
-    df = spark.createDataFrame(rows, "id string, domain string")
-    got = cap_per_key(df, "domain", 10, "id")
-    by_dom = {
-        r["domain"]: sorted(r["ids"])
-        for r in got.groupBy("domain").agg(F.collect_list("id").alias("ids")).collect()
-    }
-    assert len(by_dom["mega.example.com"]) == 10
-    assert len(by_dom["small.example.org"]) == 3
-    assert len(by_dom["mid.example.net"]) == 10
-
-    # driver replay: hash_frac-first prefix per key
-    fr = {
-        r["id"]: r["f"]
-        for r in df.select("id", hash_frac("id").alias("f")).collect()
-    }
-    for dom, n in (("mega.example.com", 10), ("small.example.org", 3)):
-        ids = sorted(i for i, d in rows if d == dom)
-        want = sorted(sorted(ids, key=lambda i: (fr[i], i))[:n])
-        assert by_dom[dom] == want, dom
-
-    # partition layout invariance
-    relaid = cap_per_key(df.repartition(13), "domain", 10, "id")
-    assert {r["id"] for r in relaid.select("id").collect()} == {
-        r["id"] for r in got.select("id").collect()
-    }
-    assert got.columns == df.columns  # helper columns dropped
 
 
 def test_temperature_rates_shape():
@@ -545,10 +417,10 @@ def test_split_then_decontaminate_eval_hygiene(spark, sf_dir):
 
 def test_assign_split_independent_of_sampler_hash(spark, sf_dir):
     """The split draw is domain-prefixed: composing a split AFTER a
-    hash_sample must still populate every split (an unprefixed draw
-    would label every hash_sample(rate<0.8) survivor 'train')."""
+    hash_frac filter must still populate every split (an unprefixed
+    draw would label every hash_frac < 0.8 survivor 'train')."""
     d = _docs(spark, sf_dir)
-    survivors = sampling.hash_sample(d, "doc_id", 0.3)
+    survivors = d.filter(sampling.hash_frac("doc_id") < 0.3)
     out = sampling.assign_split(survivors, "doc_id", SPLIT_W)
     counts = {r["split"]: r["n"] for r in
               out.groupBy("split").agg(F.count("*").alias("n")).collect()}

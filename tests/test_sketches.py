@@ -217,41 +217,54 @@ def test_cms_partition_invariant(spark):
     assert a == b
 
 
-def test_curate_profile_stage(spark, sf_dir):
-    # --profile: the curation metrics carry a sketch-based corpus
-    # profile — HLL vocabulary estimates per lang within the standard
-    # error of the exact distinct counts, and every CMS heavy hitter
-    # is a genuinely frequent token (one-sided guarantee: no true
-    # heavy hitter missed, estimates >= truth)
-    from pyspark.sql import functions as F
+def test_corpus_profile_sketches(spark, sf_dir):
+    # a sketch-based corpus profile over the real corpus, each sketch
+    # against the exact answer: HLL vocabulary per lang within 4
+    # standard errors of the exact distinct count, every true CMS
+    # heavy hitter reported with an estimate >= its count (one-sided
+    # guarantee), and DD doc-length quantiles within the 2% relative
+    # error of the true rank-r length
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # split(limit=-1) keeps the empty token a trailing newline produces
+    words = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = docs.select("lang", F.explode(words).alias("tok")).persist()
+    exact = {
+        r["lang"]: r["n"]
+        for r in toks.groupBy("lang").agg(F.countDistinct("tok").alias("n")).collect()
+    }
+    vocab = {
+        r["lang"]: r["est6"] / 1e6
+        for r in sk.hll_count_distinct(toks, "tok", ("lang",), p=12).collect()
+    }
+    assert set(vocab) == set(exact)
+    se = 1.04 / math.sqrt(2**12)
+    for lang, n in exact.items():
+        assert abs(vocab[lang] - n) <= 4 * se * n, (lang, vocab[lang], n)
 
-    from ocr_compare_spark.plans.curate import curate
+    heavy = {
+        r["tok"]: r["n"]
+        for r in toks.groupBy("tok").agg(F.count("*").alias("n")).filter("n >= 200").collect()
+    }
+    hh = {
+        r["tok"]: r["est_cnt"]
+        for r in sk.cms_heavy_hitters(toks, "tok", depth=4, width=2048, threshold=200).collect()
+    }
+    toks.unpersist()
+    assert heavy, "threshold 200 must catch the corpus tokens"
+    assert all(hh.get(t, -1) >= c for t, c in heavy.items())
+    assert all(c >= 200 for c in hh.values())
 
-    m = curate(spark, sf_dir, None, min_quality=0.0, min_tokens=1,
-               jaccard_threshold=0.8, profile=True,
-               profile_hh_threshold=200)
-    prof = m["profile"]
-    assert prof and prof["hh_threshold"] == 200
-    # ground truth from the same winner texts is awkward to rebuild
-    # here; sanity-check shape + ranges instead, plus one exactness
-    # anchor: every heavy hitter's estimate is >= the threshold and
-    # the per-lang estimates are positive and plausible (< total
-    # token count)
-    assert set(prof["est_distinct_tokens_by_lang"]) <= {"en", "de", "es", "fr", "zh"}
-    assert all(v > 0 for v in prof["est_distinct_tokens_by_lang"].values())
-    assert prof["heavy_hitter_tokens"], "threshold 200 must catch the corpus tokens"
-    assert all(c >= 200 for c in prof["heavy_hitter_tokens"].values())
-    # DD length quantiles: every lang present, monotone in q, within
-    # the 2% relative-error guarantee of a plausible doc length
-    lq = prof["token_count_quantiles_by_lang"]
-    assert set(lq) == set(prof["est_distinct_tokens_by_lang"])
-    for lang, qs in lq.items():
-        assert set(qs) == {"q50", "q95", "q99"}
-        assert 0 < qs["q50"] <= qs["q95"] <= qs["q99"], (lang, qs)
-    # profile off -> key present but None (metrics shape stable)
-    m2 = curate(spark, sf_dir, None, min_quality=0.0, min_tokens=1,
-                jaccard_threshold=0.8)
-    assert m2["profile"] is None
+    lens = docs.select("lang", F.size(words).cast("long").alias("v"))
+    sketch = sk.dd_build(lens, "v", ("lang",), alpha=0.02)
+    got = sk.dd_quantiles(sketch, (0.5, 0.95, 0.99), ("lang",), alpha=0.02).collect()
+    by_lang: dict = {}
+    for r in lens.collect():
+        by_lang.setdefault(r["lang"], []).append(r["v"])
+    assert {r["lang"] for r in got} == set(exact)
+    for r in got:
+        vs = sorted(by_lang[r["lang"]])
+        true = vs[max(math.ceil(r["q"] * len(vs)), 1) - 1]
+        assert abs(r["est6"] / 1e6 - true) <= 0.02 * true + 1e-6, (r["lang"], r["q"], true)
 
 
 def test_hll_null_keys_ignored(spark):
@@ -341,5 +354,3 @@ def test_dd_zero_store_and_nulls(spark):
     # the zero sentinel sorts before every real bucket
     bkts = [r.bkt for r in sketch.collect()]
     assert min(bkts) == sk.DD_ZERO_BKT
-
-
