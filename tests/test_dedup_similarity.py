@@ -941,8 +941,9 @@ def test_d4_prune_data_matches_literal_and_cut_exact(spark, sf_dir):
     assert pruned_total > 0  # nontrivial at the gate config
 
 
-def test_band_self_join_matches_lsh_candidates(spark, corpus):
-    """The band self-join over minhash_tables equals lsh_candidates on
+def test_cross_batch_near_dups_store_loop(spark, corpus):
+    """The same-batch case of a signature-store loop: the band
+    self-join over minhash_tables equals lsh_candidates on
     a distinct-text corpus (exact-dup canonicalization is the identity
     there); the planted near-dup 1001 of doc 1 makes a pair."""
     base = corpus.filter(F.col("doc_id") != 1000)  # drop the exact dup

@@ -305,6 +305,207 @@ def test_table_tsv_raw_text(spark):
     assert got == table_raw_text([["h1", "h2"], ["a b", ""]]) == "h1\th2\na b\t"
 
 
+# ------------------------------------------------- curation stages
+# The corpus-curation operators, each run directly on the synth
+# corpus (sf0.001: 500 pages over hot/warm/tail hosts) or on its
+# extracted winner texts.
+
+
+@pytest.fixture(scope="module")
+def winners(spark, sf_dir):
+    all_pages = synth.pages_from_documents(spark, sf_dir)
+    return (
+        pick_winner(run_engines_fused(all_pages, with_spans=False))
+        .select("url", "doc_text")
+        .join(all_pages.select("url", "lang"), "url")
+        .persist()
+    )
+
+
+def test_curate_robots_stage(spark, sf_dir):
+    """robots_gate flags disallowed pages before extraction: warm
+    fully disallowed for ccbot (125 of 500 pages) plus hot's
+    /doc/*2$ wildcard (ids ending in 2 -- 50 even docs); tail hosts
+    have no robots row and stay. The gate flags, it never drops, and
+    an agent no group names is allowed everywhere."""
+    from ocr_compare_spark.operators.robots import robots_gate
+
+    all_pages = synth.pages_from_documents(spark, sf_dir).select("url")
+    robots = spark.createDataFrame(
+        [
+            ("warm.example.com", "User-agent: ccbot\nDisallow: /\n"),
+            ("hot.example.com", "User-agent: ccbot\nDisallow: /doc/*2$\n"),
+        ],
+        "host string, robots_txt string",
+    )
+    gated = robots_gate(all_pages, robots, "ccbot")
+    assert gated.count() == all_pages.count() == 500
+    blocked = [r["url"] for r in gated.filter(~F.col("robots_allowed")).collect()]
+    assert len(blocked) == 125 + 50
+    assert all(("warm." in u) or u.endswith("2") for u in blocked)
+    assert not any("tail" in u for u in blocked)
+    other = robots_gate(all_pages, robots, "otherbot")
+    assert other.filter(~F.col("robots_allowed")).count() == 0
+
+
+def test_curate_blocklist_and_ppl_stages(spark, sf_dir, winners):
+    """The URL blocklist prunes pages before extraction
+    (warm.example.com hosts doc_id%4==1 -> exactly 125 of 500 pages;
+    every id ending in 13 is also %4==1, so the pattern adds
+    nothing), and the unigram-LM cross-entropy gate at the median
+    score keeps the lower half and drops a real tail."""
+    from ocr_compare_spark.operators import lm as lm_ops
+    from ocr_compare_spark.operators.webfilter import url_filter_columns
+
+    all_pages = synth.pages_from_documents(spark, sf_dir).select("url")
+    wf = url_filter_columns("url", ("warm.example.com",), (r"/doc/\d*13$",))
+    reasons = all_pages.select(wf["block_reason"].alias("r"), wf["blocked"].alias("b"))
+    assert reasons.filter(F.col("r").isNotNull()).count() == 125
+    assert reasons.filter(F.col("b") == 1).count() == 125
+    assert reasons.filter(F.col("r").startswith("pattern:")).count() == 0
+    only_pattern = url_filter_columns("url", (), (r"/doc/\d*13$",))
+    assert all_pages.filter(only_pattern["block_reason"].isNotNull()).count() > 0
+
+    n = winners.count()
+    model = lm_ops.train_unigram_lm(winners, "doc_text")
+    scores = lm_ops.perplexity_scores(
+        winners.select("url", "doc_text"), model, "url", "doc_text", method="data"
+    )
+    ce = sorted(r["cross_entropy"] for r in scores.collect())
+    assert len(ce) == n
+    cutoff = ce[len(ce) // 2]
+    kept = winners.join(
+        scores.filter(F.col("cross_entropy") <= cutoff).select("url"), "url", "left_semi"
+    ).count()
+    assert n // 2 < kept < n
+
+
+def test_curate_paragraph_dedup_stage(winners):
+    """paragraph_dedup: the synth corpus's cycling vocabulary plants
+    cross-doc duplicate paragraphs, so the pass drops non-first
+    copies, keeps one row per doc, and leaves every kept paragraph
+    distinct across the corpus. scrub_pii composes as a no-op on the
+    PII-free corpus."""
+    from ocr_compare_spark.operators.dedup import paragraph_dedup
+    from ocr_compare_spark.operators.textstats import scrub_pii
+
+    n = winners.count()
+    out = paragraph_dedup(
+        winners.select(F.col("url").alias("id"), "doc_text"), "id", "doc_text"
+    ).persist()
+    assert out.count() == n
+    dropped = out.agg(F.sum("n_dropped")).first()[0]
+    assert dropped > 0
+    paras = out.select(F.explode(F.split("text", "\n\n", -1)).alias("p")).filter(
+        F.trim("p") != ""
+    )
+    assert paras.groupBy("p").count().filter(F.col("count") > 1).count() == 0
+    assert out.filter(scrub_pii("text") != F.col("text")).count() == 0
+    out.unpersist()
+
+
+def test_curate_substring_dedup_stage(winners):
+    """substring_dedup (Lee et al.): the cycling vocabulary plants
+    long cross-doc token runs, so a 24-token window cuts real tokens
+    while keeping one row per doc; a window longer than any doc cuts
+    nothing."""
+    from ocr_compare_spark.operators.dedup import substring_dedup
+
+    docs = winners.select(F.col("url").alias("id"), "doc_text")
+    cut = substring_dedup(docs, "id", "doc_text", window=24).persist()
+    assert cut.count() == winners.count()
+    assert cut.agg(F.sum("n_tokens_removed")).first()[0] > 0
+    cut.unpersist()
+    none = substring_dedup(docs, "id", "doc_text", window=1_000_000)
+    assert none.agg(F.sum("n_tokens_removed")).first()[0] == 0
+
+
+def test_curate_decontam_stage(spark, sf_dir, winners):
+    """ngram_decontaminate: a bench built from docs 3 and 17's own
+    text flags at least those two winner pages (and any page sharing
+    an 8-gram with them); an empty bench flags nothing."""
+    from ocr_compare_spark.operators.dedup import ngram_decontaminate
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    bench = docs.filter("doc_id IN (3, 17)").select("text")
+    flags = ngram_decontaminate(
+        winners.select(F.col("url").alias("id"), "doc_text"), bench, "id", "doc_text",
+        bench_text_col="text",
+    )
+    assert flags.count() == winners.count()
+    hit = {r["id"] for r in flags.filter(F.col("contaminated")).collect()}
+    assert len(hit) >= 2
+    assert any(u.endswith("/3") for u in hit) and any(u.endswith("/17") for u in hit)
+    empty = ngram_decontaminate(
+        winners.select(F.col("url").alias("id"), "doc_text"), bench.limit(0),
+        "id", "doc_text", bench_text_col="text",
+    )
+    assert empty.filter(F.col("contaminated")).count() == 0
+
+
+def test_curate_dsir_stage(spark, sf_dir, winners):
+    """DSIR resampling toward a target corpus's hashed n-gram
+    distribution keeps exactly k docs, and the selection is
+    deterministic across reruns."""
+    from ocr_compare_spark.operators.dsir import dsir_log_weights, dsir_resample
+
+    tgt = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .filter(F.col("doc_id") % 25 == 3)
+        .select(F.col("text").alias("doc_text"))
+    )
+    k = 40
+
+    def select():
+        w = dsir_log_weights(winners.select("url", "doc_text"), tgt, "url", "doc_text")
+        return {r["url"] for r in dsir_resample(w, "url", k).select("url").collect()}
+
+    first = select()
+    assert len(first) == k
+    assert select() == first
+
+
+def test_curate_temperature_mix_stage(winners):
+    """temperature_mix (mC4/XLM-R) at alpha 0.3 thins the mix and
+    shrinks the head language's token share: en dominates the synth
+    corpus, so its share must fall."""
+    from ocr_compare_spark.operators.sampling import temperature_mix
+    from ocr_compare_spark.operators.textstats import stats_columns
+
+    df = winners.withColumn("token_count", stats_columns("doc_text")["token_count"])
+    out = temperature_mix(df, "lang", "token_count", "url", 0.3)
+    n_in, n_out = df.count(), out.count()
+    assert 0 < n_out < n_in
+
+    def en_share(d):
+        r = d.agg(
+            F.sum(F.when(F.col("lang") == "en", F.col("token_count")).otherwise(0)).alias("en"),
+            F.sum("token_count").alias("all"),
+        ).first()
+        return r["en"] / r["all"]
+
+    assert en_share(out) < en_share(df)
+
+
+def test_curate_splits_stage(winners):
+    """assign_split: deterministic train/val/test assignment keyed on
+    url -- counts are exhaustive, follow the weights' order, land
+    only in the named splits, and are rerun-stable."""
+    from ocr_compare_spark.operators.sampling import assign_split
+
+    w = {"train": 0.8, "val": 0.1, "test": 0.1}
+
+    def counts():
+        out = assign_split(winners, "url", w)
+        return {r["split"]: r["count"] for r in out.groupBy("split").count().collect()}
+
+    c = counts()
+    assert set(c) <= {"train", "val", "test"}
+    assert sum(c.values()) == winners.count()
+    assert c.get("train", 0) > c.get("val", 0)
+    assert counts() == c
+
+
 # ------------------------------------------------- token windows
 
 

@@ -217,8 +217,9 @@ def test_cms_partition_invariant(spark):
     assert a == b
 
 
-def test_corpus_profile_sketches(spark, sf_dir):
-    # a sketch-based corpus profile over the real corpus, each sketch
+def test_curate_profile_stage(spark, sf_dir):
+    # the corpus profile stage, run directly with the sketches over
+    # the real corpus, each sketch
     # against the exact answer: HLL vocabulary per lang within 4
     # standard errors of the exact distinct count, every true CMS
     # heavy hitter reported with an estimate >= its count (one-sided
