@@ -96,20 +96,3 @@ def create_engine(name: str) -> EngineSpec:
 def is_pdf_bytes(data: bytes) -> bool:
     # ≈ is_pdf, page_limit/page_count.py:6-16
     return data[:4] == b"%PDF"
-
-
-def sniff_mime(data: bytes) -> str:
-    # ≈ _detect_mime_type magic bytes, gdai_executor.py:92-111
-    if data[:4] == b"%PDF":
-        return "application/pdf"
-    if data[:3] == b"\xff\xd8\xff":
-        return "image/jpeg"
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        return "image/png"
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return "image/gif"
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        return "image/webp"
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        return "image/tiff"
-    return "text/html"

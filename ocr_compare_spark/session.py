@@ -5,6 +5,17 @@ executor: AQE on (runtime re-plan + skew-join splitting), shuffle
 partitions ~ cores, small Arrow batches because each row carries a
 KB–MB ``html`` payload (a 10k-row Arrow batch of 1 MB documents would
 be 10 GB — bound it).
+
+Python workers start from ``ocr_compare_spark.worker_daemon`` instead of
+``pyspark.daemon``. pyspark's worker runs ``importlib.invalidate_caches()``
+once per task, and before CPython 3.12 every cached zipimporter answers
+it by re-reading its archive's directory (pyspark.zip, the py4j zip and
+the spark-core jar): 0.1-0.3 s of CPU per task, more than half of a
+loopbench run's Python worker CPU. The daemon backports the 3.12 fix
+(https://github.com/python/cpython/issues/103200), which re-reads an
+archive only on the next lookup through it, and then runs pyspark's
+own daemon, so the workers, their pyspark and ``addPyFile`` are
+unchanged.
 """
 
 from __future__ import annotations
@@ -55,6 +66,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", ARROW_MAX_RECORDS)
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon with CPython 3.12's lazy
+        # zipimport invalidation (python/cpython#103200): pyspark
+        # invalidates import caches per task, and 3.11 re-reads
+        # pyspark.zip's directory each time (module docstring).
+        .config("spark.python.daemon.module", "ocr_compare_spark.worker_daemon")
         # Shuffle/broadcast temp on RAM-backed tmpfs: this VM's disk
         # is slow and contended (measured: the same 288k-pair compare
         # phase is 11-18s with tmpfs local.dir vs 68-74s on /tmp, and

@@ -6,7 +6,7 @@ from __future__ import annotations
 from ocr_compare_spark import synth
 import pytest
 
-from ocr_compare_spark.engines.base import create_engine, is_pdf_bytes, sniff_mime
+from ocr_compare_spark.engines.base import create_engine, is_pdf_bytes
 from ocr_compare_spark.engines.density import parse_density
 from ocr_compare_spark.engines.dom_heuristic import parse_dom
 from ocr_compare_spark.engines.pdf_stream import count_pdf_pages, parse_pdf
@@ -101,14 +101,6 @@ def test_truncated_pdf_quarantined():
     r = doc_to_result(parse_pdf(b"%PDF-1.4 garbage no streams"), 0.85)
     assert r["error"] == "pdf_truncated"
     assert r["doc_text"] is None
-
-
-def test_mime_sniffing():
-    assert sniff_mime(b"%PDF-1.4") == "application/pdf"
-    assert sniff_mime(b"\xff\xd8\xff\xe0") == "image/jpeg"
-    assert sniff_mime(b"\x89PNG\r\n\x1a\nxx") == "image/png"
-    assert sniff_mime(b"GIF89a") == "image/gif"
-    assert sniff_mime(b"<html>") == "text/html"
 
 
 def test_span_offsets_point_into_doc_text():

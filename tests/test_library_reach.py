@@ -62,6 +62,8 @@ KEEP = {
 ENTRY_POINTS = {
     "ocr_compare_spark/plans/job.py": "the north_rule's spark-submit job (checkpoint, lineage, "
     "metrics); loopbench flagship copies its shape",
+    "ocr_compare_spark/worker_daemon.py": "Spark runs it with `python -m` through "
+    "spark.python.daemon.module (session.get_spark): the Python workers' daemon",
 }
 
 KNOB_KEEP = {
