@@ -47,19 +47,11 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_compare_spark.functions.bind import _bind
-
-#: ASCII word regex — identical token streams under Java regex and RE2.
-WORD_RE = "[a-z0-9]+"
+from ocr_compare_spark.operators.keywords import _words
+from ocr_compare_spark.operators.sampling import _TWO_32
 
 DEFAULT_BUCKETS = 8192
 MAX_BUCKETS = 1 << 20  # driver-collect guard for the bucket models
-
-_TWO_32 = 4294967296.0
-
-
-def _words(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.regexp_extract_all(F.lower(c), F.lit(WORD_RE), 0)
 
 
 def _bucket_of(gram: Column, n_buckets: int) -> Column:

@@ -8,16 +8,20 @@ to tesseract/GDAI) sends each payload to its engines by magic bytes
 (the %PDF check of page_count.py:6-16) and quarantines failures as
 error docs — all in ``_parse_payload`` — then flatten.
 
-Text assembly here follows the reference separators EXACTLY
-(ocr_schema.py:85,102,119,147,182,198) and records char offsets per
-word span while assembling, so the span table can rebuild the
-document text byte-identically (operators/assemble.py proves it).
+One walker, ``_walk``, flattens a parsed document's layout tree: it
+renders ``doc_text`` with the reference separators EXACTLY
+(ocr_schema.py:85,102,119,147,182,198), aggregates the confidences,
+and appends one entry per word span to per-column lists. The nested
+``spans`` array of ``doc_to_result`` and the flat rows of
+``extract_spans_stream`` are both built from those lists, so the span
+table rebuilds the document text byte-identically on either path
+(operators/assemble.py proves it).
 """
 
 from __future__ import annotations
 
 import json
-import operator
+from itertools import accumulate
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -143,16 +147,28 @@ def _dfs_paras(blk) -> list[list[str]]:
     return out
 
 
-def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) -> dict:
-    """ParsedDoc -> one EXTRACT_RESULT_TYPE row (doc_text + span rows).
+#: the span columns a word's position, box, confidence and property
+#: bag fill; every other SPAN_FIELDS column is structure (ordinals,
+#: paths, text) and costs no per-word math
+_GEOMETRY = ("char_start", "char_end", "bbox", "confidence", "extra")
+
+
+def _walk(parsed: ParsedDoc, base_conf: float, cols: dict | None) -> dict:
+    """Walk an error-free ParsedDoc once: render its text, count its
+    nodes and aggregate its confidence, and append one entry per word
+    span to each per-column list in ``cols`` (nothing when ``cols`` is
+    None). The structural columns are always filled; the _GEOMETRY
+    columns only when ``cols`` holds them. Returns the doc-level
+    fields of an EXTRACT_RESULT_TYPE row.
 
     Renders the RECURSIVE element tree (reference Block.elements:
     List[Table|Paragraph|Block], ocr_schema.py:130-167): a block's
     elements join with SEP_BLOCK at every nesting level, paragraphs
-    render word-by-word with char offsets, tables render markdown.
-    Span rows carry `elem_path` (element-ordinal path from the page
-    to the word's paragraph) so the flattened table round-trips the
-    recursion (see schema.py).
+    render their words ' '-joined with char offsets per word, in lines
+    of LINE_WORDS words (line_no, line confidence), tables render
+    markdown. Spans carry `elem_path` (element-
+    ordinal path from the page to the word's paragraph) so the
+    flattened table round-trips the recursion (see schema.py).
 
     Confidence is aggregated exactly like the reference: line = mean
     of word confs, paragraph = mean of lines, block = mean of its
@@ -161,20 +177,36 @@ def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) 
     (tesseract_executor.py:210-325 mean-of-means, not a flat mean).
     Pages with no words contribute nothing (reference skips empty
     pages when averaging)."""
-    if parsed.error is not None:
-        return {
-            "doc_text": None, "n_pages": 0, "n_blocks": 0, "n_tables": 0,
-            "n_words": 0, "confidence": None, "spans": [] if with_spans else None,
-            "pages_meta": None, "native_json": None, "error": parsed.error,
-        }
     parts: list[str] = []
-    spans: list[dict] = []
     off = widx = n_blocks = n_tables = n_words = 0
+    geo = cols is not None and _GEOMETRY[0] in cols
+    if cols is not None:
+        # the structural columns in SPAN_FIELDS order, line_no,
+        # word_no and text aside: constant over a run of words
+        const_cols = [
+            cols[f.name] for f in SPAN_FIELDS
+            if f.name not in _GEOMETRY + ("line_no", "word_no", "text")
+        ]
+        line_col, word_col, text_col = cols["line_no"], cols["word_no"], cols["text"]
+    if geo:
+        start_col, end_col, bbox_col, conf_col, extra_col = (cols[c] for c in _GEOMETRY)
 
     def emit(s: str) -> None:
         nonlocal off
         parts.append(s)
         off += len(s)
+
+    def run(words, line_nos, word_nos, *const) -> None:
+        """One span per word of ``words``, with its line_no and word_no
+        from ``line_nos`` / ``word_nos``; page_no, block_no, block_type,
+        elem_path, para_no, row_no, column_no, table_no, row_type and
+        cell_path from ``const``, one value for every word."""
+        n = len(words)
+        for col, v in zip(const_cols, const):
+            col.extend([v] * n)
+        line_col.extend(line_nos)
+        word_col.extend(word_nos)
+        text_col.extend(words)
 
     def render_table(rows, has_header, path, page_no, bbox, extra):
         """Emit spans for one table element, return its confidence
@@ -186,127 +218,94 @@ def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) 
         pure Arrow weight)."""
         nonlocal n_tables, n_words, widx
         n_tables += 1
-        tno = n_tables - 1
-        tbl_start, tbl_words = widx, 0
-        first = True
-        first_idx = len(spans)
+        tbl_start = widx
+        first = len(extra_col) if geo else 0
         for ri, row in enumerate(rows):
             rtype = "HEADER" if (has_header and ri == 0) else "BODY"
             for ci, cell in enumerate(row):
                 for cpi, (cpath, ckind, cp) in enumerate(_cell_runs(cell)):
-                    words = cp.split()
-                    if not words:
-                        # Empty cell: placeholder span so the
-                        # assemble cascade keeps the column and
-                        # sizes the '---' separator row from the
-                        # true header width (byte-identical
-                        # round-trip for <td></td>).
-                        words = [""]
-                    for wi, w in enumerate(words):
-                        wc = word_confidence(base_conf, widx) if w else None
-                        if w:
-                            n_words += 1
-                            widx += 1
-                            tbl_words += 1
-                        if with_spans:
-                            e = extra if first else None
-                            if ckind is not None and wi == 0:
-                                # mark the run's first span with the
-                                # in-cell item kind so the tree can
-                                # tell an inner TABLE from an in-cell
-                                # block (cell_path alone is ambiguous)
-                                e = dict(e or {})
-                                e["cell_item"] = ckind
-                            spans.append({
-                                "page_no": page_no, "block_no": path[0], "block_type": "TABLE",
-                                "elem_path": path,
-                                "para_no": cpi, "line_no": ri, "word_no": wi, "text": w,
-                                "char_start": None, "char_end": None, "bbox": bbox,
-                                "confidence": wc, "row_no": ri, "column_no": ci,
-                                "table_no": tno, "row_type": rtype,
-                                "cell_path": list(cpath) if cpath is not None else None,
-                                "extra": e,
-                            })
-                            first = False
-        conf = line_confidence(base_conf, tbl_start, tbl_words) if tbl_words else None
-        if with_spans and conf is not None and len(spans) > first_idx:
+                    # Empty cell: placeholder span so the assemble
+                    # cascade keeps the column and sizes the '---'
+                    # separator row from the true header width
+                    # (byte-identical round-trip for <td></td>).
+                    words = cp.split() or [""]
+                    n = 0 if words == [""] else len(words)  # real words
+                    if cols is not None:
+                        run(words, [ri] * len(words), range(len(words)), page_no, path[0],
+                            "TABLE", path, cpi, ri, ci, n_tables - 1, rtype,
+                            list(cpath) if cpath is not None else None)
+                    if geo:
+                        start_col.extend([None] * len(words))
+                        end_col.extend([None] * len(words))
+                        bbox_col.extend([bbox] * len(words))
+                        conf_col.extend(
+                            [word_confidence(base_conf, widx + i) for i in range(n)] or [None]
+                        )
+                        e = extra if len(extra_col) == first else None
+                        if ckind is not None:
+                            # mark the run's first span with the in-cell
+                            # item kind so the tree can tell an inner
+                            # TABLE from an in-cell block (cell_path
+                            # alone is ambiguous)
+                            e = dict(e or {})
+                            e["cell_item"] = ckind
+                        extra_col.append(e)
+                        extra_col.extend([None] * (len(words) - 1))
+                    n_words += n
+                    widx += n
+        conf = line_confidence(base_conf, tbl_start, widx - tbl_start) if widx > tbl_start else None
+        if geo and conf is not None:
             # the table ELEMENT's exact confidence rides the first
             # span's extra bag (repr round-trips the double exactly,
             # so the nested tree recovers it bit-for-bit — a float
             # mean over the stored word confs would differ in ulps
             # from this closed form)
-            e0 = dict(spans[first_idx]["extra"] or {})
-            e0["elem_conf"] = repr(conf)
-            spans[first_idx]["extra"] = e0
+            extra_col[first] = {**(extra_col[first] or {}), "elem_conf": repr(conf)}
         return conf
 
     def render_para(tokens, path, page_no, block_type, bbox, char_w, block_start, extra):
-        nonlocal n_words, widx, off
-        lines = [tokens[i : i + LINE_WORDS] for i in range(0, len(tokens), LINE_WORDS)]
-        line_confs: list[float] = []
-        depth = len(path) - 1
-        para_no = path[-1]
-        block_no = path[0]
-        # flat TEXT spans store NULL elem_path — it is derivably
-        # [block_no, para_no] (see schema.py / with_elem_path), and
-        # storing a per-word array for the overwhelmingly-flat web is
-        # pure Arrow/shuffle weight
-        stored_path = path if depth > 1 else None
-        # hot loop: local aliases beat closure-cell access per word
-        parts_append = parts.append
-        spans_append = spans.append
-        _off, _widx = off, widx
-        for li, line in enumerate(lines):
-            if li > 0:
-                parts_append(" ")  # SEP_PARAGRAPH == SEP_LINE == ' '
-                _off += 1
-            lc = None
-            if line:
-                lc = line_confidence(base_conf, _widx, len(line))
-                line_confs.append(lc)
-            if with_spans:
-                for wi, w in enumerate(line):
-                    if wi > 0:
-                        parts_append(" ")
-                        _off += 1
-                    wb = bbox
-                    if bbox is not None:
-                        wb = {
-                            "left": bbox["left"] + char_w * (_off - block_start),
-                            "top": bbox["top"],
-                            "width": char_w * len(w),
-                            "height": bbox["height"],
-                        }
-                    lw = len(w)
-                    e = extra if li == 0 and wi == 0 else None
-                    if wi == 0 and lc is not None:
-                        # the LINE's exact closed-form confidence on
-                        # its first span (repr round-trips the double
-                        # bit-exactly for the nested tree)
-                        e = dict(e or {})
-                        e["line_conf"] = repr(lc)
-                    spans_append({
-                        "page_no": page_no, "block_no": block_no, "block_type": block_type,
-                        "elem_path": stored_path,
-                        "para_no": para_no, "line_no": li, "word_no": wi, "text": w,
-                        "char_start": _off, "char_end": _off + lw, "bbox": wb,
-                        "confidence": base_conf - (_widx % 10) / 100.0, "row_no": None,
-                        "column_no": None, "table_no": None, "row_type": None,
-                        "cell_path": None,
-                        "extra": e,
-                    })
-                    _widx += 1
-                    parts_append(w)
-                    _off += lw
-                n_words += len(line)
-            else:
-                # hot path: no per-word Python beyond the emit
-                n_words += len(line)
-                _widx += len(line)
-                s = " ".join(line)
-                parts_append(s)
-                _off += len(s)
-        off, widx = _off, _widx
+        nonlocal n_words, widx
+        n = len(tokens)
+        if cols is not None:
+            # flat TEXT spans store NULL elem_path — it is derivably
+            # [block_no, para_no] (see schema.py / with_elem_path), and
+            # storing a per-word array for the overwhelmingly-flat web
+            # is pure Arrow/shuffle weight
+            run(tokens, [i // LINE_WORDS for i in range(n)], [i % LINE_WORDS for i in range(n)],
+                page_no, path[0], block_type, path if len(path) > 2 else None, path[-1],
+                None, None, None, None, None)
+        line_confs = [
+            line_confidence(base_conf, widx + i, min(LINE_WORDS, n - i))
+            for i in range(0, n, LINE_WORDS)
+        ]
+        if geo and tokens:
+            # words are ' '-separated across line breaks too
+            starts = list(accumulate([len(w) + 1 for w in tokens[:-1]], initial=off))
+            start_col.extend(starts)
+            end_col.extend([o + len(w) for o, w in zip(starts, tokens)])
+            bbox_col.extend([None] * n if bbox is None else [
+                {
+                    "left": bbox["left"] + char_w * (o - block_start),
+                    "top": bbox["top"],
+                    "width": char_w * len(w),
+                    "height": bbox["height"],
+                }
+                for o, w in zip(starts, tokens)
+            ])
+            conf_col.extend([base_conf - (i % 10) / 100.0 for i in range(widx, widx + n)])
+            # each LINE's exact closed-form confidence on its first span
+            # (repr round-trips the double bit-exactly for the nested
+            # tree); the block's extra rides the para's first span too
+            extras = [None] * n
+            for li, lc in enumerate(line_confs):
+                e = dict(extra or {}) if li == 0 else {}
+                e["line_conf"] = repr(lc)
+                extras[li * LINE_WORDS] = e
+            extra_col.extend(extras)
+        # SEP_PARAGRAPH == SEP_LINE == ' ', the separator between words
+        emit(" ".join(tokens))
+        n_words += n
+        widx += n
         return _mean(line_confs)
 
     def render_block(blk, path, page_no):
@@ -314,29 +313,31 @@ def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) 
         (mean over element confidences, recursively) or None."""
         nonlocal n_blocks
         n_blocks += 1
-        extra = {"tag": blk.tag} if blk.tag else None
-        if blk.page_span is not None and blk.page_span[1] > page_no:
-            # multi-page block (reference Block.page_span): the last
-            # spanned page rides the block's first span so the tree
-            # and the combine renumbering can consume it
-            extra = dict(extra or {})
-            extra["page_span_last"] = str(blk.page_span[1])
-        bbox = None
-        if blk.bbox is not None:
-            bbox = {"left": blk.bbox[0], "top": blk.bbox[1], "width": blk.bbox[2], "height": blk.bbox[3]}
-        # Word-level bboxes (P5/P9, ≈ tesseract_executor.py word
-        # boxes): derived from the block's cursor bbox with a uniform
-        # char width = block_width / emitted block chars — so word
-        # envelopes union back to the block box exactly
-        # (see operators/geometry.py).
+        extra = bbox = char_w = None
+        if geo:
+            extra = {"tag": blk.tag} if blk.tag else None
+            if blk.page_span is not None and blk.page_span[1] > page_no:
+                # multi-page block (reference Block.page_span): the last
+                # spanned page rides the block's first span so the tree
+                # and the combine renumbering can consume it
+                extra = dict(extra or {})
+                extra["page_span_last"] = str(blk.page_span[1])
+            if blk.bbox is not None:
+                bbox = {
+                    "left": blk.bbox[0], "top": blk.bbox[1],
+                    "width": blk.bbox[2], "height": blk.bbox[3],
+                }
+                # Word-level bboxes (P5/P9, ≈ tesseract_executor.py
+                # word boxes): derived from the block's cursor bbox
+                # with a uniform char width = block_width / emitted
+                # block chars — so word envelopes union back to the
+                # block box exactly (see operators/geometry.py).
+                leaf = _dfs_paras(blk)
+                total_chars = sum(
+                    sum(len(w) for w in para) + max(len(para) - 1, 0) for para in leaf
+                ) + max(len(leaf) - 1, 0)  # SEP_BLOCK between elements
+                char_w = bbox["width"] / total_chars if total_chars else 0.0
         block_start = off
-        char_w = None
-        if bbox is not None:
-            leaf = _dfs_paras(blk)
-            total_chars = sum(
-                sum(len(w) for w in para) + max(len(para) - 1, 0) for para in leaf
-            ) + max(len(leaf) - 1, 0)  # SEP_BLOCK between elements
-            char_w = bbox["width"] / total_chars if total_chars else 0.0
         elem_confs: list[float] = []
         for ei, (kind, payload) in enumerate(blk.iter_elements()):
             if ei > 0:
@@ -367,7 +368,28 @@ def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) 
         pagec = _mean(block_confs)
         if pagec is not None:
             page_confs.append(pagec)
+    return {
+        "doc_text": "".join(parts),
+        "n_pages": len(parsed.pages),
+        "n_blocks": n_blocks,
+        "n_tables": n_tables,
+        "n_words": n_words,
+        "confidence": _mean(page_confs),
+    }
 
+
+def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) -> dict:
+    """ParsedDoc -> one EXTRACT_RESULT_TYPE row: ``_walk``'s doc_text,
+    counts and confidence, and (``with_spans``) its span columns as
+    one tuple per span in SPAN_FIELDS order. An error doc has no
+    text and no spans."""
+    if parsed.error is not None:
+        return {
+            "doc_text": None, "n_pages": 0, "n_blocks": 0, "n_tables": 0,
+            "n_words": 0, "confidence": None, "spans": [] if with_spans else None,
+            "pages_meta": None, "native_json": None, "error": parsed.error,
+        }
+    cols = {f.name: [] for f in SPAN_FIELDS} if with_spans else None
     pages_meta = None
     if parsed.page_dims is not None:
         pages_meta = [
@@ -379,13 +401,8 @@ def doc_to_result(parsed: ParsedDoc, base_conf: float, with_spans: bool = True) 
             for i, d in enumerate(parsed.page_dims)
         ]
     return {
-        "doc_text": "".join(parts),
-        "n_pages": len(parsed.pages),
-        "n_blocks": n_blocks,
-        "n_tables": n_tables,
-        "n_words": n_words,
-        "confidence": _mean(page_confs),
-        "spans": spans if with_spans else None,
+        **_walk(parsed, base_conf, cols),
+        "spans": list(zip(*cols.values())) if with_spans else None,
         "pages_meta": pages_meta,
         "native_json": json.dumps(parsed.native, sort_keys=True) if parsed.native else None,
         "error": None,
@@ -527,96 +544,13 @@ SPANS_STREAM_SCHEMA = T.StructType(
 
 
 # The column subset the assembly cascade consumes — passing this as
-# ``fields`` skips pandas/Arrow conversion of the heavy unused columns
-# (bbox struct, extra map, char offsets, confidence) on the hot path.
+# ``fields`` skips the per-word geometry and the pandas/Arrow
+# conversion of the heavy unused columns (bbox struct, extra map, char
+# offsets, confidence) on the hot path.
 ASSEMBLY_SPAN_FIELDS = (
     "page_no", "block_no", "block_type", "elem_path", "para_no",
     "line_no", "word_no", "text", "row_no", "column_no", "row_type",
 )
-
-#: span fields that are pure STRUCTURE (ordinals, paths, text) — no
-#: per-word offset/bbox/confidence math. A ``fields`` request within
-#: this set routes extract_spans_stream through the lean columnar
-#: emitter below (r6: the full doc_to_result builds a 17-key dict,
-#: a bbox dict and a confidence per word — ~60% of the span-stream
-#: worker time at sf1.0 — none of which these columns need).
-STRUCTURAL_SPAN_FIELDS = frozenset(
-    ASSEMBLY_SPAN_FIELDS + ("table_no", "cell_path")
-)
-
-
-def _emit_spans_structural(parsed: ParsedDoc, out: dict) -> int:
-    """Append one entry per word span to each column list in ``out``
-    (all STRUCTURAL_SPAN_FIELDS columns) for a successfully parsed
-    doc; returns the number of spans appended.
-
-    Emission values replicate doc_to_result's spans projected to the
-    structural columns EXACTLY (same traversal: iter_elements order,
-    LINE_WORDS line chunking, _cell_runs cell flattening, the empty-
-    cell placeholder span, the NULL-elem_path rule for flat TEXT
-    spans) — pytest pins the per-doc equality over a corpus slice
-    containing table, nested and multi-page docs. No offsets, no
-    bboxes, no confidences, no extra bags, no doc_text: the skipped
-    math is what makes this ~3x cheaper per word."""
-    ap_page = out["page_no"].append
-    ap_blk = out["block_no"].append
-    ap_bt = out["block_type"].append
-    ap_path = out["elem_path"].append
-    ap_para = out["para_no"].append
-    ap_line = out["line_no"].append
-    ap_word = out["word_no"].append
-    ap_text = out["text"].append
-    ap_row = out["row_no"].append
-    ap_col = out["column_no"].append
-    ap_tbl = out["table_no"].append
-    ap_rt = out["row_type"].append
-    ap_cp = out["cell_path"].append
-    n0 = len(out["page_no"])
-    n_tables = 0
-
-    def render_table(rows, has_header, path, page_no):
-        nonlocal n_tables
-        n_tables += 1
-        tno = n_tables - 1
-        bno = path[0]
-        for ri, row in enumerate(rows):
-            rtype = "HEADER" if (has_header and ri == 0) else "BODY"
-            for ci, cell in enumerate(row):
-                for cpi, (cpath, ckind, cp) in enumerate(_cell_runs(cell)):
-                    words = cp.split() or [""]
-                    for wi, w in enumerate(words):
-                        ap_page(page_no); ap_blk(bno); ap_bt("TABLE")
-                        ap_path(path); ap_para(cpi); ap_line(ri)
-                        ap_word(wi); ap_text(w); ap_row(ri); ap_col(ci)
-                        ap_tbl(tno); ap_rt(rtype)
-                        ap_cp(list(cpath) if cpath is not None else None)
-
-    def render_para(tokens, path, page_no, block_type):
-        stored_path = path if len(path) - 1 > 1 else None
-        para_no = path[-1]
-        block_no = path[0]
-        for li in range(0, len(tokens), LINE_WORDS):
-            line_no = li // LINE_WORDS
-            for wi, w in enumerate(tokens[li : li + LINE_WORDS]):
-                ap_page(page_no); ap_blk(block_no); ap_bt(block_type)
-                ap_path(stored_path); ap_para(para_no); ap_line(line_no)
-                ap_word(wi); ap_text(w); ap_row(None); ap_col(None)
-                ap_tbl(None); ap_rt(None); ap_cp(None)
-
-    def render_block(blk, path, page_no):
-        for ei, (kind, payload) in enumerate(blk.iter_elements()):
-            if kind == "para":
-                render_para(payload, path + [ei], page_no, blk.block_type)
-            elif kind == "block":
-                render_block(payload, path + [ei], page_no)
-            else:
-                rows, has_header = payload
-                render_table(rows, has_header, path + [ei], page_no)
-
-    for pi, blocks in enumerate(parsed.pages):
-        for bi, blk in enumerate(blocks):
-            render_block(blk, [bi], pi + 1)
-    return len(out["page_no"]) - n0
 
 
 def extract_spans_stream(
@@ -627,24 +561,27 @@ def extract_spans_stream(
 ) -> DataFrame:
     """Span extraction as a FLAT row stream (mapInPandas): one output
     row per word span, identical values to
-    ``spans_table(run_engines_fused(..., with_spans=True))`` — a doc
-    without spans (an error doc or an empty page) gives one all-null
-    span row, as the nested path's posexplode_outer does.
+    ``spans_table(run_engines_fused(..., with_spans=True))`` — both
+    come from the same ``_walk`` of each parsed doc. A doc without
+    spans (an error doc or an empty page) gives one all-null span
+    row, as the nested path's posexplode_outer does.
 
     Why it exists: the nested path serializes every span through an
     Arrow array<struct> cell — per-element, per-field object
-    traversal. Emitting one flat pandas DataFrame per batch converts
-    COLUMN-wise instead, which is the hot-path shape for span-level
-    pipelines (assembly, geometry, chunking) at 10^12 docs; the
-    nested path remains for consumers that need doc_text and spans
-    in one row.
+    traversal. The walker's per-column lists become one flat pandas
+    DataFrame per batch, converted COLUMN-wise, which is the hot-path
+    shape for span-level pipelines (assembly, geometry, chunking) at
+    10^12 docs; the nested path remains for consumers that need
+    doc_text and spans in one row.
 
     ``fields``: optional subset of SPAN_FIELDS names to emit (plus
     url/engine/engine_version, always). Consumers that don't need the
     heavy columns — bbox struct, extra map, char offsets — should
-    pass their subset (assembly: ASSEMBLY_SPAN_FIELDS): the skipped
-    columns never cross the Arrow boundary or the shuffle. Values of
-    the emitted columns are identical to the full emission."""
+    pass their subset (assembly: ASSEMBLY_SPAN_FIELDS): a request
+    without _GEOMETRY columns skips the per-word geometry, and the
+    skipped columns never cross the Arrow boundary or the shuffle.
+    Values of the emitted columns are identical to the full
+    emission."""
     specs = [create_engine(n) for n in engines]
     share_html = _shares_segmentation(specs)
     if fields is None:
@@ -656,37 +593,23 @@ def extract_spans_stream(
             + [T.StructField(n, by_name[n].dataType, True) for n in fields]
         )
     span_cols = [f.name for f in schema.fields[3:]]
-
-    # both emitters append one entry per span to each per-column list
-    # in ``out`` and return the number of spans
-    if fields is not None and set(fields) <= STRUCTURAL_SPAN_FIELDS:
-        out_cols = STRUCTURAL_SPAN_FIELDS
-
-        def emit(spec, parsed, out):
-            return _emit_spans_structural(parsed, out)
-
-    else:
-        out_cols = span_cols
-        # one tuple per span in out_cols order, transposed by zip; the
-        # first column is fetched twice so that a one-column request
-        # still gets tuples (zip stops at the last list in ``out``)
-        row_of = operator.itemgetter(*out_cols, *out_cols[:1])
-
-        def emit(spec, parsed, out):
-            spans = doc_to_result(parsed, spec.confidence)["spans"]
-            for col, vals in zip(out.values(), zip(*map(row_of, spans))):
-                col.extend(vals)
-            return len(spans)
+    # the walker fills every structural column, and all the geometry
+    # columns when any of them is requested
+    geo = not set(_GEOMETRY).isdisjoint(span_cols)
+    walk_cols = [f.name for f in SPAN_FIELDS if geo or f.name not in _GEOMETRY]
 
     def gen(batches):
         for pdf in batches:
-            out = {c: [] for c in out_cols}
+            out = {c: [] for c in walk_cols}
             urls: list[str] = []
             engs: list[str] = []
             vers: list[str] = []
             for url, data in zip(pdf["url"], pdf["html"]):
                 for spec, parsed in _parse_payload(specs, data, share_html):
-                    n = 0 if parsed.error is not None else emit(spec, parsed, out)
+                    n = len(out["page_no"])
+                    if parsed.error is None:
+                        _walk(parsed, spec.confidence, out)
+                    n = len(out["page_no"]) - n
                     if n == 0:
                         # error or empty doc: the one all-null row the
                         # nested path's posexplode_outer gives it

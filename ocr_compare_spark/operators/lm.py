@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_compare_spark.functions.bind import _bind
+from ocr_compare_spark.operators.textstats import tokens
 
 #: Driver guard for the literal path: a capped vocab this size is a
 #: few MB of plan literals; anything larger must use method="data".
@@ -65,11 +66,6 @@ OOV_MASS = 0.5
 
 def _round6(c: Column) -> Column:
     return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
-def _tokens(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, r"\s+")
 
 
 def train_unigram_lm(
@@ -96,7 +92,7 @@ def train_unigram_lm(
     # partition (the data-path summation-order contract).
     df = spread_small_input(df)
     counts = (
-        df.select(F.explode(_tokens(text_col)).alias("token"))
+        df.select(F.explode(tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
     )
@@ -186,7 +182,7 @@ def perplexity_scores(
 
         ce = _round6(-F.col("_f").getField("s") / F.col("n_tokens"))
         return (
-            df.select(F.col(id_col), _bind(_tokens(text_col), score).alias("_b"))
+            df.select(F.col(id_col), _bind(tokens(text_col), score).alias("_b"))
             .select(id_col, "_b.n_tokens", "_b._f")
             .select(
                 id_col,
@@ -199,7 +195,7 @@ def perplexity_scores(
     if method != "data":
         raise ValueError(f"unknown method {method!r}")
     exploded = df.select(
-        F.col(id_col), F.explode(_tokens(text_col)).alias("token")
+        F.col(id_col), F.explode(tokens(text_col)).alias("token")
     )
     scored = exploded.join(F.broadcast(lm), "token", "left")
     # `total` is NULL exactly on OOV rows; re-attach it from the lm's

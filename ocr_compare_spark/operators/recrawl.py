@@ -43,11 +43,9 @@ expression, so no full sort and no driver collect.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def _round6(c: Column) -> Column:
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+from ocr_compare_spark.operators.lm import _round6
 
 
 def change_stats(

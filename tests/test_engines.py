@@ -11,6 +11,7 @@ from ocr_compare_spark.engines.density import parse_density
 from ocr_compare_spark.engines.dom_heuristic import parse_dom
 from ocr_compare_spark.engines.pdf_stream import count_pdf_pages, parse_pdf
 from ocr_compare_spark.operators.extract import doc_to_result
+from tests.test_nesting_tables import span_dicts
 
 TEXT_120 = " ".join(f"w{i}" for i in range(120))
 
@@ -66,7 +67,7 @@ def test_nested_table_header():
     assert r["doc_text"] == (
         "| name | qty |\n| --- | --- |\n| apples | 3 |\n| pears | 5 |"
     )
-    cell_spans = [s for s in r["spans"] if s["block_type"] == "TABLE"]
+    cell_spans = [s for s in span_dicts(r) if s["block_type"] == "TABLE"]
     assert {(s["row_no"], s["column_no"]) for s in cell_spans} == {(0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1)}
 
 
@@ -107,7 +108,7 @@ def test_span_offsets_point_into_doc_text():
     for builder, parser in ((synth.build_html, parse_dom), (synth.build_pdf, parse_pdf)):
         payload = builder(1, TEXT_120)
         r = doc_to_result(parser(payload), 0.9)
-        for s in r["spans"]:
+        for s in span_dicts(r):
             if s["char_start"] is not None:
                 assert r["doc_text"][s["char_start"] : s["char_end"]] == s["text"]
 
@@ -121,7 +122,7 @@ def test_word_bboxes_union_to_block():
 
     text = " ".join(f"word{i}" for i in range(40))
     res = doc_to_result(parse_pdf(synth.build_pdf(7, text)), 0.85)
-    spans = [s for s in res["spans"] if s["bbox"] is not None]
+    spans = [s for s in span_dicts(res) if s["bbox"] is not None]
     assert spans, "pdf spans must carry word bboxes"
     by_block = {}
     for s in spans:

@@ -31,6 +31,11 @@ or ``**kwargs``. A test that only does ``isinstance(p, ...)``
 normalizes a type and selects nothing. A parameter no caller sets
 selects a path no caller takes: the parameter goes, with that path,
 or it is listed in KNOB_KEEP with the reason it stays.
+
+The duplicate rule compares every pair of top-level library ``def``s:
+two with the same arguments and the same body (docstring aside)
+compute one thing under two names. One of them goes, and its module
+imports the other.
 """
 
 from __future__ import annotations
@@ -421,6 +426,67 @@ def test_knob_rule_fails_a_stale_keep_entry():
     assert stale == ["f.mode", "h.gone"]
     _, stale = _findings("f(1)\n", keep=["f.mode"])
     assert not stale
+
+
+# ------------------------------------------------------------ duplicates
+
+
+def _body_key(fn):
+    """``ast.dump`` of a def's arguments and of its body without the
+    docstring: equal keys are one function under two names."""
+    body = fn.body
+    if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant) \
+            and isinstance(body[0].value.value, str):
+        body = body[1:]
+    return ast.dump(fn.args) + "".join(ast.dump(stmt) for stmt in body)
+
+
+def _duplicate_bodies(library):
+    """Sorted groups of "label:line name" for the top-level defs of
+    ``library`` (a list of (label, parsed module)) that share a body."""
+    groups: dict[str, list[str]] = {}
+    for label, tree in library:
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                groups.setdefault(_body_key(node), []).append(f"{label}:{node.lineno} {node.name}")
+    return sorted(g for g in groups.values() if len(g) > 1)
+
+
+def test_no_two_library_functions_share_a_body():
+    dups = _duplicate_bodies(_labelled([LIBRARY]))
+    assert not dups, "library functions with identical bodies (keep one, import it):\n" + "\n".join(
+        "  " + " == ".join(g) for g in dups
+    )
+
+
+_DUP_LIB = {
+    "lib/a.py": '''
+def words(col):
+    """Lower-case word tokens."""
+    return split(lower(col))
+
+
+def scaled(x, k=2):
+    return x * k
+''',
+    "lib/b.py": '''
+def _words(col):
+    return split(lower(col))
+
+
+def _tokens(text):
+    return split(lower(text))
+
+
+def scaled(x, k=3):
+    return x * k
+''',
+}
+
+
+def test_duplicate_rule_flags_a_twin_body_and_only_that():
+    library = [(label, ast.parse(src)) for label, src in _DUP_LIB.items()]
+    assert _duplicate_bodies(library) == [["lib/a.py:2 words", "lib/b.py:2 _words"]]
 
 
 # --------------------------------------------------------------- imports

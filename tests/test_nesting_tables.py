@@ -11,6 +11,15 @@ from ocr_compare_spark import synth
 from ocr_compare_spark.engines.density import parse_density
 from ocr_compare_spark.engines.dom_heuristic import parse_dom
 from ocr_compare_spark.operators.extract import doc_to_result, run_engines_fused, spans_table
+from ocr_compare_spark.schema import SPAN_FIELDS
+
+SPAN_NAMES = [f.name for f in SPAN_FIELDS]
+
+
+def span_dicts(r: dict) -> list[dict]:
+    """doc_to_result's spans (tuples in SPAN_FIELDS order) keyed by name."""
+    return [dict(zip(SPAN_NAMES, s)) for s in r["spans"]]
+
 
 NESTED_HTML = b"""<html><body>
 <p>alpha one</p>
@@ -34,7 +43,7 @@ def test_nested_sections_render_and_paths():
     assert r["doc_text"] == NESTED_EXPECTED
     # blocks: p(alpha), section, h2, blockquote, p(zeta) = 5
     assert r["n_blocks"] == 5
-    by_word = {s["text"]: s for s in r["spans"]}
+    by_word = {s["text"]: s for s in span_dicts(r)}
     # flat (depth-1) TEXT spans store NULL elem_path — derivably
     # [block_no, para_no] (schema.py storage contract); nested spans
     # carry the explicit path
@@ -48,7 +57,7 @@ def test_nested_sections_render_and_paths():
     assert (by_word["eps"]["block_no"], by_word["eps"]["para_no"]) == (1, 3)
     assert (by_word["zeta"]["block_no"], by_word["zeta"]["para_no"]) == (2, 0)
     # char anchors hold through nesting
-    for s in r["spans"]:
+    for s in span_dicts(r):
         assert r["doc_text"][s["char_start"] : s["char_end"]] == s["text"]
 
 
@@ -73,7 +82,7 @@ def test_density_flattens_nesting():
     # density keeps blocks flat: every kept block is top-level, text
     # joins all with '\n\n' (heading exempt from min-length rule)
     assert r["doc_text"].count("\n\n") == r["n_blocks"] - 1
-    assert all(s["elem_path"] is None for s in r["spans"])  # flat = depth 1
+    assert all(s["elem_path"] is None for s in span_dicts(r))  # flat = depth 1
 
 
 CELL_HTML = b"""<html><body><table>
@@ -89,12 +98,12 @@ def test_cell_paragraph_runs():
     assert r["doc_text"] == (
         "| h one | h two |\n| --- | --- |\n| first para second para | plain |"
     )
-    cell = [s for s in r["spans"] if s["row_no"] == 1 and s["column_no"] == 0]
+    cell = [s for s in span_dicts(r) if s["row_no"] == 1 and s["column_no"] == 0]
     assert [(s["para_no"], s["word_no"], s["text"]) for s in cell] == [
         (0, 0, "first"), (0, 1, "para"), (1, 0, "second"), (1, 1, "para"),
     ]
-    assert {s["row_type"] for s in r["spans"] if s["row_no"] == 0} == {"HEADER"}
-    assert {s["row_type"] for s in r["spans"] if s["row_no"] == 1} == {"BODY"}
+    assert {s["row_type"] for s in span_dicts(r) if s["row_no"] == 0} == {"HEADER"}
+    assert {s["row_type"] for s in span_dicts(r) if s["row_no"] == 1} == {"BODY"}
 
 
 HEADERLESS_HTML = b"""<html><body><table>
@@ -108,7 +117,7 @@ def test_headerless_table_renders_all_body():
     row, every row is BODY."""
     r = doc_to_result(parse_dom(HEADERLESS_HTML), 0.9)
     assert r["doc_text"] == "| a1 | a2 |\n| b1 | b2 |"
-    assert {s["row_type"] for s in r["spans"]} == {"BODY"}
+    assert {s["row_type"] for s in span_dicts(r)} == {"BODY"}
 
 
 @pytest.fixture(scope="module")
@@ -212,7 +221,9 @@ def test_flat_span_stream_equals_nested(spark, nested_pages):
 
 
 def _parity_pages(spark):
-    """Error, empty, table, nested and PDF payloads in one frame."""
+    """Error, empty, table, nested and PDF payloads in one frame, plus a
+    synth corpus slice covering flat, nested (%10==2), table (%10==4),
+    headerless-table (%20==14), cell-nesting (%40==24) and PDF docs."""
     from ocr_compare_spark.schema import PAGES_SCHEMA
 
     payloads = [
@@ -225,6 +236,10 @@ def _parity_pages(spark):
         ("u_nested", NESTED_HTML),
         ("u_pdf", synth.build_pdf(7, " ".join(f"w{i}" for i in range(40)))),
     ]
+    text = " ".join(f"w{i}" for i in range(120))
+    for doc_id in list(range(0, 50)) + [64, 84, 104, 114, 134]:
+        build = synth.build_pdf if synth.is_pdf_doc(doc_id) else synth.build_html
+        payloads.append((f"u_synth{doc_id}", build(doc_id, text)))
     rows = [(u, None, h, None, "en") for u, h in payloads]
     return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
 
@@ -234,11 +249,12 @@ def _sorted_rows(df, cols):
 
 
 def test_span_stream_emits_null_row_for_error_docs(spark):
-    """Stream-path parity on error corpora (ADVICE r3): the nested
-    path's posexplode_outer gives one null-field row per doc without
-    spans (error or empty); the flat stream must emit the same row,
-    not silently drop it — for every engine, on both the full and the
-    structural emitter (and on a one-column request)."""
+    """Stream-path parity on error corpora (ADVICE r3) and on every
+    synth doc shape: the flat stream emits the nested path's spans
+    value for value — for every engine, on the full, the structural
+    (no geometry) and a one-column geometry request — including the
+    one null-field row the nested path's posexplode_outer gives a doc
+    without spans (error or empty), not silently dropping it."""
     from ocr_compare_spark.operators.extract import (
         ASSEMBLY_SPAN_FIELDS,
         extract_spans_stream,
@@ -321,8 +337,8 @@ def test_cell_blocks_full_nesting_byte_invariant():
         "| k | v |\n| --- | --- |\n| w0 | w1 |\n| w2 | w3 |"
     )
     strip = lambda s: {k: v for k, v in s.items() if k not in ("cell_path", "extra")}  # noqa: E731
-    assert [strip(s) for s in r["spans"]] == [strip(s) for s in flat["spans"]]
-    by_word = {s["text"]: s for s in r["spans"]}
+    assert [strip(s) for s in span_dicts(r)] == [strip(s) for s in span_dicts(flat)]
+    by_word = {s["text"]: s for s in span_dicts(r)}
     # block-in-cell: path [item 0 of the cell, para 0 within it]
     assert by_word["w0"]["cell_path"] == [0, 0]
     assert by_word["w0"]["extra"]["cell_item"] == "block"
@@ -472,9 +488,9 @@ def test_multi_page_span_blocks_representable(spark):
         [Block(paras=[["gamma"]])],
     ])
     r = doc_to_result(parsed, 0.9)
-    by_word = {s["text"]: s for s in r["spans"]}
+    by_word = {s["text"]: s for s in span_dicts(r)}
     assert by_word["alpha"]["extra"]["page_span_last"] == "2"
-    rows = [("u", "eng", "v1", s) for s in r["spans"]]
+    rows = [("u", "eng", "v1", s) for s in span_dicts(r)]
     from ocr_compare_spark.schema import SPAN_TYPE
     import pyspark.sql.types as T
 
@@ -526,37 +542,3 @@ def test_block_type_from_minimal_depth_element(spark):
     assert len(got) == 1
     assert got[0].block_type == "TEXT"  # NOT the DFS-first child's HEADING
     assert got[0].block_text == "Head Line\nbody text"  # doc order intact
-
-
-def test_structural_span_emitter_matches_full_per_value():
-    """r6: the lean columnar emitter (_emit_spans_structural — the
-    fields-subset hot path of extract_spans_stream) must reproduce
-    doc_to_result's spans EXACTLY, value for value and in emission
-    order, for every structural column. Corpus slice covers flat,
-    nested (%10==2), table (%10==4), headerless-table (%20==14),
-    cell-nesting (%40==24) and PDF buckets."""
-    from ocr_compare_spark.engines.base import create_engine
-    from ocr_compare_spark.operators.extract import (
-        STRUCTURAL_SPAN_FIELDS,
-        _emit_spans_structural,
-    )
-
-    text = " ".join(f"w{i}" for i in range(120))
-    checked = 0
-    for doc_id in list(range(0, 50)) + [64, 84, 104, 114, 134]:
-        payload = (
-            synth.build_pdf(doc_id, text)
-            if synth.is_pdf_doc(doc_id)
-            else synth.build_html(doc_id, text)
-        )
-        spec = create_engine("pdf" if synth.is_pdf_doc(doc_id) else "dom")
-        parsed = spec.parse(payload)
-        assert parsed.error is None
-        full = doc_to_result(parsed, spec.confidence, with_spans=True)["spans"]
-        cols = {c: [] for c in STRUCTURAL_SPAN_FIELDS}
-        n = _emit_spans_structural(parsed, cols)
-        assert n == len(full)
-        for c in STRUCTURAL_SPAN_FIELDS:
-            assert cols[c] == [s[c] for s in full], (doc_id, c)
-        checked += 1
-    assert checked >= 50

@@ -20,6 +20,7 @@ from ocr_compare_spark.operators.extract import doc_to_result
 
 from tests.mirrors import levenshtein_np
 from tests.test_metrics import lev_ref
+from tests.test_nesting_tables import span_dicts
 
 TOKEN = st.text(alphabet="abcdefghij0123456789", min_size=1, max_size=8)
 
@@ -66,7 +67,7 @@ def test_html_roundtrip_any_token_text(tokens):
     assert r["doc_text"] == synth.expected_dom_text(text, 12)
     rd = doc_to_result(parse_density(h), 0.95)
     assert rd["doc_text"] == synth.expected_density_text(text, 12)
-    for s in r["spans"]:
+    for s in span_dicts(r):
         assert r["doc_text"][s["char_start"] : s["char_end"]] == s["text"]
 
 
@@ -174,7 +175,7 @@ def test_cell_blocks_fuzz_byte_and_structure(items, other_cell):
     expected = f"| {cell_text} | {' '.join(other_cell)} |"
     assert r["doc_text"] == expected
     cell_spans = [
-        s for s in r["spans"] if s["row_no"] == 0 and s["column_no"] == 0 and s["text"]
+        s for s in span_dicts(r) if s["row_no"] == 0 and s["column_no"] == 0 and s["text"]
     ]
     assert [s["text"] for s in cell_spans] == toks
     # run ordinals monotone, words numbered within runs
