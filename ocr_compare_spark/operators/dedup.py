@@ -951,11 +951,14 @@ def semdedup(
     is identical to the former per-pair SQL form (same scale shape as
     ivf_topk / embed_near_dups).
 
-    method="literal" (default): centroid dots as native left-to-right
-    folds over per-component literals — bit-reproducible in a DuckDB
-    twin, for oracle-checked small configs. method="data": broadcast
-    centroids + one numpy GEMM per Arrow batch (plan O(1) in
-    dim x cells — the real-embedding path; pytest-pinned to the
+    Cells come from ivf_topk's corpus-side assignment (argmax dot,
+    ties to the lowest cell id; centsim = that max dot).
+    method="literal" (default): similarity._ivf_cells_literal —
+    centroid dots as native left-to-right folds over per-component
+    literals, bit-reproducible in a DuckDB twin, for oracle-checked
+    small configs. method="data": similarity._ivf_cells_data —
+    broadcast centroids + one numpy GEMM per Arrow batch (plan O(1)
+    in dim x cells — the real-embedding path; pytest-pinned to the
     literal kept set).
 
     ``centroids`` is a (k, dim) ndarray — seeded_centroids() when
@@ -965,57 +968,22 @@ def semdedup(
     Output: one row per input vector —
     (id, cell, centsim (round6), kept boolean).
     """
+    # function-local import: loopbench's recrawl imports this module
+    # for MinHash, and its import set stays as it is
     from ocr_compare_spark.operators.similarity import (
-        _centroid_scores,
+        _ivf_cells_data,
+        _ivf_cells_literal,
         seeded_centroids,
     )
 
     cents = seeded_centroids() if centroids is None else centroids
-
     if method == "literal":
-        scores = _centroid_scores(vec_col, cents)
-        cells = F.array(
-            *[F.struct((-s).alias("nd"), F.lit(i).alias("cid")) for i, s in enumerate(scores)]
-        )
-        staged = emb.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-            cells.alias("_cells"),
-        )
-        keyed = staged.select(
-            "id",
-            "v",
-            F.array_min("_cells").cid.alias("cell"),
-            (-F.array_min("_cells").nd).alias("centsim"),
-        )
+        keyed = _ivf_cells_literal(emb, cents, id_col, vec_col, "id", "v")
     elif method == "data":
-        import numpy as np
-        import pandas as pd
-
-        spark = emb.sparkSession
-        bc = spark.sparkContext.broadcast(np.ascontiguousarray(cents, dtype=np.float64))
-
-        def assign(batches):
-            c = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-                s = mat @ c.T
-                yield pd.DataFrame(
-                    {
-                        "id": pdf[id_col].to_numpy(dtype=np.int64),
-                        "v": [list(row) for row in mat],
-                        "cell": np.argmax(s, axis=1).astype(np.int32),
-                        "centsim": np.max(s, axis=1),
-                    }
-                )
-
-        keyed = emb.select(id_col, vec_col).mapInPandas(
-            assign, "id long, v array<double>, cell int, centsim double"
-        )
+        keyed = _ivf_cells_data(emb, cents, id_col, vec_col, "id", "v")
     else:
         raise ValueError(f"semdedup: unknown method {method!r} (literal|data)")
+    keyed = keyed.withColumnRenamed("cid", "cell")
 
     # Within-cell pair stage (r6 optimization): the former cell
     # self-join + per-pair cosine_native fold materialized n^2/k pair

@@ -41,11 +41,16 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 #: driver guard for hashed_topk's query collect — THE constant from
-#: similarity.py (one knob, not two)
-from ocr_compare_spark.operators.similarity import MAX_DRIVER_QUERIES
+#: similarity.py (one knob, not two), and the shared top-k tail
+from ocr_compare_spark.operators.similarity import (
+    _TOPK_SCHEMA,
+    MAX_DRIVER_QUERIES,
+    _rank_topk,
+    _topk_cut,
+)
 
 
 def hashed_tf(
@@ -169,22 +174,16 @@ def hashed_topk(
     to the lowest neighbor id.
 
     Same broadcast-queries + partition-GEMM shape as
-    similarity.brute_force_topk (corpus never shuffled) — kept as a
-    SEPARATE implementation deliberately, because both differences
-    are the point of this module: (a) the GEMM runs on the RAW
+    similarity.brute_force_topk (corpus never shuffled), and the same
+    tie-stable per-batch cut (similarity._topk_cut) and ranked window.
+    What differs is the score: the GEMM runs on the RAW
     integer-valued matrices (exact in any order; brute_force_topk
     normalizes first, which trades exactness for one multiply) with
     norms from exact squared sums and an elementwise divide, so the
-    result is bit-identical to a relational SQL twin; (b) the
-    per-partition cut is TIE-STABLE — with integer vectors exact
-    cosine ties are real (duplicate token multisets give identical
-    vectors), so the partial cut sorts each query row by the SAME
-    total order the final window uses (sim desc, neighbor_id asc;
-    corpus batch pre-sorted by id + stable argsort), making the
-    merged global top-k partition-layout-independent where a bare
-    argpartition could drop the lowest-id member of a tie straddling
-    the cut. Zero-norm rows cosine to 0.0 (the cosine_native
-    convention)."""
+    result is bit-identical to a relational SQL twin. Exact cosine
+    ties are real here (duplicate token multisets give identical
+    vectors), which is why the cut keeps the final window's order.
+    Zero-norm rows cosine to 0.0 (the cosine_native convention)."""
     spark = corpus.sparkSession
     rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
     if len(rows) > MAX_DRIVER_QUERIES:
@@ -197,8 +196,6 @@ def hashed_topk(
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
 
-    out_schema = "query_id long, neighbor_id long, sim double"
-
     def partial_topk(batches):
         ids_q, mat_q, nq = bc.value
         for pdf in batches:
@@ -208,34 +205,11 @@ def hashed_topk(
             mat_c = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            # tie-stable cut: sort the batch by id ASC, then a STABLE
-            # argsort on -sim keeps equal sims in id order — the
-            # partial top-kk is taken under exactly the final
-            # window's (sim desc, neighbor_id asc) total order
-            order0 = np.argsort(ids_c)
-            ids_c = ids_c[order0]
-            mat_c = mat_c[order0]
             nc = np.sqrt((mat_c * mat_c).sum(axis=1))
             dots = mat_q @ mat_c.T  # exact: integer-valued operands
             denom = np.outer(nq, nc)
             sims = np.where(denom > 0, dots / np.where(denom > 0, denom, 1.0), 0.0)
-            kk = min(k + 1, sims.shape[1])  # +1 survives self-removal
-            top_idx = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids_q, kk),
-                    "neighbor_id": ids_c[top_idx].ravel(),
-                    "sim": np.take_along_axis(sims, top_idx, axis=1).ravel(),
-                }
-            )
+            yield _topk_cut(ids_q, ids_c, sims, k + 1)  # +1 survives self-removal
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    partial = corpus.select(id_col, vec_col).mapInPandas(partial_topk, _TOPK_SCHEMA)
+    return _rank_topk(partial.filter(F.col("neighbor_id") != F.col("query_id")), k).drop("sim")

@@ -120,7 +120,8 @@ def perplexity_scores(
 ) -> DataFrame:
     """Score each document against a trained unigram LM.
 
-    Output: ``(id_col, n_tokens, n_oov, cross_entropy, ppl)`` where
+    Output: ``(id_col, n_tokens, n_oov, cross_entropy, ppl)``, one
+    row per document with non-NULL text, where
     ``cross_entropy = round6(-sum(logprob_i) / n_tokens)`` and
     ``ppl = round6(exp(cross_entropy))`` (exp of the ROUNDED mean, so
     both engine's exp sees an identical input double).
@@ -134,8 +135,9 @@ def perplexity_scores(
 
     # spread BEFORE the tokenize/fold (r6): doc rows move whole, so
     # per-doc token order — the round6-before-sum contract's
-    # summation order — is untouched
-    df = spread_small_input(df)
+    # summation order — is untouched. NULL text has no tokens and
+    # gets no row, on both paths (the data path's explode drops it).
+    df = spread_small_input(df.filter(F.col(text_col).isNotNull()))
     if method == "literal":
         rows = lm.collect()
         if len(rows) > MAX_VOCAB_COLLECT:

@@ -1,15 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
+Exact and approximate top-k, all ending in one ranked
+(query_id, rank, neighbor_id, sim) window (``_rank_topk``):
 
-- brute-force top-k: broadcast the (small) query set, block-matmul
-  per partition inside mapInPandas (numpy GEMM over Arrow batches),
-  partial top-k per partition, global top-k via one window. The
-  corpus is never shuffled; wall-clock scales linearly with corpus
-  partitions — the right baseline at 100 TB.
-- LSH-bucketed (random hyperplane signs): restrict candidates to
-  matching sign-buckets before scoring — the scale path when the
-  query set is large too.
+- brute force: broadcast the (small) query set and score each Arrow
+  batch with one numpy GEMM inside mapInPandas. The corpus is never
+  shuffled; wall-clock scales linearly with corpus partitions.
+- LSH (random hyperplane signs) and IVF (inverted-file cells):
+  candidates come from a bucket or cell equi-join, then exact cosine.
+  These keep two spellings: per-coefficient literal folds that a
+  DuckDB twin reproduces, and a broadcast + GEMM body whose summation
+  order differs from those folds.
+- PQ and IVF-PQ: corpus encoded to small code ids, queries scored by
+  per-query lookup tables (ADC) in a broadcast scan.
+- Evaluation: recall@k and rank-biased overlap over rank tables.
+
+The broadcast scans (brute force, PQ, IVF-PQ and
+embedding.hashed_topk) cut each batch with ``_topk_cut`` under the
+final window's (score desc, id asc) order, so a tie that straddles
+the cut keeps its lowest ids and the result does not depend on the
+partition layout.
 """
 
 from __future__ import annotations
@@ -23,6 +33,38 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return mat / norms
+
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, sim double"
+
+
+def _topk_cut(q_ids, c_ids: np.ndarray, scores: np.ndarray, kk: int) -> pd.DataFrame:
+    """Each query's top ``kk`` corpus rows of one (Q, C) score block,
+    as (query_id, neighbor_id, sim) rows under (score desc, id asc) —
+    _rank_topk's window order, so a tie straddling the cut keeps its
+    lowest ids and the merged top-k is partition-layout-independent.
+    The batch is sorted by id first; the stable argsort on -score
+    then keeps equal scores in id order."""
+    by_id = np.argsort(c_ids, kind="stable")
+    c_ids, scores = c_ids[by_id], scores[:, by_id]
+    top = np.argsort(-scores, axis=1, kind="stable")[:, :kk]
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(q_ids, top.shape[1]),
+            "neighbor_id": c_ids[top].ravel(),
+            "sim": np.take_along_axis(scores, top, axis=1).ravel(),
+        }
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Shared (query_id, neighbor_id, sim) -> ranked top-k tail."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
+    )
 
 
 def brute_force_topk(
@@ -42,8 +84,6 @@ def brute_force_topk(
     q_mat = _normalize(np.array([q[1] for q in queries], dtype=np.float64))
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
-    out_schema = "query_id long, neighbor_id long, sim double"
-
     def partial_topk(batches):
         ids_q, mat_q = bc.value
         for pdf in batches:
@@ -51,24 +91,11 @@ def brute_force_topk(
                 continue
             ids_c = pdf[id_col].to_numpy(dtype=np.int64)
             mat_c = _normalize(np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]))
-            sims = mat_q @ mat_c.T  # (Q, C) GEMM — the hot loop
-            kk = min(k + 1, sims.shape[1])  # +1 to survive self-match removal
-            top_idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            rows = {
-                "query_id": np.repeat(ids_q, kk),
-                "neighbor_id": ids_c[top_idx].ravel(),
-                "sim": np.take_along_axis(sims, top_idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(rows)
+            # (Q, C) GEMM — the hot loop; k + 1 survives self-match removal
+            yield _topk_cut(ids_q, ids_c, mat_q @ mat_c.T, k + 1)
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        partial.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
-    )
+    partial = corpus.select(id_col, vec_col).mapInPandas(partial_topk, _TOPK_SCHEMA)
+    return _rank_topk(partial.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 MAX_DRIVER_QUERIES = 65536
@@ -192,14 +219,32 @@ def _centroid_scores(vec_col: str, centroids: np.ndarray) -> list[F.Column]:
     return out
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Shared (query_id, neighbor_id, sim) -> ranked top-k tail."""
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
+def _ivf_cells_literal(
+    df: DataFrame,
+    cents: np.ndarray,
+    id_col: str,
+    vec_col: str,
+    out_id: str,
+    out_vec: str,
+    nprobe: int | None = None,
+) -> DataFrame:
+    """Literal-path IVF cell assignment, same modes and columns as
+    _ivf_cells_data: centroid dots as the _centroid_scores folds a
+    DuckDB twin reproduces, ranked as array<struct(-dot, cid)> so
+    array_min / array_sort break ties to the lowest cell id. The plan
+    is O(dim x n_centroids) — oracle-checked small configs only."""
+    scores = _centroid_scores(vec_col, cents)
+    cells = [F.struct((-s).alias("nd"), F.lit(i).alias("cid")) for i, s in enumerate(scores)]
+    staged = df.select(
+        F.col(id_col).alias(out_id),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(out_vec),
+        F.array(*cells).alias("_cells"),
     )
+    if nprobe is None:
+        best = F.array_min("_cells")
+        return staged.select(out_id, out_vec, best.cid.alias("cid"), (-best.nd).alias("centsim"))
+    probed = F.transform(F.slice(F.array_sort("_cells"), 1, nprobe), lambda x: x.cid)
+    return staged.select(out_id, out_vec, F.explode(probed).alias("cid"))
 
 
 def _ivf_cells_data(
@@ -214,16 +259,17 @@ def _ivf_cells_data(
     """Data-path IVF cell assignment: centroids ride a Spark broadcast
     and the per-batch assignment is ONE numpy GEMM inside mapInPandas,
     so the Catalyst plan stays O(1) in (dim x n_centroids) — the shape
-    the literal `_centroid_scores` path blows up on at real embedding
-    dims (VERDICT r4 "what's wrong" #1). Tie-breaks match the literal
-    path: np.argmax / stable argsort both prefer the LOWEST cell id.
+    the literal path blows up on at real embedding dims. Tie-breaks
+    match the literal path: np.argmax / stable argsort both prefer the
+    LOWEST cell id.
 
-    nprobe=None -> corpus mode (one argmax cell per row);
+    nprobe=None -> corpus mode (one argmax cell per row, plus its
+                   score as ``centsim``);
     nprobe=n    -> query mode (n best cells per row, exploded)."""
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(np.ascontiguousarray(cents, dtype=np.float64))
-    probe_n = nprobe
     schema = f"{out_id} long, {out_vec} array<double>, cid int"
+    schema += ", centsim double" if nprobe is None else ""
 
     def assign(batches):
         c = bc.value
@@ -234,12 +280,17 @@ def _ivf_cells_data(
             scores = mat @ c.T  # (B, n_centroids) GEMM — the hot loop
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             vecs = [list(row) for row in mat]
-            if probe_n is None:
+            if nprobe is None:
                 yield pd.DataFrame(
-                    {out_id: ids, out_vec: vecs, "cid": np.argmax(scores, axis=1).astype(np.int32)}
+                    {
+                        out_id: ids,
+                        out_vec: vecs,
+                        "cid": np.argmax(scores, axis=1).astype(np.int32),
+                        "centsim": np.max(scores, axis=1),
+                    }
                 )
             else:
-                nn = min(probe_n, scores.shape[1])
+                nn = min(nprobe, scores.shape[1])
                 # stable sort on -score keeps ties in ascending-cid order,
                 # matching the literal path's array_sort(struct(nd, cid))
                 order = np.argsort(-scores, axis=1, kind="stable")[:, :nn]
@@ -294,26 +345,9 @@ def ivf_topk(
         corpus_cells = _ivf_cells_data(corpus, cents, id_col, vec_col, "neighbor_id", "c_vec")
         probe = _ivf_cells_data(queries, cents, id_col, vec_col, "query_id", "q_vec", nprobe=nprobe)
     elif method == "literal":
-        def scored_cells(df: DataFrame, out_id: str) -> DataFrame:
-            scores = _centroid_scores(vec_col, cents)
-            cells = F.array(
-                *[F.struct((-s).alias("nd"), F.lit(i).alias("cid")) for i, s in enumerate(scores)]
-            )
-            return df.select(
-                F.col(id_col).alias(out_id),
-                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(f"{out_id}_v"),
-                cells.alias("cells"),
-            )
-
-        corpus_cells = scored_cells(corpus, "neighbor_id").select(
-            "neighbor_id", F.col("neighbor_id_v").alias("c_vec"),
-            F.array_min("cells").cid.alias("cid"),
-        )
-        probe = scored_cells(queries, "query_id").select(
-            "query_id", F.col("query_id_v").alias("q_vec"),
-            F.explode(
-                F.transform(F.slice(F.array_sort("cells"), 1, nprobe), lambda x: x.cid)
-            ).alias("cid"),
+        corpus_cells = _ivf_cells_literal(corpus, cents, id_col, vec_col, "neighbor_id", "c_vec")
+        probe = _ivf_cells_literal(
+            queries, cents, id_col, vec_col, "query_id", "q_vec", nprobe=nprobe
         )
     else:
         raise ValueError(f"ivf_topk: unknown method {method!r} (literal|data)")
@@ -476,62 +510,18 @@ def _lloyd_kmeans_l2(mat: np.ndarray, n_codes: int, iters: int = 5) -> np.ndarra
     return cents
 
 
-def _pq_sub_dist(vec_col: str, j: int, sub_dim: int, code: np.ndarray) -> F.Column:
-    """Squared L2 between subvector j of ``vec_col`` and one code, as
-    the left-to-right zip_with/aggregate fold the oracle mirrors:
-    0.0 + (v[p]-c)*(v[p]-c) + ..."""
-    coeffs = F.array(*[F.lit(float(x)) for x in code])
-    sub = F.slice(F.col(vec_col), j * sub_dim + 1, sub_dim)
-    return F.aggregate(
-        F.zip_with(sub, coeffs, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_sub_dot(vec_col: str, j: int, sub_dim: int, code: np.ndarray) -> F.Column:
-    """dot(subvector j, code) as the same ordered fold."""
-    coeffs = F.array(*[F.lit(float(x)) for x in code])
-    sub = F.slice(F.col(vec_col), j * sub_dim + 1, sub_dim)
-    return F.aggregate(
-        F.zip_with(sub, coeffs, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_codes_literal(
-    df: DataFrame, cb: np.ndarray, id_col: str, vec_col: str, out_id: str
-) -> DataFrame:
-    """Literal-path PQ encode: per subspace, argmin over per-code
-    squared-L2 folds via array_min(struct(dist, code)) — ties to the
-    lowest code id, matching np.argmin. Emits (out_id, c0..c{m-1})."""
-    n_sub, n_codes, sub_dim = cb.shape
-    cols = [F.col(id_col).alias(out_id)]
-    for j in range(n_sub):
-        cells = F.array(
-            *[
-                F.struct(
-                    _pq_sub_dist(vec_col, j, sub_dim, cb[j][c]).alias("d"),
-                    F.lit(c).alias("c"),
-                )
-                for c in range(n_codes)
-            ]
-        )
-        cols.append(F.array_min(cells).c.alias(f"c{j}"))
-    return df.select(*cols)
-
-
 def _pq_codes_data(
     df: DataFrame, cb: np.ndarray, id_col: str, vec_col: str, out_id: str
 ) -> DataFrame:
-    """Data-path PQ encode: codebooks ride a Spark broadcast; per
-    Arrow batch the squared-L2 distance accumulates with an EXPLICIT
-    left-to-right loop over sub_dim (16-64 vectorized (B, n_codes)
-    ops — still numpy-fast) so every float add happens in the same
-    order as the literal fold and the two paths are bit-identical by
-    construction, not just ulp-close. Plan size O(1) in
-    (n_sub x n_codes x sub_dim) — the real-embedding path."""
+    """PQ encode (out_id, c0..c{m-1}): codebooks ride a Spark
+    broadcast; per Arrow batch the squared-L2 distance accumulates
+    with an EXPLICIT left-to-right loop over sub_dim (16-96 vectorized
+    (B, n_codes) ops — still numpy-fast), so every float add happens
+    in the order of the literal fold
+    0.0 + (v[p]-c[0])^2 + (v[p+1]-c[1])^2 + ... that the DuckDB twin
+    writes out; np.argmin breaks ties to the lowest code, as the
+    twin's CASE chain does. Plan size O(1) in
+    (n_sub x n_codes x sub_dim)."""
     spark = df.sparkSession
     n_sub, n_codes, sub_dim = cb.shape
     bc = spark.sparkContext.broadcast(np.ascontiguousarray(cb, dtype=np.float64))
@@ -546,9 +536,8 @@ def _pq_codes_data(
             out = {out_id: pdf[id_col].to_numpy(dtype=np.int64)}
             for j in range(n_sub):
                 sub = mat[:, j * sub_dim : (j + 1) * sub_dim]
-                t = sub[:, None, 0] - cbv[j][None, :, 0]
-                d = 0.0 + t * t  # seed matches the fold's lit(0.0)
-                for i in range(1, sub_dim):
+                d = np.zeros((len(mat), n_codes))  # the fold's lit(0.0) seed
+                for i in range(sub_dim):
                     t = sub[:, None, i] - cbv[j][None, :, i]
                     d = d + t * t
                 out[f"c{j}"] = np.argmin(d, axis=1).astype(np.int32)
@@ -582,17 +571,18 @@ def pq_topk(
     The score is the asymmetric inner product dot(q, reconstruction)
     — ranking approximates exact dot/cosine for unit-norm corpora.
 
-    method="literal": encode + ADC as per-coefficient literal folds
-    (DuckDB-oracle bit-exact; plan O(n_sub x n_codes x sub_dim) —
-    small configs only). The query fan-out is a broadcast hash join
-    on a derived constant key (id*0) — an equi join, never a
-    cartesian.
-    method="data": codebooks broadcast + ordered-loop numpy encode,
-    queries collected (guarded) into python-float LUTs — every float
-    op in the same order as the literal folds, so the two paths are
-    bit-identical by construction.
+    One body serves both ``method`` spellings ("literal", "data"):
+    broadcast codebooks + ordered-loop numpy encode (_pq_codes_data),
+    queries collected (guarded) into ordered-loop LUTs, one
+    mapInPandas scan cut by _topk_cut. Every float op runs in the
+    left-to-right order of the literal folds the DuckDB twin writes
+    out, and the cut keeps (score desc, id asc), so the rows equal
+    the literal join-and-window's. Plan size is O(1) in
+    (n_sub x n_codes x sub_dim).
 
     ``dim`` hint skips the sizing first() on derived inputs."""
+    if method not in ("literal", "data"):
+        raise ValueError(f"pq_topk: unknown method {method!r} (literal|data)")
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     assert dim % n_sub == 0, f"dim {dim} not divisible by n_sub {n_sub}"
@@ -600,80 +590,39 @@ def pq_topk(
     cb = seeded_pq_codebooks(n_sub, n_codes, sub_dim) if codebooks is None else codebooks
     assert cb.shape == (n_sub, n_codes, sub_dim), f"codebook shape {cb.shape} mismatch"
 
-    if method == "literal":
-        codes = _pq_codes_literal(corpus, cb, id_col, vec_col, "neighbor_id").withColumn(
-            "j0", (F.col("neighbor_id") * 0).cast("int")
-        )
-        qv = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("q_v"),
-        ).withColumn("j0", (F.col("query_id") * 0).cast("int"))
-        joined = codes.join(F.broadcast(qv), "j0")
-        score = None
-        for j in range(n_sub):
-            case_j = None
-            for c in range(n_codes):
-                dot = _pq_sub_dot("q_v", j, sub_dim, cb[j][c])
-                case_j = (
-                    F.when(F.col(f"c{j}") == c, dot)
-                    if case_j is None
-                    else case_j.when(F.col(f"c{j}") == c, dot)
-                )
-            score = case_j if score is None else score + case_j
-        scored = joined.filter(F.col("query_id") != F.col("neighbor_id")).select(
-            "query_id", "neighbor_id", score.alias("sim")
-        )
-        return _rank_topk(scored, k)
-
-    if method != "data":
-        raise ValueError(f"pq_topk: unknown method {method!r} (literal|data)")
-
     rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
     if len(rows) > MAX_DRIVER_QUERIES:
         raise ValueError(
             f"pq_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
             "bucket queries through IVF cells first (IVF-PQ) instead of one flat scan"
         )
-    # python-float LUTs in the literal fold's exact order:
-    # 0.0 + q[p]*c0 + q[p+1]*c1 + ...
-    luts = []
-    for r in rows:
-        q = [float(x) for x in r[vec_col]]
-        lut = np.empty((n_sub, n_codes), dtype=np.float64)
-        for j in range(n_sub):
-            for c in range(n_codes):
-                acc = 0.0
-                for i in range(sub_dim):
-                    acc = acc + q[j * sub_dim + i] * float(cb[j][c][i])
-                lut[j][c] = acc
-        luts.append((int(r[id_col]), lut))
-    spark = corpus.sparkSession
-    bc_luts = spark.sparkContext.broadcast(luts)
+    q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    q_vecs = np.array([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    q_sub = q_vecs.reshape(len(rows), n_sub, sub_dim)
+    # (Q, n_sub, n_codes) LUTs in the literal fold's exact order, one
+    # elementwise add per component: 0.0 + q[p]*c0 + q[p+1]*c1 + ...
+    luts = np.zeros((len(rows), n_sub, n_codes))
+    for i in range(sub_dim):
+        luts = luts + q_sub[:, :, i, None] * cb[None, :, :, i]
+    bc_luts = corpus.sparkSession.sparkContext.broadcast((q_ids, luts))
     codes = _pq_codes_data(corpus, cb, id_col, vec_col, "neighbor_id")
-    out_schema = "query_id long, neighbor_id long, sim double"
 
     def scan(batches):
-        lv = bc_luts.value
+        ids_q, lv = bc_luts.value
         for pdf in batches:
-            if pdf.empty:
-                continue
             ids_c = pdf["neighbor_id"].to_numpy(dtype=np.int64)
             code_cols = [pdf[f"c{j}"].to_numpy(dtype=np.int64) for j in range(n_sub)]
             frames = []
-            for qid, lut in lv:
+            for qid, lut in zip(ids_q, lv):  # per query: no block grows past one batch
                 s = lut[0][code_cols[0]]
                 for j in range(1, n_sub):
                     s = s + lut[j][code_cols[j]]
-                kk = min(k + 1, len(ids_c))  # +1 survives self-match removal
-                idx = np.argpartition(-s, kk - 1)[:kk]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "neighbor_id": ids_c[idx], "sim": s[idx]}
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+                # k + 1 survives self-match removal
+                frames.append(_topk_cut([qid], ids_c, s[None, :], k + 1))
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
-    partial = codes.mapInPandas(scan, out_schema)
+    partial = codes.mapInPandas(scan, _TOPK_SCHEMA)
     return _rank_topk(partial.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
@@ -793,8 +742,6 @@ def ivfpq_topk(
             f"ivfpq_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
             "route the query set through the cell join instead of a broadcast scan"
         )
-    n_cents = len(cents)
-    probe_n = min(nprobe, n_cents)
     # per query: probed cells (stable argsort — ties to the lowest
     # cell id, the ivf convention), the per-cell dot, and the
     # residual-ADC LUT
@@ -802,52 +749,33 @@ def ivfpq_topk(
     for r in rows:
         q = np.asarray(list(r[vec_col]), dtype=np.float64)
         cell_dots = cents @ q
-        order = np.argsort(-cell_dots, kind="stable")[:probe_n]
+        order = np.argsort(-cell_dots, kind="stable")[:nprobe]
         lut = np.empty((n_sub, n_codes), dtype=np.float64)
         for j in range(n_sub):
             lut[j] = cb[j] @ q[j * sub_dim : (j + 1) * sub_dim]
-        probes.append(
-            (int(r[id_col]), {int(c): float(cell_dots[c]) for c in order}, lut)
-        )
+        probes.append((int(r[id_col]), {int(c): float(cell_dots[c]) for c in order}, lut))
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(probes)
     codes = _ivfpq_encode_data(corpus, cents, cb, id_col, vec_col)
-    out_schema = "query_id long, neighbor_id long, sim double"
-    m = n_sub
 
     def scan(batches):
         pv = bc.value
         for pdf in batches:
-            if pdf.empty:
-                continue
             ids_c = pdf[id_col].to_numpy(dtype=np.int64)
             cid = pdf["cid"].to_numpy(dtype=np.int64)
-            code_cols = [pdf[f"c{j}"].to_numpy(dtype=np.int64) for j in range(m)]
+            code_cols = [pdf[f"c{j}"].to_numpy(dtype=np.int64) for j in range(n_sub)]
             frames = []
-            for qid, cells, lut in pv:
+            for qid, cells, lut in pv:  # per query: only its probed rows
                 mask = np.isin(cid, np.fromiter(cells, dtype=np.int64))
-                if not mask.any():
-                    continue
                 adc = lut[0][code_cols[0][mask]]
-                for j in range(1, m):
+                for j in range(1, n_sub):
                     adc = adc + lut[j][code_cols[j][mask]]
                 cdot = np.array([cells[int(c)] for c in cid[mask]], dtype=np.float64)
-                s = cdot + adc
-                kk = min(k + 1, int(mask.sum()))
-                idx = np.argpartition(-s, kk - 1)[:kk]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "neighbor_id": ids_c[mask][idx], "sim": s[idx]}
-                    )
-                )
+                frames.append(_topk_cut([qid], ids_c[mask], (cdot + adc)[None, :], k + 1))
             if frames:
                 yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame({"query_id": [], "neighbor_id": [], "sim": []}).astype(
-                    {"query_id": "int64", "neighbor_id": "int64", "sim": "float64"}
-                )
 
-    partial = codes.mapInPandas(scan, out_schema)
+    partial = codes.mapInPandas(scan, _TOPK_SCHEMA)
     return _rank_topk(partial.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 

@@ -236,6 +236,34 @@ def py_change_rate(history, now_secs: float | None = None):
 
 
 # ---------------------------------------------------------------------
+# broadcast-scan top-k (similarity.brute_force_topk / pq_topk /
+# ivfpq_topk, embedding.hashed_topk)
+
+#: queries into tie_vectors(): a copy of the duplicated vector, and a
+#: variant that ties 39 copies and one other variant at cosine 0.5
+TIE_QUERIES = (0, 39)
+
+
+def tie_vectors() -> np.ndarray:
+    """(42, 16) corpus whose exact ties straddle any small k: rows
+    0-38 are copies of one vector, rows 39-41 negate its first 4, 8
+    and 12 components. Every component is +-1, so dots, norms and
+    cosines are exact in any evaluation order and a (-score, id)
+    sorted mirror is the ground truth."""
+    m = np.ones((42, 16))
+    for i, n in zip((39, 40, 41), (4, 8, 12)):
+        m[i, :n] = -1.0
+    return m
+
+
+def tie_frames(spark, id_col: str, vec_col: str):
+    """tie_vectors() as a DataFrame at 1 and at 4 partitions."""
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(tie_vectors())]
+    df = spark.createDataFrame(rows, f"{id_col} long, {vec_col} array<double>")
+    return [df.repartition(n) for n in (1, 4)]
+
+
+# ---------------------------------------------------------------------
 # operators/embedding.py
 
 

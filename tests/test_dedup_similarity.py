@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators import adaptive, dedup, similarity
+from tests.mirrors import TIE_QUERIES, tie_frames, tie_vectors
 
 
 @pytest.fixture(scope="module")
@@ -198,6 +199,26 @@ def test_brute_force_topk_exact(vectors):
         for rank, nid in enumerate(order, start=1):
             assert rows[(q, rank)] == nid
     assert rows[(0, 1)] == 50  # the planted neighbor wins
+    # exact ties straddling k keep their lowest ids, in any layout
+    t = tie_vectors()
+    tn = t / np.linalg.norm(t, axis=1, keepdims=True)
+    want = {q: _by_score(tn @ tn[q], q) for q in TIE_QUERIES}
+    tqs = [(q, list(t[q])) for q in TIE_QUERIES]
+    for tdf in tie_frames(df.sparkSession, "vec_id", "embedding"):
+        assert _neighbors(similarity.brute_force_topk(tdf, tqs, k=3).collect()) == want
+
+
+def _by_score(scores, q, k=3):
+    """The k ids after ``q`` under (score desc, id asc)."""
+    return sorted((i for i in range(len(scores)) if i != q), key=lambda i: (-scores[i], i))[:k]
+
+
+def _neighbors(rows):
+    """{query_id: [neighbor_id by rank]} of ranked top-k rows."""
+    out = {}
+    for r in sorted(rows, key=lambda r: (r.query_id, r.rank)):
+        out.setdefault(r.query_id, []).append(r.neighbor_id)
+    return out
 
 
 def test_lsh_topk_recall(vectors):
@@ -1010,25 +1031,36 @@ def test_pq_topk_matches_numpy_reference(vectors):
     want = _pq_numpy_reference(mat, range(6), cb)
     for qid in range(6):
         assert [n for _, n in sorted(rows[qid])] == want[qid], f"q={qid}"
+    # exact ties straddling k, both spellings, any layout
+    want = _pq_numpy_reference(tie_vectors(), TIE_QUERIES, similarity.seeded_pq_codebooks(4, 8, 4))
+    for tdf in tie_frames(df.sparkSession, "vec_id", "embedding"):
+        tq = tdf.filter(F.col("vec_id").isin(*TIE_QUERIES))
+        for method in ("literal", "data"):
+            got = similarity.pq_topk(tdf, tq, k=3, n_sub=4, n_codes=8, dim=16, method=method)
+            assert _neighbors(got.collect()) == want, method
 
 
 def test_pq_topk_data_matches_literal(vectors):
     df, mat = vectors
     q = df.filter(F.col("vec_id") < 6)
     kw = dict(k=3, n_sub=4, n_codes=8, dim=16)
-    lit_ = {tuple(r) for r in similarity.pq_topk(df, q, method="literal", **kw).collect()}
-    dat = {tuple(r) for r in similarity.pq_topk(df, q, method="data", **kw).collect()}
-    # bit-identical incl the rounded ADC score (ordered folds on both paths)
-    assert dat == lit_ and len(dat) == 18
+    lit_ = similarity.pq_topk(df, q, method="literal", **kw).collect()
+    dat = similarity.pq_topk(df, q, method="data", **kw).collect()
+    # one body behind both spellings: identical rows incl the rounded ADC score
+    assert set(map(tuple, dat)) == set(map(tuple, lit_)) and len(dat) == 18
+    want = _pq_numpy_reference(mat, range(6), similarity.seeded_pq_codebooks(4, 8, 4))
+    assert _neighbors(lit_) == want == _neighbors(dat)
 
 
 def test_pq_topk_data_matches_literal_dim768(vectors768):
     df, mat = vectors768
     q = df.filter(F.col("vec_id") < 4)
     kw = dict(k=3, n_sub=8, n_codes=8, dim=768)
-    lit_ = {tuple(r) for r in similarity.pq_topk(df, q, method="literal", **kw).collect()}
-    dat = {tuple(r) for r in similarity.pq_topk(df, q, method="data", **kw).collect()}
-    assert dat == lit_ and len(dat) == 12
+    lit_ = similarity.pq_topk(df, q, method="literal", **kw).collect()
+    dat = similarity.pq_topk(df, q, method="data", **kw).collect()
+    assert set(map(tuple, dat)) == set(map(tuple, lit_)) and len(dat) == 12
+    want = _pq_numpy_reference(mat, range(4), similarity.seeded_pq_codebooks(8, 8, 96))
+    assert _neighbors(lit_) == want == _neighbors(dat)
 
 
 def test_pq_topk_data_path_256_codes(vectors768):
@@ -1109,6 +1141,12 @@ def test_ivfpq_matches_numpy_mirror(vectors):
     want = _ivfpq_numpy_reference(mat, range(6), cents, cb, k=3, nprobe=3)
     for qid in range(6):
         assert [n for _, n in sorted(rows.get(qid, []))] == want[qid], f"q={qid}"
+    # exact ties straddling k (seeded quantizers), any layout
+    cents, cb = similarity.seeded_centroids(dim=16), similarity.seeded_pq_codebooks(4, 16, 4)
+    want = _ivfpq_numpy_reference(tie_vectors(), TIE_QUERIES, cents, cb)
+    for tdf in tie_frames(df.sparkSession, "vec_id", "embedding"):
+        got = similarity.ivfpq_topk(tdf, tdf.filter(F.col("vec_id").isin(*TIE_QUERIES)), dim=16)
+        assert _neighbors(got.collect()) == want
 
 
 def test_ivfpq_planted_neighbor_768(vectors768):

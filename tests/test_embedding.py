@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_compare_spark.operators import embedding as emb
-from tests.mirrors import py_hashed_topk
+from tests.mirrors import TIE_QUERIES, py_hashed_topk, tie_frames, tie_vectors
 
 DIM = 16
 
@@ -86,6 +86,15 @@ def test_hashed_topk_matches_python_mirror(spark, sf_dir):
         for r in emb.hashed_topk(vecs, queries, k=3).collect()
     }
     assert got == py_hashed_topk(by_id, q_ids, k=3)
+    # exact ties straddling k, any layout
+    by_id = dict(enumerate(tie_vectors().tolist()))
+    for vecs in tie_frames(spark, "doc_id", "vector"):
+        got = {
+            (r.query_id, r.rank): r.neighbor_id
+            for r in emb.hashed_topk(vecs, vecs.filter(F.col("doc_id").isin(*TIE_QUERIES)), k=3)
+            .collect()
+        }
+        assert got == py_hashed_topk(by_id, TIE_QUERIES, k=3)
 
 
 def test_hashed_topk_zero_norm_and_guard(spark, monkeypatch):

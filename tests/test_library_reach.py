@@ -13,18 +13,25 @@ identifiers in its body. Identifiers are ``Name`` ids, ``Attribute`` attrs,
 import aliases and identifier-shaped string constants; docstrings and
 comments are not code, so a name a docstring mentions is not reached by it.
 
-Names resolve by identifier, not by module: a live definition keeps any
-same-named definition elsewhere alive, never the reverse, so the guard
-can miss dead code but never flags live code. The one exception is
-``main``, which every script spells: a library ``def main`` is reached
-only through its own module's ``__main__`` block, never by a traffic
-file's own ``main`` or a string ``"main"``. Names only tests reach are
-deleted with their tests, or listed in KEEP with the reason they stay.
+Names resolve by module where the source says which module: ``n`` after
+``from m import n``, ``m.n`` after ``import m`` (or ``from pkg import m``),
+and a bare ``n`` that the file defines at top level each reach only module
+``m``'s (or the file's own) ``n``. Every other identifier falls back to its
+spelling and reaches each library definition of that name: an attribute
+on anything but a module, a name two imports bind differently, a local
+name, a string, a module outside the corpus, or a name the module does
+not define itself (a re-export). So a live definition no longer keeps a
+same-named definition in another module alive when every use of the name
+is resolved, and where resolution is ambiguous the guard still never
+flags live code. The spelling ``main``, which every script uses, reaches
+nothing: a library ``def main`` is reached only through its own module's
+``__main__`` block. Names only tests reach are deleted with their tests,
+or listed in KEEP with the reason they stay.
 
 The parameter rule looks inside every top-level library ``def``: a
 defaulted parameter read by the test of an ``if``/``elif``/ternary/
 ``while`` in its body selects a code path. It counts as set when some
-root or library call (resolved by bare name, as above) passes it a
+root or library call (resolved by bare name) passes it a
 value other than its default, by keyword or by position; any
 non-literal argument counts as set, and so does a call with ``*args``
 or ``**kwargs``. A test that only does ``isinstance(p, ...)``
@@ -109,21 +116,93 @@ def _docstrings(tree):
     return out
 
 
-def _identifiers(node, docstrings):
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.update(n.name.split("."))
-            if n.asname:
-                out.add(n.asname)
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docstrings \
-                and IDENT.fullmatch(n.value):
-            out.add(n.value)
-    return out
+def _module_name(label):
+    """Dotted module of a file label: ``a/b.py`` -> ``a.b``, ``a/__init__.py`` -> ``a``."""
+    parts = label[: -len(".py")].split("/")
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+class _Resolver:
+    """Resolves one file's identifiers to references: ``(label, name)``
+    for a top-level definition of a known module, or the bare spelling
+    ``name`` when the module cannot be told. ``modules`` maps dotted
+    module names to labels and ``defs`` maps labels to their top-level
+    names, over the library and traffic files alike."""
+
+    def __init__(self, label, tree, modules, defs):
+        self.label, self.modules, self.defs = label, modules, defs
+        bound: dict[str, object] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    target = a.name if a.asname else a.name.split(".")[0]
+                    self._bind(bound, a.asname or target, self.modules.get(target))
+            elif isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    self._bind(bound, a.asname or a.name, self._from(node, a.name))
+        # a name the file both imports and defines could mean either
+        self.bound = {k: None if k in defs[label] else v for k, v in bound.items()}
+
+    @staticmethod
+    def _bind(bound, local, target):
+        """A local bound two ways resolves to nothing (None)."""
+        bound[local] = target if bound.get(local, target) == target else None
+
+    def _from(self, node, name):
+        """What ``from node.module import name`` binds: a module label,
+        a (label, name) pair, or None when the module is unknown."""
+        mod = self.modules.get(node.module) if node.module and not node.level else None
+        if mod is None:
+            return None
+        return self.modules.get(f"{node.module}.{name}") or (mod, name)
+
+    def _member(self, mod, name):
+        """Module ``mod``'s ``name``: its definition, a submodule
+        (no reference) or, for a re-export, the spelling."""
+        if name in self.defs[mod]:
+            return {(mod, name)}
+        return set() if f"{_module_name(mod)}.{name}" in self.modules else {name}
+
+    def _module(self, expr):
+        """The label of the module ``expr`` names, or None."""
+        if isinstance(expr, ast.Name):
+            b = self.bound.get(expr.id)
+            return b if isinstance(b, str) else None
+        if isinstance(expr, ast.Attribute):
+            base = self._module(expr.value)
+            if base is not None:
+                return self.modules.get(f"{_module_name(base)}.{expr.attr}")
+        return None
+
+    def references(self, node, docstrings):
+        out: set = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                b = self.bound.get(n.id, False)
+                if isinstance(b, tuple):
+                    out |= self._member(*b)
+                elif b is False and n.id in self.defs[self.label]:
+                    out.add((self.label, n.id))
+                elif not isinstance(b, str):
+                    out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                mod = self._module(n.value)
+                out |= {n.attr} if mod is None else self._member(mod, n.attr)
+            elif isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    b = self._from(n, a.name)
+                    if b is None:
+                        out.add(a.name)
+                    elif isinstance(b, tuple):
+                        out |= self._member(*b)
+            elif isinstance(n, ast.Import):
+                for a in n.names:
+                    if a.name not in self.modules:
+                        out.update(a.name.split("."))
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
+                    and id(n) not in docstrings and IDENT.fullmatch(n.value):
+                out.add(n.value)
+        return out
 
 
 def _defined_names(node):
@@ -142,13 +221,23 @@ def _defined_names(node):
     return []
 
 
-def _closure(start, edges):
-    seen, stack = set(), [n for n in start if n in edges]
+def _closure(start, edges, by_name):
+    """Definitions reached from the references ``start``; a spelling
+    reaches every definition of that name except ``main``."""
+    def expand(refs):
+        for r in refs:
+            if isinstance(r, tuple):
+                if r in edges:
+                    yield r
+            elif r != "main":
+                yield from by_name.get(r, ())
+
+    seen, stack = set(), list(expand(start))
     while stack:
-        name = stack.pop()
-        if name not in seen:
-            seen.add(name)
-            stack.extend(n for n in edges[name] if n in edges)
+        key = stack.pop()
+        if key not in seen:
+            seen.add(key)
+            stack.extend(expand(edges[key]))
     return seen
 
 
@@ -163,52 +252,53 @@ def _is_main_block(node):
     } == {"__name__", "__main__"}
 
 
-def _main_of(label):
-    """The key of module ``label``'s ``def main``: ``main`` resolves per
-    module, so no other module's ``main`` (or the word) reaches it."""
-    return f"main[{label}]"
-
-
 def _reach(traffic, library, keep, entry_points):
     """(unreached, stale_keep, stale_entry) over lists of (label, parsed
-    module). unreached maps each top-level library name no root reaches
-    to its label:line sites; stale_keep holds the ``keep`` names that are
-    gone or that a root reaches without the exemption; stale_entry holds
+    module). unreached maps each top-level library name that has a
+    definition no root reaches to those definitions' label:line sites;
+    stale_keep holds the ``keep`` names that are gone or whose every
+    definition a root reaches without the exemption; stale_entry holds
     the ``entry_points`` labels that are not a library module with a
     ``__main__`` block."""
-    roots: set[str] = set()
-    for _, tree in traffic:
-        roots |= _identifiers(tree, _docstrings(tree))
-    edges: dict[str, set[str]] = {}
-    where: dict[str, list[str]] = {}
+    files = traffic + library
+    modules = {_module_name(label): label for label, _ in files}
+    defs = {
+        label: {n for node in tree.body for n in _defined_names(node)} for label, tree in files
+    }
+    roots: set = set()
+    for label, tree in traffic:
+        roots |= _Resolver(label, tree, modules, defs).references(tree, _docstrings(tree))
+    edges: dict[tuple, set] = {}
+    where: dict[tuple, list[str]] = {}
     entries = set()
     for label, tree in library:
-        docs = _docstrings(tree)
+        docs, resolver = _docstrings(tree), _Resolver(label, tree, modules, defs)
         for node in tree.body:
             if _is_main_block(node):
                 if label in entry_points:
                     entries.add(label)
-                    body = _identifiers(node, docs)
-                    roots |= body - {"main"}
-                    if "main" in body:
-                        roots.add(_main_of(label))
+                    roots |= resolver.references(node, docs)
                 continue
             names = _defined_names(node)
             if not names:
                 if not isinstance(node, (ast.Import, ast.ImportFrom)):
-                    roots |= _identifiers(node, docs)
+                    roots |= resolver.references(node, docs)
                 continue
-            body = _identifiers(node, docs)
+            body = resolver.references(node, docs)
             for name in names:
-                key = _main_of(label) if name == "main" else name
-                edges.setdefault(key, set()).update(body)
-                where.setdefault(key, []).append(f"{label}:{node.lineno}")
-    exempt = set(keep)
-    reached = _closure(roots | exempt, edges)
-    unreached = {n: w for n, w in where.items() if n not in reached}
-    # an exempt name some root reaches without the exemption is stale
-    kept_alone = _closure(roots, edges)
-    stale_keep = {n for n in exempt if n in kept_alone or n not in edges}
+                edges.setdefault((label, name), set()).update(body)
+                where.setdefault((label, name), []).append(f"{label}:{node.lineno}")
+    by_name: dict[str, list[tuple]] = {}
+    for key in edges:
+        by_name.setdefault(key[1], []).append(key)
+    reached = _closure(roots | set(keep), edges, by_name)
+    unreached: dict[str, list[str]] = {}
+    for key, sites in sorted(where.items()):
+        if key not in reached:
+            unreached.setdefault(key[1], []).extend(sites)
+    # an exempt name every definition of which a root reaches alone is stale
+    kept_alone = _closure(roots, edges, by_name)
+    stale_keep = {n for n in keep if not set(by_name.get(n, ())) - kept_alone}
     return unreached, stale_keep, set(entry_points) - entries
 
 
@@ -262,7 +352,7 @@ def _cli_reach(entry_points):
 
 def test_reach_rule_flags_a_cli_module_whose_main_only_collides():
     unreached, _, stale_entry = _cli_reach({})
-    assert set(unreached) == {"main[lib/cli.py]", "helper"} and not stale_entry
+    assert set(unreached) == {"main", "helper"} and not stale_entry
 
 
 def test_reach_rule_roots_a_declared_entry_point():
@@ -276,6 +366,28 @@ def test_reach_rule_fails_a_stale_entry_point():
     lib = [("lib/plain.py", ast.parse("def f():\n    return 1\n"))]
     _, _, stale = _reach([], lib, {}, {"lib/plain.py": "no __main__ block"})
     assert stale == {"lib/plain.py"}
+
+
+_TWIN_LIB = {
+    "lib/__init__.py": "",
+    "lib/a.py": "def helper():\n    return 1\n",
+    "lib/b.py": "def helper():\n    return 2\n\n\ndef other():\n    return helper()\n",
+}
+
+
+def _twin_reach(traffic_src):
+    library = [(label, ast.parse(src)) for label, src in _TWIN_LIB.items()]
+    return _reach([("bench.py", ast.parse(traffic_src))], library, {}, {})[0]
+
+
+def test_reach_rule_flags_a_dead_twin_of_a_live_name():
+    used = "from lib import b\nfrom lib.a import helper\n\nhelper()\n"
+    assert _twin_reach(used + "b.other\n") == {}
+    assert _twin_reach(used) == {"helper": ["lib/b.py:1"], "other": ["lib/b.py:5"]}
+    # an attribute on a non-module or a string cannot name the module:
+    # the spelling reaches every helper
+    assert _twin_reach("obj.helper()\n") == {"other": ["lib/b.py:5"]}
+    assert _twin_reach('import lib.b\n\nlib.b.other\ngetattr(m, "helper")\n') == {}
 
 
 # ------------------------------------------------------------ parameters

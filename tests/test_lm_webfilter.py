@@ -63,7 +63,7 @@ def _expected(vocab_size=None):
 @pytest.mark.parametrize("method", ["literal", "data"])
 @pytest.mark.parametrize("vocab_size", [None, 3])
 def test_perplexity_matches_hand_mirror(spark, method, vocab_size):
-    d = _mk_docs(spark, TEXTS)
+    d = _mk_docs(spark, TEXTS + [None])  # NULL text: no tokens, no row
     model = lm.train_unigram_lm(d, "text", vocab_size=vocab_size)
     got = [
         (r["doc_id"], r["n_tokens"], r["n_oov"], r["cross_entropy"], r["ppl"])

@@ -229,16 +229,20 @@ def main() -> int:
                 emb768, q768, k=3, n_planes=16, n_tables=8, dim=768, method="data"
             )
         ),
-        # FAISS-shaped PQ: 8 subspaces x 256 codes x 96 dims — the
-        # literal path would be ~200k coefficient literals; the data
-        # path (broadcast codebooks, LUT scan) must stay O(1)
-        "ann_pq_data_768x8x256": plan_of(
-            similarity.pq_topk(
-                emb768, q768, k=3, n_sub=8, n_codes=256,
-                codebooks=similarity.seeded_pq_codebooks(8, 256, 96),
-                dim=768, method="data",
+        # FAISS-shaped PQ: 8 subspaces x 256 codes x 96 dims — a
+        # per-coefficient literal fold would be ~200k literals; both
+        # spellings run the one broadcast-codebook LUT scan and must
+        # stay O(1)
+        **{
+            f"ann_pq_{method}_768x8x256": plan_of(
+                similarity.pq_topk(
+                    emb768, q768, k=3, n_sub=8, n_codes=256,
+                    codebooks=similarity.seeded_pq_codebooks(8, 256, 96),
+                    dim=768, method=method,
+                )
             )
-        ),
+            for method in ("literal", "data")
+        },
         # the full FAISS composition (IVF1024,PQ8x256): routed
         # compressed scan — one mapInPandas over the codes table
         "ann_ivfpq_768x1024x8x256": plan_of(
