@@ -214,7 +214,8 @@ def chunk_token_windows(
     id_col: str = "url",
     text_col: str = "doc_text",
     window: int = 256,
-    stride: int | None = None,
+    *,
+    stride: int,
 ) -> DataFrame:
     """Token-window chunking — the retrieval/context-window shape
     (fixed-size possibly-overlapping windows PER DOCUMENT, offsets
@@ -225,16 +226,16 @@ def chunk_token_windows(
     Output: (id, chunk_no, tok_start, tok_end, n_tokens, chunk_text)
     — chunk_no 0-based, tok_start inclusive / tok_end exclusive in
     the doc's whitespace-token stream, chunk_text the space-joined
-    window. stride defaults to window (disjoint); stride < window
-    overlaps. The LAST window is the remainder (shorter, never
-    empty); a doc shorter than window yields exactly one chunk.
+    window. A window starts every ``stride`` tokens (stride == window:
+    disjoint; stride < window: overlapping) and is cut at the doc's
+    end (shorter, never empty), so a doc of n tokens yields
+    ceil(n / stride) chunks: one only when n <= stride, even if
+    n < window.
     Fully native (split + sequence + posexplode + slice — zero
     shuffle, zero Python), so the plan composes into any scan.
     Empty/NULL/whitespace-only texts yield no chunks; empty edge
     tokens from leading/trailing whitespace are filtered out.
     """
-    if stride is None:
-        stride = window
     if window < 1 or stride < 1:
         raise ValueError("window and stride must be >= 1")
     # NULL text first: size(NULL array) is -1, which would leak a

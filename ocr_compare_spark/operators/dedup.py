@@ -512,31 +512,13 @@ def fingerprint_near_dups(fp: DataFrame, max_distance: int = 3) -> DataFrame:
 # ------------------------------------------------- embedding near-dup
 
 
-def auto_sign_bits(n: int, dim: int, target_block_size: int = 1024) -> int:
-    """Blocking width so the EXPECTED block size n / 2^bits (isotropy
-    assumption) stays <= target_block_size, floored at 4 bits and
-    capped by the embedding dimension. Sign blocking cannot split
-    sign-correlated corpora no matter the width — that residual skew
-    is the documented recall/cost trade of this tier; route such
-    corpora to the banded MinHash scheme."""
-    import math
-
-    want = 0
-    if n > target_block_size:
-        want = math.ceil(math.log2(n / target_block_size))
-    # dim cap LAST: max(4, ...) before it would return bits > dim for
-    # dim < 4 embeddings, and element_at(vec, i) past the array end
-    # throws under Spark 4 ANSI mode
-    return min(dim, max(4, min(want, 30)))
-
-
 def embed_near_dups(
     emb: DataFrame,
     threshold: float = 0.30,
-    sign_bits: int | None = None,
+    *,
+    sign_bits: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    target_block_size: int = 1024,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via sign-orthant blocking
     (the fifth dedup tier: semantic near-dups that no token hash sees).
@@ -546,13 +528,10 @@ def embed_near_dups(
     assignment is deterministic and SQL-mirrorable, unlike a random-
     projection LSH whose buckets are hash-specific). Candidates are
     same-block pairs (id_a < id_b) joined on the block id — never a
-    cross join. When ``sign_bits`` is None it is AUTO-SIZED from the
-    corpus count so the expected block size (n / 2^bits under
-    isotropy) stays <= ``target_block_size`` — a fixed bit width is
-    a quadratic blow-up waiting at corpus scale (the r2 scale-safety
-    gap); pass an explicit value to pin blocks (the driver query
-    does, so its literal-block oracle stays reproducible). The bit
-    width is capped by the embedding dimension.
+    cross join. Under isotropy the candidate count is about
+    n² / 2^sign_bits, so widen the blocking with the corpus, but never
+    past the embedding dimension (``element_at`` past the array end
+    throws under ANSI mode).
     Within candidates, exact cosine (left-to-right fold, so the
     DuckDB oracle's ordered list_sum reproduces it bit-for-bit) and a
     ``sim >= threshold`` keep-filter.
@@ -567,11 +546,6 @@ def embed_near_dups(
     """
     from ocr_compare_spark.operators.similarity import cosine_native
 
-    if sign_bits is None:
-        n = emb.count()
-        dim_row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(dim_row["d"]) if dim_row and dim_row["d"] is not None else 1
-        sign_bits = auto_sign_bits(n, dim, target_block_size)
     block = F.lit(0)
     for b in range(sign_bits):
         block = block + F.when(F.element_at(F.col(vec_col), b + 1) > 0, F.lit(1 << b)).otherwise(

@@ -531,16 +531,11 @@ def run_engine(pages: DataFrame, engine_name: str, with_spans: bool = True) -> D
     return run_engines_fused(pages, (engine_name,), with_spans)
 
 
-SPANS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("engine", T.StringType(), False),
-        T.StructField("engine_version", T.StringType(), False),
-    ]
-    # span fields all NULLABLE here: a doc without spans emits one
-    # null-field row (the posexplode_outer twin of the nested path)
-    + [T.StructField(f.name, f.dataType, True) for f in SPAN_FIELDS]
-)
+_STREAM_KEY_FIELDS = [
+    T.StructField("url", T.StringType(), False),
+    T.StructField("engine", T.StringType(), False),
+    T.StructField("engine_version", T.StringType(), False),
+]
 
 
 # The column subset the assembly cascade consumes — passing this as
@@ -557,7 +552,8 @@ def extract_spans_stream(
     pages: DataFrame,
     engines: tuple[str, ...] = ("dom",),
     num_partitions: int | None = None,
-    fields: tuple[str, ...] | None = None,
+    *,
+    fields: tuple[str, ...],
 ) -> DataFrame:
     """Span extraction as a FLAT row stream (mapInPandas): one output
     row per word span, identical values to
@@ -574,25 +570,20 @@ def extract_spans_stream(
     10^12 docs; the nested path remains for consumers that need
     doc_text and spans in one row.
 
-    ``fields``: optional subset of SPAN_FIELDS names to emit (plus
-    url/engine/engine_version, always). Consumers that don't need the
-    heavy columns — bbox struct, extra map, char offsets — should
-    pass their subset (assembly: ASSEMBLY_SPAN_FIELDS): a request
-    without _GEOMETRY columns skips the per-word geometry, and the
-    skipped columns never cross the Arrow boundary or the shuffle.
-    Values of the emitted columns are identical to the full
-    emission."""
+    ``fields``: the SPAN_FIELDS names to emit (plus url/engine/
+    engine_version, always), all nullable: a doc without spans emits
+    one null-field row. A request without _GEOMETRY columns
+    (assembly's ASSEMBLY_SPAN_FIELDS) skips the per-word geometry,
+    and columns not requested never cross the Arrow boundary or the
+    shuffle. Values of the emitted columns do not depend on which
+    others are requested."""
     specs = [create_engine(n) for n in engines]
     share_html = _shares_segmentation(specs)
-    if fields is None:
-        schema = SPANS_STREAM_SCHEMA
-    else:
-        by_name = {f.name: f for f in SPAN_FIELDS}
-        schema = T.StructType(
-            list(SPANS_STREAM_SCHEMA.fields[:3])
-            + [T.StructField(n, by_name[n].dataType, True) for n in fields]
-        )
-    span_cols = [f.name for f in schema.fields[3:]]
+    by_name = {f.name: f for f in SPAN_FIELDS}
+    schema = T.StructType(
+        _STREAM_KEY_FIELDS + [T.StructField(n, by_name[n].dataType, True) for n in fields]
+    )
+    span_cols = list(fields)
     # the walker fills every structural column, and all the geometry
     # columns when any of them is requested
     geo = not set(_GEOMETRY).isdisjoint(span_cols)

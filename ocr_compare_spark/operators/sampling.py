@@ -400,13 +400,14 @@ def unimax_sample(
     total_budget: int,
     max_epochs: float = 1.0,
     cum_col: str = "cum_tokens",
-    budget_col: str | None = None,
+    *,
+    budget_col: str,
 ) -> DataFrame:
     """UniMax corpus mix: per-stratum budgets from
     :func:`unimax_budgets` (one tiny guarded weight aggregate),
     applied as a deterministic token-budget prefix per stratum in
     hash_frac(id) order — a layout-invariant uniform mix within each
-    stratum. ``budget_col`` optionally attaches the applied budget.
+    stratum. ``budget_col`` attaches the applied budget.
     Rows with NULL strata have no capacity and drop.
 
     The input is localCheckpointed ONCE up front (the weight collect
@@ -433,9 +434,7 @@ def unimax_sample(
         df, strata_col, token_col, budgets, "_prio", id_col,
         cum_col=cum_col, checkpoint=False,
     )
-    if budget_col:
-        out = out.withColumn(budget_col, _budget_expr(budgets, strata_col))
-    return out.drop("_prio")
+    return out.withColumn(budget_col, _budget_expr(budgets, strata_col)).drop("_prio")
 
 
 # ------------------------------------------------- train/val/test
@@ -532,18 +531,44 @@ def bottomk_frac(key: str | Column) -> Column:
     return hash_frac(F.concat(F.lit(BOTTOMK_HASH_DOMAIN), c.cast("string")))
 
 
+def _bottom_k(df, slim, strata_col, key_col, order_col, k, rank_col, carry):
+    """The rows of ``df`` whose key is among the k smallest
+    (order_col, key) of ``slim`` — one row per (stratum, key) — in its
+    stratum, with ``rank_col`` (1-based) and ``slim``'s ``carry``
+    columns. The window sees only the slim projection (full rows never
+    shuffle); winners join back null-safely on (key, stratum), so a
+    NULL stratum's winners reach their rows and a key repeated across
+    strata admits only its own stratum's rows."""
+    w = Window.partitionBy(strata_col).orderBy(F.col(order_col).asc(), F.col(key_col).asc())
+    winners = (
+        slim.withColumn(rank_col, F.row_number().over(w))
+        .filter(F.col(rank_col) <= k)
+        .select(
+            F.col(strata_col).alias("_bk_stratum"),
+            F.col(key_col).alias("_bk_key"),
+            *carry,
+            rank_col,
+        )
+    )
+    cond = df[key_col].eqNullSafe(winners["_bk_key"]) & df[strata_col].eqNullSafe(
+        winners["_bk_stratum"]
+    )
+    return df.join(winners, cond, "inner").drop("_bk_key", "_bk_stratum")
+
+
 def bottomk_sample(
     df: DataFrame,
     key_col: str,
     k: int,
-    strata_col: str | None = None,
+    *,
+    strata_col: str,
     frac_col: str = "frac",
     rank_col: str = "sample_rank",
 ) -> DataFrame:
     """EXACT-size deterministic uniform sample: keep the rows whose
     KEY is among the k smallest (bottomk_frac(key), key) draws per
-    stratum (global if ``strata_col`` is None). This is bottom-k /
-    order sketching (Cohen & Kaplan 2007): because the prefixed md5
+    stratum. This is bottom-k / order sketching (Cohen & Kaplan
+    2007): because the prefixed md5
     draw is uniform, the k smallest hashes are a uniform simple
     random sample WITHOUT replacement of exactly min(k, n) of the
     stratum's DISTINCT keys — the fixed-size counterpart to a
@@ -575,39 +600,17 @@ def bottomk_sample(
     if k <= 0:
         raise ValueError(f"bottomk_sample: k must be positive, got {k!r}")
     frac6 = F.floor(bottomk_frac(key_col) * 1e6 + F.lit(0.5)) / F.lit(1e6)
-    strata = [strata_col] if strata_col else []
     # distinct: a repeated key must hold ONE slot in the rank order
     # (the join-back then fans the slot out to all its rows); NULL
     # keys are excluded — no deterministic draw exists for them
     slim = (
-        df.select(*strata, key_col)
+        df.select(strata_col, key_col)
         .filter(F.col(key_col).isNotNull())
         .distinct()
-        .select(*strata, key_col, bottomk_frac(key_col).alias("_bk_frac"))
+        .select(strata_col, key_col, bottomk_frac(key_col).alias("_bk_frac"))
     )
-    w = Window.partitionBy(*[F.col(c) for c in strata] or [F.lit(1)]).orderBy(
-        F.col("_bk_frac").asc(), F.col(key_col).asc()
-    )
-    winners = (
-        slim.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-        .select(
-            *[F.col(c).alias(f"_bk_{c}") for c in strata],
-            F.col(key_col).alias("_bk_key"),
-            rank_col,
-        )
-    )
-    # null-safe join (the CLAUDE.md stratum-join rule): a NULL
-    # stratum's winners must reach their rows; the join carries the
-    # stratum too — a key value repeated ACROSS strata only admits
-    # its own stratum's rows
-    cond = df[key_col].eqNullSafe(winners["_bk_key"])
-    for c in strata:
-        cond = cond & df[c].eqNullSafe(winners[f"_bk_{c}"])
-    return (
-        df.join(winners, cond, "inner")
-        .drop("_bk_key", *[f"_bk_{c}" for c in strata])
-        .withColumn(frac_col, frac6)
+    return _bottom_k(df, slim, strata_col, key_col, "_bk_frac", k, rank_col, ()).withColumn(
+        frac_col, frac6
     )
 
 
@@ -615,6 +618,18 @@ def bottomk_sample(
 #: argument as SPLIT/BOTTOMK_HASH_DOMAIN: each independent sampler
 #: needs its own hash stream).
 WPRI_HASH_DOMAIN = "wpri:"
+
+
+def _wpri_u(key: str | Column) -> Column:
+    """The weighted sampler's uniform draw u = (md5_prefix + 0.5) / 2^32
+    over the 'wpri:'-prefixed key (see wpri_priority)."""
+    c = F.col(key) if isinstance(key, str) else key
+    prefix = F.conv(
+        F.substring(F.md5(F.concat(F.lit(WPRI_HASH_DOMAIN), c.cast("string"))), 1, 8),
+        16,
+        10,
+    ).cast("double")
+    return (prefix + F.lit(0.5)) / F.lit(_TWO_32)
 
 
 def wpri_priority(key: str | Column, weight: str | Column) -> Column:
@@ -639,15 +654,8 @@ def wpri_priority(key: str | Column, weight: str | Column) -> Column:
     probability proportional to weight (Efraimidis & Spirakis 2006).
     Because the ranking key is an INTEGER, cross-engine ordering is
     exact; ties (real after round6) break on the key column."""
-    c = F.col(key) if isinstance(key, str) else key
     w = (F.col(weight) if isinstance(weight, str) else weight).cast("double")
-    prefix = F.conv(
-        F.substring(F.md5(F.concat(F.lit(WPRI_HASH_DOMAIN), c.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("double")
-    u = (prefix + F.lit(0.5)) / F.lit(_TWO_32)
-    ln6 = F.floor(F.log(u) * 1e6 + F.lit(0.5)).cast("long")
+    ln6 = F.floor(F.log(_wpri_u(key)) * 1e6 + F.lit(0.5)).cast("long")
     return F.floor((-ln6).cast("double") / w + F.lit(0.5)).cast("long")
 
 
@@ -656,7 +664,8 @@ def priority_sample(
     key_col: str,
     weight_col: str,
     k: int,
-    strata_col: str | None = None,
+    *,
+    strata_col: str,
     frac_col: str = "frac",
     rank_col: str = "sample_rank",
     pri_col: str = "priority6",
@@ -690,49 +699,20 @@ def priority_sample(
     stratum)."""
     if k <= 0:
         raise ValueError(f"priority_sample: k must be positive, got {k!r}")
-    strata = [strata_col] if strata_col else []
     w_d = F.col(weight_col).cast("double")
     slim = (
-        df.select(*strata, key_col, w_d.alias("_wp_w"))
+        df.select(strata_col, key_col, w_d.alias("_wp_w"))
         .filter(
             F.col(key_col).isNotNull()
             & F.col("_wp_w").isNotNull()
             & ~F.isnan("_wp_w")
             & (F.col("_wp_w") > 0)
         )
-        .groupBy(*strata, key_col)
+        .groupBy(strata_col, key_col)
         .agg(F.max("_wp_w").alias("_wp_w"))
-        .select(
-            *strata,
-            key_col,
-            wpri_priority(key_col, F.col("_wp_w")).alias(pri_col),
-        )
+        .select(strata_col, key_col, wpri_priority(key_col, F.col("_wp_w")).alias(pri_col))
     )
-    w = Window.partitionBy(*[F.col(c) for c in strata] or [F.lit(1)]).orderBy(
-        F.col(pri_col).asc(), F.col(key_col).asc()
-    )
-    winners = (
-        slim.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-        .select(
-            *[F.col(c).alias(f"_wp_{c}") for c in strata],
-            F.col(key_col).alias("_wp_key"),
-            pri_col,
-            rank_col,
-        )
-    )
-    cond = df[key_col].eqNullSafe(winners["_wp_key"])
-    for c in strata:
-        cond = cond & df[c].eqNullSafe(winners[f"_wp_{c}"])
-    c = F.col(key_col) if isinstance(key_col, str) else key_col
-    prefix = F.conv(
-        F.substring(F.md5(F.concat(F.lit(WPRI_HASH_DOMAIN), c.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("double")
-    u6 = F.floor((prefix + F.lit(0.5)) / F.lit(_TWO_32) * 1e6 + F.lit(0.5)) / F.lit(1e6)
-    return (
-        df.join(winners, cond, "inner")
-        .drop("_wp_key", *[f"_wp_{c}" for c in strata])
-        .withColumn(frac_col, u6)
+    u6 = F.floor(_wpri_u(key_col) * 1e6 + F.lit(0.5)) / F.lit(1e6)
+    return _bottom_k(df, slim, strata_col, key_col, pri_col, k, rank_col, (pri_col,)).withColumn(
+        frac_col, u6
     )

@@ -700,13 +700,14 @@ def ivfpq_topk(
     queries: DataFrame,
     k: int = 3,
     nprobe: int = 4,
-    centroids: np.ndarray | None = None,
-    codebooks: np.ndarray | None = None,
+    *,
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
     n_sub: int = 4,
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the composition the other tiers
     build toward and the standard billion-scale index shape (FAISS
@@ -728,13 +729,11 @@ def ivfpq_topk(
     Data path only: the composition is pytest-pinned against a plain
     numpy mirror; its components (cell routing, PQ encode/ADC) carry
     the bit-exact oracles in ann_suite."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
     assert dim % n_sub == 0, f"dim {dim} not divisible by n_sub {n_sub}"
     sub_dim = dim // n_sub
-    cents = seeded_centroids(dim=dim) if centroids is None else centroids
-    cb = seeded_pq_codebooks(n_sub, n_codes, sub_dim) if codebooks is None else codebooks
-    assert cb.shape == (n_sub, n_codes, sub_dim), f"codebook shape {cb.shape} mismatch"
+    assert codebooks.shape == (n_sub, n_codes, sub_dim), (
+        f"codebook shape {codebooks.shape} mismatch"
+    )
 
     rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
     if len(rows) > MAX_DRIVER_QUERIES:
@@ -748,15 +747,15 @@ def ivfpq_topk(
     probes: list[tuple[int, dict[int, float], np.ndarray]] = []
     for r in rows:
         q = np.asarray(list(r[vec_col]), dtype=np.float64)
-        cell_dots = cents @ q
+        cell_dots = centroids @ q
         order = np.argsort(-cell_dots, kind="stable")[:nprobe]
         lut = np.empty((n_sub, n_codes), dtype=np.float64)
         for j in range(n_sub):
-            lut[j] = cb[j] @ q[j * sub_dim : (j + 1) * sub_dim]
+            lut[j] = codebooks[j] @ q[j * sub_dim : (j + 1) * sub_dim]
         probes.append((int(r[id_col]), {int(c): float(cell_dots[c]) for c in order}, lut))
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(probes)
-    codes = _ivfpq_encode_data(corpus, cents, cb, id_col, vec_col)
+    codes = _ivfpq_encode_data(corpus, centroids, codebooks, id_col, vec_col)
 
     def scan(batches):
         pv = bc.value
@@ -782,7 +781,8 @@ def ivfpq_topk(
 def mine_hard_negatives(
     corpus: DataFrame,
     queries: DataFrame,
-    positives: DataFrame | None = None,
+    *,
+    positives: DataFrame,
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -802,27 +802,20 @@ def mine_hard_negatives(
     brute_force_topk (broadcast queries, partition GEMM, corpus never
     shuffled); swap in lsh/ivf candidates upstream for query sets
     beyond the driver guard."""
-    if positives is not None:
-        row = (
-            positives.groupBy("query_id")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n"))
-            .first()
-        )
-        max_pos = int(row[0] or 0)
-    else:
-        max_pos = 0
+    row = (
+        positives.groupBy("query_id")
+        .agg(F.count("*").alias("n"))
+        .agg(F.max("n"))
+        .first()
+    )
+    max_pos = int(row[0] or 0)
     top = brute_force_topk_df(
         corpus, queries, k=k + max_pos, id_col=id_col, vec_col=vec_col
+    ).join(
+        positives.select("query_id", F.col("pos_id").alias("neighbor_id")),
+        ["query_id", "neighbor_id"],
+        "left_anti",
     )
-    if positives is not None:
-        top = top.join(
-            positives.select(
-                "query_id", F.col("pos_id").alias("neighbor_id")
-            ),
-            ["query_id", "neighbor_id"],
-            "left_anti",
-        )
     # re-rank by the ORIGINAL brute-force rank, not by the rounded sim
     # column: the candidate buffer was cut on RAW sims, so ordering
     # survivors by round6 sims could disagree with the cut near

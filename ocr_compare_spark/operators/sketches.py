@@ -47,6 +47,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ocr_compare_spark.operators.bloom import _h1h2
+
 # ------------------------------------------------------------- HLL
 
 
@@ -267,12 +269,9 @@ def hll_overlap(
 def cms_position_cols(key: str | Column, depth: int, width: int) -> Column:
     """array<struct<row,pos>> of the depth counter positions for a
     key — Kirsch-Mitzenmacher (h1 + i*h2) mod width, i in 0..d-1
-    (bloom.py's scheme; h1, h2 < 2^33 so every product is int64-
+    (bloom.py's h1, h2; both < 2^33 so every product is int64-
     exact)."""
-    c = F.col(key) if isinstance(key, str) else key
-    md5 = F.md5(c.cast("string"))
-    h1 = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long") * 2 + 1
+    h1, h2 = _h1h2(key)
     return F.transform(
         F.sequence(F.lit(0), F.lit(depth - 1)),
         lambda i: F.struct(i.alias("row"), ((h1 + i * h2) % width).alias("pos")),

@@ -10,10 +10,10 @@ them, so each is re-expressed here as a composition of shuffle-minimal
 DataFrame primitives.
 
 **as-of join** (``asof_join``): for every left row, the single right
-row with the greatest ``right_ts <= left_ts`` (direction="backward";
-"forward" = smallest ``right_ts >= left_ts``) sharing the join keys,
-optionally within a tolerance.  NOT an inequality join (which Spark
-plans as a broadcast-nested-loop / cartesian — the plan_audit
+row with the greatest ``right_ts <= left_ts`` (direction="backward",
+the only one) sharing the join keys, within a tolerance.  NOT an
+inequality join (which Spark plans as a broadcast-nested-loop /
+cartesian — the plan_audit
 anti-pattern): instead the *union + ordered carry-forward* shape —
 tag both inputs, union them, and run ONE window per key ordered by
 ``(ts, side, tiebreak)`` where right rows sort before left rows at
@@ -27,9 +27,9 @@ tolerance, so filter-after-match is exact — same semantics as pandas
 ``merge_asof``).
 
 Determinism: duplicate right rows at the same (key, ts) are broken by
-``tiebreak`` — backward keeps the LARGEST tiebreak, forward the
-SMALLEST (both follow from the carry-forward order and match what
-``merge_asof`` does on a (ts, tiebreak)-sorted input).  Everything is
+``tiebreak`` — the LARGEST tiebreak wins (it follows from the
+carry-forward order and matches what ``merge_asof`` does on a
+(ts, tiebreak)-sorted input).  Everything is
 comparison-only on int64 microseconds — no float arithmetic — so the
 result is bit-exact cross-engine.
 
@@ -80,10 +80,11 @@ def asof_join(
     on: str | list[str],
     left_ts: str = "ts",
     right_ts: str = "ts",
-    payload: list[str] | None = None,
+    *,
+    payload: list[str],
     direction: str = "backward",
-    tolerance_us: int | None = None,
-    tiebreak: str | None = None,
+    tolerance_us: int,
+    tiebreak: str,
     suffix: str = "_r",
 ) -> DataFrame:
     """As-of join (left outer): every ``left`` row gains the payload of
@@ -91,8 +92,7 @@ def asof_join(
     no right row qualifies.
 
     - ``on``: equality key column name(s), same names on both sides.
-    - ``payload``: right columns to attach (default: every right
-      column except the keys and ``right_ts``).  A payload column whose
+    - ``payload``: right columns to attach.  A payload column whose
       name collides with a left column is emitted as ``name+suffix``.
       The matched right timestamp is always emitted as
       ``right_ts+suffix``.
@@ -106,8 +106,6 @@ def asof_join(
     if direction != "backward":
         raise ValueError(f"direction must be backward, got {direction!r}")
     keys = [on] if isinstance(on, str) else list(on)
-    if payload is None:
-        payload = [c for c in right.columns if c not in keys and c != right_ts]
 
     # right side: slim (keys, sort cols, payload struct) — the only
     # extra width the shuffle pays beyond the left table itself.
@@ -119,12 +117,11 @@ def asof_join(
         *[F.col(c).alias(c) for c in payload],
         _micros(right_ts).alias("_match_us"),
     )
-    tb = F.col(tiebreak).cast("long") if tiebreak is not None else F.lit(0).cast("long")
     r = right.select(
         *[F.col(k) for k in keys],
         _micros(right_ts).alias("_sort_us"),
         F.lit(0).alias("_side"),
-        tb.alias("_tb"),
+        F.col(tiebreak).cast("long").alias("_tb"),
         r_struct.alias("_r"),
     )
     struct_t = r.schema["_r"].dataType
@@ -158,9 +155,7 @@ def asof_join(
     )
 
     dist = _micros(left_ts) - F.col("_m._match_us")
-    ok = F.col("_m").isNotNull()
-    if tolerance_us is not None:
-        ok = ok & (dist <= F.lit(int(tolerance_us)))
+    ok = F.col("_m").isNotNull() & (dist <= F.lit(int(tolerance_us)))
 
     out_payload = []
     for c in payload:
@@ -405,7 +400,8 @@ def funnel(
     on: str | list[str] = "user_id",
     ts_col: str = "ts",
     step_col: str = "event_type",
-    window_us: int | None = None,
+    *,
+    window_us: int,
 ) -> DataFrame:
     """Funnel analysis (the Amplitude / ClickHouse ``windowFunnel``
     shape): for every key that performed ``steps[0]``, how deep into
@@ -414,7 +410,7 @@ def funnel(
     Semantics (value-based, fully deterministic): the step-1 match is
     the key's EARLIEST ``steps[0]`` timestamp; the step-k match is the
     earliest ``steps[k-1]`` timestamp STRICTLY after the step-(k-1)
-    match, optionally within ``window_us`` of the step-1 anchor
+    match, within ``window_us`` of the step-1 anchor
     (``ts_k - ts_1 <= window_us`` — the window is anchored at the
     funnel entry, the common product-analytics definition).  Matching
     on timestamp VALUES (min-after-min) rather than row identity means
@@ -452,9 +448,9 @@ def funnel(
         ev = events.filter(F.col(step_col) == s).select(
             *[F.col(k) for k in keys], us.alias("_eus")
         )
-        cond = F.col("_eus") > F.col(f"_t{i - 1}")
-        if window_us is not None:
-            cond = cond & (F.col("_eus") <= F.col("_t1") + F.lit(int(window_us)))
+        cond = (F.col("_eus") > F.col(f"_t{i - 1}")) & (
+            F.col("_eus") <= F.col("_t1") + F.lit(int(window_us))
+        )
         nxt = (
             ev.join(out.select(*dict.fromkeys([*keys, "_t1", f"_t{i - 1}"])), keys)
             .filter(cond)
@@ -482,7 +478,8 @@ def retention_cohorts(
     ts_col: str = "ts",
     cohort_bucket_s: int = 86400,
     activity_bucket_s: int = 86400,
-    activity_filter: Column | None = None,
+    *,
+    activity_filter: Column,
     return_users: bool = False,
 ) -> DataFrame:
     """Cohort retention (the classic triangle): keys are cohorted by
@@ -490,7 +487,7 @@ def retention_cohorts(
     moment), activity is the distinct set of ``activity_bucket_s``
     buckets in which the key produced a row passing
     ``activity_filter`` (e.g. ``F.col("event_type") == "purchase"``
-    for purchase retention; default: any event), and each output cell
+    for purchase retention), and each output cell
     counts the keys of cohort c active at bucket offset o.
 
     Exact-integer arithmetic throughout (bucket starts in epoch
@@ -524,8 +521,7 @@ def retention_cohorts(
         .cast("long")
         .alias("cohort_start")
     )
-    act_src = events if activity_filter is None else events.filter(activity_filter)
-    act = act_src.select(
+    act = events.filter(activity_filter).select(
         *[F.col(k) for k in keys],
         (F.floor(us / ab_us) * int(activity_bucket_s)).cast("long").alias("_act_start"),
     ).distinct()
@@ -557,7 +553,8 @@ def transitions(
     on: str | list[str] = "user_id",
     ts_col: str = "ts",
     step_col: str = "event_type",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """Path analysis: the first-order transition matrix over each
     key's event sequence (the Sankey / Markov-chain input every
@@ -567,7 +564,7 @@ def transitions(
     ``(from_step, to_step, n, sum_gap_us)`` — gap sums are exact
     int64 micros so the mean gap is derivable without float drift.
 
-    Determinism: pass a ``tiebreak`` column that makes the per-key
+    Determinism: ``tiebreak`` is a column that makes the per-key
     ordering total (e.g. a unique event id) — equal-ts events would
     otherwise make ``lead`` arrival-order-dependent.  With a total
     order the result is partition-layout invariant and bit-exact
@@ -579,8 +576,7 @@ def transitions(
     window partition.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    order = [F.col("_us")] + ([F.col(tiebreak)] if tiebreak else [])
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*keys).orderBy("_us", tiebreak)
     # NULL-ts rows have no position in the order and would diverge
     # cross-engine (Spark sorts NULL FIRST ascending, DuckDB LAST) —
     # same class as asof_join's NULL-right-row rule
@@ -590,7 +586,7 @@ def transitions(
             *[F.col(k) for k in keys],
             _micros(ts_col).alias("_us"),
             F.col(step_col).alias("from_step"),
-            *([F.col(tiebreak)] if tiebreak else []),
+            F.col(tiebreak),
         )
         .withColumn("to_step", F.lead("from_step").over(w))
         .withColumn("_gap", F.lead("_us").over(w) - F.col("_us"))

@@ -393,53 +393,10 @@ def test_brute_force_topk_df_overload(vectors, monkeypatch):
         similarity.brute_force_topk_df(df, df, k=3)
 
 
-def test_auto_sign_bits_bounds_block_size(spark):
-    """The r2 scale-safety gap: fixed sign_bits=4 means n^2/16
-    candidate pairs at corpus scale. auto_sign_bits must widen with
-    n so the expected block size stays <= target, and the operator's
-    auto path must produce blocks bounded accordingly on a planted
-    corpus with a HOT orthant (half the mass in one 4-bit block)."""
-    # sizing rule: expected block size n/2^bits <= target
-    for n, target in [(10_000, 64), (1_000_000, 1024), (10**9, 1024)]:
-        bits = dedup.auto_sign_bits(n, dim=64, target_block_size=target)
-        assert n / (1 << bits) <= target
-    assert dedup.auto_sign_bits(100, dim=64) == 4  # floor
-    assert dedup.auto_sign_bits(10**12, dim=8) == 8  # dim cap
-
-    rng = np.random.default_rng(11)
-    n, dim = 800, 16
-    mat = rng.standard_normal((n, dim)).astype(np.float32)
-    mat[: n // 2, :4] = np.abs(mat[: n // 2, :4])  # hot 4-bit orthant
-    rows = [(i, [float(x) for x in mat[i]]) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bits = dedup.auto_sign_bits(n, dim, target_block_size=32)
-    assert bits > 4  # the fixed-4 default would have kept the hot block whole
-    blocks = ((mat[:, :bits] > 0) * (1 << np.arange(bits))).sum(axis=1)
-    _, counts = np.unique(blocks, return_counts=True)
-    blocks4 = ((mat[:, :4] > 0) * (1 << np.arange(4))).sum(axis=1)
-    _, counts4 = np.unique(blocks4, return_counts=True)
-    # widened blocking split the hot orthant (each extra bit roughly
-    # halves it; fixed-4 keeps all ~n/2 hot rows in one block)
-    assert counts.max() < 0.75 * counts4.max()
-    # end-to-end through the operator's auto path
-    got = dedup.embed_near_dups(df, threshold=0.99, target_block_size=32)
-    assert got.columns == ["id_a", "id_b", "sim"]
-    got.count()
-
-
 def test_train_centroids_short_sample_raises(vectors):
     df, _ = vectors
     with pytest.raises(ValueError, match="n_centroids"):
         similarity.train_centroids(df.limit(3), n_centroids=8, id_col="vec_id")
-
-
-def test_auto_sign_bits_dim_clamp():
-    """dim < 4: the floor max(4, ...) must not override the dim cap —
-    element_at(vec, i) past the array end throws under Spark 4 ANSI
-    mode (ADVICE r3)."""
-    assert dedup.auto_sign_bits(10**6, dim=2) == 2
-    assert dedup.auto_sign_bits(10, dim=3) == 3
-    assert dedup.auto_sign_bits(10**6, dim=64) > 4
 
 
 def test_connected_components_cliques_and_chain(spark):
@@ -670,8 +627,8 @@ def test_ivf_topk_data_path_1024_centroids(vectors768):
 
 def test_ann_dim_hints_skip_sizing_jobs(vectors768):
     """dim= hints must make lsh_topk/ivf_topk plan-building run ZERO
-    Spark jobs (mirrors embed_near_dups' n/dim hint contract — the
-    first() dim-sniff on a derived corpus recomputes its upstream)."""
+    Spark jobs (the first() dim-sniff on a derived corpus recomputes
+    its upstream)."""
     df, _ = vectors768
     derived = df.filter(F.col("vec_id") >= 0)  # derived plan, not a bare scan
     q = derived.filter(F.col("vec_id") < 4)
@@ -1145,7 +1102,10 @@ def test_ivfpq_matches_numpy_mirror(vectors):
     cents, cb = similarity.seeded_centroids(dim=16), similarity.seeded_pq_codebooks(4, 16, 4)
     want = _ivfpq_numpy_reference(tie_vectors(), TIE_QUERIES, cents, cb)
     for tdf in tie_frames(df.sparkSession, "vec_id", "embedding"):
-        got = similarity.ivfpq_topk(tdf, tdf.filter(F.col("vec_id").isin(*TIE_QUERIES)), dim=16)
+        got = similarity.ivfpq_topk(
+            tdf, tdf.filter(F.col("vec_id").isin(*TIE_QUERIES)),
+            centroids=cents, codebooks=cb, dim=16,
+        )
         assert _neighbors(got.collect()) == want
 
 
@@ -1171,12 +1131,17 @@ def test_ivfpq_planted_neighbor_768(vectors768):
 def test_ivfpq_partition_invariant_and_guard(vectors, monkeypatch):
     df, _ = vectors
     q = df.filter(F.col("vec_id") < 4)
-    a = sorted(tuple(r) for r in similarity.ivfpq_topk(df.repartition(2), q, dim=16).collect())
-    b = sorted(tuple(r) for r in similarity.ivfpq_topk(df.repartition(9), q, dim=16).collect())
+    quant = dict(
+        centroids=similarity.seeded_centroids(dim=16),
+        codebooks=similarity.seeded_pq_codebooks(4, 16, 4),
+        dim=16,
+    )
+    a = sorted(tuple(r) for r in similarity.ivfpq_topk(df.repartition(2), q, **quant).collect())
+    b = sorted(tuple(r) for r in similarity.ivfpq_topk(df.repartition(9), q, **quant).collect())
     assert a == b and len(a) > 0
     monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 2)
     with pytest.raises(ValueError, match="query set exceeds"):
-        similarity.ivfpq_topk(df, q, dim=16)
+        similarity.ivfpq_topk(df, q, **quant)
 
 
 def test_mine_hard_negatives_excludes_positives_exactly(spark):
@@ -1204,7 +1169,8 @@ def test_mine_hard_negatives_excludes_positives_exactly(spark):
     assert all(6 <= r.neighbor_id <= 11 for r in negs)       # only cluster B
     assert all(negs[i].sim >= negs[i + 1].sim for i in range(3))
     # without positives, the same-cluster vectors dominate instead
-    base = similarity.mine_hard_negatives(emb, q, k=4).collect()
+    none = spark.createDataFrame([], "query_id long, pos_id long")
+    base = similarity.mine_hard_negatives(emb, q, positives=none, k=4).collect()
     assert all(1 <= r.neighbor_id <= 5 for r in base)
 
 

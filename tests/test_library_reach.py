@@ -1,7 +1,9 @@
 """Reach guard: every top-level library name must be called, directly or
 transitively, from the driver entry, a benchmark or a tool; every
-branch-selecting parameter must be turned by one of those callers; and
-no library module imports a name it never uses.
+branch-selecting parameter must be turned by one of those callers, and
+its default must be taken by one of them when the branch asks only
+whether it was given; and no library module imports a name it never
+uses.
 
 Roots are the code identifiers of the non-test corpus (``__spark_entry__.py``,
 ``bench.py``, ``bench_extra.py``, ``loopbench/``, ``tools/``) plus those of
@@ -38,6 +40,18 @@ or ``**kwargs``. A test that only does ``isinstance(p, ...)``
 normalizes a type and selects nothing. A parameter no caller sets
 selects a path no caller takes: the parameter goes, with that path,
 or it is listed in KNOB_KEEP with the reason it stays.
+
+The default-side rule checks the mirror case. A given-or-not
+parameter has a default of None, False or empty, and a branch test
+asks only whether it was given (``p``, ``not p``, ``p is None``,
+``p is not None``, alone or under ``and``/``or``). It is flagged when
+some root or library call passes it and every such call passes a
+literal other than the default or an UPPER_CASE constant: then the
+default's branch serves nobody. A call that omits the parameter,
+passes the default, forwards a name, attribute or expression, or
+uses ``*args``/``**kwargs`` may hand it the default and clears it.
+There is no exemption list: the fix is to delete the default's branch
+and make the parameter keyword-only without a default.
 
 The duplicate rule compares every pair of top-level library ``def``s:
 two with the same arguments and the same body (docstring aside)
@@ -538,6 +552,150 @@ def test_knob_rule_fails_a_stale_keep_entry():
     assert stale == ["f.mode", "h.gone"]
     _, stale = _findings("f(1)\n", keep=["f.mode"])
     assert not stale
+
+
+# ------------------------------------------------------- default side
+
+CONSTANT = re.compile(r"[A-Z][A-Z0-9_]*")
+
+
+def _asks_given(test, param):
+    """Whether ``test`` is ``p``, ``not p``, ``p is None`` or
+    ``p is not None`` (alone or as an operand of ``and``/``or``)."""
+    if isinstance(test, ast.BoolOp):
+        return any(_asks_given(v, param) for v in test.values)
+    if isinstance(test, ast.UnaryOp) and isinstance(test.op, ast.Not):
+        test = test.operand
+    if isinstance(test, ast.Compare) and len(test.ops) == 1 \
+            and isinstance(test.ops[0], (ast.Is, ast.IsNot)):
+        sides = [test.left, test.comparators[0]]
+        return any(isinstance(s, ast.Name) and s.id == param for s in sides) and any(
+            isinstance(s, ast.Constant) and s.value is None for s in sides
+        )
+    return isinstance(test, ast.Name) and test.id == param
+
+
+def _given_or_not(fn):
+    """{param: (default node, positional index or None)} for each
+    parameter of ``fn`` whose default is None, False or empty and that
+    a branch test in its body asks only whether it was given."""
+    out = {}
+    for param, (default, idx) in _knobs(fn).items():
+        lit = _literal(default)
+        if not (lit is None or lit is False or lit in ("", (), [], {})):
+            continue
+        if any(
+            isinstance(node, (ast.If, ast.IfExp, ast.While)) and _asks_given(node.test, param)
+            for node in ast.walk(fn)
+        ):
+            out[param] = (default, idx)
+    return out
+
+
+def _constant_arg(value):
+    """A literal or a module-level UPPER_CASE constant: a value that
+    can never be the default a caller forwards."""
+    if isinstance(value, ast.Attribute):
+        return bool(CONSTANT.fullmatch(value.attr))
+    if isinstance(value, ast.Name):
+        return bool(CONSTANT.fullmatch(value.id))
+    return _literal(value) is not _NOT_LITERAL
+
+
+def _ungiven_defaults(library, callers):
+    """{"def.param": [where, ...]} for every given-or-not parameter of a
+    top-level def in ``library`` that some call in ``callers`` passes
+    and every such call passes a constant other than its default. A
+    call that omits the parameter, passes the default, forwards a name,
+    attribute or expression, or uses ``*args``/``**kwargs`` may leave it
+    at the default and clears it. Both are lists of (label, parsed
+    module); calls resolve by bare name, as for the knob rule."""
+    params: dict[str, list] = {}
+    for label, tree in library:
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                g = _given_or_not(node)
+                if g:
+                    params.setdefault(node.name, []).append((f"{label}:{node.lineno}", g))
+    always: dict[tuple[str, str], bool] = {}
+    for _, tree in callers:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            if name not in params:
+                continue
+            star = any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            for _, g in params[name]:
+                for param, (default, idx) in g.items():
+                    passed = [kw.value for kw in call.keywords if kw.arg == param]
+                    if idx is not None and idx < len(call.args):
+                        passed.append(call.args[idx])
+                    given = not star and bool(passed) and all(
+                        _constant_arg(v) and not _is_default(v, default) for v in passed
+                    )
+                    key = (name, param)
+                    always[key] = always.get(key, True) and given
+    return {
+        f"{name}.{param}": [where]
+        for name, defs in params.items()
+        for where, g in defs
+        for param in g
+        if always.get((name, param), False)
+    }
+
+
+def test_every_default_is_taken():
+    library = _labelled([LIBRARY])
+    ungiven = _ungiven_defaults(library, _labelled(TRAFFIC) + library)
+    assert not ungiven, (
+        "library parameters whose default no query, benchmark or tool takes "
+        "(delete the default's branch):\n"
+        + "\n".join(f"  {k}  {', '.join(w)}" for k, w in sorted(ungiven.items()))
+    )
+
+
+_DEFAULT_LIB = """
+LIMIT = 3
+
+
+def f(x, size=None, keys=()):
+    if len(keys) < 1:
+        raise ValueError("no keys")
+    if size is None:
+        size = len(x)
+    return x[:size]
+"""
+
+
+def _ungiven(callers):
+    return set(
+        _ungiven_defaults([("lib", ast.parse(_DEFAULT_LIB))], [("caller", ast.parse(callers))])
+    )
+
+
+def test_default_rule_flags_a_default_no_call_takes():
+    calls = "f(a, size=4, keys=('k',))\nf(b, LIMIT, ('k',))\nf(c, size=m.LIMIT, keys=KEYS)\n"
+    assert _ungiven(calls) == {"f.size"}
+
+
+def test_default_rule_clears_a_call_that_omits_it():
+    assert not _ungiven("f(a, size=4, keys=('k',))\nf(b, keys=('k',))\n")
+
+
+def test_default_rule_clears_a_forwarded_parameter():
+    assert not _ungiven(
+        "def g(x, size=None):\n    return f(x, size=size, keys=('k',))\n\nf(a, size=4, keys=('k',))\n"
+    )
+
+
+def test_default_rule_skips_a_range_check():
+    # every call passes keys a non-default literal, but len(keys) < 1
+    # asks for a size, not whether keys was given
+    assert not _ungiven("f(a, keys=('k',))\nf(b, size=None, keys=('k', 'j'))\n")
 
 
 # ------------------------------------------------------------ duplicates

@@ -214,7 +214,9 @@ def test_flat_span_stream_equals_nested(spark, nested_pages):
 
     res = run_engines_fused(nested_pages, engines=("dom",))
     a = assemble_doc_text(spans_table(res))
-    b = assemble_doc_text(extract_spans_stream(nested_pages, engines=("dom",)))
+    b = assemble_doc_text(
+        extract_spans_stream(nested_pages, engines=("dom",), fields=tuple(SPAN_NAMES))
+    )
     j = a.join(b.select("url", "engine", F.col("doc_text").alias("b")), ["url", "engine"])
     assert j.count() == 3
     assert j.filter(F.col("doc_text") != F.col("b")).count() == 0
@@ -263,7 +265,7 @@ def test_span_stream_emits_null_row_for_error_docs(spark):
     engines = ("dom", "density", "pdf")
     pages = _parity_pages(spark)
     nested = spans_table(run_engines_fused(pages, engines=engines)).cache()
-    for fields in (None, ASSEMBLY_SPAN_FIELDS, ("confidence",)):
+    for fields in (tuple(SPAN_NAMES), ASSEMBLY_SPAN_FIELDS, ("confidence",)):
         stream = extract_spans_stream(pages, engines=engines, fields=fields)
         cols = stream.columns
         assert _sorted_rows(stream, cols) == _sorted_rows(nested, cols)
@@ -300,7 +302,9 @@ def test_span_stream_field_subset_assembles_identically(spark, nested_pages):
         extract_spans_stream,
     )
 
-    full = assemble_doc_text(extract_spans_stream(nested_pages, engines=("dom",)))
+    full = assemble_doc_text(
+        extract_spans_stream(nested_pages, engines=("dom",), fields=tuple(SPAN_NAMES))
+    )
     slim = assemble_doc_text(
         extract_spans_stream(nested_pages, engines=("dom",), fields=ASSEMBLY_SPAN_FIELDS)
     )

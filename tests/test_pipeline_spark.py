@@ -515,12 +515,12 @@ def test_chunk_token_windows_reconstruction_and_overlap(spark):
     text = " ".join(f"w{i}" for i in range(23))
     df = spark.createDataFrame(
         [("a", text), ("b", "x y"), ("c", None), ("d", " \t\n"), ("e", "solo"),
-         ("f", "tail newline\n"), ("g", "  lead and tail  ")],
+         ("f", "tail newline\n"), ("g", "  lead and tail  "), ("h", "h0 h1 h2 h3 h4 h5 h6")],
         ["url", "doc_text"],
     )
     # disjoint windows: concatenation reconstructs the token stream,
     # the tail window is the remainder
-    got = chunk_token_windows(df, window=10).orderBy("id", "chunk_no").collect()
+    got = chunk_token_windows(df, window=10, stride=10).orderBy("id", "chunk_no").collect()
     a = [r for r in got if r.id == "a"]
     assert [(r.tok_start, r.tok_end) for r in a] == [(0, 10), (10, 20), (20, 23)]
     assert " ".join(r.chunk_text for r in a) == text
@@ -534,13 +534,13 @@ def test_chunk_token_windows_reconstruction_and_overlap(spark):
         ("f", "tail newline", 2), ("g", "lead and tail", 3),
     ]
     # overlapping windows: consecutive chunks share window-stride toks
-    ov = [
-        r for r in chunk_token_windows(df, window=10, stride=5)
-        .orderBy("id", "chunk_no").collect() if r.id == "a"
-    ]
+    ov_all = chunk_token_windows(df, window=10, stride=5).orderBy("id", "chunk_no").collect()
+    ov = [r for r in ov_all if r.id == "a"]
     assert [(r.tok_start, r.tok_end) for r in ov] == [
         (0, 10), (5, 15), (10, 20), (15, 23), (20, 23)
     ]
+    # stride <= n < window: every start yields a chunk, not just one
+    assert [(r.tok_start, r.tok_end) for r in ov_all if r.id == "h"] == [(0, 7), (5, 7)]
     for prev, nxt in zip(ov, ov[1:]):
         shared_prev = prev.chunk_text.split()[5:]
         assert nxt.chunk_text.split()[: len(shared_prev)] == shared_prev

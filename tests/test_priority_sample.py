@@ -126,16 +126,6 @@ def test_priority_sample_prefix_and_layout_invariance(spark):
     assert relay == k8
 
 
-def test_priority_sample_global_no_strata(spark):
-    rows = [("en", i, 1.0 + i) for i in range(40)]
-    df = spark.createDataFrame(rows, "lang string, doc_id long, w double")
-    out = sampling.priority_sample(df, "doc_id", "w", k=5)
-    assert out.count() == 5
-    got = {r["doc_id"]: (r["priority6"], r["sample_rank"]) for r in out.collect()}
-    mirror = py_priority_sample([(None, i, w) for _, i, w in rows], 5)
-    assert got == {kk: v for (_s, kk), v in mirror.items()}
-
-
 # --------------------------------------------- recall@k (session 11)
 
 

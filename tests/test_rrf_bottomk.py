@@ -153,9 +153,9 @@ def test_bottomk_layout_invariant_and_prefix_property(spark):
 
 
 def test_bottomk_global_and_independence_from_hash_sample(spark):
-    df = spark.createDataFrame([(i,) for i in range(200)], "doc_id long")
-    # global (no strata): exactly k rows
-    out = sampling.bottomk_sample(df, "doc_id", k=5)
+    df = spark.createDataFrame([(i, "x") for i in range(200)], "doc_id long, lang string")
+    # one stratum holding every row: exactly k rows
+    out = sampling.bottomk_sample(df, "doc_id", k=5, strata_col="lang")
     assert out.count() == 5
     # domain separation: composing after a hash_frac filter (the
     # unprefixed sampler stream) must still be a uniform subsample of
@@ -167,7 +167,7 @@ def test_bottomk_global_and_independence_from_hash_sample(spark):
     surv = df.filter(sampling.hash_frac("doc_id") < 0.3)
     got = {
         r["doc_id"]
-        for r in sampling.bottomk_sample(surv, "doc_id", k=8).collect()
+        for r in sampling.bottomk_sample(surv, "doc_id", k=8, strata_col="lang").collect()
     }
     surv_ids = [r["doc_id"] for r in surv.collect()]
     assert len(got) == 8 and got <= set(surv_ids)
@@ -216,9 +216,9 @@ def test_bottomk_null_strata_null_keys_and_dup_keys(spark):
 
 
 def test_bottomk_rejects_nonpositive_k(spark):
-    df = spark.createDataFrame([(1,)], "doc_id long")
+    df = spark.createDataFrame([(1, "x")], "doc_id long, lang string")
     try:
-        sampling.bottomk_sample(df, "doc_id", k=0)
+        sampling.bottomk_sample(df, "doc_id", k=0, strata_col="lang")
         raise AssertionError("expected ValueError")
     except ValueError:
         pass

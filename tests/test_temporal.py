@@ -46,7 +46,7 @@ def _fixture():
     return left, right
 
 
-def _pandas_asof(left, right, direction, tol_s=None):
+def _pandas_asof(left, right, direction, tol_s):
     lp = pd.DataFrame(left, columns=["key", "ts", "eid", "val"])
     rp = pd.DataFrame(right, columns=["key", "ts", "reid", "rval"])
     lp = lp.sort_values(["ts", "eid"]).reset_index(drop=True)
@@ -54,10 +54,9 @@ def _pandas_asof(left, right, direction, tol_s=None):
     # and the FIRST for forward — sorting by (ts, reid) makes that the
     # max/min tiebreak, matching asof_join's documented contract
     rp = rp.sort_values(["ts", "reid"]).reset_index(drop=True)
-    kw = {}
-    if tol_s is not None:
-        kw["tolerance"] = pd.Timedelta(seconds=tol_s)
-    m = pd.merge_asof(lp, rp, on="ts", by="key", direction=direction, **kw)
+    m = pd.merge_asof(
+        lp, rp, on="ts", by="key", direction=direction, tolerance=pd.Timedelta(seconds=tol_s)
+    )
     return {
         int(r.eid): (None if pd.isna(r.reid) else int(r.reid),
                      None if pd.isna(r.rval) else float(r.rval))
@@ -65,14 +64,15 @@ def _pandas_asof(left, right, direction, tol_s=None):
     }
 
 
-@pytest.mark.parametrize("direction,tol", [("backward", None), ("backward", 40)])
+# 3600 s (the entry queries' tolerance) exceeds the fixture's 500 s span
+@pytest.mark.parametrize("direction,tol", [("backward", 3600), ("backward", 40)])
 def test_asof_matches_merge_asof(spark, direction, tol):
     left, right = _fixture()
     l = _mk_events(spark, left)
     r = _mk_events(spark, right, cols=("key", "ts", "reid", "rval"))
     out = asof_join(
         l, r, on="key", payload=["reid", "rval"], direction=direction,
-        tolerance_us=None if tol is None else tol * 1_000_000, tiebreak="reid",
+        tolerance_us=tol * 1_000_000, tiebreak="reid",
     ).collect()
     expect = _pandas_asof(left, right, direction, tol)
     assert len(out) == len(left)
@@ -91,18 +91,22 @@ def test_asof_forward_direction_raises(spark):
     l = _mk_events(spark, left)
     r = _mk_events(spark, right, cols=("key", "ts", "reid", "rval"))
     with pytest.raises(ValueError):
-        asof_join(l, r, on="key", direction="forward")
+        asof_join(
+            l, r, on="key", payload=["reid"], direction="forward", tolerance_us=1, tiebreak="reid"
+        )
 
 
 def test_asof_payload_collision_and_match_ts(spark):
     left, right = _fixture()
     l = _mk_events(spark, left)
     r = _mk_events(spark, right, cols=("key", "ts", "eid", "val"))
-    out = asof_join(l, r, on="key", payload=["eid", "val"], tiebreak="eid")
+    out = asof_join(
+        l, r, on="key", payload=["eid", "val"], tolerance_us=3_600_000_000, tiebreak="eid"
+    )
     # colliding payload names gain the suffix; matched ts always emitted
     assert {"eid_r", "val_r", "ts_r"} <= set(out.columns)
     got = {row.eid: row for row in out.collect()}
-    expect = _pandas_asof(left, right, "backward")
+    expect = _pandas_asof(left, right, "backward", 3600)
     rts = {rj: t for _, t, rj, _ in right}
     for eid, (er, _) in expect.items():
         m = got[eid]
@@ -194,7 +198,7 @@ def test_asof_null_right_ts_never_matches(spark):
         cols=("key", "ts", "reid", "rval"),
     )
     out = {x.eid: (x.reid, x.rval) for x in asof_join(
-        l, r, on="key", payload=["reid", "rval"], tiebreak="reid"
+        l, r, on="key", payload=["reid", "rval"], tolerance_us=3_600_000_000, tiebreak="reid"
     ).collect()}
     assert out == {1: (901, 1.0)}
     # with the only right row NULL-ts: no match at all
@@ -202,7 +206,9 @@ def test_asof_null_right_ts_never_matches(spark):
         [("a", None, 900, 99.0)],
         "key string, ts timestamp, reid long, rval double",
     )
-    out2 = asof_join(l, r2, on="key", payload=["reid", "rval"], tiebreak="reid").collect()
+    out2 = asof_join(
+        l, r2, on="key", payload=["reid", "rval"], tolerance_us=3_600_000_000, tiebreak="reid"
+    ).collect()
     assert out2[0].reid is None and out2[0].rval is None and out2[0].ts_r is None
 
 
@@ -270,7 +276,7 @@ def _funnel_fixture():
     return rows
 
 
-def _py_funnel(rows, steps, window_s=None):
+def _py_funnel(rows, steps, window_s):
     by_user = {}
     for u, ts, typ, _ in rows:
         by_user.setdefault(u, []).append((ts, typ))
@@ -287,7 +293,7 @@ def _py_funnel(rows, steps, window_s=None):
                 for e in evs
                 if e[1] == steps[k]
                 and e[0] > t[k - 1]
-                and (window_s is None or (e[0] - t[0]).total_seconds() <= window_s)
+                and (e[0] - t[0]).total_seconds() <= window_s
             ]
             if not cand:
                 break
@@ -296,7 +302,8 @@ def _py_funnel(rows, steps, window_s=None):
     return out
 
 
-@pytest.mark.parametrize("window_s", [None, 100])
+# 43200 s (the entry queries' 12 h window) spans the whole fixture
+@pytest.mark.parametrize("window_s", [43_200, 100])
 def test_funnel_matches_mirror(spark, window_s):
     from ocr_compare_spark.operators.temporal import funnel
 
@@ -306,7 +313,7 @@ def test_funnel_matches_mirror(spark, window_s):
         df,
         ["A", "B", "C"],
         on="user_id",
-        window_us=None if window_s is None else window_s * 1_000_000,
+        window_us=window_s * 1_000_000,
     ).collect()
     exp = _py_funnel(rows, ["A", "B", "C"], window_s)
     assert {r.user_id for r in got} == set(exp)
@@ -338,7 +345,7 @@ def test_funnel_validates_steps(spark):
 
     df = _mk_events(spark, [(1, _ts(0), "A", 1)], cols=("user_id", "ts", "event_type", "eid"))
     with pytest.raises(ValueError):
-        funnel(df, ["A"])
+        funnel(df, ["A"], window_us=10**8)
 
 
 # ------------------------------------------------------------- retention
@@ -464,7 +471,8 @@ def test_retention_mixed_grids_and_null_ts(spark):
     got = {
         (r.cohort_start, r.offset_n): r.n_keys
         for r in retention_cohorts(
-            df, cohort_bucket_s=3600, activity_bucket_s=86400
+            df, cohort_bucket_s=3600, activity_bucket_s=86400,
+            activity_filter=F.col("event_type") == "buy",
         ).collect()
     }
     epoch_s = int(EPOCH.replace(tzinfo=dt.timezone.utc).timestamp())
