@@ -22,14 +22,24 @@ pagerank / hits / connected_components round joins and the minhash
 band and verify joins build on checkpointed LogicalRDDs, whose frozen
 sizeInBytes ignores row-multiplying lineage (the localCheckpoint
 STATS trap; at 720k edges Catalyst broadcast pagerank's EDGE table
-every round). So each operator decides ONCE per call from the real
-table it broadcasts: broadcast under its cap (right at bench scale),
-else a shuffled-hash or sort-merge hint — never a driver collect.
+every round). So each operator decides ONCE per call from the bytes
+of the table it broadcasts: broadcast under its cap, else a
+shuffled-hash or sort-merge hint.
+
+This is the one module that reads a size back to the driver, from
+the job that already reads the table: ``materialize`` observes sums
+in the eager checkpoint's own jobs; ``collect_bounded`` is the capped
+collect. An observed sum may drive only a decision where every outcome
+gives identical rows (a build side; cc's loop exit, where an
+over-count adds a no-op round): Spark does not promise exactly-once
+observation when a stage re-runs, so counts that feed VALUES
+(classifier ``n_docs``, phrases ``n_tokens``, bm25 stats) keep their
+own exact jobs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Observation, functions as F, types as T
 
 #: Fixed bytes per row of a hash relation (row header, hash slot,
 #: key pointer), counted whatever the row's columns hold.
@@ -73,27 +83,41 @@ def _column_bytes(field: T.StructField) -> Column:
     elif isinstance(dt, T.ArrayType) and type(dt.elementType) in _WIDTHS:
         size = F.array_size(c) * _WIDTHS[type(dt.elementType)]
     else:
-        raise TypeError(f"table_bytes: no size model for {field.name}: {dt}")
+        raise TypeError(f"row_bytes: no size model for {field.name}: {dt}")
     return F.when(c.isNull(), 0).otherwise(size)
 
 
-def table_bytes(df: DataFrame) -> int:
-    """Raw bytes of ``df`` measured in ONE job: per row
-    ``ROW_OVERHEAD`` plus each column's bytes from the schema —
-    fixed-width types their width, string/binary their octet length,
-    arrays of fixed-width types size x width, NULL 0. Any other
-    column type raises ``TypeError`` (never silently counted as 0)."""
-    row = F.lit(ROW_OVERHEAD).cast("long")
-    for field in df.schema.fields:
-        row = row + _column_bytes(field)
-    return df.agg(F.sum(row)).collect()[0][0] or 0
+def row_bytes(df: DataFrame) -> Column:
+    """One row's raw bytes of ``df``: ``ROW_OVERHEAD`` plus each
+    column's — fixed-width types their width, string/binary their
+    octet length, fixed-width arrays size x width, NULL 0; any other
+    type raises ``TypeError`` (never silently counted as 0)."""
+    return sum(map(_column_bytes, df.schema.fields), F.lit(ROW_OVERHEAD).cast("long"))
 
 
-def build_side(table: DataFrame, cap: int, fallback: str):
-    """Join-side wrapper for ``table``, the side that would be
-    broadcast: ``F.broadcast`` iff its hash relation
-    (``HASH_RELATION_OVERHEAD`` x :func:`table_bytes`) fits ``cap``,
-    else the ``fallback`` join hint (``"shuffle_hash"``, ``"merge"``)."""
-    if HASH_RELATION_OVERHEAD * table_bytes(table) <= cap:
+def materialize(df: DataFrame, **sums: Column) -> tuple[DataFrame, dict[str, int]]:
+    """``df`` eagerly localCheckpointed, and the sum of each named
+    column over its rows (NULL sum 0), observed in the checkpoint's
+    own jobs — as many jobs as a bare eager ``localCheckpoint``."""
+    obs = Observation()
+    out = df.observe(obs, *(F.sum(c).alias(name) for name, c in sums.items())).localCheckpoint(eager=True)
+    return out, {name: v or 0 for name, v in obs.get.items()}
+
+
+def build_side(nbytes: int, cap: int, fallback: str):
+    """Join-side wrapper for the table that would be broadcast, of
+    ``nbytes`` raw bytes: ``F.broadcast`` iff its hash relation
+    (``HASH_RELATION_OVERHEAD`` x ``nbytes``) fits ``cap``, else the
+    ``fallback`` join hint (``"shuffle_hash"``, ``"merge"``)."""
+    if HASH_RELATION_OVERHEAD * nbytes <= cap:
         return F.broadcast
     return lambda t: t.hint(fallback)
+
+
+def collect_bounded(df: DataFrame, cap: int, message: str) -> list:
+    """``df``'s rows on the driver if it has at most ``cap``, else
+    ``ValueError(message)`` — one row past the cap is read to tell."""
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(message)
+    return rows

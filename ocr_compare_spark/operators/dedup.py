@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ocr_compare_spark.functions.bind import _bind
-from ocr_compare_spark.operators.adaptive import build_side
+from ocr_compare_spark.operators.adaptive import build_side, materialize, row_bytes
+from ocr_compare_spark.operators.graph import NODE_BROADCAST_MAX_BYTES
 
 # lsh_candidates persists its (tiny, ids-only) membership aggregate so
 # the expansion joins don't recompute the md5 groupBy. The returned
@@ -165,8 +166,8 @@ def connected_components(
     + one groupBy min with map-side combine, both keyed on ids (no
     skew beyond the cluster sizes themselves, which AQE skew-join
     splits). The driver loop is bounded by ``max_iters`` and exits
-    early on a converged round via one count() per round (a
-    long-chain adversarial graph converges in O(diameter) rounds —
+    early on a converged round, counted by the round's own checkpoint
+    job (a long-chain adversarial graph converges in O(diameter) rounds —
     label propagation, not pointer doubling, is the right trade for
     near-clique duplicate graphs; a 10^6-long CHAIN of near-dups is
     not a shape LSH banding produces).
@@ -194,34 +195,26 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
-    )
+    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
+    labels, measured = materialize(labels, nbytes=row_bytes(labels))
     # round-join build side decided ONCE from the real label table
-    from ocr_compare_spark.operators.graph import NODE_BROADCAST_MAX_BYTES
-
-    side = build_side(labels, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
+    side = build_side(measured["nbytes"], NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
     for _ in range(max_iters):
         neighbor_min = (
             edges.join(side(labels), edges.dst == labels.id)
             .groupBy("src")
             .agg(F.min("component").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
+        new_labels, measured = materialize(
+            labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
                 "id",
                 F.least(F.col("component"), F.col("nmin")).alias("component"),
                 (F.col("nmin") < F.col("component")).alias("changed"),
-            )
-            .localCheckpoint()
+            ),
+            changed=F.col("changed").cast("long"),
         )
-        changed = new_labels.filter(F.col("changed")).count()
         labels = new_labels.drop("changed")
-        if changed == 0:
+        if measured["changed"] == 0:
             break
     return labels.select("id", "component")
 
@@ -305,15 +298,18 @@ def lsh_candidates(
     reps = keyed.groupBy("grp").agg(
         F.min("id").alias("id"), F.any_value("text").alias("text")
     ).select("id", "text")
-    # Shingle, sign, band and keep the shingle-hash set in one pass.
-    # The band self-join, the sh lookups and both build-side probes
-    # read it, so it is materialized once; the second sh lookup reuses
-    # the first one's broadcast (ReusedExchange).
-    sigs = minhash_tables(
-        reps, "id", "text", num_hashes, bands, shingle_n, num_partitions
-    ).localCheckpoint(eager=True)
-    sh_side = build_side(sigs.select("id", "sh"), SH_BROADCAST_MAX_BYTES, "merge")
-    band_side = build_side(_band_rows(sigs, "store_id"), SH_BROADCAST_MAX_BYTES, "merge")
+    # Shingle, sign, band and keep the shingle-hash set in one pass,
+    # materialized once for the band self-join and the sh lookups; its
+    # job measures both build sides (band rows: id, int band_id, long
+    # band_hash). The second sh lookup reuses the first's broadcast.
+    tables = minhash_tables(reps, "id", "text", num_hashes, bands, shingle_n, num_partitions)
+    sigs, measured = materialize(
+        tables,
+        sh=row_bytes(tables.select("id", "sh")),
+        band=F.array_size("bands") * (row_bytes(tables.select("id")) + 12),
+    )
+    sh_side = build_side(measured["sh"], SH_BROADCAST_MAX_BYTES, "merge")
+    band_side = build_side(measured["band"], SH_BROADCAST_MAX_BYTES, "merge")
     verified = _band_join_verify(sigs, verify_threshold, sh_side, band_side).select(
         F.col("new_id").alias("id_a"), F.col("store_id").alias("id_b"), "jaccard"
     )

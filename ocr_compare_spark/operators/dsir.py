@@ -47,6 +47,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ocr_compare_spark.functions.bind import _bind
+from ocr_compare_spark.operators.adaptive import collect_bounded
 from ocr_compare_spark.operators.keywords import _words
 from ocr_compare_spark.operators.sampling import _TWO_32
 
@@ -86,14 +87,11 @@ def gram_buckets(text_col: str | Column, n_buckets: int = DEFAULT_BUCKETS) -> Co
 
 def _bucket_counts_of(exploded: DataFrame) -> tuple[dict[int, int], int]:
     """Bucket-model counts from an already-exploded ``_bkt`` stream."""
-    rows = (
-        exploded.groupBy("_bkt")
-        .agg(F.count("*").alias("_c"))
-        .limit(MAX_BUCKETS + 1)
-        .collect()
+    rows = collect_bounded(
+        exploded.groupBy("_bkt").agg(F.count("*").alias("_c")),
+        MAX_BUCKETS,
+        f"dsir: > {MAX_BUCKETS} buckets; lower n_buckets",
     )
-    if len(rows) > MAX_BUCKETS:
-        raise ValueError(f"dsir: > {MAX_BUCKETS} buckets; lower n_buckets")
     counts = {r["_bkt"]: r["_c"] for r in rows}
     return counts, sum(counts.values())
 

@@ -43,6 +43,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ocr_compare_spark.operators.adaptive import collect_bounded
+
 #: driver guard for hashed_topk's query collect — THE constant from
 #: similarity.py (one knob, not two), and the shared top-k tail
 from ocr_compare_spark.operators.similarity import (
@@ -185,12 +187,12 @@ def hashed_topk(
     vectors), which is why the cut keeps the final window's order.
     Zero-norm rows cosine to 0.0 (the cosine_native convention)."""
     spark = corpus.sparkSession
-    rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
-    if len(rows) > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"hashed_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
-            "bucket with similarity.lsh_topk instead"
-        )
+    rows = collect_bounded(
+        queries.select(id_col, vec_col),
+        MAX_DRIVER_QUERIES,
+        f"hashed_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
+        "bucket with similarity.lsh_topk instead",
+    )
     q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     q_mat = np.array([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))

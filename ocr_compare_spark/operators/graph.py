@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ocr_compare_spark.operators.adaptive import build_side
+from ocr_compare_spark.operators.adaptive import build_side, materialize, row_bytes
 
 #: rank 1.0 in microunits — every node's starting mass.
 RANK_ONE6 = 1_000_000
@@ -51,6 +51,17 @@ RANK_ONE6 = 1_000_000
 #: Broadcast cap for the node-sized side of the round joins
 #: (pagerank ranks / hits scores / cc labels; see operators.adaptive).
 NODE_BROADCAST_MAX_BYTES = 64 << 20
+
+
+def _seed_scores(edges: DataFrame, src: str, dst: str, score_col: str):
+    """Materialized ``(node, score_col = RANK_ONE6)`` over the CHECKPOINTED
+    ``edges``' srcs and dsts (not the source: measured 2x), its ``(node,
+    c = 0)`` zero seed, and the round-join build side decided from its bytes."""
+    nodes = edges.select(F.col(src).alias("node")).unionByName(edges.select(F.col(dst).alias("node")))
+    seed = nodes.distinct().select("node", F.lit(RANK_ONE6).cast("long").alias(score_col))
+    seed, measured = materialize(seed, nbytes=row_bytes(seed))
+    zero_seed = seed.select("node", F.lit(0).cast("long").alias("c"))
+    return seed, zero_seed, build_side(measured["nbytes"], NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
 
 
 def pagerank(
@@ -91,28 +102,13 @@ def pagerank(
         )
         .localCheckpoint(eager=True)
     )
-    # node set from the CHECKPOINTED edges — a source-derived node set
-    # would re-run the whole upstream (html scan + link regex) a
-    # second time just to materialize it (measured 2x on the bench).
-    # Every src survives the outdeg join (outdeg >= 1 by construction)
-    # and every dst is present, so nothing is lost.
-    nodes = (
-        keyed.select(F.col("_src").alias("node"))
-        .unionByName(keyed.select("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    ranks = nodes.select("node", F.lit(RANK_ONE6).cast("long").alias("rank6"))
     # zero-contribution seed: unioning one (node, 0) row per node into
     # the contribution stream before the aggregate replaces the
     # per-round nodes LEFT JOIN (nodes with no inbound edges sum to 0
     # either way — exact int64 result identical, A/B-measured) — one
     # shuffle per round instead of two, and the union only adds
     # node-sized rows to the edge-sized aggregate
-    zero_seed = nodes.select("node", F.lit(0).cast("long").alias("c"))
-    # round-join build side decided ONCE from the real rank table
-    side = build_side(ranks, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
+    ranks, zero_seed, side = _seed_scores(keyed, "_src", "node", "rank6")
     for _ in range(iters):
         contrib = keyed.join(
             side(ranks.select(F.col("node").alias("_src"), "rank6")),
@@ -177,16 +173,8 @@ def hits(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    edges = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("_src").alias("node"))
-        .unionByName(edges.select(F.col("_dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    zero_seed = nodes.select("node", F.lit(0).cast("long").alias("c"))
+    edges = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).localCheckpoint(eager=True)
+    hubs, zero_seed, side = _seed_scores(edges, "_src", "_dst", "score6")
 
     def _normalize(raw: DataFrame) -> DataFrame:
         # L-inf scale to microunits in decimal — max via a 1-row
@@ -200,10 +188,6 @@ def hits(
                 "CAST((CAST(s AS DECIMAL(38,0)) * 1000000) DIV _mx AS BIGINT)"
             ).alias("score6"),
         )
-
-    hubs = nodes.select("node", F.lit(RANK_ONE6).cast("long").alias("score6"))
-    # score-table build side decided ONCE (as pagerank's round join)
-    side = build_side(hubs, NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
 
     def _half_round(scores: DataFrame, from_col: str, to_col: str) -> DataFrame:
         contrib = edges.join(

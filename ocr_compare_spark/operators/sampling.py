@@ -38,6 +38,8 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ocr_compare_spark.operators.adaptive import collect_bounded
+
 # 2^32 as an exact double: the 8-hex-digit md5 prefix is uniform on
 # [0, 2^32), so frac = prefix / 2^32 is uniform on [0,1) and every
 # intermediate is exact in binary64 (no rounding divergence between
@@ -151,17 +153,12 @@ def token_budget_sample_bucketed(
     if checkpoint:
         keyed = keyed.localCheckpoint()
 
-    sums = (
-        keyed.groupBy(strata_col, "_bkt")
-        .agg(F.sum(F.col(token_col)).alias("_t"))
-        .limit(MAX_BUDGET_BUCKET_ROWS + 1)
-        .collect()
+    sums = collect_bounded(
+        keyed.groupBy(strata_col, "_bkt").agg(F.sum(F.col(token_col)).alias("_t")),
+        MAX_BUDGET_BUCKET_ROWS,
+        f"token_budget_sample_bucketed: > {MAX_BUDGET_BUCKET_ROWS} "
+        "(stratum, bucket) groups; lower n_buckets",
     )
-    if len(sums) > MAX_BUDGET_BUCKET_ROWS:
-        raise ValueError(
-            f"token_budget_sample_bucketed: > {MAX_BUDGET_BUCKET_ROWS} "
-            "(stratum, bucket) groups; lower n_buckets"
-        )
 
     # Driver-side prefix over the (tiny) bucket totals: offset of a
     # bucket = sum of all earlier buckets' tokens in its stratum.
@@ -290,6 +287,16 @@ def pack_sequences(
 MAX_MIX_STRATA = 4096  # driver guard for the temperature-mix rate collect
 
 
+def _stratum_sums(df: DataFrame, strata_col: str, col: str, op: str) -> dict:
+    """``{stratum: sum(col)}`` over non-NULL strata, under the MAX_MIX_STRATA guard."""
+    rows = collect_bounded(
+        df.groupBy(strata_col).agg(F.sum(F.col(col)).alias("_n")),
+        MAX_MIX_STRATA,
+        f"{op}: > {MAX_MIX_STRATA} strata; pre-bucket the strata column",
+    )
+    return {r[strata_col]: r["_n"] for r in rows if r[strata_col] is not None}
+
+
 def temperature_rates(
     weights: dict[object, float], alpha: float
 ) -> dict[object, float]:
@@ -341,21 +348,7 @@ def temperature_mix(
 
     The operator evaluates its lineage twice (weight collect +
     filter): persist a compute-heavy upstream first."""
-    sums = (
-        df.groupBy(strata_col)
-        .agg(F.sum(F.col(weight_col)).alias("_n"))
-        .limit(MAX_MIX_STRATA + 1)
-        .collect()
-    )
-    if len(sums) > MAX_MIX_STRATA:
-        raise ValueError(
-            f"temperature_mix: > {MAX_MIX_STRATA} strata; "
-            "pre-bucket the strata column"
-        )
-    rates = temperature_rates(
-        {r[strata_col]: r["_n"] for r in sums if r[strata_col] is not None},
-        alpha,
-    )
+    rates = temperature_rates(_stratum_sums(df, strata_col, weight_col, "temperature_mix"), alpha)
     thr: Column = F.lit(0.0)
     for s, r in sorted(rates.items(), key=lambda kv: str(kv[0])):
         thr = F.when(F.col(strata_col) == s, F.lit(r)).otherwise(thr)
@@ -415,20 +408,8 @@ def unimax_sample(
     upstream — the ADVICE-r4 trap); the nested bucketed sampler then
     reuses that boundary."""
     df = df.localCheckpoint().withColumn("_prio", hash_frac(id_col))
-    sums = (
-        df.groupBy(strata_col)
-        .agg(F.sum(F.col(token_col)).alias("_n"))
-        .limit(MAX_MIX_STRATA + 1)
-        .collect()
-    )
-    if len(sums) > MAX_MIX_STRATA:
-        raise ValueError(
-            f"unimax_sample: > {MAX_MIX_STRATA} strata; pre-bucket the strata column"
-        )
     budgets = unimax_budgets(
-        {r[strata_col]: r["_n"] for r in sums if r[strata_col] is not None},
-        total_budget,
-        max_epochs,
+        _stratum_sums(df, strata_col, token_col, "unimax_sample"), total_budget, max_epochs
     )
     out = token_budget_sample_bucketed(
         df, strata_col, token_col, budgets, "_prio", id_col,
@@ -653,10 +634,12 @@ def wpri_priority(key: str | Column, weight: str | Column) -> Column:
     u^(1/w): weighted sampling without replacement with inclusion
     probability proportional to weight (Efraimidis & Spirakis 2006).
     Because the ranking key is an INTEGER, cross-engine ordering is
-    exact; ties (real after round6) break on the key column."""
+    exact; ties (real after round6) break on the key column. A weight
+    that is NULL, NaN or <= 0 takes no draw: its priority is NULL
+    (priority_sample's weight rule)."""
     w = (F.col(weight) if isinstance(weight, str) else weight).cast("double")
     ln6 = F.floor(F.log(_wpri_u(key)) * 1e6 + F.lit(0.5)).cast("long")
-    return F.floor((-ln6).cast("double") / w + F.lit(0.5)).cast("long")
+    return F.when((w > 0) & ~F.isnan(w), F.floor((-ln6).cast("double") / w + F.lit(0.5)).cast("long"))
 
 
 def priority_sample(

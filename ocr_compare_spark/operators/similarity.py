@@ -28,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ocr_compare_spark.operators.adaptive import collect_bounded
+
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -114,12 +116,12 @@ def brute_force_topk_df(
     but the collect is guarded: above MAX_DRIVER_QUERIES rows the
     right tool is lsh_topk, and this raises instead of silently
     OOMing the driver."""
-    rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
-    if len(rows) > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"brute_force_topk_df: query set exceeds {MAX_DRIVER_QUERIES} rows; "
-            "use lsh_topk for large query sets (bucketed join, no broadcast)"
-        )
+    rows = collect_bounded(
+        queries.select(id_col, vec_col),
+        MAX_DRIVER_QUERIES,
+        f"brute_force_topk_df: query set exceeds {MAX_DRIVER_QUERIES} rows; "
+        "use lsh_topk for large query sets (bucketed join, no broadcast)",
+    )
     qs = [(r[id_col], list(r[vec_col])) for r in rows]
     return brute_force_topk(corpus, qs, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -590,12 +592,12 @@ def pq_topk(
     cb = seeded_pq_codebooks(n_sub, n_codes, sub_dim) if codebooks is None else codebooks
     assert cb.shape == (n_sub, n_codes, sub_dim), f"codebook shape {cb.shape} mismatch"
 
-    rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
-    if len(rows) > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"pq_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
-            "bucket queries through IVF cells first (IVF-PQ) instead of one flat scan"
-        )
+    rows = collect_bounded(
+        queries.select(id_col, vec_col),
+        MAX_DRIVER_QUERIES,
+        f"pq_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
+        "bucket queries through IVF cells first (IVF-PQ) instead of one flat scan",
+    )
     q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     q_vecs = np.array([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
     q_sub = q_vecs.reshape(len(rows), n_sub, sub_dim)
@@ -735,12 +737,12 @@ def ivfpq_topk(
         f"codebook shape {codebooks.shape} mismatch"
     )
 
-    rows = queries.select(id_col, vec_col).limit(MAX_DRIVER_QUERIES + 1).collect()
-    if len(rows) > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"ivfpq_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
-            "route the query set through the cell join instead of a broadcast scan"
-        )
+    rows = collect_bounded(
+        queries.select(id_col, vec_col),
+        MAX_DRIVER_QUERIES,
+        f"ivfpq_topk: query set exceeds {MAX_DRIVER_QUERIES} rows; "
+        "route the query set through the cell join instead of a broadcast scan",
+    )
     # per query: probed cells (stable argsort — ties to the lowest
     # cell id, the ivf convention), the per-cell dot, and the
     # residual-ADC LUT

@@ -64,7 +64,3 @@ def run_with_checkpoints(
             "job_id string, bucket int, status string, rows_processed long",
         ).withColumn("completed_ts", F.current_timestamp())
         row.write.mode("append").parquet(manifest_path)
-
-
-def read_output(spark: SparkSession, out_path: str) -> DataFrame:
-    return spark.read.parquet(out_path)

@@ -44,7 +44,7 @@ def test_crash_resume_no_recompute(spark, pages, tmp_path, as_uri):
     ckpt.run_with_checkpoints(pages, process, out, manifest, "job1", n_buckets=4)
     assert calls2["n"] == 2  # only the missing buckets ran
 
-    result = ckpt.read_output(spark, out)
+    result = spark.read.parquet(out)
     n_html = pages.filter(~F.expr("coalesce(substring(html,1,4)=X'25504446', false)")).count()
     assert result.count() == n_html
     assert result.select("url").distinct().count() == n_html
@@ -58,4 +58,4 @@ def test_crash_resume_no_recompute(spark, pages, tmp_path, as_uri):
 
     ckpt.run_with_checkpoints(pages, process3, out, manifest, "job1", n_buckets=4)
     assert calls3["n"] == 0
-    assert ckpt.read_output(spark, out).count() == n_html
+    assert spark.read.parquet(out).count() == n_html

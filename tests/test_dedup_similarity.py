@@ -1292,7 +1292,8 @@ def test_lsh_sh_broadcast_cap_counts_hash_relation(spark, monkeypatch):
     """The sh lookups broadcast iff the measured (id, sh) table times
     the hash-relation overhead fits SH_BROADCAST_MAX_BYTES."""
     df = spark.createDataFrame(DISTINCT_ROWS, ["id", "text"])  # reps == rows
-    one = adaptive.table_bytes(dedup.minhash_tables(df, "id", "text").select("id", "sh"))
+    sh = dedup.minhash_tables(df, "id", "text").select("id", "sh")
+    one = sh.agg(F.sum(adaptive.row_bytes(sh))).first()[0]
     k = adaptive.HASH_RELATION_OVERHEAD
 
     def sh_broadcasts(cap):

@@ -81,7 +81,6 @@ IDENT = re.compile(r"[A-Za-z_]\w*")
 
 KEEP = {
     "run_with_checkpoints": "the north_rule resume seam (per-bucket output + manifest)",
-    "read_output": "reads back what run_with_checkpoints wrote (the resume seam)",
     "table_raw_text": "the reference's raw_text table variant",
 }
 

@@ -106,6 +106,19 @@ def test_priority_sample_weight_rules(spark):
     assert pri[1] == py_wpri(1, 5.0)  # max weight, not last/first
 
 
+def test_wpri_priority_null_for_weights_that_take_no_draw(spark):
+    """A NULL, NaN, zero or negative weight gets a NULL priority (no
+    job failure, no rank ahead of every real draw); a positive weight
+    keeps its mirror value."""
+    rows = [(1, 1.0), (2, 0.0), (3, -2.0), (4, None), (5, float("nan"))]
+    df = spark.createDataFrame(rows, "doc_id long, w double")
+    got = {
+        r["doc_id"]: r["p"]
+        for r in df.select("doc_id", sampling.wpri_priority("doc_id", "w").alias("p")).collect()
+    }
+    assert got == {1: py_wpri(1, 1.0), 2: None, 3: None, 4: None, 5: None}
+
+
 def test_priority_sample_prefix_and_layout_invariance(spark):
     rows = [("en", i, float(1 + i % 7)) for i in range(100)]
     df = spark.createDataFrame(rows, "lang string, doc_id long, w double")
