@@ -95,6 +95,15 @@ def row_bytes(df: DataFrame) -> Column:
     return sum(map(_column_bytes, df.schema.fields), F.lit(ROW_OVERHEAD).cast("long"))
 
 
+def fixed_bytes(df: DataFrame) -> int:
+    """One row's raw bytes of ``df``, whose columns must all be
+    fixed-width (else ``TypeError``): the columns an explode adds to
+    each array element's row, sized without running the explode."""
+    if bad := [f for f in df.schema.fields if type(f.dataType) not in _WIDTHS]:
+        raise TypeError(f"fixed_bytes: not fixed-width: {bad}")
+    return sum(_WIDTHS[type(f.dataType)] for f in df.schema.fields)
+
+
 def materialize(df: DataFrame, **sums: Column) -> tuple[DataFrame, dict[str, int]]:
     """``df`` eagerly localCheckpointed, and the sum of each named
     column over its rows (NULL sum 0), observed in the checkpoint's

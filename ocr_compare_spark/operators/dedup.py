@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ocr_compare_spark.functions.bind import _bind
-from ocr_compare_spark.operators.adaptive import build_side, materialize, row_bytes
-from ocr_compare_spark.operators.graph import NODE_BROADCAST_MAX_BYTES
+from ocr_compare_spark.operators import graph
+from ocr_compare_spark.operators.adaptive import build_side, fixed_bytes, materialize, row_bytes
 
 # lsh_candidates persists its (tiny, ids-only) membership aggregate so
 # the expansion joins don't recompute the md5 groupBy. The returned
@@ -34,12 +34,6 @@ _LSH_CACHED: list[DataFrame] = []
 
 #: Broadcast cap for lsh_candidates' band and verify joins (adaptive).
 SH_BROADCAST_MAX_BYTES = 256 << 20
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    release_lsh_cache()
-    _LSH_CACHED.append(df.persist())
-    return df
 
 
 def release_lsh_cache() -> None:
@@ -198,7 +192,7 @@ def connected_components(
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
     labels, measured = materialize(labels, nbytes=row_bytes(labels))
     # round-join build side decided ONCE from the real label table
-    side = build_side(measured["nbytes"], NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
+    side = build_side(measured["nbytes"], graph.NODE_BROADCAST_MAX_BYTES, "shuffle_hash")
     for _ in range(max_iters):
         neighbor_min = (
             edges.join(side(labels), edges.dst == labels.id)
@@ -289,24 +283,24 @@ def lsh_candidates(
     # come from a separate text aggregate consumed exactly once by
     # the signature path; texts are identical within a group (grp =
     # md5(text)), so any_value is the min-id member's text too.
-    groups = _track_persist(
-        keyed.groupBy("grp").agg(
-            F.min("id").alias("id"),
-            F.array_sort(F.collect_list("id")).alias("members"),
-        )
-    )
+    release_lsh_cache()
+    groups = keyed.groupBy("grp").agg(
+        F.min("id").alias("id"),
+        F.array_sort(F.collect_list("id")).alias("members"),
+    ).persist()
+    _LSH_CACHED.append(groups)
     reps = keyed.groupBy("grp").agg(
         F.min("id").alias("id"), F.any_value("text").alias("text")
     ).select("id", "text")
     # Shingle, sign, band and keep the shingle-hash set in one pass,
     # materialized once for the band self-join and the sh lookups; its
-    # job measures both build sides (band rows: id, int band_id, long
-    # band_hash). The second sh lookup reuses the first's broadcast.
+    # job measures both build sides (each bands element is one band row:
+    # the id plus _band_rows' own band columns). The second sh lookup
+    # reuses the first's broadcast.
     tables = minhash_tables(reps, "id", "text", num_hashes, bands, shingle_n, num_partitions)
+    per_band = row_bytes(tables.select("id")) + fixed_bytes(_band_rows(tables, "id").drop("id"))
     sigs, measured = materialize(
-        tables,
-        sh=row_bytes(tables.select("id", "sh")),
-        band=F.array_size("bands") * (row_bytes(tables.select("id")) + 12),
+        tables, sh=row_bytes(tables.select("id", "sh")), band=F.array_size("bands") * per_band
     )
     sh_side = build_side(measured["sh"], SH_BROADCAST_MAX_BYTES, "merge")
     band_side = build_side(measured["band"], SH_BROADCAST_MAX_BYTES, "merge")

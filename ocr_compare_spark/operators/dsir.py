@@ -96,14 +96,6 @@ def _bucket_counts_of(exploded: DataFrame) -> tuple[dict[int, int], int]:
     return counts, sum(counts.values())
 
 
-def _bucket_counts(
-    df: DataFrame, text_col: str, n_buckets: int
-) -> tuple[dict[int, int], int]:
-    return _bucket_counts_of(
-        df.select(F.explode(gram_buckets(text_col, n_buckets)).alias("_bkt"))
-    )
-
-
 def log_ratio6(
     p_cnt: int, q_cnt: int, p_total: int, q_total: int, n_buckets: int,
     smoothing: float = 1.0,
@@ -156,7 +148,9 @@ def dsir_log_weights(
         F.col(id_col), F.explode(gram_buckets(text_col, n_buckets)).alias("_bkt")
     ).localCheckpoint(eager=True)
     q_counts, q_total = _bucket_counts_of(grams)
-    p_counts, p_total = _bucket_counts(target, text_col, n_buckets)
+    p_counts, p_total = _bucket_counts_of(
+        target.select(F.explode(gram_buckets(text_col, n_buckets)).alias("_bkt"))
+    )
 
     ratios = [
         (b, log_ratio6(p_counts.get(b, 0), c, p_total, q_total, n_buckets, smoothing))

@@ -56,7 +56,9 @@ NODE_BROADCAST_MAX_BYTES = 64 << 20
 def _seed_scores(edges: DataFrame, src: str, dst: str, score_col: str):
     """Materialized ``(node, score_col = RANK_ONE6)`` over the CHECKPOINTED
     ``edges``' srcs and dsts (not the source: measured 2x), its ``(node,
-    c = 0)`` zero seed, and the round-join build side decided from its bytes."""
+    c = 0)`` zero seed, and the round-join build side decided from its bytes.
+    No node is lost iff every src and dst of the graph is in ``edges``
+    (pagerank: every src survives the outdeg join, outdeg >= 1)."""
     nodes = edges.select(F.col(src).alias("node")).unionByName(edges.select(F.col(dst).alias("node")))
     seed = nodes.distinct().select("node", F.lit(RANK_ONE6).cast("long").alias(score_col))
     seed, measured = materialize(seed, nbytes=row_bytes(seed))

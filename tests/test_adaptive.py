@@ -138,6 +138,27 @@ def test_build_sides_get_the_bytes_of_the_table_they_broadcast(spark, monkeypatc
         assert got == [measured(nodes.select("node", F.lit(graph.RANK_ONE6).cast("long").alias(col)))]
 
 
+def test_node_cap_is_read_when_each_operator_runs(spark, monkeypatch):
+    """connected_components, pagerank and hits read
+    graph.NODE_BROADCAST_MAX_BYTES when they run, so patching it (as
+    test_graph's forced shuffled-hash run does) reaches all three."""
+    caps: list[int] = []
+    real = adaptive.build_side
+
+    def recording(nbytes, cap, fallback):
+        caps.append(cap)
+        return real(nbytes, cap, fallback)
+
+    monkeypatch.setattr(dedup, "build_side", recording)
+    monkeypatch.setattr(graph, "build_side", recording)
+    monkeypatch.setattr(graph, "NODE_BROADCAST_MAX_BYTES", 1)
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    dedup.connected_components(edges, "src", "dst")
+    graph.pagerank(edges, iters=1)
+    graph.hits(edges, iters=1)
+    assert caps == [1, 1, 1]
+
+
 LIBRARY = Path(__file__).resolve().parents[1] / "ocr_compare_spark"
 
 
